@@ -153,6 +153,54 @@ object Tables {
     def barrier(): Dataset[T] = Tables.barrier(ds)
   }
 
+  /** [[barrier]] with its one materializing job run on return, plus the
+    * `QueryExecution` that ran it: that execution's `observedMetrics`
+    * carry whatever `Dataset.observe` computed in the same pass, read
+    * synchronously — no listener, no wait on the listener bus. The
+    * checkpoint paths are eager and run `ds`'s own execution; the lazy
+    * persist path is materialized by one count over the persisted frame.
+    * Which path ran is read off the frame ([[persisted]]), as in
+    * [[release]].
+    */
+  private[graft] def materializedBarrier[T](ds: Dataset[T])
+      : (Dataset[T], org.apache.spark.sql.execution.QueryExecution) = {
+    val b = barrier(ds)
+    if (!persisted(b)) (b, ds.queryExecution)
+    else {
+      val counted = b.groupBy().count()
+      counted.collect()
+      (b, counted.queryExecution)
+    }
+  }
+
+  /** Whether a [[barrier]] frame took the persist path: it is registered
+    * with the cache manager. The checkpoint paths instead return a frame
+    * whose plan is a `LogicalRDD` over the checkpointed RDD — and so may
+    * a persisted one (a `foreachBatch` micro-batch is a `LogicalRDD`), so
+    * the cache registration, not the plan shape, tells them apart.
+    */
+  private def persisted(ds: Dataset[_]): Boolean =
+    ds.storageLevel != StorageLevel.NONE
+
+  /** Release the blocks behind one [[barrier]]'s frame, now.
+    *
+    * A persisted frame is unpersisted, which drops its cache-manager
+    * entry and blocks. `Dataset.unpersist()` does nothing else, so on a
+    * checkpointed frame (the local-master default) it would free nothing
+    * and the blocks would wait for a GC and the `ContextCleaner`; there
+    * the RDD under the frame's `LogicalRDD` is unpersisted directly. Only
+    * the frame's OWN barrier is released — barriers further up its
+    * lineage belong to the caller. A checkpointed frame is unusable
+    * afterwards (its lineage is truncated).
+    */
+  def release(ds: Dataset[_]): Unit =
+    if (persisted(ds)) ds.unpersist(blocking = false)
+    else ds.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+
   /** Release every persisted block the last query left behind.
     *
     * Operators materialize plan-reuse barriers with [[barrier]] (persisted

@@ -30,10 +30,8 @@ object IndexerFlow {
       .getOrElse(0L)
     val fresh = readLanding(spark, landingDir)
       .filter(col("height") > already)
-    val blockInfo = Ingest.blockInfo(fresh)
-    val n = blockInfo.count()
-    if (n > 0) ParquetMergeSink.merge(blockInfo, tableDir, Seq("height"), "height")
-    n
+    // the merge's staging job counts the rows; an empty pass creates nothing
+    ParquetMergeSink.merge(Ingest.blockInfo(fresh), tableDir, Seq("height"), "height")
   }
 
   /** The date-partitioned variant of the catch-up pass: block_info lands

@@ -67,6 +67,14 @@ object LiveIndexer {
   /** Merge one micro-batch into every table under `tableRoot`. The raw
     * batch is barriered once (the five lineages all start from it; without
     * the barrier each table's merge would re-fetch every block).
+    *
+    * Job shape per trigger: one job for the raw-batch barrier, then per
+    * table [[ParquetMergeSink.merge]]'s one staging job (the table's rows,
+    * touched buckets and emptiness in one pass) followed by its write.
+    * Each merge releases its staged blocks after its commit, and the raw
+    * batch's blocks are released when the last table is merged — a
+    * trigger leaves no persisted RDD behind.
+    *
     * `afterTable` is the crash-injection seam the restart spec uses — a
     * real deployment leaves it as the no-op.
     */
@@ -79,7 +87,7 @@ object LiveIndexer {
         ParquetMergeSink.merge(df, s"$tableRoot/$name", keys, version)
         afterTable(batchId, name)
       }
-    finally b.unpersist()
+    finally graft.Tables.release(b)
   }
 
   /** Start the live pump: drains the landing tip in capped, checkpointed

@@ -75,6 +75,16 @@ object TextOps {
     */
   private[graft] def qualityScoresDocsKeep(d: DataFrame,
       keep: Seq[Column]): DataFrame = {
+    // each keep column's output name, resolved once (driver-side analysis)
+    val keepNames = d.select(keep: _*).columns.toSeq
+    // the intermediate columns and the score columns: a keep column of
+    // either name would be shadowed or duplicated in the scored frame
+    val reserved = Seq("doc_id", "n_words", "n_uniq", "n_stop", "n_nonspace",
+      "stop_ratio", "uniq_ratio", "avg_word_len", "quality")
+    val clash = keepNames.filter(n => reserved.exists(_.equalsIgnoreCase(n)))
+    require(clash.isEmpty,
+      s"qualityScoresDocsKeep: keep column(s) ${clash.mkString(", ")} collide " +
+        s"with the scored frame's columns ${reserved.mkString(", ")} — alias them")
     val ws = words(col("text"))
     val base = d.select(
       col("doc_id") +: keep :+
@@ -82,9 +92,8 @@ object TextOps {
       size(array_distinct(ws)).cast("double").as("n_uniq") :+
       size(filter(ws, w => w.isin("the", "a"))).cast("double").as("n_stop") :+
       length(regexp_replace(col("text"), "\\s", "")).cast("double").as("n_nonspace"): _*)
-    val keepNames = keep.map(c => col(d.select(c).columns.head))
     base.select(
-      col("doc_id") +: keepNames :+
+      col("doc_id") +: keepNames.map(col) :+
       col("n_words").cast("long").as("n_words") :+
       trunc4(col("n_stop") / col("n_words")).as("stop_ratio") :+
       trunc4(col("n_uniq") / col("n_words")).as("uniq_ratio") :+

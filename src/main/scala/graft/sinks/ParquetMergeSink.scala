@@ -22,6 +22,16 @@ import graft.indexer.Upsert
   * at 100 TB a small batch costs O(batch + touched-buckets), not
   * O(table).
   *
+  * Job shape — a merge runs ONE staging job, then the write. The staging
+  * job materializes the aligned, bucketed batch behind a barrier and
+  * observes, in the same pass, the set of touched buckets and the row
+  * count (emptiness); no separate `isEmpty` or bucket-`distinct` job runs.
+  * The write reads the touched buckets and resolves latest-wins (under
+  * AQE: the shuffle's map job plus the write job). At live-trigger batch
+  * sizes a merge's cost is mostly per-job planning and scheduling, so
+  * the job count is what matters. The staged blocks are released as soon
+  * as the commit (or the failure) is done, not left to the GC.
+  *
   * Durability: data files are immutable once written; the ONLY mutation
   * is the one-small-file manifest commit, which covers ALL touched
   * buckets at once — a crash leaves every reader on the previous
@@ -46,6 +56,7 @@ import graft.indexer.Upsert
 object ParquetMergeSink {
 
   private val BucketCol = "__bucket"
+  private val StageMetrics = "graft_merge_stage"
   private val PrefCol = "__pref"
   private[graft] val SchemaKey = "schema"
   private[graft] val PhysKey = "schema.phys"
@@ -703,41 +714,100 @@ object ParquetMergeSink {
     }
   }
 
+  /** One batch staged for its write: `frame` is the aligned batch with
+    * the bucket column, materialized behind a [[graft.Tables.barrier]];
+    * `touched` and `rows` were observed by that same job.
+    */
+  private final case class Staged(frame: DataFrame, touched: Seq[Int],
+      rows: Long, buckets: Int,
+      committed: Option[ManifestCommit.Manifest])
+
+  /** The shared front of [[merge]] and [[mergeActions]]: ONE Spark job.
+    *
+    * Reads the committed manifest (or a legacy layout's synthesized one)
+    * WITHOUT creating anything, so the bucket count and declared schema
+    * are known before the batch is touched; `shape` aligns the batch to
+    * them. The bucket column is added, and a `Dataset.observe` of the
+    * touched-bucket set and the row count rides on the barrier's
+    * materializing job — the rows, the bucket list and emptiness all come
+    * from that one pass over the batch's lineage.
+    */
+  private def stage(fs: FileSystem, table: Path, keys: Seq[String],
+      nBuckets: Int)(shape: Option[ManifestCommit.Manifest] => DataFrame): Staged = {
+    val committed = ManifestCommit.latest(fs, table)
+    val known = committed.orElse(
+      legacyLayout(fs, table).map(ManifestCommit.Manifest(0L, _)))
+    val buckets = known.fold(nBuckets)(_.entries("buckets").toInt)
+    val (frame, ran) = graft.Tables.materializedBarrier(shape(known)
+      .withColumn(BucketCol, bucketExpr(keys, buckets))
+      .observe(StageMetrics, collect_set(col(BucketCol)), count(lit(1))))
+    val seen = ran.observedMetrics(StageMetrics)
+    Staged(frame, seen.getSeq[Int](0).sorted, seen.getLong(1), buckets, committed)
+  }
+
+  /** The manifest a non-empty staged batch commits against: the one it
+    * was staged on, or — for a new or legacy table — manifest v1, created
+    * only now that the batch is known to carry rows.
+    */
+  private def manifestFor(fs: FileSystem, table: Path,
+      staged: Staged): ManifestCommit.Manifest =
+    staged.committed.getOrElse {
+      val m = ensureManifest(fs, table, staged.buckets)
+      require(m.entries("buckets").toInt == staged.buckets,
+        s"$table was created with ${m.entries("buckets")} buckets while a " +
+          s"batch was being staged for ${staged.buckets} — single writer " +
+          "per table; retry the merge")
+      m
+    }
+
+  /** Latest-wins upsert of `batch` into the table at `path`; returns the
+    * number of batch rows staged (0 = an empty batch, which changes
+    * nothing and creates no table).
+    *
+    * Emptiness is only known once the staging job has run, so the
+    * batch's shape is checked first: an EMPTY batch whose columns do not
+    * fit an existing table's declared schema is refused like a full one,
+    * not skipped.
+    */
   def merge(batch: DataFrame, path: String, keys: Seq[String], version: String,
-      nBuckets: Int = 16): Unit = {
+      nBuckets: Int = 16): Long = {
     val spark = batch.sparkSession
     val table = new Path(path)
     val fs = fsFor(spark, table)
     guardReadable(fs, table)
-    // Emptiness is checked BEFORE ensureManifest: a no-op batch against a
-    // nonexistent path must leave the filesystem untouched, not mint an
-    // empty v1 table as a side effect.
-    if (batch.isEmpty) return
-    val manifest = ensureManifest(fs, table, nBuckets)
-    val buckets = manifest.entries("buckets").toInt
     // A declared schema (SQL-created, or stamped by a prior merge) is the
     // write contract: the batch aligns onto it — null-fill for columns an
     // old writer doesn't know yet (post-ADD COLUMN), loud refusal for
     // columns the table doesn't have.
+    val staged = stage(fs, table, keys, nBuckets)(known =>
+      known.flatMap(declaredSchema).fold(batch)(d =>
+        alignToSchema(batch, d, s"merge batch into $path",
+          required = keys :+ version)))
+    try {
+      // Emptiness is known BEFORE any manifest is created: a no-op batch
+      // against a nonexistent path leaves the filesystem untouched.
+      if (staged.rows > 0) upsertStaged(fs, table, staged, keys, version)
+      staged.rows
+    } finally graft.Tables.release(staged.frame)
+  }
+
+  private def upsertStaged(fs: FileSystem, table: Path, staged: Staged,
+      keys: Seq[String], version: String): Unit = {
+    val spark = staged.frame.sparkSession
+    val manifest = manifestFor(fs, table, staged)
+    val buckets = staged.buckets
+    val touched = staged.touched
     val declared = declaredSchema(manifest)
     val pmap = physMap(manifest)
-    val aligned = declared.fold(batch)(d =>
-      alignToSchema(batch, d, s"merge batch into $path",
-        required = keys :+ version))
-
-    val batchB = aligned.withColumn(BucketCol, bucketExpr(keys, buckets))
-      .withColumn(PrefCol, lit(1)) // incoming outranks current on version ties
-      .barrier() // bucket list + merge input: compute the batch once
-    val touched = batchB.select(BucketCol).distinct()
-      .collect().map(_.getInt(0)).sorted
-    if (touched.isEmpty) return
+    // incoming outranks current on version ties
+    val batchB = staged.frame.withColumn(PrefCol, lit(1))
 
     // Current rows of ONLY the touched buckets: explicit dir reads from
     // the manifest (partition pruning by construction — untouched bucket
     // dirs never enter the scan). The bucket column is not stored in the
     // files; it is recomputed from the keys, which is deterministic.
     val dirMap = manifest.dirs
-    val currentDirs = touched.toSeq.flatMap(b => dirMap.get(b.toString))
+    val currentDirs = touched.flatMap(b => dirMap.get(b.toString))
       .map(rel => new Path(table, rel).toString)
     val current =
       if (currentDirs.nonEmpty)
@@ -765,7 +835,7 @@ object ParquetMergeSink {
       .write.mode(SaveMode.Overwrite)
       .partitionBy(BucketCol).parquet(new Path(table, gen).toString)
 
-    val updated = touched.toSeq.flatMap { b =>
+    val updated = touched.flatMap { b =>
       val part = s"$BucketCol=$b"
       if (fs.exists(new Path(new Path(table, gen), part)))
         Some(s"dir.$b" -> s"$gen/$part")
@@ -844,6 +914,8 @@ object ParquetMergeSink {
     *
     * Scale shape is [[merge]]'s: cost O(batch + touched buckets), never
     * O(table); untouched bucket entries carry forward byte-identical.
+    * As in [[merge]], an empty source is refused when its types do not
+    * fit the existing table's, and is a no-op otherwise.
     */
   def mergeActions(source: DataFrame, path: String, keys: Seq[String],
       version: String, deleteWhen: Column, nBuckets: Int = 16,
@@ -866,10 +938,6 @@ object ParquetMergeSink {
     require(srcMissing.isEmpty,
       s"mergeActions source for $path is missing the merge key/version " +
         s"column(s) ${srcMissing.mkString(", ")}")
-    // Emptiness is checked BEFORE ensureManifest: a no-op batch against a
-    // nonexistent path must leave the filesystem untouched, not mint an
-    // empty v1 table as a side effect.
-    if (source.isEmpty) return
     // table columns BEFORE this commit: align the stored projection.
     // On the CREATE path there is no existing schema to project onto, so
     // columns referenced only by the delete predicate (a CDC op flag)
@@ -883,7 +951,8 @@ object ParquetMergeSink {
     // writer that has not learned a post-ALTER column yet).
     val tableSchema: Option[org.apache.spark.sql.types.StructType] =
       readIfExists(spark, path).map(_.schema)
-    val tableCols: Seq[String] = tableSchema
+    // lazy: an empty batch returns without validating targetCols
+    lazy val tableCols: Seq[String] = tableSchema
       .map(_.fieldNames.toSeq)
       .orElse(Some(targetCols).filter(_.nonEmpty).map { tc =>
         val missing = (keys :+ version).filterNot(tc.contains) ++
@@ -933,23 +1002,33 @@ object ParquetMergeSink {
         }.toSeq: _*)
       case None => source
     }
-    val manifest = ensureManifest(fs, table, nBuckets)
-    val buckets = manifest.entries("buckets").toInt
+    val staged = stage(fs, table, keys, nBuckets)(_ =>
+      typed.withColumn(DelCol, coalesce(deleteWhen.cast("boolean"), lit(false))))
+    try {
+      // Emptiness is known BEFORE any manifest is created: a no-op batch
+      // against a nonexistent path leaves the filesystem untouched.
+      if (staged.rows > 0) {
+        // intra-batch resolution first: one surviving row per source key,
+        // so the WINNING row's delete/update verdict is what applies
+        val resolved = Upsert.latestWins(staged.frame, keys, col(version)).barrier()
+        try applyActions(fs, table, staged, resolved, keys, version,
+          tableSchema, tableCols)
+        finally graft.Tables.release(resolved)
+      }
+    } finally graft.Tables.release(staged.frame)
+  }
 
-    val batchB = typed
-      .withColumn(DelCol, coalesce(deleteWhen.cast("boolean"), lit(false)))
-      .withColumn(BucketCol, bucketExpr(keys, buckets))
-      .barrier() // bucket list + action split: compute the batch once
-    val touched = batchB.select(BucketCol).distinct()
-      .collect().map(_.getInt(0)).sorted
-    if (touched.isEmpty) return
-
-    // intra-batch resolution first: one surviving row per source key, so
-    // the WINNING row's delete/update verdict is what applies
-    val resolved = Upsert.latestWins(batchB, keys, col(version)).barrier()
+  private def applyActions(fs: FileSystem, table: Path, staged: Staged,
+      resolved: DataFrame, keys: Seq[String], version: String,
+      tableSchema: Option[org.apache.spark.sql.types.StructType],
+      tableCols: Seq[String]): Unit = {
+    val spark = resolved.sparkSession
+    val manifest = manifestFor(fs, table, staged)
+    val buckets = staged.buckets
+    val touched = staged.touched
 
     val dirMap = manifest.dirs
-    val currentDirs = touched.toSeq.flatMap(b => dirMap.get(b.toString))
+    val currentDirs = touched.flatMap(b => dirMap.get(b.toString))
       .map(rel => new Path(table, rel).toString)
     val declared = declaredSchema(manifest)
     val pmap = physMap(manifest)
@@ -1013,7 +1092,7 @@ object ParquetMergeSink {
       .write.mode(SaveMode.Overwrite)
       .partitionBy(BucketCol).parquet(new Path(table, gen).toString)
 
-    val updated = touched.toSeq.flatMap { b =>
+    val updated = touched.flatMap { b =>
       val part = s"$BucketCol=$b"
       // no output for a touched bucket = every row deleted → entry REMOVED
       if (fs.exists(new Path(new Path(table, gen), part)))

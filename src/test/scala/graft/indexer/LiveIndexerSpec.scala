@@ -99,8 +99,13 @@ class LiveIndexerSpec extends SparkSpec {
     // Batch flow over the same landing files — identical lineage, one go.
     import spark.implicits._
     val all = (1 to 6).map(h => (h.toLong, envelope(h))).toDF("height", "block_json")
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
     LiveIndexer.mergeAll(all, batchRoot,
       classOf[Ingest.JsonPassthroughDecoder].getName)
+    // the raw-batch barrier and every merge's staged batch are released
+    // on return — none waits for a GC and the ContextCleaner
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
+    assert(leaked.isEmpty, s"mergeAll left persisted RDDs behind: $leaked")
 
     tableNames.foreach { t =>
       assert(tableRows(streamRoot, t) === tableRows(batchRoot, t),
@@ -116,6 +121,35 @@ class LiveIndexerSpec extends SparkSpec {
     assert(lc.length === 1, "update-wins table must hold one row per key")
     assert(lc(0).getAs[Long]("height_tx") === 6L,
       "latest-wins must keep the newest commit")
+  }
+
+  test("mergeAll under the persist barrier releases a LogicalRDD-rooted batch") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val root = java.nio.file.Files.createTempDirectory("graft-live-persist").toString
+    // the cluster default: a non-local master with no checkpoint dir
+    val s = spark.newSession()
+    s.conf.set("spark.sql.graft.barrier", "persist")
+    // a foreachBatch micro-batch's shape: the frame's own plan is a LogicalRDD
+    val raw = s.createDataFrame(
+      s.sparkContext.parallelize((1 to 3).map(h => Row(h.toLong, envelope(h))), 2),
+      StructType(Seq(StructField("height", LongType), StructField("block_json", StringType))))
+    assert(raw.queryExecution.logical
+      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+    val cache = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val cacheWasEmpty = cache.isEmpty
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+
+    LiveIndexer.mergeAll(raw, root, classOf[Ingest.JsonPassthroughDecoder].getName)
+
+    assert(raw.storageLevel === org.apache.spark.storage.StorageLevel.NONE,
+      "the raw batch's cache entry must be dropped")
+    assert(cache.isEmpty === cacheWasEmpty)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
+    assert(leaked.isEmpty, s"mergeAll left persisted RDDs behind: $leaked")
+    assert(tableRows(root, "block_info").size === 3)
+    assert(tableRows(root, "scores").size === 6)
   }
 
   test("HTTP client polls a loopback server end-to-end through the " +

@@ -21,6 +21,26 @@ class TextOpsSpec extends SparkSpec {
     }
   }
 
+  test("qualityScoresDocsKeep refuses keep columns that collide with its own columns") {
+    import org.apache.spark.sql.functions.{col, length}
+    val docs = Tables.documents(spark, sfDir)
+    // a passthrough that resolves to an internal or a score name would be
+    // shadowed (n_words) or duplicated (doc_id, quality) in the scored frame
+    val chars = length(col("text"))
+    Seq(chars.as("n_words"), col("doc_id"), chars.as("N_UNIQ"),
+        chars.as("quality")).foreach { c =>
+      val e = intercept[IllegalArgumentException] {
+        TextOps.qualityScoresDocsKeep(docs, Seq(col("lang"), c))
+      }
+      assert(e.getMessage.contains("collide"), e.getMessage)
+    }
+    // disjoint names pass through, in order, next to the scores
+    val ok = TextOps.qualityScoresDocsKeep(docs,
+      Seq(col("lang"), length(col("text")).as("chars")))
+    assert(ok.columns.take(3).toSeq === Seq("doc_id", "lang", "chars"))
+    assert(ok.columns.contains("n_words") && ok.columns.contains("quality"))
+  }
+
   test("langid predicts a language for every doc") {
     val rows = TextOps.langid(spark, sfDir).collect()
     assert(rows.length === Tables.documents(spark, sfDir).count())

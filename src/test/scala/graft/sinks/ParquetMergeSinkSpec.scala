@@ -5,6 +5,31 @@ import graft.SparkSpec
 class ParquetMergeSinkSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Spark jobs `body` starts. Scoped by job group, so jobs another suite
+    * runs meanwhile are not counted; the listener bus is drained (as
+    * SkewAudit does) so every job start has been delivered.
+    */
+  private def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"merge-jobs-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "merge job shape")
+    try body
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
+
   test("merge is an idempotent latest-wins upsert") {
     val dir = java.nio.file.Files.createTempDirectory("graft-sink").toString + "/t"
     val b1 = Seq((1L, "a", 10L), (2L, "b", 10L)).toDF("k", "v", "ver")
@@ -101,6 +126,7 @@ class ParquetMergeSinkSpec extends SparkSpec {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         ParquetMergeSink.merge(batch, dir, Seq("k"), "ver", nBuckets = 4)
+        () // foreachBatch's Scala overload takes a Unit function
       }
       .start()
     q.awaitTermination(60000)
@@ -522,5 +548,83 @@ class ParquetMergeSinkSpec extends SparkSpec {
     assert(!new java.io.File(dir).exists(),
       "a no-op batch must not mint an empty table as a side effect")
     assert(ParquetMergeSink.readIfExists(spark, dir).isEmpty)
+
+    // A batch only a job can find empty: the staging job alone decides
+    // it — one job, no separate emptiness probe, still no table.
+    val lazyEmpty = spark.range(0, 100).filter(col("id") % 7 === 100)
+      .selectExpr("id AS k", "cast(id AS string) AS v", "id AS ver",
+        "id > 50 AS del")
+    var staged = -1L
+    assert(jobsOf {
+      staged = ParquetMergeSink.merge(lazyEmpty.drop("del"), dir, Seq("k"), "ver")
+    } === 1)
+    assert(staged === 0L)
+    assert(jobsOf(ParquetMergeSink.mergeActions(
+      lazyEmpty, dir, Seq("k"), "ver", col("del"))) === 1)
+    assert(!new java.io.File(dir).exists(),
+      "a no-op batch must not mint an empty table as a side effect")
+
+    // Against an existing table the shape is checked before emptiness is
+    // known: an empty batch that does not fit the declared schema is
+    // refused like a full one, and a fitting one changes nothing.
+    ParquetMergeSink.merge(Seq((1L, "a", 10L)).toDF("k", "v", "ver"),
+      dir, Seq("k"), "ver", nBuckets = 4)
+    val extra = intercept[IllegalArgumentException] {
+      ParquetMergeSink.merge(empty.drop("del").withColumn("x", col("k")),
+        dir, Seq("k"), "ver")
+    }
+    assert(extra.getMessage.contains("not in the table schema"), extra.getMessage)
+    val narrowing = intercept[IllegalArgumentException] {
+      ParquetMergeSink.mergeActions(empty.withColumn("v", col("k") > 0),
+        dir, Seq("k"), "ver", col("del"))
+    }
+    assert(narrowing.getMessage.contains("losslessly"), narrowing.getMessage)
+    assert(ParquetMergeSink.merge(empty.drop("del"), dir, Seq("k"), "ver") === 0L)
+    ParquetMergeSink.mergeActions(empty, dir, Seq("k"), "ver", col("del"))
+    assert(ParquetMergeSink.read(spark, dir).collect()
+      .map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toSeq === Seq(1L -> "a"))
+  }
+
+  test("a merge stages its batch in one job, then writes; staged blocks are released") {
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("graft-merge-jobs").toString + "/t"
+    ParquetMergeSink.merge(Seq((1L, "a", 10L), (2L, "b", 10L)).toDF("k", "v", "ver"),
+      dir, Seq("k"), "ver", nBuckets = 4)
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+
+    // staging (rows + touched buckets + emptiness) is one job; the write
+    // is the latest-wins shuffle's map job plus the write job
+    var rows = -1L
+    val mergeJobs = jobsOf {
+      rows = ParquetMergeSink.merge(
+        Seq((1L, "a2", 20L), (3L, "c", 20L), (3L, "c-old", 5L)).toDF("k", "v", "ver"),
+        dir, Seq("k"), "ver")
+    }
+    assert(rows === 3L, "merge returns the row count its staging job observed")
+    assert(mergeJobs <= 3, s"a merge into an existing table ran $mergeJobs jobs")
+
+    // mergeActions: staging, the in-batch latest-wins barrier (map job +
+    // checkpoint), the write (map job + write job)
+    val actionJobs = jobsOf(ParquetMergeSink.mergeActions(
+      Seq((2L, "b", 30L, true), (4L, "d", 30L, false)).toDF("k", "v", "ver", "del"),
+      dir, Seq("k"), "ver", col("del")))
+    assert(actionJobs === 5, s"mergeActions ran $actionJobs jobs")
+
+    val state = ParquetMergeSink.read(spark, dir).collect()
+      .map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toMap
+    assert(state === Map(1L -> "a2", 3L -> "c", 4L -> "d"))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
+    assert(leaked.isEmpty, s"merges left staged RDDs persisted: $leaked")
+
+    // the lazy persist barrier (the non-local default) stages the same way
+    val s = spark.newSession()
+    s.conf.set("spark.sql.graft.barrier", "persist")
+    val batch = s.createDataFrame(Seq((3L, "c2", 40L), (5L, "e", 40L)))
+      .toDF("k", "v", "ver")
+    assert(ParquetMergeSink.merge(batch, dir, Seq("k"), "ver") === 2L)
+    assert(ParquetMergeSink.read(spark, dir).collect()
+      .map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toMap ===
+      Map(1L -> "a2", 3L -> "c2", 4L -> "d", 5L -> "e"))
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore).isEmpty)
   }
 }

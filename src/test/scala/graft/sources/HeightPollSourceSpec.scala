@@ -39,6 +39,7 @@ class HeightPollSourceSpec extends SparkSpec {
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
           ParquetMergeSink.merge(batch, table, Seq("height"), "height")
+          () // foreachBatch's Scala overload takes a Unit function
         }
         .start()
       q.awaitTermination()

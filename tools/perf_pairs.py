@@ -1,0 +1,150 @@
+#!/usr/bin/env python3
+"""Compare paired benchmark runs of a parent and a change checkout.
+
+    python3 tools/perf_pairs.py PARENT_OUT CHANGE_OUT [--benchmark BENCHMARK.json]
+                                [--workload NAME] [--runs]
+
+PARENT_OUT and CHANGE_OUT are `perfbench/out` directories, one per
+checkout: `perfbench/run.py` writes each run to `<workload>-s<seed>-t<trace>/`
+and reuses that directory, so the two sides of a pair must come from two
+checkouts. Runs pair up by workload and seed; only untraced runs (`-t0`)
+carry the end-to-end metrics.
+
+For every end-to-end metric in BENCHMARK.json and every workload, prints
+each side's median and quartiles, how many pairs the change won (ties count
+for neither side), and two verdicts:
+
+  gain   the change won at least 9 of every 10 pairs AND its median beats
+         the parent's by more than the parent's own Q1-Q3 spread
+  bound  the change's median is no worse than the parent's by more than the
+         metric's BENCHMARK.json bound (a relative bound)
+
+It also reports whether every run was correct with no failed operations,
+and flags runs that shared the machine with another JVM. It only reads
+files.
+"""
+import argparse
+import glob
+import json
+import os
+import re
+import statistics
+import sys
+
+TAG = re.compile(r"^(?P<workload>.+)-s(?P<seed>\d+)-t(?P<trace>[01])$")
+
+
+def load_runs(out_dir):
+    """{(workload, seed): record} for the untraced runs under out_dir."""
+    runs = {}
+    for path in glob.glob(os.path.join(out_dir, "*", "record.json")):
+        m = TAG.match(os.path.basename(os.path.dirname(path)))
+        if not m or m["trace"] != "0":
+            continue
+        with open(path) as f:
+            runs[(m["workload"], int(m["seed"]))] = json.load(f)
+    return runs
+
+
+def quartiles(xs):
+    """(Q1, median, Q3), linear interpolation between order statistics."""
+    if len(xs) == 1:
+        return xs[0], xs[0], xs[0]
+    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, q2, q3
+
+
+def value(record, name):
+    """An end-to-end metric of one run, or None where it was not recorded."""
+    return record.get("metrics", {}).get(name, {}).get("value")
+
+
+def failed_ops(record):
+    harness = record.get("harness", {})
+    return int(harness.get("failed", 0))
+
+
+def compare(workload, pairs, spec):
+    """Print one workload's table; return False if any bound is broken."""
+    seeds = sorted(pairs)
+    print(f"\n== {workload}: {len(seeds)} pairs, seeds "
+          f"{', '.join(str(s) for s in seeds)}")
+    bad_runs = [(side, s) for s in seeds for side, r in
+                zip(("parent", "change"), pairs[s])
+                if not r.get("correct") or failed_ops(r)]
+    shared = [(side, s) for s in seeds for side, r in
+              zip(("parent", "change"), pairs[s])
+              if r.get("overlapped_other_jvm")]
+    print(f"correct with 0 failed: "
+          f"{'all runs' if not bad_runs else 'NO ' + str(bad_runs)}")
+    if shared:
+        print(f"runs that shared the machine with another JVM: {shared}")
+    print(f"{'metric':<20} {'parent Q1 / median / Q3':>29} "
+          f"{'change Q1 / median / Q3':>29} {'delta':>7} {'wins':>6}  gain  bound")
+    ok = True
+    for m in spec["end_to_end"]:
+        name, lower = m["name"], m["better"] == "lower"
+        both = [(value(pairs[s][0], name), value(pairs[s][1], name))
+                for s in seeds]
+        both = [(p, c) for p, c in both if p is not None and c is not None]
+        if not both:
+            print(f"{name:<20} not measured")
+            continue
+        par, chg = [p for p, _ in both], [c for _, c in both]
+        wins = sum((c < p) if lower else (c > p) for p, c in both)
+        pq1, pmed, pq3 = quartiles(par)
+        cq1, cmed, cq3 = quartiles(chg)
+        gap = (pmed - cmed) if lower else (cmed - pmed)
+        gain = 10 * wins >= 9 * len(both) and gap > (pq3 - pq1)
+        worse = -gap / pmed if pmed else 0.0
+        within = worse <= m["bound"]
+        ok = ok and within
+        delta = (cmed - pmed) / pmed if pmed else float("nan")
+        print(f"{name:<20} {pq1:>9.4g} {pmed:>9.4g} {pq3:>9.4g} "
+              f"{cq1:>9.4g} {cmed:>9.4g} {cq3:>9.4g} {delta:>+7.1%} "
+              f"{wins:>2}/{len(both):<3}  {'yes' if gain else 'no':<4}  "
+              f"{'holds' if within else 'BROKEN'} (bound {m['bound']:.0%})")
+    return ok
+
+
+def main():
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("parent_out")
+    ap.add_argument("change_out")
+    ap.add_argument("--benchmark", default=os.path.join(root, "BENCHMARK.json"))
+    ap.add_argument("--workload", help="only this workload")
+    ap.add_argument("--runs", action="store_true",
+                    help="also print every pair's values")
+    a = ap.parse_args()
+    with open(a.benchmark) as f:
+        spec = json.load(f)
+    parent, change = load_runs(a.parent_out), load_runs(a.change_out)
+    keys = sorted(set(parent) & set(change))
+    unpaired = sorted(set(parent) ^ set(change))
+    if unpaired:
+        print(f"unpaired runs (ignored): {unpaired}")
+    workloads = sorted({w for w, _ in keys if a.workload in (None, w)})
+    if not workloads:
+        sys.exit("no untraced run appears in both directories")
+    ok = True
+    for w in workloads:
+        pairs = {s: (parent[(w, s)], change[(w, s)]) for ww, s in keys if ww == w}
+        ok = compare(w, pairs, spec) and ok
+        if a.runs:
+            names = [m["name"] for m in spec["end_to_end"]]
+            print("seed     " + "  ".join(f"{n:>25}" for n in names))
+            nan = float("nan")
+            for s in sorted(pairs):
+                p, c = pairs[s]
+                cells = []
+                for n in names:
+                    pv, cv = value(p, n), value(c, n)
+                    cells.append(f"{nan if pv is None else pv:>11.4g} ->"
+                                 f"{nan if cv is None else cv:>11.4g}")
+                print(f"{s:<8} " + "  ".join(cells))
+    sys.exit(0 if ok else 1)
+
+
+if __name__ == "__main__":
+    main()
