@@ -45,16 +45,14 @@ object Bench {
       try fn(spark, sfDir).count() catch { case _: Throwable => () }
       reclaim()
     }
-    // Three timed runs per query. `queries` carries the MIN (steady-state
-    // throughput, robust to one-off GC/scheduler noise — the number to
-    // compare against a baseline), and `spread` carries min/median/max so
-    // published claims reflect run-to-run variance instead of the best
-    // observed number. Checkpoint blocks are released AFTER the clock
-    // stops — each query still pays its own materialization cost, but
-    // queries don't tax each other through block-manager pressure.
-    // SPARK_GRAFT_BENCH_RUNS overrides for very large SFs where a single
-    // run is minutes and min-of-3 would burn the measurement budget; the
-    // emitted JSON records whatever was used.
+    // Three timed runs per query. `queries` carries each query's MEDIAN
+    // and `value` their sum; the min/median/max spread goes to a file, so
+    // published claims can show run-to-run variance. Checkpoint blocks are
+    // released AFTER the clock stops — each query still pays its own
+    // materialization cost, but queries don't tax each other through
+    // block-manager pressure. SPARK_GRAFT_BENCH_RUNS overrides for very
+    // large SFs where a single run is minutes and three would burn the
+    // measurement budget; the emitted JSON records whatever was used.
     val timedRuns = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(3)
     // A failed run must NOT become a timing sample: elapsed-to-exception
     // would publish a broken query as the suite's fastest. Failures are
@@ -75,29 +73,29 @@ object Bench {
     val samples = all.collect { case (n, ts) if ts.forall(_.isDefined) =>
       n -> ts.flatten.sorted
     }
-    val results = samples.map { case (name, ts) => name -> ts.head }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val spread = samples.map { case (k, ts) =>
-      "\"" + k + "\":{\"min\":" + ts.head + ",\"med\":" + ts(ts.size / 2) +
-        ",\"max\":" + ts.last + "}"
-    }.mkString("{", ",", "}")
+    def d3(x: Double): String = String.format(java.util.Locale.ROOT, "%.3f", x)
+    def obj(kvs: Iterable[(String, String)]): String =
+      kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val medians = samples.map { case (k, ts) => k -> ts(ts.size / 2) }
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    val totalMax = if (samples.nonEmpty) samples.values.map(_.last).sum else 0.0
-    val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","runs":$timedRuns,"total_max":$totalMax,"failed":$failedJson,"queries":$qs,"spread":$spread,"sf":"$sfDir"}"""
-    println(fullLine)
-    // The full line above is ~10-15 KB for the whole suite, and a harness
-    // that keeps only a bounded stdout tail cannot parse it (observed:
-    // every round's captured bench ends mid-line). Persist the full
-    // per-query JSON to a file for diffing, and END stdout with a compact
-    // line (same metric/value/unit/sf contract, well under 2 KB) so a
-    // tail-bounded consumer always has one complete parseable JSON line.
-    val benchFile = new java.io.File("bench_full.json")
-    val w = new java.io.PrintWriter(benchFile, "UTF-8")
-    try w.println(fullLine) finally w.close()
-    println(s"""{"metric":"total","value":$total,"unit":"sec","runs":$timedRuns,"total_max":$totalMax,"failed":$failedJson,"n_queries":${results.size},"queries_file":"${benchFile.getAbsolutePath}","sf":"$sfDir"}""")
+    // The spread lives in a file named by sf and core count, so runs at
+    // different scales or widths never overwrite each other's copy.
+    val sfName = new java.io.File(sfDir).getName
+    val spreadFile = new java.io.File(s"bench_spread_${sfName}_${cpus}c.json")
+    val spread = obj(samples.map { case (k, ts) =>
+      k -> obj(Seq("min" -> d3(ts.head), "med" -> d3(ts(ts.size / 2)),
+        "max" -> d3(ts.last)))
+    })
+    val w = new java.io.PrintWriter(spreadFile, "UTF-8")
+    try w.println(s"""{"sf":"$sfDir","cpus":$cpus,"runs":$timedRuns,"spread":$spread}""")
+    finally w.close()
+    // stdout ENDS with the one contract line: medians at 3 decimals keep
+    // it a few KB for the whole suite, so a consumer keeping a bounded
+    // stdout tail still gets it whole.
+    val qs = obj(medians.map { case (k, v) => k -> d3(v) })
+    println(s"""{"metric":"total","value":${d3(medians.values.sum)},"unit":"sec",""" +
+      s""""runs":$timedRuns,"failed":$failedJson,"queries":$qs,""" +
+      s""""spread_file":"${spreadFile.getAbsolutePath}","sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -79,14 +79,8 @@ object Verify {
       // strategy of adaptive operators for the dump, restore afterwards —
       // the oracle contract is unconditional at any sweep SF.
       val pins = SparkEntry.oraclePins.getOrElse(name, Map.empty)
-      val saved = pins.keys.map(k => k -> spark.conf.getOption(k)).toMap
-      pins.foreach { case (k, v) => spark.conf.set(k, v) }
-      val err =
-        try dumpOne(spark, name, fn, sfDir, outDir)
-        finally saved.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
-        }
+      val err = SessionConf.withConf(spark, pins.toSeq: _*)(
+        dumpOne(spark, name, fn, sfDir, outDir))
       // drop the query's checkpoint blocks before the next one runs
       Tables.releaseIntermediates(spark)
       err.map(name -> _)

@@ -489,7 +489,7 @@ object Dedup {
         // remaining reader, so release them here instead of leaving them
         // for the caller's release sweep (long-lived sessions outside
         // Bench/Verify would otherwise accumulate them per call)
-        edges.unpersist(blocking = false)
+        Tables.release(edges)
         return componentsLocal(spark, local)
       }
       graft.StrategyLog.record("dd_components", "distributed",
@@ -596,6 +596,7 @@ object Dedup {
     def sumOf(df: DataFrame): java.math.BigDecimal =
       df.agg(sum(col("lab").cast("decimal(38,0)"))).head().getDecimal(0)
     var prevSum = sumOf(labels)
+    Tables.release(pb) // `edges` is materialized now and never re-reads it
     // an EMPTY edge list (a fully partition-local contraction under a
     // forced-distributed cap) has nothing to propagate: sum-of-empty is
     // null, and the schema-correct empty label frame is the answer
@@ -616,12 +617,16 @@ object Dedup {
       // the superseded round's blocks are dead once `next` is materialized
       // — release them so a long propagation doesn't hoard the block
       // manager (no-op on the un-barriered round-0 frame)
-      labels.unpersist(blocking = false)
+      Tables.release(labels)
       labels = next
       converged = s.compareTo(prevSum) == 0
       prevSum = s
       rounds += 1
     }
+    // the result reads only the last round's frame, already materialized
+    // (a checkpoint cut its lineage; the cache manager keeps a loaded
+    // persisted frame when its inputs are dropped)
+    Tables.release(edges)
     // Unconverged labels are WRONG labels (a >50-hop chain would be split
     // into several clusters) — fail loudly rather than under-deduplicate.
     if (!converged)

@@ -199,15 +199,20 @@ class HeightPollStream(options: CaseInsensitiveStringMap)
     throw new UnsupportedOperationException(
       "admission-controlled source: latestOffset(start, limit) is the entry")
 
+  /** The end of the next batch, or null when no height lies past `start`
+    * (the `FileStreamSource` convention). Returning `start` instead would
+    * read as new data while nothing is committed yet, so a pump started
+    * past the tip would run an empty first batch.
+    */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[HeightOffset].h
-    val tip = math.max(fixedTip.getOrElse(client.latestHeight()), from)
-    val capped = limit match {
+    val tip = fixedTip.getOrElse(client.latestHeight())
+    if (tip <= from) null
+    else limit match {
       case r: org.apache.spark.sql.connector.read.streaming.ReadMaxRows =>
-        math.min(tip, from + r.maxRows())
-      case _ => tip
+        HeightOffset(math.min(tip, from + r.maxRows()))
+      case _ => HeightOffset(tip)
     }
-    HeightOffset(capped)
   }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{
   GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig,
   TimeMode, TimerValues, Trigger, ValueState}
 
+import graft.SessionConf.withConf
 import graft.indexer.{Model, Upsert}
 
 /** Output row of [[EventStream.runningTypeTotals]]. */
@@ -22,6 +23,12 @@ case class TypeTotal(eventType: String, batchCount: Long, runningTotal: Long)
   * State is bounded by the watermark (event-time) and the conflict keys.
   */
 object EventStream {
+
+  // Session confs the replays set for their own call only (withConf).
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong" -> "true"
+  private val RocksDbStore = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+  private val Utc = "spark.sql.session.timeZone" -> "UTC"
 
   /** Drain a bounded streaming replay into a parquet STAGING dir through
     * `foreachBatch` and return the dir. This is the scale-safe
@@ -88,13 +95,9 @@ object EventStream {
     */
   private def withStoreCap[T](spark: org.apache.spark.sql.SparkSession,
       width: Int)(body: => T): T = {
-    val conf = spark.conf
     val key = "spark.sql.shuffle.partitions"
-    val prev = conf.getOption(key)
-    conf.set(key,
-      math.min(width, conf.get(key, width.toString).toInt).toString)
-    try body
-    finally prev.fold(conf.unset(key))(conf.set(key, _))
+    withConf(spark,
+      key -> math.min(width, spark.conf.get(key, width.toString).toInt).toString)(body)
   }
 
   /** Data-aware store width for single-input keyed-state replays
@@ -229,17 +232,12 @@ object EventStream {
     val built = graft.functions.LayoutCache.serve(spark, layout, fp) {
       staging =>
         val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val conf = spark.conf
-        val outKey = "spark.sql.parquet.outputTimestampType"
-        val prevOut = conf.getOption(outKey)
         // micros, never INT96: the pinned-schema streaming reader
         // refuses INT96 (PARQUET_COLUMN_DATA_TYPE_MISMATCH)
-        conf.set(outKey, "TIMESTAMP_MICROS")
-        try
+        withConf(spark, "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")(
           graft.Tables.events(spark, dir)
             .repartitionByRange(splits, col("ts"), col("event_id"))
-            .write.mode("overwrite").parquet(staging.toString)
-        finally prevOut.fold(conf.unset(outKey))(conf.set(outKey, _))
+            .write.mode("overwrite").parquet(staging.toString))
         // part-NNNNN names carry the range order; rename into the glob
         // shape and stamp ascending mod times (2 s apart — coarser than
         // any filesystem's timestamp granularity) so admission order is
@@ -521,19 +519,13 @@ object EventStream {
     */
   def emaScoresStreamed(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val conf = spark.conf
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = conf.getOption(provKey)
-    conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // The raw events table is parquet TIMESTAMP(NANOS): the footer probe
     // behind resolveReplay (and the single-batch `streamReplaySplits<=1`
     // replay itself) needs the legacy nanos conf set on THIS session —
     // without it a fresh session throws Illegal Parquet type before the
     // split-layout side effect of Tables.events can mask it.
-    val prevNanos = conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-    conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try withStoreCap(spark, replayStoreWidth(spark, dir)) {
+    withConf(spark, RocksDbStore, NanosAsLong)(withStoreCap(spark,
+        replayStoreWidth(spark, dir)) {
       // The update stream emits one refreshed (ema, n) row per user per
       // micro-batch it appears in — O(users × batches). That frame STAGES
       // to parquet via foreachBatch (executor-side write), never a memory
@@ -562,11 +554,7 @@ object EventStream {
         val rows = out.collect().toIndexedSeq
         spark.createDataFrame(rows.asJava, out.schema)
       } finally deleteStaged(spark, staged)
-    } finally {
-      prevProv.fold(conf.unset(provKey))(conf.set(provKey, _))
-      prevNanos.fold(conf.unset("spark.sql.legacy.parquet.nanosAsLong"))(
-        conf.set("spark.sql.legacy.parquet.nanosAsLong", _))
-    }
+    })
   }
 
   /** Daily per-type stats computed BY THE STREAMING ENGINE over the events
@@ -584,51 +572,37 @@ object EventStream {
     */
   def dailyStatsStreamed(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types._
-    // Session-conf mutations are scoped to this call and restored in the
-    // finally: repeated invocations (bench warmup + timed runs, long-lived
-    // sessions) must not accumulate global state.
-    val conf = spark.conf
-    val prevNanos = conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-    val prevTz = conf.getOption("spark.sql.session.timeZone")
     // events.ts is parquet TIMESTAMP(NANOS): declared LongType under the
     // legacy nanos conf and rebuilt at microsecond precision, exactly like
     // the batch loader (Tables.events) — schemas must be explicit for
-    // streaming reads anyway.
-    conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // `window(ts, '1 day')` buckets in the SESSION timezone while the
-    // oracle's strftime buckets the raw UTC timestamp — they agree only
-    // under UTC, so pin it for the computation.
-    conf.set("spark.sql.session.timeZone", "UTC")
+    // streaming reads anyway. `window(ts, '1 day')` buckets in the SESSION
+    // timezone while the oracle's strftime buckets the raw UTC timestamp —
+    // they agree only under UTC, so pin it for the computation.
     val name = s"graft_stream_daily_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    try {
-      // the file-stream source wants a directory: scan the sf dir, admit
-      // only the events table (ts layout probed by eventsStream)
-      val q = eventsStream(spark, dir)
-        .groupBy(window(col("ts"), "1 day"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("total_value"))
-        .select(
-          date_format(col("window.start"), "yyyy-MM-dd").as("day"),
-          col("event_type"), col("n_events"), col("total_value"))
-        .writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // Materialize the bounded result (day × type domain) into a local
-      // frame so the memory-sink table can be DROPPED before returning —
-      // otherwise every invocation leaks a UUID-named temp view holding
-      // the full result in driver memory.
-      val out = spark.table(name).orderBy("day", "event_type")
-      val rows = out.collect().toIndexedSeq
-      spark.createDataFrame(rows.asJava, out.schema)
-    } finally {
-      spark.catalog.dropTempView(name)
-      prevNanos.fold(conf.unset("spark.sql.legacy.parquet.nanosAsLong"))(
-        conf.set("spark.sql.legacy.parquet.nanosAsLong", _))
-      prevTz.fold(conf.unset("spark.sql.session.timeZone"))(
-        conf.set("spark.sql.session.timeZone", _))
+    withConf(spark, NanosAsLong, Utc) {
+      try {
+        // the file-stream source wants a directory: scan the sf dir, admit
+        // only the events table (ts layout probed by eventsStream)
+        val q = eventsStream(spark, dir)
+          .groupBy(window(col("ts"), "1 day"), col("event_type"))
+          .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("total_value"))
+          .select(
+            date_format(col("window.start"), "yyyy-MM-dd").as("day"),
+            col("event_type"), col("n_events"), col("total_value"))
+          .writeStream
+          .format("memory").queryName(name)
+          .outputMode("complete")
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        // Materialize the bounded result (day × type domain) into a local
+        // frame so the memory-sink table can be DROPPED before returning —
+        // otherwise every invocation leaks a UUID-named temp view holding
+        // the full result in driver memory.
+        val out = spark.table(name).orderBy("day", "event_type")
+        val rows = out.collect().toIndexedSeq
+        spark.createDataFrame(rows.asJava, out.schema)
+      } finally spark.catalog.dropTempView(name)
     }
   }
 
@@ -658,14 +632,10 @@ object EventStream {
   def streamDedupDaily(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val conf = spark.conf
-    val prevNanos = conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-    val prevTz = conf.getOption("spark.sql.session.timeZone")
-    conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // date_format buckets in the session timezone; the oracle's strftime
     // buckets raw UTC — agree only under UTC
-    conf.set("spark.sql.session.timeZone", "UTC")
-    try withStoreCap(spark, replayStoreWidth(spark, dir)) {
+    withConf(spark, NanosAsLong, Utc)(withStoreCap(spark,
+        replayStoreWidth(spark, dir)) {
       // The deduped stream is O(corpus) (one row per distinct key) — it
       // STAGES to parquet via foreachBatch (executor-side write), never a
       // memory sink: the memory sink collects every task result onto the
@@ -703,12 +673,7 @@ object EventStream {
         val rows = out.collect().toIndexedSeq
         spark.createDataFrame(rows.asJava, out.schema)
       } finally deleteStaged(spark, staged)
-    } finally {
-      prevNanos.fold(conf.unset("spark.sql.legacy.parquet.nanosAsLong"))(
-        conf.set("spark.sql.legacy.parquet.nanosAsLong", _))
-      prevTz.fold(conf.unset("spark.sql.session.timeZone"))(
-        conf.set("spark.sql.session.timeZone", _))
-    }
+    })
   }
 
   val streamDedupDailyOracle: String =
@@ -766,10 +731,7 @@ object EventStream {
   def sessionStatsStreamed(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val conf = spark.conf
-    val prevNanos = conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-    conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try {
+    withConf(spark, NanosAsLong) {
       // Complete mode re-emits EVERY session per trigger — O(corpus) —
       // so each emission folds to the per-user result DISTRIBUTED inside
       // foreachBatch and overwrites the staging dir (last trigger = final
@@ -801,9 +763,6 @@ object EventStream {
         val rows = out.collect().toIndexedSeq
         spark.createDataFrame(rows.asJava, out.schema)
       } finally deleteStaged(spark, staged)
-    } finally {
-      prevNanos.fold(conf.unset("spark.sql.legacy.parquet.nanosAsLong"))(
-        conf.set("spark.sql.legacy.parquet.nanosAsLong", _))
     }
   }
 
@@ -905,32 +864,36 @@ object EventStream {
     *    observed before this shape). The per-purchase count is the
     *    bounded materialization of the append output.
     *
+    * Both paths as described lean on the split layout's event-time
+    * admission order. A user `streamEventsGlob` names files that are
+    * admitted by modification time, in whatever order they landed, so
+    * under one the join path runs whatever `streamPurchaseImpl` asks for,
+    * without watermarks; the choice and the replay shape are
+    * strategy-logged.
+    *
     * Gate-checked against the same DuckDB oracle as the batch query;
     * EventStreamSpec additionally pins row-for-row equality with
-    * `Events.purchaseContext`.
+    * `Events.purchaseContext`, also over a user glob of shuffled files.
     */
   def purchaseContextStreamed(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val impl = spark.conf
-      .getOption("spark.sql.graft.streamPurchaseImpl").getOrElse("state")
-    graft.StrategyLog.record("stream_purchase_context", impl)
-    if (impl == "join") purchaseContextJoin(spark, dir)
-    else purchaseContextState(spark, dir)
-  }
+      dir: String): DataFrame =
+    withConf(spark, NanosAsLong) {
+      val spec = resolveReplay(spark, dir)
+      val asked = spark.conf
+        .getOption("spark.sql.graft.streamPurchaseImpl").getOrElse("state")
+      val impl = if (spec.batches == "user") "join" else asked
+      graft.StrategyLog.record("stream_purchase_context", impl,
+        "asked" -> asked, "replay" -> spec.batches)
+      if (impl == "join") purchaseContextJoin(spark, spec)
+      else purchaseContextState(spark, dir, spec)
+    }
 
   /** The single-store path of [[purchaseContextStreamed]]. */
   private def purchaseContextState(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
+      dir: String, spec: ReplaySpec): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val conf = spark.conf
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = conf.getOption(provKey)
-    conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val prevNanos = conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-    conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try withStoreCap(spark, replayStoreWidth(spark, dir)) {
-      val spec = resolveReplay(spark, dir)
+    withConf(spark, RocksDbStore)(withStoreCap(spark,
+        replayStoreWidth(spark, dir)) {
       // one stream branch: purchases and views ride the same shuffle,
       // (ts, event_id) as plain micros/longs through the typed boundary
       val typed = replayStream(spark, spec)
@@ -956,43 +919,37 @@ object EventStream {
         val rows = out.collect().toIndexedSeq
         spark.createDataFrame(rows.asJava, out.schema)
       } finally deleteStaged(spark, staged)
-    } finally {
-      prevProv.fold(conf.unset(provKey))(conf.set(provKey, _))
-      prevNanos.fold(conf.unset("spark.sql.legacy.parquet.nanosAsLong"))(
-        conf.set("spark.sql.legacy.parquet.nanosAsLong", _))
-    }
+    })
   }
 
   /** The stream-stream join path of [[purchaseContextStreamed]]. */
   private def purchaseContextJoin(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
+      spec: ReplaySpec): DataFrame = {
     import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types._
-    val conf = spark.conf
-    val prevNanos = conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-    conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // A stream-stream join spins FOUR state stores per shuffle partition
     // — see [[withStoreCap]] for why the width is capped at 8 here. The
     // fixed cap stands at every measured SF (unlike the single-input
     // replays, whose width releases with data volume — [[replayStoreWidth]]),
     // but the explicit override conf still applies so a deployment can
     // size the join width to its arrival rate.
-    try withStoreCap(spark,
-      conf.getOption("spark.sql.graft.streamStoreCap").map(_.toInt).getOrElse(8)) {
+    withStoreCap(spark, spark.conf.getOption("spark.sql.graft.streamStoreCap")
+        .map(_.toInt).getOrElse(8)) {
       // ONE layout resolve/build for all three branches; the default spec
       // is the time-split multi-batch layout, so the watermark advances
       // between batches and join-state eviction actually runs — state is
       // bounded by the 1h horizon's arrival rate, not the corpus (the
       // single-batch replay held all 4M purchase+view rows as state at
       // sf10; r9 measured ~250k steady-state rows under this admission)
-      val spec = resolveReplay(spark, dir)
       def src = replayStream(spark, spec)
-      val purchases = src.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("purchase_id"), col("ts").as("pts"))
-        .withWatermark("pts", "0 seconds")
-      val views = src.filter(col("event_type") === "view")
-        .select(col("user_id").as("v_uid"), col("ts").as("vts"))
-        .withWatermark("vts", "0 seconds")
+      // A user glob admits files in landing order, not event-time order,
+      // and a watermark would drop a late file's rows: there the join
+      // keeps all its state (bounded by the landing directory) instead.
+      def watermarked(df: DataFrame, c: String) =
+        if (spec.batches == "user") df else df.withWatermark(c, "0 seconds")
+      val purchases = watermarked(src.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("event_id").as("purchase_id"), col("ts").as("pts")), "pts")
+      val views = watermarked(src.filter(col("event_type") === "view")
+        .select(col("user_id").as("v_uid"), col("ts").as("vts")), "vts")
       val joined = purchases.join(views,
           col("user_id") === col("v_uid") &&
             col("vts") >= col("pts") - expr("INTERVAL 1 HOUR") &&
@@ -1019,9 +976,6 @@ object EventStream {
         val rows = out.collect().toIndexedSeq
         spark.createDataFrame(rows.asJava, out.schema)
       } finally deleteStaged(spark, staged)
-    } finally {
-      prevNanos.fold(conf.unset("spark.sql.legacy.parquet.nanosAsLong"))(
-        conf.set("spark.sql.legacy.parquet.nanosAsLong", _))
     }
   }
 

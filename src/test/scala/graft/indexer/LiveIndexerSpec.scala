@@ -152,6 +152,70 @@ class LiveIndexerSpec extends SparkSpec {
     assert(tableRows(root, "scores").size === 6)
   }
 
+  private val decoder = classOf[Ingest.JsonPassthroughDecoder].getName
+  private val factoryMode =
+    org.apache.spark.sql.internal.SQLConf.CODEGEN_FACTORY_MODE.key
+
+  private def rawBatch(s: org.apache.spark.sql.SparkSession,
+      heights: Range): DataFrame =
+    s.createDataFrame(heights.map(h => (h.toLong, envelope(h))))
+      .toDF("height", "block_json")
+
+  test("a warm live trigger compiles no generated class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val root = java.nio.file.Files.createTempDirectory("graft-live-interp").toString
+    LiveIndexer.mergeAll(rawBatch(spark, 1 to 1), root, decoder) // warm-up
+    val batch = rawBatch(spark, 2 to 2)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    LiveIndexer.mergeAll(batch, root, decoder)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled === 0L, s"a one-height trigger compiled $compiled classes")
+    assert(tableRows(root, "block_info").size === 2)
+  }
+
+  test("mergeAll leaves the session's codegen factory mode as it found it") {
+    val s = spark.newSession()
+    val root = java.nio.file.Files.createTempDirectory("graft-live-mode").toString
+    def mode = s.conf.getAll.get(factoryMode)
+    val during = scala.collection.mutable.Set.empty[Option[String]]
+    val record: (Long, String) => Unit = (_, _) => during += mode
+
+    assert(mode === None)
+    LiveIndexer.mergeAll(rawBatch(s, 1 to 1), root, decoder, record)
+    assert(mode === None, "an unset factory mode must stay unset")
+
+    s.conf.set(factoryMode, "CODEGEN_ONLY")
+    LiveIndexer.mergeAll(rawBatch(s, 2 to 2), root, decoder, record)
+    assert(mode === Some("CODEGEN_ONLY"))
+
+    s.conf.set(factoryMode, "FALLBACK")
+    val boom = intercept[RuntimeException] {
+      LiveIndexer.mergeAll(rawBatch(s, 3 to 3), root, decoder,
+        (_, table) => if (table == "events") throw new RuntimeException("boom"))
+    }
+    assert(boom.getMessage === "boom")
+    assert(mode === Some("FALLBACK"), "a failed trigger must restore the mode")
+    assert(during === Set(Some("NO_CODEGEN")), "a trigger runs interpreted")
+  }
+
+  test("an interpreted trigger writes exactly what codegen merges write") {
+    val base = java.nio.file.Files.createTempDirectory("graft-live-codegen").toString
+    val raw = rawBatch(spark, 1 to 8)
+    LiveIndexer.mergeAll(raw, s"$base/interpreted", decoder)
+    graft.SessionConf.withConf(spark, factoryMode -> "CODEGEN_ONLY") {
+      LiveIndexer.tablesOf(raw, decoder).foreach { case (name, df, keys, version) =>
+        ParquetMergeSink.merge(df, s"$base/codegen/$name", keys, version)
+      }
+    }
+    tableNames.foreach { t =>
+      val a = ParquetMergeSink.read(spark, s"$base/interpreted/$t")
+      val b = ParquetMergeSink.read(spark, s"$base/codegen/$t")
+      assert(a.count() === b.count(), s"row counts differ on $t")
+      assert(tableRows(s"$base/interpreted", t) === tableRows(s"$base/codegen", t),
+        s"interpreted and codegen merges diverged on table $t")
+    }
+  }
+
   test("HTTP client polls a loopback server end-to-end through the " +
       "same lineage") {
     // A real network hop behind the two-method SPI: a loopback

@@ -176,6 +176,33 @@ class DedupSpec extends SparkSpec {
     assert(got === drv)
   }
 
+  test("components leave no barrier behind that the result does not read") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // the contraction test's scattered chain: several propagation rounds
+    val chain = (1L until 120L).map(i => (i, i + 1))
+    val edges = chain.sortBy(e => e._1 * 2654435761L % 997)
+    val pairs = sc.parallelize(edges, 16).toDF("doc_a", "doc_b")
+    def leaves(df: org.apache.spark.sql.DataFrame): Set[Int] =
+      df.queryExecution.logical.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      }.toSet
+    def survivors(capped: Long): (Set[Int], Set[Int], Map[Long, Long]) = {
+      val before = sc.getPersistentRDDs.keySet
+      val out = Dedup.componentsFrom(spark, pairs, maxDriverEdges = capped)
+      val labels = out.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      (sc.getPersistentRDDs.keySet.toSet -- before, leaves(out), labels)
+    }
+    val (drvLeft, _, drv) = survivors(Long.MaxValue)
+    assert(drvLeft.isEmpty, s"the driver path left persisted RDDs: $drvLeft")
+    val (distLeft, distLeaves, dist) = survivors(-1L)
+    assert(distLeft.subsetOf(distLeaves),
+      s"label propagation left barriers its result does not read: " +
+        s"${distLeft -- distLeaves}")
+    assert(dist === drv)
+    assert(drv.values.toSet === Set(1L))
+  }
+
   test("incremental dedup drops re-crawls and double-submits, keeps fresh docs") {
     import org.apache.spark.sql.functions._
     val out = Dedup.incremental(spark, sfDir).collect()

@@ -86,6 +86,32 @@ class HeightPollSourceSpec extends SparkSpec {
     assert(batches.size >= 3, s"expected >= ceil(7/3) batches, got $batches")
   }
 
+  test("a pump started past the tip runs no batch until a height lands") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-poll-tip").toString
+    val base = java.nio.file.Files.createTempDirectory("graft-poll-tip-out").toString
+    writeHeights(dir, 1 to 3)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[Long])]()
+    val q = pollStream(dir, Map("startHeight" -> "4")).writeStream
+      .option("checkpointLocation", base + "/ckpt")
+      .trigger(Trigger.ProcessingTime(100L))
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+        seen.add(id -> batch.select("height").collect().map(_.getLong(0)).toSeq)
+        ()
+      }
+      .start()
+    try {
+      q.processAllAvailable()
+      Thread.sleep(500L) // several trigger intervals over the same tip
+      q.processAllAvailable()
+      assert(seen.isEmpty, s"batches ran before any height landed: $seen")
+      writeHeights(dir, 4 to 4)
+      q.processAllAvailable()
+      import scala.jdk.CollectionConverters._
+      assert(seen.asScala.toSeq === Seq(0L -> Seq(4L)),
+        "the first batch must be exactly the height that landed")
+    } finally q.stop()
+  }
+
   test("a batch's height range fans out to heightsPerPartition-sized workers") {
     val dir = java.nio.file.Files.createTempDirectory("graft-poll-fan").toString
     val base = java.nio.file.Files.createTempDirectory("graft-poll-fan-out").toString

@@ -333,6 +333,45 @@ class EventStreamSpec extends SparkSpec {
     } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
+  test("purchase context over a user glob of shuffled files takes the join " +
+      "path and equals the batch join") {
+    import org.apache.hadoop.fs.Path
+    // a landing directory of four event-time ranges whose modification
+    // times do not follow event time
+    val landing = java.nio.file.Files.createTempDirectory("graft-pc-glob").toString
+    val staging = landing + "/_staging"
+    graft.SessionConf.withConf(spark,
+        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
+      graft.Tables.events(spark, sfDir)
+        .repartitionByRange(4, col("ts"), col("event_id"))
+        .write.parquet(staging)
+    }
+    val fs = new Path(landing).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val parts = fs.listStatus(new Path(staging))
+      .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
+    assert(parts.length === 4)
+    val base = System.currentTimeMillis() - 60000L
+    parts.zip(Seq(2, 0, 3, 1)).zipWithIndex.foreach { case ((p, rank), i) =>
+      val target = new Path(landing, s"ev_$i.parquet")
+      assert(fs.rename(p.getPath, target))
+      fs.setTimes(target, base + 2000L * rank, -1)
+    }
+    fs.delete(new Path(staging), true)
+    val streamed = graft.SessionConf.withConf(spark,
+        "spark.sql.graft.streamEventsGlob" -> "ev_*.parquet",
+        "spark.sql.graft.streamPurchaseImpl" -> "state",
+        "spark.sql.graft.streamMaxFiles" -> "1") { // one file per batch
+      EventStream.purchaseContextStreamed(spark, landing)
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+    }
+    assert(graft.StrategyLog.lastChoice("stream_purchase_context")
+      .exists(_.startsWith("join ")), "a user glob must take the join path")
+    val batch = graft.operators.Events.purchaseContext(spark, sfDir)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(streamed.nonEmpty)
+    assert(streamed.toSeq === batch.toSeq)
+  }
+
   test("transformWithState maintains per-user EMA across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
