@@ -115,7 +115,8 @@ object LiveIndexer {
     * micro-batches (Trigger.AvailableNow — the catch-up run; a deployment
     * polling a live chain uses a processing-time trigger with the same
     * lineage). Restart with the same checkpoint to resume exactly where
-    * the last committed batch ended.
+    * the last committed batch ended. A `maxHeightsPerTrigger` below 1 is
+    * refused with an `IllegalArgumentException` before the query starts.
     */
   def start(spark: SparkSession, landingDir: String, tableRoot: String,
       checkpoint: String,

@@ -170,4 +170,88 @@ class HeightPollSourceSpec extends SparkSpec {
     assert(viaPoll.sortBy(_.head.asInstanceOf[Long].longValue()) ===
       viaFiles.sortBy(_.head.asInstanceOf[Long].longValue()))
   }
+
+  test("a DirHeightClient parses Hadoop's configuration once, not once per height") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-poll-conf").toString
+    // ~6 KB bodies with non-ASCII text, so a byte-for-byte match means
+    // the UTF-8 round trip kept every byte
+    val pad = "\u00e9\u4e2d" * 1200
+    (1 to 240).foreach { h =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, s"$h.json"),
+        s"""{"height":"$h","pad":"$pad"}""".getBytes("UTF-8"))
+    }
+    // Every new Hadoop Configuration looks core-default.xml up through the
+    // context class loader it captured when it was built, once per parse
+    // of its default resources; count those lookups on this thread
+    val loads = new java.util.concurrent.atomic.AtomicInteger()
+    val parent = Thread.currentThread().getContextClassLoader
+    val counting = new ClassLoader(parent) {
+      override def getResource(name: String): java.net.URL = {
+        if (name == "core-default.xml") loads.incrementAndGet()
+        super.getResource(name)
+      }
+    }
+    val client = new DirHeightClient(dir)
+    Thread.currentThread().setContextClassLoader(counting)
+    val bodies =
+      try (1L to 240L).map(h => h -> client.fetchBlock(h))
+      finally Thread.currentThread().setContextClassLoader(parent)
+    assert(loads.get() <= 1,
+      s"240 fetches through one client parsed the configuration ${loads.get()} times")
+    bodies.foreach { case (h, body) =>
+      val file = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dir, s"$h.json"))
+      assert(java.util.Arrays.equals(body.getBytes("UTF-8"), file),
+        s"height $h body differs from its file")
+    }
+  }
+
+  test("each trigger polls the tip once and reports chain_tip, committed_height and lag_heights") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-poll-metrics").toString
+    val base = java.nio.file.Files.createTempDirectory("graft-poll-metrics-out").toString
+    writeHeights(dir, 1 to 7)
+    CountingDirClient.polls.set(0)
+    val q = pollStream(dir, Map("maxHeightsPerTrigger" -> "3",
+        "client" -> classOf[CountingDirClient].getName)).writeStream
+      .option("checkpointLocation", base + "/ckpt")
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) => () }
+      .start()
+    q.awaitTermination()
+    val ms = q.recentProgress.toSeq.map(_.sources.head.metrics)
+    assert(ms.map(_.get("lag_heights")) === Seq("4", "1", "0"), s"metrics: $ms")
+    assert(ms.map(_.get("committed_height")) === Seq("3", "6", "7"))
+    assert(ms.map(_.get("chain_tip")) === Seq("7", "7", "7"))
+    // AvailableNow pins the tip once; reportLatestOffset reuses it
+    assert(CountingDirClient.polls.get() === 1,
+      s"the landing directory was listed ${CountingDirClient.polls.get()} times")
+  }
+
+  test("non-positive maxHeightsPerTrigger or heightsPerPartition is refused before any batch") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-poll-bad").toString
+    val base = java.nio.file.Files.createTempDirectory("graft-poll-bad-out").toString
+    writeHeights(dir, 1 to 5)
+    for (key <- Seq("maxHeightsPerTrigger", "heightsPerPartition"); v <- Seq("0", "-2")) {
+      val e = intercept[IllegalArgumentException](pollStream(dir, Map(key -> v)))
+      assert(e.getMessage.contains(key), e.getMessage)
+    }
+    val e = intercept[IllegalArgumentException] {
+      graft.indexer.LiveIndexer.start(spark, dir, base + "/lake", base + "/ckpt",
+        maxHeightsPerTrigger = Some(0L))
+    }
+    assert(e.getMessage.contains("maxHeightsPerTrigger"), e.getMessage)
+    assert(spark.streams.active.isEmpty)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(base, "lake")))
+  }
+}
+
+/** A [[DirHeightClient]] that counts its tip polls. */
+class CountingDirClient(dir: String) extends DirHeightClient(dir) {
+  override def latestHeight(): Long = {
+    CountingDirClient.polls.incrementAndGet()
+    super.latestHeight()
+  }
+}
+
+object CountingDirClient {
+  val polls = new java.util.concurrent.atomic.AtomicInteger()
 }
