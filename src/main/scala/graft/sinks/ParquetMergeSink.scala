@@ -26,21 +26,24 @@ import graft.indexer.Upsert
   * job materializes the aligned, bucketed batch behind a barrier and
   * observes, in the same pass, the set of touched buckets and the row
   * count (emptiness); no separate `isEmpty` or bucket-`distinct` job runs.
-  * The write reads the touched buckets and resolves latest-wins (under
-  * AQE: the shuffle's map job plus the write job). At live-trigger batch
-  * sizes a merge's cost is mostly per-job planning and scheduling, so
-  * the job count is what matters. The staged blocks are released as soon
-  * as the commit (or the failure) is done, not left to the GC.
+  * The write is the bucket-commit tail [[merge]] and [[mergeActions]]
+  * share ([[commitBuckets]]): it reads the touched buckets, lets the
+  * caller resolve them (latest-wins for a merge; delete/update/insert
+  * for mergeActions) and writes the result (under AQE: the shuffle's map
+  * job plus the write job). At live-trigger batch sizes a merge's cost
+  * is mostly per-job planning and scheduling, so the job count is what
+  * matters. The staged blocks are released as soon as the commit (or the
+  * failure) is done, not left to the GC.
   *
   * Durability: data files are immutable once written; the ONLY mutation
-  * is the one-small-file manifest commit, which covers ALL touched
-  * buckets at once — a crash leaves every reader on the previous
-  * manifest, so the table is observed wholly at either generation even
-  * across a multi-bucket merge (strictly stronger than a per-bucket
-  * rename swap, which could commit a prefix of buckets). Valid on
-  * object stores: no directory renames, no overwrites of live data —
-  * the commit is one small-object move. Single-writer per table, like
-  * the reference indexer; replaying a batch converges (latest-wins).
+  * is the one-small-file manifest commit that tail makes, which covers
+  * ALL touched buckets at once — a crash leaves every reader on the
+  * previous manifest, so the table is observed wholly at either
+  * generation even across a multi-bucket merge (strictly stronger than
+  * a per-bucket rename swap, which could commit a prefix of buckets).
+  * Valid on object stores: no directory renames, no overwrites of live
+  * data — the commit is one small-object move. Single-writer per table,
+  * like the reference indexer; replaying a batch converges (latest-wins).
   *
   * Version ties: ON CONFLICT DO UPDATE semantics — the incoming row wins
   * (a source-precedence tie-break, so version collisions like
@@ -204,16 +207,14 @@ object ParquetMergeSink {
       }.toSeq: _*)
     }
 
-  /** Align `df` onto the declared schema: columns match by name
-    * (case-insensitive), declared-but-absent DATA columns null-fill,
-    * order follows the declaration. Three things REFUSE loudly — the
-    * sink never repairs a malformed batch implicitly:
+  /** The merge door [[merge]] and [[mergeActions]] share: `df`'s columns
+    * match the declared schema by name (case-insensitive). Three things
+    * REFUSE loudly — the sink never repairs a malformed batch implicitly:
     *
-    *   - extra columns (widening is what `ALTER TABLE … ADD COLUMN` is
-    *     for) and type mismatches that are not lossless upcasts (an
-    *     incoming type inside [[widens]]' set — an old-shape writer
-    *     after `ALTER COLUMN … TYPE` — upcasts implicitly; anything
-    *     else casts explicitly or refuses);
+    *   - type mismatches that are not lossless upcasts (an incoming type
+    *     inside [[widens]]' set — an old-shape writer after `ALTER
+    *     COLUMN … TYPE` — upcasts implicitly; anything else casts
+    *     explicitly or refuses);
     *   - a batch missing any of `required` (the merge keys + version
     *     column): null-filling a key would hash every such row into one
     *     bucket and collapse them to a single row under latest-wins, and
@@ -222,52 +223,64 @@ object ParquetMergeSink {
     *   - two incoming columns that differ only by case (`V` and `v`):
     *     the case-insensitive name match cannot pick one without
     *     silently dropping the other.
+    *
+    * The callers differ in what leaves the door. [[merge]] stores the
+    * batch as it comes out: extra columns refuse too (widening is what
+    * `ALTER TABLE … ADD COLUMN` is for), declared-but-absent DATA columns
+    * null-fill, and order follows the declaration. With `keepSourceOnly`
+    * ([[mergeActions]]) the source keeps its own columns: source-only
+    * ones such as a CDC op flag feed the delete predicate and pass
+    * through, and declared columns the source lacks are resolved per
+    * action later.
     */
   private def alignToSchema(df: DataFrame,
       declared: org.apache.spark.sql.types.StructType, what: String,
-      required: Seq[String] = Nil): DataFrame = {
-    def lc(s: String) = s.toLowerCase(java.util.Locale.ROOT)
-    val caseDups = df.schema.fields.groupBy(f => lc(f.name))
+      required: Seq[String], keepSourceOnly: Boolean): DataFrame = {
+    val caseDups = df.schema.fields.groupBy(f => lcName(f.name))
       .filter(_._2.length > 1).values.map(_.map(_.name).mkString("/"))
     require(caseDups.isEmpty,
       s"$what carries columns that differ only by case: " +
         s"${caseDups.mkString(", ")} — the by-name match cannot pick one " +
         "without silently dropping the other; rename or drop one first")
-    val byName = df.schema.fields.map(f => lc(f.name) -> f).toMap
-    val declaredNames = declared.fields.map(f => lc(f.name)).toSet
-    val extra = df.columns.filterNot(c => declaredNames.contains(lc(c)))
-    require(extra.isEmpty,
+    val byName = df.schema.fields.map(f => lcName(f.name) -> f).toMap
+    val declaredByName = declared.fields.map(f => lcName(f.name) -> f).toMap
+    val extra = df.columns.filterNot(c => declaredByName.contains(lcName(c)))
+    require(keepSourceOnly || extra.isEmpty,
       s"$what carries columns not in the table schema: " +
         s"${extra.mkString(", ")} — run ALTER TABLE … ADD COLUMN (or " +
         "ParquetMergeSink.addColumns) first; the sink never widens a " +
         "schema implicitly")
-    val missingRequired = required.filterNot(c => byName.contains(lc(c)))
+    val missingRequired = required.filterNot(c => byName.contains(lcName(c)))
     require(missingRequired.isEmpty,
       s"$what is missing the merge key/version column(s) " +
         s"${missingRequired.mkString(", ")} — only genuine data columns " +
         "(post-ADD COLUMN) null-fill; a null-filled key or version would " +
         "silently collapse or mis-order rows under latest-wins")
-    val cols = declared.fields.map { f =>
-      byName.get(lc(f.name)) match {
-        case Some(src) if src.dataType.catalogString == f.dataType.catalogString =>
-          col(src.name).as(f.name)
-        case Some(src) if widens(src.dataType, f.dataType) =>
-          // an old-shape writer after ALTER COLUMN … TYPE: its narrower
-          // value upcasts losslessly onto the declared type — the same
-          // keep-old-writers-working contract as null-filling ADD COLUMN.
-          // Casting BEFORE bucketing also keeps key hashing consistent
-          // (xxhash64 of int 5 ≠ xxhash64 of long 5).
-          col(src.name).cast(f.dataType).as(f.name)
-        case Some(src) =>
-          throw new IllegalArgumentException(
-            s"$what column ${f.name}: incoming type " +
-              s"${src.dataType.simpleString} does not losslessly widen to " +
-              s"declared ${f.dataType.simpleString} — cast explicitly; " +
-              "only lossless upcasts (ALTER COLUMN TYPE's widening set) " +
-              "are implicit")
-        case None => lit(null).cast(f.dataType).as(f.name)
-      }
-    }
+    // None: the incoming type is the declared one
+    def castTo(src: org.apache.spark.sql.types.StructField,
+        f: org.apache.spark.sql.types.StructField)
+        : Option[org.apache.spark.sql.types.DataType] =
+      if (src.dataType.catalogString == f.dataType.catalogString) None
+      // an old-shape writer after ALTER COLUMN … TYPE: its narrower
+      // value upcasts losslessly onto the declared type — the same
+      // keep-old-writers-working contract as null-filling ADD COLUMN.
+      // Casting BEFORE bucketing also keeps key hashing consistent
+      // (xxhash64 of int 5 ≠ xxhash64 of long 5).
+      else if (widens(src.dataType, f.dataType)) Some(f.dataType)
+      else throw new IllegalArgumentException(
+        s"$what column ${src.name}: incoming type " +
+          s"${src.dataType.simpleString} does not losslessly widen to " +
+          s"declared ${f.dataType.simpleString} — cast explicitly; " +
+          "only lossless upcasts (ALTER COLUMN TYPE's widening set) " +
+          "are implicit")
+    val cols =
+      if (keepSourceOnly) df.schema.fields.map(src =>
+        declaredByName.get(lcName(src.name)).flatMap(castTo(src, _))
+          .fold(col(src.name))(t => col(src.name).cast(t).as(src.name)))
+      else declared.fields.map(f => byName.get(lcName(f.name))
+        .fold(lit(null).cast(f.dataType))(src =>
+          castTo(src, f).fold(col(src.name))(col(src.name).cast(_)))
+        .as(f.name))
     df.select(cols.toSeq: _*)
   }
 
@@ -288,62 +301,40 @@ object ParquetMergeSink {
     */
   def addColumns(spark: SparkSession, path: String,
       newFields: Seq[org.apache.spark.sql.types.StructField]): Unit = {
-    val table = new Path(path)
-    val fs = fsFor(spark, table)
-    guardReadable(fs, table)
     require(newFields.nonEmpty, "ADD COLUMN needs at least one column")
     val notNullable = newFields.filterNot(_.nullable).map(_.name)
     require(notNullable.isEmpty,
       s"ADD COLUMN ${notNullable.mkString(", ")}: added columns must be " +
         "nullable — existing generations cannot supply a value for them")
-    val m = ManifestCommit.latest(fs, table).getOrElse(
-      throw new IllegalStateException(
-        s"$path has no committed merge-sink table to alter"))
-    // merge-sink bucket layouts only: maintained/partitioned tables read
-    // through TableMaintenance, which resolves schema from data — an
-    // ALTER there would record a declaration nothing honors (and a
-    // DV-carrying table's delete epoch must compact before its shape
-    // changes). Refuse loudly rather than half-evolve.
-    val nonBucket = m.dirs.keys.filterNot(_.forall(_.isDigit))
-    require(nonBucket.isEmpty,
-      s"$path is not a merge-sink bucket layout (entries: " +
-        s"${nonBucket.take(3).mkString(", ")}…) — ADD COLUMN serves " +
-        "merge-sink tables; rewrite maintained layouts through " +
-        "TableMaintenance")
-    val base = declaredSchema(m).getOrElse(stampable(read(spark, path).schema))
-    def lc(s: String) = s.toLowerCase(java.util.Locale.ROOT)
-    val existing = base.fields.map(f => lc(f.name)).toSet
-    val dup = newFields.map(f => lc(f.name))
-      .filter(n => existing.contains(n)) ++
-      newFields.groupBy(f => lc(f.name)).filter(_._2.size > 1).keys
-    require(dup.isEmpty,
-      s"ADD COLUMN ${dup.distinct.mkString(", ")}: column already exists")
-    val widened = org.apache.spark.sql.types.StructType(
-      base.fields ++ newFields.map(f =>
-        org.apache.spark.sql.types.StructField(f.name, f.dataType, nullable = true)))
-    // Physical-name assignment: a new column normally keeps its own name,
-    // but a name some generation may already carry data under — a DROPPED
-    // column's retired physical name, or a physical name a rename left
-    // behind — gets a FRESH suffixed physical name instead, so old files
-    // can never resurrect their values into the new column.
-    val pmap = physMap(m)
-    var usedLc = base.fields.map(f => lc(physOf(pmap, f.name))).toSet ++
-      retiredPhys(m).map(lc)
-    val newEntries = newFields.flatMap { f =>
-      if (!usedLc.contains(lc(f.name))) { usedLc += lc(f.name); None }
-      else {
-        val fresh = Iterator.from(2).map(i => s"${f.name}__$i")
-          .find(c => !usedLc.contains(lc(c))).get
-        usedLc += lc(fresh)
-        Some(f.name -> fresh)
+    alter(spark, path, "ADD COLUMN") { (m, base) =>
+      val existing = base.fields.map(f => lcName(f.name)).toSet
+      val dup = newFields.map(f => lcName(f.name))
+        .filter(n => existing.contains(n)) ++
+        newFields.groupBy(f => lcName(f.name)).filter(_._2.size > 1).keys
+      require(dup.isEmpty,
+        s"ADD COLUMN ${dup.distinct.mkString(", ")}: column already exists")
+      val widened = org.apache.spark.sql.types.StructType(
+        base.fields ++ newFields.map(f =>
+          org.apache.spark.sql.types.StructField(f.name, f.dataType, nullable = true)))
+      // Physical-name assignment: a new column normally keeps its own name,
+      // but a name some generation may already carry data under — a DROPPED
+      // column's retired physical name, or a physical name a rename left
+      // behind — gets a FRESH suffixed physical name instead, so old files
+      // can never resurrect their values into the new column.
+      val pmap = physMap(m)
+      var usedLc = base.fields.map(f => lcName(physOf(pmap, f.name))).toSet ++
+        retiredPhys(m).map(lcName)
+      val newEntries = newFields.flatMap { f =>
+        if (!usedLc.contains(lcName(f.name))) { usedLc += lcName(f.name); None }
+        else {
+          val fresh = Iterator.from(2).map(i => s"${f.name}__$i")
+            .find(c => !usedLc.contains(lcName(c))).get
+          usedLc += lcName(fresh)
+          Some(f.name -> fresh)
+        }
       }
+      Some(Altered(widened, pmap ++ newEntries))
     }
-    val newMap = pmap ++ newEntries
-    ManifestCommit.commit(fs, table,
-      (m.entries - "txid" - PhysKey) ++
-        Map(SchemaKey -> widened.json) ++
-        (if (newMap.nonEmpty) Map(PhysKey -> renderNameMap(newMap)) else Map.empty))
-    ManifestCommit.vacuum(fs, table, keep = 2)
   }
 
   /** `ALTER TABLE … DROP COLUMN` as ONE metadata-only manifest commit —
@@ -360,45 +351,30 @@ object ParquetMergeSink {
     */
   def dropColumns(spark: SparkSession, path: String,
       names: Seq[String]): Unit = {
-    val table = new Path(path)
-    val fs = fsFor(spark, table)
-    guardReadable(fs, table)
     require(names.nonEmpty, "DROP COLUMN needs at least one column")
-    val m = ManifestCommit.latest(fs, table).getOrElse(
-      throw new IllegalStateException(
-        s"$path has no committed merge-sink table to alter"))
-    val nonBucket = m.dirs.keys.filterNot(_.forall(_.isDigit))
-    require(nonBucket.isEmpty,
-      s"$path is not a merge-sink bucket layout (entries: " +
-        s"${nonBucket.take(3).mkString(", ")}…) — DROP COLUMN serves " +
-        "merge-sink tables; rewrite maintained layouts through " +
-        "TableMaintenance")
-    val base = declaredSchema(m).getOrElse(stampable(read(spark, path).schema))
-    val baseLc = base.fields.map(f => lcName(f.name)).toSet
-    val missing = names.filterNot(n => baseLc.contains(lcName(n)))
-    require(missing.isEmpty,
-      s"DROP COLUMN ${missing.mkString(", ")}: no such column " +
-        s"(table has ${base.fieldNames.mkString(", ")})")
-    val dropLc = names.map(lcName).toSet
-    val contract = (m.entries.get("merge.keys").toSeq.flatMap(_.split(",")) ++
-      m.entries.get("merge.version")).map(_.trim).filter(_.nonEmpty)
-    val protectedHit = contract.filter(c => dropLc.contains(lcName(c)))
-    require(protectedHit.isEmpty,
-      s"DROP COLUMN ${protectedHit.mkString(", ")}: merge key/version " +
-        "columns are the table's write contract and cannot be dropped")
-    val remaining = base.fields.filterNot(f => dropLc.contains(lcName(f.name)))
-    require(remaining.nonEmpty, "DROP COLUMN would leave the table empty")
-    val pmap = physMap(m)
-    val retired = retiredPhys(m) ++
-      base.fields.filter(f => dropLc.contains(lcName(f.name)))
-        .map(f => physOf(pmap, f.name))
-    val newMap = pmap.filterNot { case (k, _) => dropLc.contains(lcName(k)) }
-    ManifestCommit.commit(fs, table,
-      (m.entries - "txid" - PhysKey) ++
-        Map(SchemaKey -> org.apache.spark.sql.types.StructType(remaining).json,
-          RetiredKey -> retired.toSeq.sorted.mkString(",")) ++
-        (if (newMap.nonEmpty) Map(PhysKey -> renderNameMap(newMap)) else Map.empty))
-    ManifestCommit.vacuum(fs, table, keep = 2)
+    alter(spark, path, "DROP COLUMN") { (m, base) =>
+      val baseLc = base.fields.map(f => lcName(f.name)).toSet
+      val missing = names.filterNot(n => baseLc.contains(lcName(n)))
+      require(missing.isEmpty,
+        s"DROP COLUMN ${missing.mkString(", ")}: no such column " +
+          s"(table has ${base.fieldNames.mkString(", ")})")
+      val dropLc = names.map(lcName).toSet
+      val contract = (m.entries.get("merge.keys").toSeq.flatMap(_.split(",")) ++
+        m.entries.get("merge.version")).map(_.trim).filter(_.nonEmpty)
+      val protectedHit = contract.filter(c => dropLc.contains(lcName(c)))
+      require(protectedHit.isEmpty,
+        s"DROP COLUMN ${protectedHit.mkString(", ")}: merge key/version " +
+          "columns are the table's write contract and cannot be dropped")
+      val remaining = base.fields.filterNot(f => dropLc.contains(lcName(f.name)))
+      require(remaining.nonEmpty, "DROP COLUMN would leave the table empty")
+      val pmap = physMap(m)
+      val retired = retiredPhys(m) ++
+        base.fields.filter(f => dropLc.contains(lcName(f.name)))
+          .map(f => physOf(pmap, f.name))
+      Some(Altered(org.apache.spark.sql.types.StructType(remaining),
+        pmap.filterNot { case (k, _) => dropLc.contains(lcName(k)) },
+        Map(RetiredKey -> retired.toSeq.sorted.mkString(","))))
+    }
   }
 
   /** `ALTER TABLE … RENAME COLUMN` as ONE metadata-only manifest commit:
@@ -416,45 +392,29 @@ object ParquetMergeSink {
     * Delta's behavior after a rename.
     */
   def renameColumn(spark: SparkSession, path: String,
-      from: String, to: String): Unit = {
-    val table = new Path(path)
-    val fs = fsFor(spark, table)
-    guardReadable(fs, table)
-    val m = ManifestCommit.latest(fs, table).getOrElse(
-      throw new IllegalStateException(
-        s"$path has no committed merge-sink table to alter"))
-    val nonBucket = m.dirs.keys.filterNot(_.forall(_.isDigit))
-    require(nonBucket.isEmpty,
-      s"$path is not a merge-sink bucket layout (entries: " +
-        s"${nonBucket.take(3).mkString(", ")}…) — RENAME COLUMN serves " +
-        "merge-sink tables; rewrite maintained layouts through " +
-        "TableMaintenance")
-    val base = declaredSchema(m).getOrElse(stampable(read(spark, path).schema))
-    require(base.fields.exists(f => lcName(f.name) == lcName(from)),
-      s"RENAME COLUMN $from: no such column " +
-        s"(table has ${base.fieldNames.mkString(", ")})")
-    require(!base.fields.exists(f => lcName(f.name) == lcName(to)),
-      s"RENAME COLUMN $from TO $to: column $to already exists")
-    val pmap = physMap(m)
-    val phys = physOf(pmap, from)
-    val renamed = org.apache.spark.sql.types.StructType(base.fields.map(f =>
-      if (lcName(f.name) == lcName(from)) f.copy(name = to) else f))
-    val newMap = pmap.filterNot { case (k, _) => lcName(k) == lcName(from) } ++
-      (if (lcName(to) == lcName(phys)) Map.empty[String, String]
-       else Map(to -> phys))
-    // the write contract follows the logical name atomically
-    val contractEntries = Seq("merge.keys", "merge.version").flatMap { k =>
-      m.entries.get(k).map { v =>
-        k -> v.split(",").map(_.trim).map(c =>
-          if (lcName(c) == lcName(from)) to else c).mkString(",")
+      from: String, to: String): Unit =
+    alter(spark, path, "RENAME COLUMN") { (m, base) =>
+      require(base.fields.exists(f => lcName(f.name) == lcName(from)),
+        s"RENAME COLUMN $from: no such column " +
+          s"(table has ${base.fieldNames.mkString(", ")})")
+      require(!base.fields.exists(f => lcName(f.name) == lcName(to)),
+        s"RENAME COLUMN $from TO $to: column $to already exists")
+      val pmap = physMap(m)
+      val phys = physOf(pmap, from)
+      val renamed = org.apache.spark.sql.types.StructType(base.fields.map(f =>
+        if (lcName(f.name) == lcName(from)) f.copy(name = to) else f))
+      val newMap = pmap.filterNot { case (k, _) => lcName(k) == lcName(from) } ++
+        (if (lcName(to) == lcName(phys)) Map.empty[String, String]
+         else Map(to -> phys))
+      // the write contract follows the logical name atomically
+      val contractEntries = Seq("merge.keys", "merge.version").flatMap { k =>
+        m.entries.get(k).map { v =>
+          k -> v.split(",").map(_.trim).map(c =>
+            if (lcName(c) == lcName(from)) to else c).mkString(",")
+        }
       }
+      Some(Altered(renamed, newMap, contractEntries.toMap))
     }
-    ManifestCommit.commit(fs, table,
-      (m.entries - "txid" - PhysKey) ++
-        Map(SchemaKey -> renamed.json) ++ contractEntries ++
-        (if (newMap.nonEmpty) Map(PhysKey -> renderNameMap(newMap)) else Map.empty))
-    ManifestCommit.vacuum(fs, table, keep = 2)
-  }
 
   /** `ALTER TABLE … ALTER COLUMN c TYPE t` as ONE metadata-only manifest
     * commit, allowed ONLY for the lossless widenings in [[widens]] (the
@@ -477,47 +437,79 @@ object ParquetMergeSink {
     * ([[alignToSchema]]).
     */
   def widenColumnType(spark: SparkSession, path: String,
-      name: String, newType: org.apache.spark.sql.types.DataType): Unit = {
+      name: String, newType: org.apache.spark.sql.types.DataType): Unit =
+    alter(spark, path, "ALTER COLUMN TYPE") { (m, base) =>
+      val field = base.fields.find(f => lcName(f.name) == lcName(name))
+        .getOrElse(throw new IllegalArgumentException(
+          s"ALTER COLUMN $name: no such column " +
+            s"(table has ${base.fieldNames.mkString(", ")})"))
+      // Idempotence: re-running an already-applied ALTER (replayed migration
+      // scripts) declares the type the column already has — a no-op, not a
+      // "not a lossless widening" refusal (Delta's same-type ALTER behavior).
+      Option.when(field.dataType != newType) {
+        val keys = m.entries.get("merge.keys").toSeq.flatMap(_.split(","))
+          .map(_.trim).filter(_.nonEmpty)
+        require(!keys.exists(k => lcName(k) == lcName(name)),
+          s"ALTER COLUMN $name TYPE: $name is a merge key — bucket routing " +
+            "hashes the typed key value, so widening it would re-route " +
+            "existing keys (silent duplication); compact into a fresh table " +
+            "to re-type a key")
+        require(widens(field.dataType, newType),
+          s"ALTER COLUMN $name TYPE ${newType.simpleString}: not a lossless " +
+            s"widening of ${field.dataType.simpleString} — committed immutable " +
+            "files cannot change physical type; only the parquet-reader " +
+            "upcast set (byte→short→int→long, float→double, int→double, " +
+            "int/long→decimal, decimal precision growth, date→timestamp_ntz) " +
+            "is declarable")
+        Altered(org.apache.spark.sql.types.StructType(base.fields.map(f =>
+          if (lcName(f.name) == lcName(name)) f.copy(dataType = newType) else f)),
+          physMap(m))
+      }
+    }
+
+  /** What one ALTER commits: the new declared schema, the new
+    * logical→physical name map, and any other manifest entries it
+    * rewrites.
+    */
+  private final case class Altered(schema: org.apache.spark.sql.types.StructType,
+      phys: Map[String, String], other: Map[String, String] = Map.empty)
+
+  /** The preamble and commit every ALTER shares. The table must hold a
+    * committed merge-sink bucket layout; `change` validates against its
+    * manifest and declared schema (a legacy table without one adopts its
+    * data schema as the base) and returns what to commit, or None for a
+    * no-op. The commit is ONE metadata-only manifest flip that
+    * re-references the current generations unchanged. `op` names the
+    * ALTER in the layout refusal.
+    */
+  private def alter(spark: SparkSession, path: String, op: String)(
+      change: (ManifestCommit.Manifest, org.apache.spark.sql.types.StructType) =>
+        Option[Altered]): Unit = {
     val table = new Path(path)
     val fs = fsFor(spark, table)
     guardReadable(fs, table)
     val m = ManifestCommit.latest(fs, table).getOrElse(
       throw new IllegalStateException(
         s"$path has no committed merge-sink table to alter"))
+    // merge-sink bucket layouts only: maintained/partitioned tables read
+    // through TableMaintenance, which resolves schema from data — an
+    // ALTER there would record a declaration nothing honors (and a
+    // DV-carrying table's delete epoch must compact before its shape
+    // changes). Refuse loudly rather than half-evolve.
     val nonBucket = m.dirs.keys.filterNot(_.forall(_.isDigit))
     require(nonBucket.isEmpty,
       s"$path is not a merge-sink bucket layout (entries: " +
-        s"${nonBucket.take(3).mkString(", ")}…) — ALTER COLUMN TYPE " +
-        "serves merge-sink tables; rewrite maintained layouts through " +
+        s"${nonBucket.take(3).mkString(", ")}…) — $op serves " +
+        "merge-sink tables; rewrite maintained layouts through " +
         "TableMaintenance")
     val base = declaredSchema(m).getOrElse(stampable(read(spark, path).schema))
-    val field = base.fields.find(f => lcName(f.name) == lcName(name))
-      .getOrElse(throw new IllegalArgumentException(
-        s"ALTER COLUMN $name: no such column " +
-          s"(table has ${base.fieldNames.mkString(", ")})"))
-    // Idempotence: re-running an already-applied ALTER (replayed migration
-    // scripts) declares the type the column already has — a no-op, not a
-    // "not a lossless widening" refusal (Delta's same-type ALTER behavior).
-    if (field.dataType == newType) return
-    val keys = m.entries.get("merge.keys").toSeq.flatMap(_.split(","))
-      .map(_.trim).filter(_.nonEmpty)
-    require(!keys.exists(k => lcName(k) == lcName(name)),
-      s"ALTER COLUMN $name TYPE: $name is a merge key — bucket routing " +
-        "hashes the typed key value, so widening it would re-route " +
-        "existing keys (silent duplication); compact into a fresh table " +
-        "to re-type a key")
-    require(widens(field.dataType, newType),
-      s"ALTER COLUMN $name TYPE ${newType.simpleString}: not a lossless " +
-        s"widening of ${field.dataType.simpleString} — committed immutable " +
-        "files cannot change physical type; only the parquet-reader " +
-        "upcast set (byte→short→int→long, float→double, int→double, " +
-        "int/long→decimal, decimal precision growth, date→timestamp_ntz) " +
-        "is declarable")
-    val widened = org.apache.spark.sql.types.StructType(base.fields.map(f =>
-      if (lcName(f.name) == lcName(name)) f.copy(dataType = newType) else f))
-    ManifestCommit.commit(fs, table,
-      (m.entries - "txid") ++ Map(SchemaKey -> widened.json))
-    ManifestCommit.vacuum(fs, table, keep = 2)
+    change(m, base).foreach { a =>
+      ManifestCommit.commit(fs, table,
+        (m.entries - "txid" - PhysKey) ++ a.other ++
+          Map(SchemaKey -> a.schema.json) ++
+          (if (a.phys.nonEmpty) Map(PhysKey -> renderNameMap(a.phys)) else Map.empty))
+      ManifestCommit.vacuum(fs, table, keep = 2)
+    }
   }
 
   private def fsFor(spark: SparkSession, p: Path): FileSystem = {
@@ -573,18 +565,25 @@ object ParquetMergeSink {
     val fs = fsFor(spark, table)
     guardReadable(fs, table)
     ManifestCommit.latest(fs, table)
-      .map(m => (m.dirs, declaredSchema(m), physMap(m)))
-      .orElse(legacyLayout(fs, table).map(e =>
-        (ManifestCommit.Manifest(0L, e).dirs, None, Map.empty[String, String])))
-      .flatMap { case (dirMap, declared, pmap) =>
-        val dirs = dirMap.values.toSeq.sorted.map(rel => new Path(table, rel).toString)
-        if (dirs.isEmpty) None
-        else Some {
-          val scan = declared.fold(spark.read)(d =>
-            spark.read.schema(physicalSchema(d, pmap))).parquet(dirs: _*)
-          declared.fold(scan)(d => toLogical(scan, d, pmap))
-        }
-      }
+      .orElse(legacyLayout(fs, table).map(ManifestCommit.Manifest(0L, _)))
+      .filter(_.dirs.nonEmpty)
+      .map(m => scan(spark, table, m, m.dirs.values.toSeq.sorted))
+  }
+
+  /** The parquet scan of `rels` (data dirs relative to `table`) as
+    * manifest `m` declares them: with `m`'s OWN schema and name mapping
+    * when it has them (pre-ALTER versions keep the old shape, pre-RENAME
+    * versions the old names), else with the schema the files carry.
+    */
+  private def scan(spark: SparkSession, table: Path,
+      m: ManifestCommit.Manifest, rels: Seq[String]): DataFrame = {
+    val dirs = rels.map(rel => new Path(table, rel).toString)
+    val pmap = physMap(m)
+    declaredSchema(m) match {
+      case None => spark.read.parquet(dirs: _*)
+      case Some(d) => toLogical(
+        spark.read.schema(physicalSchema(d, pmap)).parquet(dirs: _*), d, pmap)
+    }
   }
 
   def read(spark: SparkSession, path: String): DataFrame =
@@ -608,16 +607,8 @@ object ParquetMergeSink {
       throw new IllegalArgumentException(
         s"version $version of $path is not retained — retained: " +
           ManifestCommit.committed(fs, table).map(_.version).mkString(", ")))
-    val dirs = m.dirs.values.toSeq.sorted.map(rel => new Path(table, rel).toString)
-    require(dirs.nonEmpty, s"version $version of $path references no data dirs")
-    // That manifest's OWN schema AND name mapping (pre-ALTER versions
-    // keep the old shape; pre-RENAME versions keep the old names).
-    val pmap = physMap(m)
-    declaredSchema(m) match {
-      case None => spark.read.parquet(dirs: _*)
-      case Some(d) => toLogical(
-        spark.read.schema(physicalSchema(d, pmap)).parquet(dirs: _*), d, pmap)
-    }
+    require(m.dirs.nonEmpty, s"version $version of $path references no data dirs")
+    scan(spark, table, m, m.dirs.values.toSeq.sorted)
   }
 
   /** An EMPTY merge-sink table whose schema and write contract are
@@ -646,9 +637,8 @@ object ParquetMergeSink {
       s"$path already holds a committed table — createEmpty refuses to " +
         "redefine it (merge into it, or remove it first)")
     require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
-    val cols = schema.fieldNames.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-    val missing = (keys :+ version)
-      .filterNot(c => cols.contains(c.toLowerCase(java.util.Locale.ROOT)))
+    val cols = schema.fieldNames.map(lcName).toSet
+    val missing = (keys :+ version).filterNot(c => cols.contains(lcName(c)))
     require(missing.isEmpty,
       s"key/version columns ${missing.mkString(", ")} are not in the " +
         s"schema (${schema.fieldNames.mkString(", ")})")
@@ -694,25 +684,6 @@ object ParquetMergeSink {
       val v = ManifestCommit.commit(fs, table, entries)
       ManifestCommit.Manifest(v, entries)
     }
-
-  /** The shared commit tail: flip the manifest to `entries`, then reclaim
-    * generations (and migrated legacy bucket dirs) no retained manifest
-    * references. keep=2: the previous manifest's generations survive one
-    * more commit for in-flight readers.
-    */
-  private def finishCommit(fs: FileSystem, table: Path,
-      entries: Map[String, String]): Unit = {
-    ManifestCommit.commit(fs, table, entries)
-    ManifestCommit.vacuum(fs, table, keep = 2)
-    val stillReferenced = ManifestCommit.committed(fs, table).takeRight(2)
-      .flatMap(_.dirs.values).filter(!_.contains("/")).toSet
-    fs.listStatus(table).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isDirectory && name.startsWith(s"$BucketCol=") &&
-          !stillReferenced.contains(name))
-        fs.delete(st.getPath, true)
-    }
-  }
 
   /** One batch staged for its write: `frame` is the aligned batch with
     * the bucket column, materialized behind a [[graft.Tables.barrier]];
@@ -760,6 +731,78 @@ object ParquetMergeSink {
       m
     }
 
+  /** The bucket-commit tail [[merge]] and [[mergeActions]] share.
+    *
+    * It reads the committed rows of ONLY the touched buckets: explicit dir
+    * reads from the manifest (partition pruning by construction —
+    * untouched bucket dirs never enter the scan). The bucket column is not
+    * stored in the files; it is recomputed from the keys, which is
+    * deterministic. `resolve` gets those rows (None when no touched bucket
+    * has a dir yet) and returns every row the touched buckets keep, with
+    * the bucket column.
+    *
+    * Those rows become a NEW immutable generation; nothing live is
+    * overwritten, so a crash before the commit is invisible to readers
+    * (the orphan dir is vacuumed later). Files are written under PHYSICAL
+    * column names — renamed columns keep the name they were born with, so
+    * every generation shares one file schema. One listing of the new
+    * generation settles each touched bucket's entry: it points at the
+    * bucket's new dir, or is REMOVED when the generation has none — the
+    * bucket kept no row (mergeActions deleted them all). A touched
+    * bucket's old entry is never carried: the generation holds every row
+    * the bucket keeps, so the old files could only bring back superseded
+    * or deleted rows. (For a merge every touched bucket gets a dir, since
+    * latest-wins keeps one row per key, null keys included, in the
+    * bucket its key hashes to: Spark's hash folds -0.0 into 0.0 and all
+    * NaNs into one, as its grouping does.)
+    *
+    * The manifest flip then covers every touched bucket at once, and
+    * generations (and migrated legacy bucket dirs) that no retained
+    * manifest references are reclaimed. keep=2: the previous manifest's
+    * generations survive one more commit for in-flight readers.
+    */
+  private def commitBuckets(fs: FileSystem, table: Path, staged: Staged,
+      keys: Seq[String], version: String)(
+      resolve: Option[DataFrame] => DataFrame): Unit = {
+    val manifest = manifestFor(fs, table, staged)
+    val touched = staged.touched
+    val currentDirs = touched.flatMap(b => manifest.dirs.get(b.toString))
+    val merged = resolve(Option.when(currentDirs.nonEmpty)(
+      scan(staged.frame.sparkSession, table, manifest, currentDirs)
+        .withColumn(BucketCol, bucketExpr(keys, staged.buckets))))
+
+    val declared = declaredSchema(manifest)
+    val gen = ManifestCommit.newGeneration(manifest.version + 1)
+    val genPath = new Path(table, gen)
+    declared.fold(merged)(d => toPhysical(merged, d, physMap(manifest)))
+      .write.mode(SaveMode.Overwrite)
+      .partitionBy(BucketCol).parquet(genPath.toString)
+    val written = fs.listStatus(genPath).map(_.getPath.getName).toSet
+    val updated = touched.collect { case b if written(s"$BucketCol=$b") =>
+      s"dir.$b" -> s"$gen/$BucketCol=$b"
+    }
+    val carried = manifest.entries.filter { case (k, _) =>
+      !k.startsWith("dir.") || !touched.contains(k.stripPrefix("dir.").toInt)
+    }
+    // Stamp the declared schema (or, first time, the batch-derived one):
+    // pre-existing tables acquire the entry on their next merge, which is
+    // what makes ALTER TABLE available to API-grown tables too.
+    val schemaEntry = SchemaKey -> declared.getOrElse(
+      stampable(org.apache.spark.sql.types.StructType(
+        merged.schema.fields.filterNot(_.name == BucketCol)))).json
+    ManifestCommit.commit(fs, table,
+      carried ++ updated ++ writeMeta(keys, version) + schemaEntry)
+    ManifestCommit.vacuum(fs, table, keep = 2)
+    val stillReferenced = ManifestCommit.committed(fs, table).takeRight(2)
+      .flatMap(_.dirs.values).filter(!_.contains("/")).toSet
+    fs.listStatus(table).foreach { st =>
+      val name = st.getPath.getName
+      if (st.isDirectory && name.startsWith(s"$BucketCol=") &&
+          !stillReferenced.contains(name))
+        fs.delete(st.getPath, true)
+    }
+  }
+
   /** Latest-wins upsert of `batch` into the table at `path`; returns the
     * number of batch rows staged (0 = an empty batch, which changes
     * nothing and creates no table).
@@ -782,80 +825,21 @@ object ParquetMergeSink {
     val staged = stage(fs, table, keys, nBuckets)(known =>
       known.flatMap(declaredSchema).fold(batch)(d =>
         alignToSchema(batch, d, s"merge batch into $path",
-          required = keys :+ version)))
+          required = keys :+ version, keepSourceOnly = false)))
     try {
       // Emptiness is known BEFORE any manifest is created: a no-op batch
       // against a nonexistent path leaves the filesystem untouched.
-      if (staged.rows > 0) upsertStaged(fs, table, staged, keys, version)
+      if (staged.rows > 0) {
+        // incoming outranks current on version ties
+        val batchB = staged.frame.withColumn(PrefCol, lit(1))
+        commitBuckets(fs, table, staged, keys, version)(current =>
+          Upsert.latestWins(
+              current.fold(batchB)(_.withColumn(PrefCol, lit(0)).unionByName(batchB)),
+              keys, col(version), col(PrefCol))
+            .drop(PrefCol))
+      }
       staged.rows
     } finally graft.Tables.release(staged.frame)
-  }
-
-  private def upsertStaged(fs: FileSystem, table: Path, staged: Staged,
-      keys: Seq[String], version: String): Unit = {
-    val spark = staged.frame.sparkSession
-    val manifest = manifestFor(fs, table, staged)
-    val buckets = staged.buckets
-    val touched = staged.touched
-    val declared = declaredSchema(manifest)
-    val pmap = physMap(manifest)
-    // incoming outranks current on version ties
-    val batchB = staged.frame.withColumn(PrefCol, lit(1))
-
-    // Current rows of ONLY the touched buckets: explicit dir reads from
-    // the manifest (partition pruning by construction — untouched bucket
-    // dirs never enter the scan). The bucket column is not stored in the
-    // files; it is recomputed from the keys, which is deterministic.
-    val dirMap = manifest.dirs
-    val currentDirs = touched.flatMap(b => dirMap.get(b.toString))
-      .map(rel => new Path(table, rel).toString)
-    val current =
-      if (currentDirs.nonEmpty)
-        Some({
-          val scan = declared.fold(spark.read)(d =>
-            spark.read.schema(physicalSchema(d, pmap))).parquet(currentDirs: _*)
-          declared.fold(scan)(d => toLogical(scan, d, pmap))
-        }
-          .withColumn(BucketCol, bucketExpr(keys, buckets))
-          .withColumn(PrefCol, lit(0)))
-      else None
-
-    val merged = Upsert.latestWins(
-        current.fold(batchB)(_.unionByName(batchB)),
-        keys, col(version), col(PrefCol))
-      .drop(PrefCol)
-
-    // New immutable generation holding the touched buckets' merged rows;
-    // nothing live is overwritten, so a crash before the commit below is
-    // invisible to readers (the orphan dir is vacuumed later). Files are
-    // written under PHYSICAL column names — renamed columns keep the name
-    // they were born with, so every generation shares one file schema.
-    val gen = ManifestCommit.newGeneration(manifest.version + 1)
-    declared.fold(merged)(d => toPhysical(merged, d, pmap))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(BucketCol).parquet(new Path(table, gen).toString)
-
-    val updated = touched.flatMap { b =>
-      val part = s"$BucketCol=$b"
-      if (fs.exists(new Path(new Path(table, gen), part)))
-        Some(s"dir.$b" -> s"$gen/$part")
-      else
-        // a touched bucket can produce no output only when neither the
-        // batch nor the current bucket had non-null-keyed rows — carry
-        // the old entry (if any) forward unchanged
-        dirMap.get(b.toString).map(rel => s"dir.$b" -> rel)
-    }
-    val carried = manifest.entries.filter { case (k, _) =>
-      !k.startsWith("dir.") || !touched.contains(k.stripPrefix("dir.").toInt)
-    }
-    // Stamp the declared schema (or, first time, the batch-derived one):
-    // pre-existing tables acquire the entry on their next merge, which is
-    // what makes ALTER TABLE available to API-grown tables too.
-    val schemaEntry = SchemaKey -> declared.getOrElse(
-      stampable(org.apache.spark.sql.types.StructType(
-        merged.schema.fields.filterNot(_.name == BucketCol)))).json
-    finishCommit(fs, table,
-      carried ++ updated ++ writeMeta(keys, version) + schemaEntry)
   }
 
   /** Write-config metadata stamped into every merge commit: the key and
@@ -924,20 +908,12 @@ object ParquetMergeSink {
     val table = new Path(path)
     val fs = fsFor(spark, table)
     guardReadable(fs, table)
-    // Same front-door contract as merge(): the source must actually carry
-    // the key/version columns (never null-fill them) and must not carry
-    // case-duplicate names the by-name projection would silently collapse.
-    def srcLc(s: String) = s.toLowerCase(java.util.Locale.ROOT)
-    val srcCaseDups = source.columns.groupBy(srcLc)
-      .filter(_._2.length > 1).values.map(_.mkString("/"))
-    require(srcCaseDups.isEmpty,
-      s"mergeActions source for $path carries columns that differ only " +
-        s"by case: ${srcCaseDups.mkString(", ")} — rename or drop one first")
-    val srcCols = source.columns.map(srcLc).toSet
-    val srcMissing = (keys :+ version).filterNot(c => srcCols.contains(srcLc(c)))
-    require(srcMissing.isEmpty,
-      s"mergeActions source for $path is missing the merge key/version " +
-        s"column(s) ${srcMissing.mkString(", ")}")
+    // The table's schema BEFORE this commit, from the manifest staging
+    // reads: the declared one, or the data schema of a legacy table that
+    // carries no stamp. The action projection null-fills declared columns
+    // the source predates (a CDC writer that has not learned a post-ALTER
+    // column yet).
+    var tableSchema = Option.empty[org.apache.spark.sql.types.StructType]
     // table columns BEFORE this commit: align the stored projection.
     // On the CREATE path there is no existing schema to project onto, so
     // columns referenced only by the delete predicate (a CDC op flag)
@@ -946,11 +922,6 @@ object ParquetMergeSink {
     // deleteWhen's referenced columns unless they are keys/version; a
     // caller whose predicate reads genuine data columns passes
     // `targetCols` explicitly (Delta's target-schema declaration).
-    // the declared-shaped schema when the table exists: the action
-    // projection null-fills declared columns the source predates (a CDC
-    // writer that has not learned a post-ALTER column yet).
-    val tableSchema: Option[org.apache.spark.sql.types.StructType] =
-      readIfExists(spark, path).map(_.schema)
     // lazy: an empty batch returns without validating targetCols
     lazy val tableCols: Seq[String] = tableSchema
       .map(_.fieldNames.toSeq)
@@ -974,36 +945,25 @@ object ParquetMergeSink {
         source.columns.toSeq.filterNot(c =>
           delRefs.contains(c) && !keys.contains(c) && c != version)
       }
-    // Normalize overlapping source columns onto the DECLARED types before
+    // Same front door as merge(): the source must actually carry the
+    // key/version columns (never null-fill them), must not carry
+    // case-duplicate names the by-name projection would silently
+    // collapse, and overlapping columns take the DECLARED types before
     // anything hashes or stores them: bucket routing hashes the typed key
     // value, so an un-cast narrower key (an old-shape writer after ALTER
     // COLUMN TYPE — or a writer that simply sends int where the table
     // declares long) would route to the wrong bucket and silently
-    // duplicate the key across buckets. Lossless widenings upcast; any
-    // other mismatch refuses at the door. Source-only columns (the CDC
-    // op flag) pass through untouched.
-    val typed = tableSchema match {
-      case Some(ts) =>
-        val byLc = ts.fields.map(f => srcLc(f.name) -> f).toMap
-        source.select(source.schema.fields.map { sf =>
-          byLc.get(srcLc(sf.name)) match {
-            case Some(tf)
-                if sf.dataType.catalogString == tf.dataType.catalogString =>
-              col(sf.name)
-            case Some(tf) if widens(sf.dataType, tf.dataType) =>
-              col(sf.name).cast(tf.dataType).as(sf.name)
-            case Some(tf) => throw new IllegalArgumentException(
-              s"mergeActions source for $path column ${sf.name}: incoming " +
-                s"type ${sf.dataType.simpleString} does not losslessly " +
-                s"widen to declared ${tf.dataType.simpleString} — cast " +
-                "explicitly; only lossless upcasts are implicit")
-            case None => col(sf.name)
-          }
-        }.toSeq: _*)
-      case None => source
+    // duplicate the key across buckets. Source-only columns (the CDC op
+    // flag) pass through untouched.
+    val staged = stage(fs, table, keys, nBuckets) { known =>
+      tableSchema = known.flatMap(m => declaredSchema(m).orElse(
+        Option.when(m.dirs.nonEmpty)(
+          scan(spark, table, m, m.dirs.values.toSeq.sorted).schema)))
+      alignToSchema(source,
+          tableSchema.getOrElse(org.apache.spark.sql.types.StructType(Nil)),
+          s"mergeActions source for $path", keys :+ version, keepSourceOnly = true)
+        .withColumn(DelCol, coalesce(deleteWhen.cast("boolean"), lit(false)))
     }
-    val staged = stage(fs, table, keys, nBuckets)(_ =>
-      typed.withColumn(DelCol, coalesce(deleteWhen.cast("boolean"), lit(false))))
     try {
       // Emptiness is known BEFORE any manifest is created: a no-op batch
       // against a nonexistent path leaves the filesystem untouched.
@@ -1011,44 +971,26 @@ object ParquetMergeSink {
         // intra-batch resolution first: one surviving row per source key,
         // so the WINNING row's delete/update verdict is what applies
         val resolved = Upsert.latestWins(staged.frame, keys, col(version)).barrier()
-        try applyActions(fs, table, staged, resolved, keys, version,
-          tableSchema, tableCols)
+        try commitBuckets(fs, table, staged, keys, version)(
+          applyActions(resolved, _, keys, tableSchema, tableCols))
         finally graft.Tables.release(resolved)
       }
     } finally graft.Tables.release(staged.frame)
   }
 
-  private def applyActions(fs: FileSystem, table: Path, staged: Staged,
-      resolved: DataFrame, keys: Seq[String], version: String,
+  /** The rows [[mergeActions]] keeps in the touched buckets, given their
+    * `current` rows: survivors = current rows whose key the source does
+    * not touch ∪ source rows not marked for delete.
+    */
+  private def applyActions(resolved: DataFrame, current: Option[DataFrame],
+      keys: Seq[String],
       tableSchema: Option[org.apache.spark.sql.types.StructType],
-      tableCols: Seq[String]): Unit = {
-    val spark = resolved.sparkSession
-    val manifest = manifestFor(fs, table, staged)
-    val buckets = staged.buckets
-    val touched = staged.touched
-
-    val dirMap = manifest.dirs
-    val currentDirs = touched.flatMap(b => dirMap.get(b.toString))
-      .map(rel => new Path(table, rel).toString)
-    val declared = declaredSchema(manifest)
-    val pmap = physMap(manifest)
-    val current = currentDirs match {
-      case Seq() => None
-      case dirs => Some({
-        val scan = declared.fold(spark.read)(d =>
-          spark.read.schema(physicalSchema(d, pmap))).parquet(dirs: _*)
-        declared.fold(scan)(d => toLogical(scan, d, pmap))
-      }.withColumn(BucketCol, bucketExpr(keys, buckets)))
-    }
-
-    // survivors = current rows whose key the source does not touch
-    //           ∪ source rows not marked for delete
+      tableCols: Seq[String]): DataFrame = {
     // matched+delete: current dropped by the anti join, source filtered out;
     // matched+update: current dropped, source row inserted;
     // unmatched+insert: source row inserted; unmatched+delete: no-op.
     val sourceKeys = resolved.select(keys.map(col): _*)
-    val presentLc = resolved.columns
-      .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
+    val presentLc = resolved.columns.map(lcName).toSet
     // Declared columns the source predates (a CDC writer that has not
     // learned a post-ALTER column yet): a matched UPDATE must NOT
     // overwrite the current row's value with null, so those columns are
@@ -1058,8 +1000,7 @@ object ParquetMergeSink {
     // Unmatched inserts get null — the ADD COLUMN read contract. The
     // key-join touches only the already-read touched buckets.
     val absentFields = tableSchema
-      .map(_.fields.toSeq.filterNot(f =>
-        presentLc.contains(f.name.toLowerCase(java.util.Locale.ROOT))))
+      .map(_.fields.toSeq.filterNot(f => presentLc.contains(lcName(f.name))))
       .getOrElse(Nil)
     val CurPrefix = "__cur_"
     val enriched = current match {
@@ -1071,10 +1012,10 @@ object ParquetMergeSink {
       case _ => resolved
     }
     val carriedLc = (if (current.isDefined) absentFields else Nil)
-      .map(_.name.toLowerCase(java.util.Locale.ROOT)).toSet
+      .map(f => lcName(f.name)).toSet
     val appliedCols: Seq[Column] = tableSchema match {
       case Some(ts) => ts.fields.toSeq.map { f =>
-        val fLc = f.name.toLowerCase(java.util.Locale.ROOT)
+        val fLc = lcName(f.name)
         if (presentLc.contains(fLc)) col(f.name)
         else if (carriedLc.contains(fLc)) col(CurPrefix + f.name).as(f.name)
         else lit(null).cast(f.dataType).as(f.name)
@@ -1083,29 +1024,8 @@ object ParquetMergeSink {
     }
     val applied = enriched.filter(!col(DelCol))
       .select(appliedCols :+ col(BucketCol): _*)
-    val merged = current
+    current
       .map(_.join(sourceKeys, keys, "left_anti").unionByName(applied))
       .getOrElse(applied)
-
-    val gen = ManifestCommit.newGeneration(manifest.version + 1)
-    declared.fold(merged)(d => toPhysical(merged, d, pmap))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(BucketCol).parquet(new Path(table, gen).toString)
-
-    val updated = touched.flatMap { b =>
-      val part = s"$BucketCol=$b"
-      // no output for a touched bucket = every row deleted → entry REMOVED
-      if (fs.exists(new Path(new Path(table, gen), part)))
-        Some(s"dir.$b" -> s"$gen/$part")
-      else None
-    }
-    val carried = manifest.entries.filter { case (k, _) =>
-      !k.startsWith("dir.") || !touched.contains(k.stripPrefix("dir.").toInt)
-    }
-    val schemaEntry = SchemaKey -> declared.getOrElse(
-      stampable(org.apache.spark.sql.types.StructType(
-        merged.schema.fields.filterNot(_.name == BucketCol)))).json
-    finishCommit(fs, table,
-      carried ++ updated ++ writeMeta(keys, version) + schemaEntry)
   }
 }

@@ -3,6 +3,7 @@ package graft.sinks
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Table-maintenance operations a 100 TB parquet lake runs on a schedule:
   * zone-map-friendly sorted writes and small-file compaction.
@@ -54,45 +55,82 @@ object TableMaintenance {
     * workload; see the spec for the measured pruning contrast.
     *
     * Mechanics (all scale-safe): each key is bucketed into `2^bitsPerKey`
-    * approximate quantile bins — boundaries come from one lightweight
-    * sample pass and ship as plan literals, so skewed keys still spread
-    * evenly and nothing is shuffled to compute them — then the bucket
-    * ids' bits interleave into one long z-value that drives a single
-    * `repartitionByRange` + within-partition sort. The z column is
-    * dropped before the write; the layout, not the schema, carries it.
+    * quantile bins, and the bucket ids' bits interleave into one long
+    * z-value that orders the rows within each file. The bin boundaries
+    * and the `numFiles - 1` file boundaries are exact quantiles of ONE
+    * fixed-seed sample of about [[ZSampleRows]] rows (the z-values of
+    * the sampled rows give the file cuts), so skewed keys still spread
+    * evenly and files get near-equal row counts; they ship as plan
+    * literals, and each row goes straight to its file's partition
+    * (`repartitionById`). The layout is a function of the input alone:
+    * `approxQuantile`'s sketches can merge in whatever order the shuffle
+    * delivers them, and `repartitionByRange` seeds its sampler with the
+    * RDD id — i.e. with how many RDDs the session made before — so with
+    * either the same table could land in different files. The
+    * z column is dropped before the write; the layout, not the schema,
+    * carries it.
     */
   def writeZOrdered(df: DataFrame, path: String, numFiles: Int,
-      keys: Seq[String], bitsPerKey: Int = 8): Unit = {
-    val zcol = "__graft_z"
-    zOrderValue(df, keys, bitsPerKey, zcol)
-      .repartitionByRange(numFiles, col(zcol))
-      .sortWithinPartitions(col(zcol))
-      .drop(zcol)
+      keys: Seq[String], bitsPerKey: Int = 8): Unit =
+    zOrdered(df, numFiles, keys, bitsPerKey)
       .write.mode(SaveMode.Overwrite).parquet(path)
-  }
 
-  /** `df` plus the interleaved z-value column (exposed for spec audit). */
-  private[sinks] def zOrderValue(df: DataFrame, keys: Seq[String],
-      bitsPerKey: Int, zcol: String): DataFrame = {
+  /** `df` in [[writeZOrdered]]'s layout: `numFiles` partitions, each
+    * sorted by z-value. Samples `df` now; the frame it returns is lazy.
+    */
+  private def zOrdered(df: DataFrame, numFiles: Int, keys: Seq[String],
+      bitsPerKey: Int): DataFrame = {
     require(keys.nonEmpty && bitsPerKey * keys.size <= 62,
       s"z budget too wide: ${keys.size} keys × $bitsPerKey bits")
-    val buckets = 1 << bitsPerKey
-    // One approx-quantile pass per key; boundaries become broadcast plan
-    // literals. Duplicated quantiles (heavy hitters) just merge bins.
-    val bounds: Map[String, Array[Double]] = keys.map { k =>
-      val probes = (1 until buckets).map(_.toDouble / buckets).toArray
-      k -> df.select(col(k).cast("double").as(k))
-        .stat.approxQuantile(k, probes, 0.001)
-    }.toMap
-    val bucketCols = keys.map { k =>
-      val bnds = typedLit(bounds(k).toSeq)
-      // bin = #boundaries ≤ x, nulls to bin 0 (sort first, still pruned)
-      k -> coalesce(
-        size(filter(bnds, b => b <= col(k).cast("double"))), lit(0))
-        .cast("long")
+    val zcol = "__graft_z"
+    val fileCol = "__graft_file"
+    val keyFrame = df.select(keys.map(k => col(k).cast("double").as(k)): _*)
+    val rows = keyFrame.count()
+    val sample = keyFrame.sample(withReplacement = false,
+      math.min(1.0, ZSampleRows.toDouble / math.max(rows, 1L)), seed = 0L)
+      .collect().toSeq
+    // Duplicated quantiles (heavy hitters) just merge bins.
+    val bins = keys.indices.map(i => quantiles(
+      sample.filterNot(_.isNullAt(i)).map(_.getDouble(i)),
+      1 << bitsPerKey)(Ordering.Double.TotalOrdering))
+    // the sampled rows' z-values, from the same expression the write uses
+    val sampleZ = zOrderValue(df.sparkSession.createDataFrame(
+        sample.asJava, keyFrame.schema), keys, bins, bitsPerKey, zcol)
+      .select(zcol).collect().map(_.getLong(0)).toSeq
+    zOrderValue(df, keys, bins, bitsPerKey, zcol)
+      .withColumn(fileCol,
+        rankIn(typedLit(quantiles(sampleZ, numFiles)), col(zcol)))
+      .repartitionById(numFiles, col(fileCol))
+      .sortWithinPartitions(col(zcol))
+      .drop(zcol, fileCol)
+  }
+
+  /** Rows [[writeZOrdered]] samples for its bin and file boundaries. */
+  private val ZSampleRows = 1 << 16
+
+  /** The `n - 1` boundaries that cut `xs` into `n` equal-count runs. */
+  private def quantiles[T: Ordering](xs: Seq[T], n: Int): Seq[T] = {
+    val sorted = xs.sorted
+    if (sorted.isEmpty) Nil else (1 until n).map(i => sorted(i * sorted.size / n))
+  }
+
+  /** How many of the ascending `bounds` (an array literal) are ≤ `x`:
+    * the bin or file `x` falls in. A null `x` ranks 0 (sorts first, still
+    * pruned).
+    */
+  private def rankIn(bounds: Column, x: Column): Column =
+    coalesce(size(filter(bounds, b => b <= x)), lit(0))
+
+  /** `df` plus the interleaved z-value of its `keys` over the per-key
+    * bin boundaries `bins`.
+    */
+  private def zOrderValue(df: DataFrame, keys: Seq[String],
+      bins: Seq[Seq[Double]], bitsPerKey: Int, zcol: String): DataFrame = {
+    val bucketCols = keys.zip(bins).map { case (k, bnds) =>
+      rankIn(typedLit(bnds), col(k).cast("double")).cast("long")
     }
     val z = (0 until bitsPerKey).foldLeft(lit(0L)) { (acc, bit) =>
-      bucketCols.zipWithIndex.foldLeft(acc) { case (a, ((_, bc), ki)) =>
+      bucketCols.zipWithIndex.foldLeft(acc) { case (a, (bc, ki)) =>
         // bit `bit` of key ki lands at interleaved position
         // bit*nKeys + (nKeys-1-ki): earlier keys take the higher slot
         val pos = bit * keys.size + (keys.size - 1 - ki)
@@ -607,12 +645,7 @@ object TableMaintenance {
   def zorderManaged(spark: SparkSession, path: String, numFiles: Int,
       keys: Seq[String], bitsPerKey: Int = 8): Long = {
     preRewrite(spark, path, "zorder")
-    val zcol = "__graft_z"
-    val shaped = zOrderValue(read(spark, path), keys, bitsPerKey, zcol)
-      .repartitionByRange(numFiles, col(zcol))
-      .sortWithinPartitions(col(zcol))
-      .drop(zcol)
-    commitRewrite(spark, path, shaped,
+    commitRewrite(spark, path, zOrdered(read(spark, path), numFiles, keys, bitsPerKey),
       Map("layout" -> s"zorder(${keys.mkString(",")})"))
   }
 

@@ -363,6 +363,37 @@ class ParquetMergeSinkSpec extends SparkSpec {
       .get(b1Keys.head).contains("upd"))
   }
 
+  test("a merge rewrites every bucket it touches: null and signed-zero keys included") {
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    val dir = java.nio.file.Files.createTempDirectory("graft-merge-touch").toString + "/t"
+    val table = new org.apache.hadoop.fs.Path(dir)
+    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    ParquetMergeSink.merge(
+      Seq((Option(0.0), 1L, "zero"), (None, 1L, "null"), (Option(1.5), 1L, "x"))
+        .toDF("k", "ver", "v"), dir, Seq("k"), "ver", nBuckets = 8)
+
+    // -0.0 and 0.0 are one key to latest-wins' grouping, and a null key is
+    // a key too; each batch row's bucket must hold its key's survivor, so
+    // the new generation has a dir for every touched bucket
+    val batch = Seq((Option(-0.0), 3L, "neg-zero"), (Option(0.0), 2L, "zero2"),
+      (None, 2L, "null2"), (Option(2.5), 2L, "y")).toDF("k", "ver", "v")
+    val touched = batch.select(pmod(xxhash64(col("k")), lit(8)).cast("int"))
+      .distinct().collect().map(_.getInt(0)).toSet
+    ParquetMergeSink.merge(batch, dir, Seq("k"), "ver")
+    val m = ManifestCommit.latest(fs, table).get
+    touched.foreach { b =>
+      assert(m.dirs.get(b.toString).exists(_.startsWith(s"_g${m.version}-")),
+        s"touched bucket $b was not rewritten: ${m.dirs}")
+    }
+
+    val rows = ParquetMergeSink.read(spark, dir)
+    assert(rows.groupBy("k").count().filter(col("count") > 1).isEmpty,
+      "a key is duplicated across buckets")
+    assert(rows.collect().map(r => Option(r.getAs[java.lang.Double]("k"))
+      .map(_.doubleValue.abs) -> r.getAs[String]("v")).toMap ===
+      Map(Some(0.0) -> "neg-zero", None -> "null2", Some(1.5) -> "x", Some(2.5) -> "y"))
+  }
+
   test("mergeActions create path stores the same columns as merge-into-existing") {
     import org.apache.spark.sql.functions.col
     val dir = java.nio.file.Files.createTempDirectory("graft-merge-create").toString + "/t"
@@ -583,6 +614,32 @@ class ParquetMergeSinkSpec extends SparkSpec {
     ParquetMergeSink.mergeActions(empty, dir, Seq("k"), "ver", col("del"))
     assert(ParquetMergeSink.read(spark, dir).collect()
       .map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toSeq === Seq(1L -> "a"))
+
+    // The same door with rows behind it: a non-empty source whose data
+    // column does not widen losslessly is refused before anything is
+    // written, and a source-only column (the CDC flag) passes through.
+    def files() = {
+      val root = java.nio.file.Paths.get(dir)
+      val walk = java.nio.file.Files.walk(root)
+      try walk.filter(java.nio.file.Files.isRegularFile(_)).toArray.toSeq
+        .map { case f: java.nio.file.Path =>
+          root.relativize(f).toString -> java.nio.file.Files.readAllBytes(f).toSeq
+        }.toMap
+      finally walk.close()
+    }
+    val before = files()
+    val rowsNarrowing = intercept[IllegalArgumentException] {
+      ParquetMergeSink.mergeActions(Seq((2L, true, 20L, false)).toDF("k", "v", "ver", "del"),
+        dir, Seq("k"), "ver", col("del"))
+    }
+    assert(rowsNarrowing.getMessage.contains("losslessly"), rowsNarrowing.getMessage)
+    assert(files() === before, "a refused source must leave the table byte-identical")
+    ParquetMergeSink.mergeActions(Seq((2L, "b", 20L, false)).toDF("k", "v", "ver", "del"),
+      dir, Seq("k"), "ver", col("del"))
+    val after = ParquetMergeSink.read(spark, dir)
+    assert(after.columns.toSeq === Seq("k", "v", "ver"))
+    assert(after.collect().map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toMap
+      === Map(1L -> "a", 2L -> "b"))
   }
 
   test("a merge stages its batch in one job, then writes; staged blocks are released") {

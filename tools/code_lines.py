@@ -1,0 +1,113 @@
+#!/usr/bin/env python3
+"""Count the code lines of Scala sources: lines that are neither blank nor
+comment-only.
+
+    python3 tools/code_lines.py [--rev REV] [FILE ...]
+
+With no FILE, counts every `*.scala` under `src/main`. Without `--rev` it
+reads the working tree; with `--rev REV` it reads the files as committed at
+git revision REV (a file absent there counts 0). Prints one line per file,
+`<code lines>  <path>`, then `<total>  total`. Run it from the repo root.
+
+A line counts when any character of it lies outside a comment. `//` and
+`/* ... */` comments (Scaladoc included, nested blocks too) are skipped;
+string literals, triple-quoted ones included, are code, so a `//` or `/*`
+inside a string does not open a comment.
+"""
+import argparse
+import os
+import subprocess
+import sys
+
+
+def code_lines(text):
+    """Number of lines of `text` that carry at least one code character."""
+    count = 0
+    depth = 0  # block-comment nesting
+    string = None  # the open string's quote: '"' or '"""'
+    for line in text.splitlines():
+        code = False
+        i = 0
+        while i < len(line):
+            if depth:
+                if line.startswith("*/", i):
+                    depth -= 1
+                    i += 2
+                elif line.startswith("/*", i):
+                    depth += 1
+                    i += 2
+                else:
+                    i += 1
+            elif string:
+                code = True
+                if string == '"' and line[i] == "\\":
+                    i += 2
+                elif line.startswith(string, i):
+                    i += len(string)
+                    string = None
+                else:
+                    i += 1
+            elif line.startswith("//", i):
+                break
+            elif line.startswith("/*", i):
+                depth = 1
+                i += 2
+            elif line[i].isspace():
+                i += 1
+            else:
+                code = True
+                if line.startswith('"""', i):
+                    string = '"""'
+                    i += 3
+                elif line[i] == '"':
+                    string = '"'
+                    i += 1
+                elif line[i] == "'" and line[i + 1:i + 2] == "\\":
+                    i = line.find("'", i + 3) + 1 or len(line)
+                elif line[i] == "'" and line[i + 2:i + 3] == "'":
+                    i += 3  # a char literal such as '"' or '/'
+                else:
+                    i += 1
+        if string == '"':
+            string = None  # a single-quoted string never spans lines
+        count += code
+    return count
+
+
+def git(*args):
+    return subprocess.run(["git", *args], check=True, capture_output=True,
+                          text=True).stdout
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--rev", help="count the files as committed at this git revision")
+    ap.add_argument("files", nargs="*", help="Scala files (default: src/main)")
+    args = ap.parse_args()
+
+    files = args.files
+    if not files:
+        if args.rev:
+            files = git("ls-tree", "-r", "--name-only", args.rev, "--", "src/main").split()
+        else:
+            files = [os.path.join(d, f) for d, _, fs in os.walk("src/main")
+                     for f in fs]
+        files = sorted(f for f in files if f.endswith(".scala"))
+
+    total = 0
+    for path in files:
+        if args.rev:
+            shown = subprocess.run(["git", "show", f"{args.rev}:{path}"],
+                                   capture_output=True, text=True)
+            text = shown.stdout if shown.returncode == 0 else ""
+        else:
+            with open(path, encoding="utf-8") as f:
+                text = f.read()
+        n = code_lines(text)
+        total += n
+        print(f"{n:7d}  {path}")
+    print(f"{total:7d}  total")
+
+
+if __name__ == "__main__":
+    sys.exit(main())
