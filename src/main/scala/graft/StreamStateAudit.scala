@@ -32,7 +32,7 @@ object StreamStateAudit {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // multi-batch replay knobs (see EventStream.eventsGlob): a landing
+    // multi-batch replay knobs (see EventStream.rawReplay): a landing
     // directory of time-split files + a files-per-trigger cap make the
     // bounded replay exercise real watermark eviction between batches
     sys.env.get("SPARK_GRAFT_STREAM_GLOB")

@@ -57,10 +57,11 @@ object TableMaintenance {
     * Mechanics (all scale-safe): each key is bucketed into `2^bitsPerKey`
     * quantile bins, and the bucket ids' bits interleave into one long
     * z-value that orders the rows within each file. The bin boundaries
-    * and the `numFiles - 1` file boundaries are exact quantiles of ONE
-    * fixed-seed sample of about [[ZSampleRows]] rows (the z-values of
-    * the sampled rows give the file cuts), so skewed keys still spread
-    * evenly and files get near-equal row counts; they ship as plan
+    * and the `numFiles - 1` file boundaries come from ONE fixed-seed
+    * sample of about [[ZSampleRows]] rows (exact quantiles for the bins;
+    * the sampled rows' z-value quantiles, snapped to z-cell edges by
+    * [[zCuts]], for the files), so skewed keys still spread evenly and
+    * files get near-equal row counts; they ship as plan
     * literals, and each row goes straight to its file's partition
     * (`repartitionById`). The layout is a function of the input alone:
     * `approxQuantile`'s sketches can merge in whatever order the shuffle
@@ -99,7 +100,7 @@ object TableMaintenance {
       .select(zcol).collect().map(_.getLong(0)).toSeq
     zOrderValue(df, keys, bins, bitsPerKey, zcol)
       .withColumn(fileCol,
-        rankIn(typedLit(quantiles(sampleZ, numFiles)), col(zcol)))
+        rankIn(typedLit(zCuts(sampleZ, numFiles)), col(zcol)))
       .repartitionById(numFiles, col(fileCol))
       .sortWithinPartitions(col(zcol))
       .drop(zcol, fileCol)
@@ -113,6 +114,37 @@ object TableMaintenance {
     val sorted = xs.sorted
     if (sorted.isEmpty) Nil else (1 until n).map(i => sorted(i * sorted.size / n))
   }
+
+  /** The `n - 1` file cuts over the sampled z-values `zs`: each
+    * equal-count quantile snapped to the value with the most trailing zero
+    * bits among the z-values within [[ZCutWindow]] of a file's share of
+    * sample ranks on either side of it. A cut that falls inside a z-cell
+    * leaves a file whose z-range straddles the cell boundary, and its
+    * footer min/max then span both sides of it — up to a whole key's
+    * domain when the boundary is a top-level quadrant's (seen at sf0.1: a
+    * 5% `l_orderkey` slice touched 10 of 16 files). A cut at `hi >> b << b`,
+    * where `b` is the highest bit in which the window's ends `lo` and `hi`
+    * differ, is the start of the coarsest z-cell that begins inside the
+    * window, so the files on either side of it split along that cell's
+    * edge. The windows do not overlap, so the cuts stay ascending; each
+    * moves at most `1 / ZCutWindow` of a file's share of rows.
+    */
+  private def zCuts(zs: Seq[Long], n: Int): Seq[Long] = {
+    val sorted = zs.sorted.toIndexedSeq
+    val w = sorted.size / (ZCutWindow * n)
+    if (sorted.isEmpty) Nil else (1 until n).map { i =>
+      val r = i * sorted.size / n
+      val lo = sorted(math.max(0, r - w))
+      val hi = sorted(math.min(sorted.size - 1, r + w))
+      val b = 63 - java.lang.Long.numberOfLeadingZeros(lo ^ hi) // -1 when lo == hi
+      if (b < 0) hi else hi >> b << b
+    }
+  }
+
+  /** How far [[zCuts]] may move a cut: `1 / ZCutWindow` of a file's
+    * share of rows either way.
+    */
+  private val ZCutWindow = 4
 
   /** How many of the ascending `bounds` (an array literal) are ≤ `x`:
     * the bin or file `x` falls in. A null `x` ranks 0 (sorts first, still

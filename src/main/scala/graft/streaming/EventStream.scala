@@ -31,53 +31,52 @@ object EventStream {
   private val Utc = "spark.sql.session.timeZone" -> "UTC"
 
   /** Drain a bounded streaming replay into a parquet STAGING dir through
-    * `foreachBatch` and return the dir. This is the scale-safe
-    * materialization for gate queries whose per-trigger output grows
-    * with the corpus: a memory sink serializes every task result onto
-    * the driver and dies at `spark.driver.maxResultSize` once the
-    * emitted domain outgrows it (stream_dedup_daily's distinct keys and
-    * stream_session_stats' sessions both did, at sf30 — 1.03 GiB vs the
-    * 1 GiB cap), while foreachBatch keeps each trigger's frame
-    * DISTRIBUTED: `perBatch` writes it executor-side (append for
-    * append-mode streams; aggregate-then-overwrite for complete-mode
-    * re-emissions), and only the caller's bounded aggregate of the
-    * staged files is ever collected. Memory sinks remain right for
-    * queries whose OUTPUT domain is bounded (day × type grids, per-user
-    * state tails).
+    * `foreachBatch`, read the staged files back under `schema`, `fold`
+    * them, and return the bounded result as a local frame. This is the
+    * scale-safe materialization for gate queries whose per-trigger
+    * output grows with the corpus: a memory sink serializes every task
+    * result onto the driver and dies at `spark.driver.maxResultSize`
+    * once the emitted domain outgrows it (stream_dedup_daily's distinct
+    * keys and stream_session_stats' sessions both did, at sf30 — 1.03
+    * GiB vs the 1 GiB cap), while foreachBatch keeps each trigger's
+    * frame DISTRIBUTED: it is written executor-side (appended for
+    * append/update streams; overwritten for complete-mode re-emissions,
+    * so the last trigger's write is the final complete state), and only
+    * the fold of the staged files is ever collected.
     *
     * The staging dir must be EXECUTOR-VISIBLE — foreachBatch tasks write
     * to it from every node — so it is derived from a shared,
     * scheme-qualified location (`spark.sql.graft.streamStagingDir` if
     * set, else the session warehouse dir, which every deployment already
     * shares), never from a driver-local `java.io.tmpdir` path that only
-    * exists on one machine.
+    * exists on one machine. The dir is deleted before returning, whether
+    * the replay succeeded or threw — hence the collect: the returned
+    * frame must not read files that no longer exist.
     */
-  private def stageReplay(spark: org.apache.spark.sql.SparkSession,
-      outputMode: String, stream: DataFrame)(
-      perBatch: (DataFrame, String) => Unit): String = {
-    val root = spark.conf.getOption("spark.sql.graft.streamStagingDir")
-      .getOrElse(spark.conf.get("spark.sql.warehouse.dir") + "/_graft_stage")
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def stagedResult(spark: org.apache.spark.sql.SparkSession,
+      outputMode: String, stream: DataFrame, schema: String)(
+      fold: DataFrame => DataFrame): DataFrame = {
+    import org.apache.hadoop.fs.Path
+    import scala.jdk.CollectionConverters._
+    val root = new Path(spark.conf.getOption("spark.sql.graft.streamStagingDir")
+      .getOrElse(spark.conf.get("spark.sql.warehouse.dir") + "/_graft_stage"))
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // scheme-qualify so executor tasks resolve the SAME filesystem the
     // driver staged against (a bare /tmp/... path would re-resolve
     // through each node's default FS)
-    val tmp = fs.makeQualified(new org.apache.hadoop.fs.Path(rootPath,
-      s"stage_${java.util.UUID.randomUUID()}")).toString
-    fs.mkdirs(new org.apache.hadoop.fs.Path(tmp))
-    val q = stream.writeStream
-      .outputMode(outputMode)
-      .foreachBatch((b: DataFrame, _: Long) => perBatch(b, tmp))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    tmp
-  }
-
-  private def deleteStaged(spark: org.apache.spark.sql.SparkSession,
-      tmp: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(tmp)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    val tmp = fs.makeQualified(new Path(root, s"stage_${java.util.UUID.randomUUID()}"))
+    val mode = if (outputMode == "complete") "overwrite" else "append"
+    try {
+      fs.mkdirs(tmp)
+      stream.writeStream
+        .outputMode(outputMode)
+        .foreachBatch((b: DataFrame, _: Long) => b.write.mode(mode).parquet(tmp.toString))
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+      val out = fold(spark.read.schema(schema).parquet(tmp.toString))
+      spark.createDataFrame(out.collect().toIndexedSeq.asJava, out.schema)
+    } finally fs.delete(tmp, true)
   }
 
   /** Run `body` with `spark.sql.shuffle.partitions` capped at `width`,
@@ -100,71 +99,26 @@ object EventStream {
       key -> math.min(width, spark.conf.get(key, width.toString).toInt).toString)(body)
   }
 
-  /** Data-aware store width for single-input keyed-state replays
-    * (dedup, EMA): store lifecycles dominate while the replay is small —
-    * cap at 8 — but once per-batch data volume is the cost, commit
-    * parallelism wins and the session width stands. Measured at the
-    * crossover's two sides: sf0.1 capping 32 → 8 took the pair from
-    * ~18 s each to 4.8/4.9 s; at sf100 (120M events) a controlled A/B
-    * (same window, fresh JVM per config, min-of-2) ran width 8 at
-    * 113.3 s (dedup) / 82.2 s (EMA) vs width 32 at 94.6 / 58.6 — so the
-    * cap applies below 50M events (parquet-footer row count, memoized)
-    * and releases above. `spark.sql.graft.streamStoreCap` overrides the
-    * width explicitly (an unbounded deployment sizes it to key
-    * cardinality). The stream-stream JOIN keeps its fixed cap of 8
-    * regardless: four stores per partition quadruple the lifecycle
-    * cost and its horizon-bounded state stays small at every measured
-    * SF (sf100: 133–136 s capped, faster than the uncapped r12 shape).
+  /** Data-aware store width for the single-input keyed-state replays
+    * (dedup, EMA, purchase context's view buffer): store lifecycles
+    * dominate while the replay is small — cap at 8 — but once per-batch
+    * data volume is the cost, commit parallelism wins and the session
+    * width stands. Measured at the crossover's two sides: sf0.1 capping
+    * 32 → 8 took the pair from ~18 s each to 4.8/4.9 s; at sf100 (120M
+    * events) a controlled A/B (same window, fresh JVM per config,
+    * min-of-2) ran width 8 at 113.3 s (dedup) / 82.2 s (EMA) vs width 32
+    * at 94.6 / 58.6 — so the cap applies below 50M events (parquet-footer
+    * row count, memoized) and releases above. The stream-stream JOIN
+    * keeps its fixed cap of 8 regardless: four stores per partition
+    * quadruple the lifecycle cost and its horizon-bounded state stays
+    * small at every measured SF (sf100: 133–136 s capped, faster than the
+    * uncapped r12 shape).
     */
   private def replayStoreWidth(spark: org.apache.spark.sql.SparkSession,
       dir: String): Int =
-    spark.conf.getOption("spark.sql.graft.streamStoreCap").map(_.toInt)
-      .getOrElse {
-        if (graft.Tables.eventCount(spark, dir) >= 50000000L)
-          Int.MaxValue // leave the session width — no cap
-        else 8
-      }
-
-  /** Streaming read of the `events` table with a layout-adaptive `ts`:
-    * driver-generated data stores parquet TIMESTAMP(NANOS) (declared
-    * LongType under the legacy nanos conf, rebuilt at micros), while a
-    * re-written copy (ScaleUp — Spark can only write micros) is already
-    * TimestampType and passes through. Streaming schemas must be pinned
-    * up front, so the layout is probed once via a batch footer read.
-    * Caller must have set `spark.sql.legacy.parquet.nanosAsLong`.
-    */
-  private def eventsStream(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    eventsStream(spark, dir, eventsTsIsLong(spark, dir))
-
-  /** The one batch footer probe behind [[eventsStream]] — callers that
-    * build several stream branches over the same table run it once and
-    * pass the result down, instead of paying a driver-side parquet
-    * listing + footer read per branch.
-    */
-  /** Source admission knobs — the deployment shape is a DIRECTORY of
-    * arriving event files drained in bounded batches, which is also how
-    * the next-decade replay probes run (state eviction only exercises
-    * when the corpus spans multiple micro-batches):
-    *
-    *  - `spark.sql.graft.streamEventsGlob` — file admission glob
-    *    (default `events.parquet`, the one-file testdata layout; a
-    *    landing directory sets e.g. `events*.parquet`);
-    *  - `spark.sql.graft.streamMaxFiles` — maxFilesPerTrigger (honored
-    *    under AvailableNow: the file source implements
-    *    SupportsTriggerAvailableNow, pinning the tip and draining it in
-    *    capped batches).
-    */
-  private def eventsGlob(spark: org.apache.spark.sql.SparkSession): String =
-    spark.conf.getOption("spark.sql.graft.streamEventsGlob")
-      .getOrElse("events.parquet")
-
-  private def eventsTsIsLong(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Boolean = {
-    import org.apache.spark.sql.types._
-    spark.read.parquet(s"$dir/${eventsGlob(spark)}")
-      .schema("ts").dataType == LongType
-  }
+    if (graft.Tables.eventCount(spark, dir) >= 50000000L)
+      Int.MaxValue // leave the session width — no cap
+    else 8
 
   /** How many split-layout builds ran in this JVM (spec hook: serving
     * twice must build once).
@@ -173,10 +127,7 @@ object EventStream {
     new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** The number of time-ordered files a bounded gate replay is split
-    * into (`spark.sql.graft.streamReplaySplits` overrides; ≤1 disables
-    * the split and replays the raw single-file table in one batch).
-    *
-    * DATA-AWARE default, the [[replayStoreWidth]] discipline applied to
+    * into — DATA-AWARE, the [[replayStoreWidth]] discipline applied to
     * batch count: every micro-batch pays a fixed state-store
     * setup/commit lifecycle per store instance, so while the table is
     * small that fixed cost dominates the replay (measured at sf0.1:
@@ -191,11 +142,7 @@ object EventStream {
     */
   private def replaySplits(spark: org.apache.spark.sql.SparkSession,
       dir: String): Int =
-    spark.conf.getOption("spark.sql.graft.streamReplaySplits")
-      .map(_.toInt).getOrElse {
-        val n = graft.Tables.eventCount(spark, dir)
-        math.max(2, math.min(8, (n / 500000L).toInt))
-      }
+    math.max(2, math.min(8, (graft.Tables.eventCount(spark, dir) / 500000L).toInt))
 
   /** Build-once TIME-SPLIT replay layout for the events table: the one
     * driver-layout file re-written as `splits` parquet files covering
@@ -260,39 +207,63 @@ object EventStream {
   private case class ReplaySpec(dir: String, glob: String,
       maxFiles: Option[String], tsIsLong: Boolean, batches: String)
 
-  /** Resolve the replay admission shape ONCE per query (layout build +
-    * footer probe are driver-side): an explicitly configured
-    * `streamEventsGlob` names a user-managed landing directory and wins
-    * unchanged; otherwise the default is the time-split multi-batch
-    * layout ([[eventsSplitLayout]]) drained one file per trigger, the
-    * deployable bounded-state shape. `streamReplaySplits <= 1` falls
-    * back to the raw single-file single-batch replay.
+  /** The events replay as it lies in `dir`, with the source admission
+    * knobs applied:
+    *
+    *  - `spark.sql.graft.streamEventsGlob` — file admission glob
+    *    (default `events.parquet`, the one-file testdata layout; a
+    *    landing directory sets e.g. `events*.parquet`);
+    *  - `spark.sql.graft.streamMaxFiles` — maxFilesPerTrigger (honored
+    *    under AvailableNow: the file source implements
+    *    SupportsTriggerAvailableNow, pinning the tip and draining it in
+    *    capped batches).
+    *
+    * `ts` is layout-adaptive: driver-generated data stores parquet
+    * TIMESTAMP(NANOS) (declared LongType under the legacy nanos conf,
+    * rebuilt at micros by [[replayStream]]), while a re-written copy
+    * (ScaleUp — Spark can only write micros) is already TimestampType and
+    * passes through. Streaming schemas must be pinned up front, so the
+    * layout is probed once here via a batch footer read. Caller must have
+    * set `spark.sql.legacy.parquet.nanosAsLong`.
+    */
+  private def rawReplay(spark: org.apache.spark.sql.SparkSession,
+      dir: String): ReplaySpec = {
+    import org.apache.spark.sql.types.LongType
+    val userGlob = spark.conf.getOption("spark.sql.graft.streamEventsGlob")
+    val glob = userGlob.getOrElse("events.parquet")
+    ReplaySpec(dir, glob, spark.conf.getOption("spark.sql.graft.streamMaxFiles"),
+      spark.read.parquet(s"$dir/$glob").schema("ts").dataType == LongType,
+      if (userGlob.isDefined) "user" else "single")
+  }
+
+  /** Resolve the keyed-state replays' admission shape ONCE per query
+    * (layout build + footer probe are driver-side), one shape per source:
+    * an explicitly configured `streamEventsGlob` names a user-managed
+    * landing directory and is replayed as it lies ([[rawReplay]]);
+    * otherwise the events table is replayed through the time-split
+    * multi-batch layout ([[eventsSplitLayout]]) drained one file per
+    * trigger, the deployable bounded-state shape.
     */
   private def resolveReplay(spark: org.apache.spark.sql.SparkSession,
       dir: String): ReplaySpec = {
-    val userGlob = spark.conf.getOption("spark.sql.graft.streamEventsGlob")
-    val maxFiles = spark.conf.getOption("spark.sql.graft.streamMaxFiles")
     val spec =
-      if (userGlob.isDefined)
-        ReplaySpec(dir, userGlob.get, maxFiles,
-          eventsTsIsLong(spark, dir), "user")
+      if (spark.conf.getOption("spark.sql.graft.streamEventsGlob").isDefined)
+        rawReplay(spark, dir)
       else {
         val k = replaySplits(spark, dir)
-        if (k <= 1)
-          ReplaySpec(dir, "events.parquet", maxFiles,
-            eventsTsIsLong(spark, dir), "single")
-        else
-          // split files are Spark-written micros timestamps
-          ReplaySpec(eventsSplitLayout(spark, dir, k), "split_*.parquet",
-            Some(maxFiles.getOrElse("1")), tsIsLong = false, s"$k")
+        // split files are Spark-written micros timestamps
+        ReplaySpec(eventsSplitLayout(spark, dir, k), "split_*.parquet",
+          Some(spark.conf.getOption("spark.sql.graft.streamMaxFiles").getOrElse("1")),
+          tsIsLong = false, s"$k")
       }
     graft.StrategyLog.record("stream_replay", spec.batches,
       "glob" -> spec.glob, "maxFiles" -> spec.maxFiles.getOrElse("all"))
     spec
   }
 
-  /** A fresh stream instance over a resolved replay spec — callers that
-    * join several branches of the same table call this once per branch.
+  /** A fresh stream instance over a replay spec, `ts` rebuilt at micros
+    * when the files store nanos — callers that join several branches of
+    * the same table call this once per branch.
     */
   private def replayStream(spark: org.apache.spark.sql.SparkSession,
       spec: ReplaySpec): DataFrame = {
@@ -307,23 +278,6 @@ object EventStream {
     val limited = spec.maxFiles.fold(rdr)(v => rdr.option("maxFilesPerTrigger", v))
     val raw = limited.parquet(spec.dir)
     if (spec.tsIsLong) raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else raw
-  }
-
-  private def eventsStream(spark: org.apache.spark.sql.SparkSession,
-      dir: String, tsIsLong: Boolean): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", if (tsIsLong) LongType else TimestampType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-    val rdr = spark.readStream.schema(schema)
-      .option("pathGlobFilter", eventsGlob(spark))
-    val limited = spark.conf.getOption("spark.sql.graft.streamMaxFiles")
-      .fold(rdr)(v => rdr.option("maxFilesPerTrigger", v))
-    val raw = limited.parquet(dir)
-    if (tsIsLong) raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else raw
   }
 
@@ -517,52 +471,39 @@ object EventStream {
     * recurrence has no order-free SQL form); EventStreamSpec pins it
     * numerically against the batch `ev_ema` closed form.
     */
-  def emaScoresStreamed(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
+  def emaScoresStreamed(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     // The raw events table is parquet TIMESTAMP(NANOS): the footer probe
-    // behind resolveReplay (and the single-batch `streamReplaySplits<=1`
-    // replay itself) needs the legacy nanos conf set on THIS session —
-    // without it a fresh session throws Illegal Parquet type before the
-    // split-layout side effect of Tables.events can mask it.
+    // behind a user-glob replay needs the legacy nanos conf set on THIS
+    // session — without it a fresh session throws Illegal Parquet type
+    // before the split-layout side effect of Tables.events can mask it.
     withConf(spark, RocksDbStore, NanosAsLong)(withStoreCap(spark,
         replayStoreWidth(spark, dir)) {
       // The update stream emits one refreshed (ema, n) row per user per
-      // micro-batch it appears in — O(users × batches). That frame STAGES
-      // to parquet via foreachBatch (executor-side write), never a memory
-      // sink: the memory sink serializes every task result onto the
-      // driver, the exact pattern that died at spark.driver.maxResultSize
-      // for dedup_daily/session_stats at sf30 — per-user EMA state merely
-      // hits the same wall at higher user cardinality. Only the bounded
-      // per-user fold of the staged files is collected. The source is the
-      // default time-split multi-batch replay (event_id-ordered files, so
-      // the cross-batch fold order is the batch closed form's order);
-      // ts/event_type/props prune at the parquet scan.
-      val staged = stageReplay(spark, outputMode = "update",
-        emaScores(replayStream(spark, resolveReplay(spark, dir))).toDF()) {
-        (b, tmp) => b.write.mode("append").parquet(tmp)
-      }
-      try {
-        val out = spark.read
-          .schema("userId BIGINT, ema DOUBLE, nEvents BIGINT")
-          .parquet(staged)
-          .groupBy(col("userId").as("user_id"))
+      // micro-batch it appears in — O(users × batches) — so it stages
+      // (see [[stagedResult]]): per-user EMA state hits the memory-sink
+      // wall at high user cardinality. Only the bounded per-user fold of
+      // the staged files is collected. The source is the time-split
+      // multi-batch replay (event_id-ordered files, so the cross-batch
+      // fold order is the batch closed form's order); ts/event_type/props
+      // prune at the parquet scan.
+      stagedResult(spark, "update",
+          emaScores(replayStream(spark, resolveReplay(spark, dir))).toDF(),
+          "userId BIGINT, ema DOUBLE, nEvents BIGINT") {
+        _.groupBy(col("userId").as("user_id"))
           .agg(
             expr("max_by(ema, nEvents)").as("ema"),
             max(col("nEvents")).as("n_events"))
           .select(col("user_id"), (floor(col("ema") * 1e4) / 1e4).as("ema"), col("n_events"))
           .orderBy("user_id")
-        val rows = out.collect().toIndexedSeq
-        spark.createDataFrame(rows.asJava, out.schema)
-      } finally deleteStaged(spark, staged)
+      }
     })
-  }
 
   /** Daily per-type stats computed BY THE STREAMING ENGINE over the events
     * table — the one `queries` entry that exercises Structured Streaming
     * inside the DuckDB-oracle correctness gate: a parquet file-source
-    * stream, a 1-day `window()` aggregation, `Trigger.AvailableNow` into a
-    * memory sink, and the bounded result returned as a DataFrame whose
-    * hash must match the batch SQL oracle.
+    * stream, a 1-day `window()` aggregation, `Trigger.AvailableNow` into
+    * the staging tail ([[stagedResult]]), and the bounded result returned
+    * as a DataFrame whose hash must match the batch SQL oracle.
     *
     * Complete output mode because this is a bounded historical replay (a
     * single AvailableNow batch never advances the watermark before
@@ -570,41 +511,27 @@ object EventStream {
     * watermarked append path — the actual unbounded deployment shape — is
     * exercised multi-batch in EventStreamSpec via MemoryStream.
     */
-  def dailyStatsStreamed(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
+  def dailyStatsStreamed(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     // events.ts is parquet TIMESTAMP(NANOS): declared LongType under the
     // legacy nanos conf and rebuilt at microsecond precision, exactly like
     // the batch loader (Tables.events) — schemas must be explicit for
     // streaming reads anyway. `window(ts, '1 day')` buckets in the SESSION
     // timezone while the oracle's strftime buckets the raw UTC timestamp —
     // they agree only under UTC, so pin it for the computation.
-    val name = s"graft_stream_daily_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     withConf(spark, NanosAsLong, Utc) {
-      try {
-        // the file-stream source wants a directory: scan the sf dir, admit
-        // only the events table (ts layout probed by eventsStream)
-        val q = eventsStream(spark, dir)
-          .groupBy(window(col("ts"), "1 day"), col("event_type"))
-          .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("total_value"))
-          .select(
-            date_format(col("window.start"), "yyyy-MM-dd").as("day"),
-            col("event_type"), col("n_events"), col("total_value"))
-          .writeStream
-          .format("memory").queryName(name)
-          .outputMode("complete")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        // Materialize the bounded result (day × type domain) into a local
-        // frame so the memory-sink table can be DROPPED before returning —
-        // otherwise every invocation leaks a UUID-named temp view holding
-        // the full result in driver memory.
-        val out = spark.table(name).orderBy("day", "event_type")
-        val rows = out.collect().toIndexedSeq
-        spark.createDataFrame(rows.asJava, out.schema)
-      } finally spark.catalog.dropTempView(name)
+      // the file-stream source wants a directory: scan the sf dir, admit
+      // only the events table
+      stagedResult(spark, "complete",
+          replayStream(spark, rawReplay(spark, dir))
+            .groupBy(window(col("ts"), "1 day"), col("event_type"))
+            .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("total_value"))
+            .select(
+              date_format(col("window.start"), "yyyy-MM-dd").as("day"),
+              col("event_type"), col("n_events"), col("total_value")),
+          "day STRING, event_type STRING, n_events BIGINT, total_value DOUBLE") {
+        _.orderBy("day", "event_type")
+      }
     }
-  }
 
   /** Daily distinct (user, type) actives computed through the engine's
     * keyed-state streaming dedup (`dropDuplicatesWithinWatermark`) — the
@@ -630,30 +557,23 @@ object EventStream {
     * multi-batch in EventStreamSpec.
     */
   def streamDedupDaily(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
+      dir: String): DataFrame =
     // date_format buckets in the session timezone; the oracle's strftime
     // buckets raw UTC — agree only under UTC
     withConf(spark, NanosAsLong, Utc)(withStoreCap(spark,
         replayStoreWidth(spark, dir)) {
       // The deduped stream is O(corpus) (one row per distinct key) — it
-      // STAGES to parquet via foreachBatch (executor-side write), never a
-      // memory sink: the memory sink collects every task result onto the
-      // driver, which dies at spark.driver.maxResultSize once the key
-      // domain outgrows it (measured fatally at sf30: 1.03 GiB of
-      // serialized results against the 1 GiB cap). The aggregate below
-      // reads the staged files distributed; only the bounded per-day
-      // result ever reaches the driver.
-      val staged = stageReplay(spark, outputMode = "append",
-        replayStream(spark, resolveReplay(spark, dir))
-          .select(col("ts"), col("user_id"), col("event_type"))
-          .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
-          .withWatermark("ts", "1 hour")
-          .dropDuplicatesWithinWatermark("day", "user_id", "event_type")
-          .select(col("day"), col("user_id"), col("event_type"))) {
-        (b, tmp) => b.write.mode("append").parquet(tmp)
-      }
-      try {
+      // stages (see [[stagedResult]]; a memory sink died here at sf30).
+      // The aggregate below reads the staged files distributed; only the
+      // bounded per-day result ever reaches the driver.
+      stagedResult(spark, "append",
+          replayStream(spark, resolveReplay(spark, dir))
+            .select(col("ts"), col("user_id"), col("event_type"))
+            .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
+            .withWatermark("ts", "1 hour")
+            .dropDuplicatesWithinWatermark("day", "user_id", "event_type")
+            .select(col("day"), col("user_id"), col("event_type")),
+          "day STRING, user_id BIGINT, event_type STRING") {
         // Under the multi-batch replay the engine dedup emits one row per
         // first-seen key WITHIN the 1h watermark horizon — a key recurring
         // beyond the horizon re-admits (the documented within-watermark
@@ -661,20 +581,14 @@ object EventStream {
         // horizon-deduped (orders of magnitude under the raw stream); the
         // bounded final aggregate is EXACT-distinct over it, which is what
         // any production consumer of a within-watermark dedup does too.
-        val out = spark.read.schema(
-            "day STRING, user_id BIGINT, event_type STRING")
-          .parquet(staged)
-          .groupBy(col("day"))
+        _.groupBy(col("day"))
           .agg(
             countDistinct(col("user_id"), col("event_type"))
               .as("n_active_pairs"),
             countDistinct(col("user_id")).as("n_users"))
           .orderBy("day")
-        val rows = out.collect().toIndexedSeq
-        spark.createDataFrame(rows.asJava, out.schema)
-      } finally deleteStaged(spark, staged)
+      }
     })
-  }
 
   val streamDedupDailyOracle: String =
     """SELECT strftime(ts, '%Y-%m-%d') AS day,
@@ -729,42 +643,28 @@ object EventStream {
     * EventStreamSpec.
     */
   def sessionStatsStreamed(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
+      dir: String): DataFrame =
     withConf(spark, NanosAsLong) {
-      // Complete mode re-emits EVERY session per trigger — O(corpus) —
-      // so each emission folds to the per-user result DISTRIBUTED inside
-      // foreachBatch and overwrites the staging dir (last trigger = final
-      // complete state); see [[stageReplay]] for why a memory sink is
-      // fatal here at scale. The session_window machinery under test is
-      // untouched — only the materialization of its output moved off the
-      // driver.
-      val staged = stageReplay(spark, outputMode = "complete",
-        sessionWindows(eventsStream(spark, dir), 1800)
-          .select(col("user_id"), col("n_events"), col("dur_sec"))) {
-        (b, tmp) =>
-          b.groupBy(col("user_id"))
-            .agg(
-              count(lit(1)).as("n_sessions"),
-              sum(col("n_events")).as("n_events"),
-              max(col("n_events")).as("max_session_events"),
-              (floor(sum(col("n_events")) / count(lit(1)) * 1e4) / 1e4)
-                .as("avg_session_events"),
-              sum(col("dur_sec")).as("total_session_sec"))
-            .write.mode("overwrite").parquet(tmp)
-      }
-      try {
-        val out = spark.read.schema(
-            "user_id BIGINT, n_sessions BIGINT, n_events BIGINT, " +
-              "max_session_events BIGINT, avg_session_events DOUBLE, " +
-              "total_session_sec BIGINT")
-          .parquet(staged)
+      // Complete mode re-emits EVERY session per trigger — O(corpus) — so
+      // each emission overwrites the staging dir (last trigger = final
+      // complete state) and folds to the per-user result DISTRIBUTED on
+      // read-back; see [[stagedResult]] for why a memory sink is fatal
+      // here at scale.
+      stagedResult(spark, "complete",
+          sessionWindows(replayStream(spark, rawReplay(spark, dir)), 1800)
+            .select(col("user_id"), col("n_events"), col("dur_sec")),
+          "user_id BIGINT, n_events BIGINT, dur_sec BIGINT") {
+        _.groupBy(col("user_id"))
+          .agg(
+            count(lit(1)).as("n_sessions"),
+            sum(col("n_events")).as("n_events"),
+            max(col("n_events")).as("max_session_events"),
+            (floor(sum(col("n_events")) / count(lit(1)) * 1e4) / 1e4)
+              .as("avg_session_events"),
+            sum(col("dur_sec")).as("total_session_sec"))
           .orderBy("user_id")
-        val rows = out.collect().toIndexedSeq
-        spark.createDataFrame(rows.asJava, out.schema)
-      } finally deleteStaged(spark, staged)
+      }
     }
-  }
 
   /** Per-user state for [[purchaseContextStreamed]]'s single-store path:
     * a sorted buffer of the user's view timestamps (micros) within the
@@ -839,37 +739,31 @@ object EventStream {
     * semantics — the reference's event-correlation surface as live
     * state. A purchase joins the same user's views in `[pts − 1h, pts)`.
     *
-    * Two implementations compute the identical result
-    * (`spark.sql.graft.streamPurchaseImpl` ∈ {state (default), join},
-    * strategy-logged; EventStreamSpec pins them row-identical and both
-    * against the batch join):
+    * One path per replay shape (strategy-logged with the shape):
     *
-    *  - **state** (default): ONE `transformWithState` operator keyed by
-    *    user — [[PurchaseContextProcessor]] buffers the horizon's views
-    *    per user and emits each purchase's final count the moment the
-    *    purchase row is processed. One state store per partition, one
-    *    read of each replay file per batch, and the staged frame is
-    *    O(purchases). Chosen because the join path's cost at every
-    *    measured SF was store lifecycles × batches, not per-event work
-    *    (4 stores/partition/batch), plus three separate stream branches
-    *    re-reading every replay file and an O(join pairs) staging.
-    *  - **join**: the watermarked stream-stream interval join, kept for
-    *    deployments that want engine-managed join state (unbounded
-    *    sources, speculative replays). Zero-view purchases come from a
-    *    stateless marker branch (one null row per purchase, unioned with
-    *    the join output) rather than a LEFT OUTER join: outer null rows
-    *    only flush when the watermark passes `pts` STRICTLY, so the
-    *    replay's final purchase — sitting exactly AT the terminal
-    *    watermark — would be stranded forever (off by one vs batch,
-    *    observed before this shape). The per-purchase count is the
-    *    bounded materialization of the append output.
-    *
-    * Both paths as described lean on the split layout's event-time
-    * admission order. A user `streamEventsGlob` names files that are
-    * admitted by modification time, in whatever order they landed, so
-    * under one the join path runs whatever `streamPurchaseImpl` asks for,
-    * without watermarks; the choice and the replay shape are
-    * strategy-logged.
+    *  - **state**, over the time-split layout: ONE `transformWithState`
+    *    operator keyed by user — [[PurchaseContextProcessor]] buffers the
+    *    horizon's views per user and emits each purchase's final count the
+    *    moment the purchase row is processed. One state store per
+    *    partition, one read of each replay file per batch, and the staged
+    *    frame is O(purchases). Chosen over a watermarked stream-stream
+    *    join because that join's cost at every measured SF was store
+    *    lifecycles × batches, not per-event work (4 stores/partition/
+    *    batch), plus three separate stream branches re-reading every
+    *    replay file and an O(join pairs) staging. The processor leans on
+    *    the split layout's event-time admission order.
+    *  - **join**, over a user `streamEventsGlob`: those files are admitted
+    *    by modification time, in whatever order they landed, so neither
+    *    the processor's buffer nor a watermark may assume event-time
+    *    order; the stream-stream interval join runs WITHOUT watermarks and
+    *    keeps all its state (bounded by the landing directory). Zero-view
+    *    purchases come from a stateless marker branch (one null row per
+    *    purchase, unioned with the join output) rather than a LEFT OUTER
+    *    join: outer null rows only flush when a watermark passes `pts`
+    *    STRICTLY, so the replay's final purchase would be stranded forever
+    *    (off by one vs batch, observed before this shape). The
+    *    per-purchase count is the bounded materialization of the append
+    *    output.
     *
     * Gate-checked against the same DuckDB oracle as the batch query;
     * EventStreamSpec additionally pins row-for-row equality with
@@ -879,19 +773,16 @@ object EventStream {
       dir: String): DataFrame =
     withConf(spark, NanosAsLong) {
       val spec = resolveReplay(spark, dir)
-      val asked = spark.conf
-        .getOption("spark.sql.graft.streamPurchaseImpl").getOrElse("state")
-      val impl = if (spec.batches == "user") "join" else asked
-      graft.StrategyLog.record("stream_purchase_context", impl,
-        "asked" -> asked, "replay" -> spec.batches)
-      if (impl == "join") purchaseContextJoin(spark, spec)
+      val userGlob = spec.batches == "user"
+      graft.StrategyLog.record("stream_purchase_context",
+        if (userGlob) "join" else "state", "replay" -> spec.batches)
+      if (userGlob) purchaseContextJoin(spark, spec)
       else purchaseContextState(spark, dir, spec)
     }
 
   /** The single-store path of [[purchaseContextStreamed]]. */
   private def purchaseContextState(spark: org.apache.spark.sql.SparkSession,
-      dir: String, spec: ReplaySpec): DataFrame = {
-    import scala.jdk.CollectionConverters._
+      dir: String, spec: ReplaySpec): DataFrame =
     withConf(spark, RocksDbStore)(withStoreCap(spark,
         replayStoreWidth(spark, dir)) {
       // one stream branch: purchases and views ride the same shuffle,
@@ -908,48 +799,24 @@ object EventStream {
         .toDF("purchase_id", "n_views_1h")
       // each purchase is emitted exactly once (it appears in exactly one
       // micro-batch), so the staged frame is already the final relation
-      val staged = stageReplay(spark, outputMode = "update", counted) {
-        (b, tmp) => b.write.mode("append").parquet(tmp)
-      }
-      try {
-        val out = spark.read
-          .schema("purchase_id BIGINT, n_views_1h BIGINT")
-          .parquet(staged)
-          .orderBy("purchase_id")
-        val rows = out.collect().toIndexedSeq
-        spark.createDataFrame(rows.asJava, out.schema)
-      } finally deleteStaged(spark, staged)
+      stagedResult(spark, "update", counted,
+        "purchase_id BIGINT, n_views_1h BIGINT")(_.orderBy("purchase_id"))
     })
-  }
 
   /** The stream-stream join path of [[purchaseContextStreamed]]. */
   private def purchaseContextJoin(spark: org.apache.spark.sql.SparkSession,
-      spec: ReplaySpec): DataFrame = {
-    import scala.jdk.CollectionConverters._
+      spec: ReplaySpec): DataFrame =
     // A stream-stream join spins FOUR state stores per shuffle partition
     // — see [[withStoreCap]] for why the width is capped at 8 here. The
     // fixed cap stands at every measured SF (unlike the single-input
-    // replays, whose width releases with data volume — [[replayStoreWidth]]),
-    // but the explicit override conf still applies so a deployment can
-    // size the join width to its arrival rate.
-    withStoreCap(spark, spark.conf.getOption("spark.sql.graft.streamStoreCap")
-        .map(_.toInt).getOrElse(8)) {
-      // ONE layout resolve/build for all three branches; the default spec
-      // is the time-split multi-batch layout, so the watermark advances
-      // between batches and join-state eviction actually runs — state is
-      // bounded by the 1h horizon's arrival rate, not the corpus (the
-      // single-batch replay held all 4M purchase+view rows as state at
-      // sf10; r9 measured ~250k steady-state rows under this admission)
+    // replays, whose width releases with data volume — [[replayStoreWidth]]).
+    withStoreCap(spark, 8) {
+      // ONE spec for all three branches; each reads its own stream
       def src = replayStream(spark, spec)
-      // A user glob admits files in landing order, not event-time order,
-      // and a watermark would drop a late file's rows: there the join
-      // keeps all its state (bounded by the landing directory) instead.
-      def watermarked(df: DataFrame, c: String) =
-        if (spec.batches == "user") df else df.withWatermark(c, "0 seconds")
-      val purchases = watermarked(src.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("purchase_id"), col("ts").as("pts")), "pts")
-      val views = watermarked(src.filter(col("event_type") === "view")
-        .select(col("user_id").as("v_uid"), col("ts").as("vts")), "vts")
+      val purchases = src.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("event_id").as("purchase_id"), col("ts").as("pts"))
+      val views = src.filter(col("event_type") === "view")
+        .select(col("user_id").as("v_uid"), col("ts").as("vts"))
       val joined = purchases.join(views,
           col("user_id") === col("v_uid") &&
             col("vts") >= col("pts") - expr("INTERVAL 1 HOUR") &&
@@ -959,25 +826,16 @@ object EventStream {
       val markers = src.filter(col("event_type") === "purchase")
         .select(col("event_id").as("purchase_id"),
           lit(null).cast("timestamp").as("vts"))
-      // (purchase, view) join pairs are O(corpus) — staged to parquet,
-      // not a memory sink (see [[stageReplay]]; at sf30 this sink was
-      // the next one in line to cross the driver result cap)
-      val staged = stageReplay(spark, outputMode = "append",
-        joined.unionByName(markers)) {
-        (b, tmp) => b.write.mode("append").parquet(tmp)
-      }
-      try {
-        val out = spark.read
-          .schema("purchase_id BIGINT, vts TIMESTAMP")
-          .parquet(staged)
-          .groupBy(col("purchase_id"))
+      // (purchase, view) join pairs are O(corpus) — staged, not a memory
+      // sink (see [[stagedResult]]; at sf30 this sink was the next one in
+      // line to cross the driver result cap)
+      stagedResult(spark, "append", joined.unionByName(markers),
+          "purchase_id BIGINT, vts TIMESTAMP") {
+        _.groupBy(col("purchase_id"))
           .agg(count(col("vts")).as("n_views_1h"))
           .orderBy("purchase_id")
-        val rows = out.collect().toIndexedSeq
-        spark.createDataFrame(rows.asJava, out.schema)
-      } finally deleteStaged(spark, staged)
+      }
     }
-  }
 
   val dailyStatsStreamedOracle: String =
     """SELECT strftime(ts, '%Y-%m-%d') AS day, event_type,

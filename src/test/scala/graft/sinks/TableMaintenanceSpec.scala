@@ -99,6 +99,34 @@ class TableMaintenanceSpec extends SparkSpec {
       li.agg(sum("l_orderkey")).head.getLong(0))
   }
 
+  test("writeZOrdered cuts files on z-cell edges, so no file straddles a quadrant") {
+    // a 64×64 grid plus one extra row per x on the shifted diagonal
+    // (x, x+32 mod 64): both keys stay uniform, so with 6 bits per key
+    // every value is its own bin, but the extra rows shift the
+    // equal-count file cuts off the 16×16 cells' edges
+    val grid = spark.range(64 * 64)
+      .select((col("id") / 64).cast("long").as("x"), (col("id") % 64).as("y"))
+    val diagonal = spark.range(64)
+      .select(col("id").as("x"), ((col("id") + 32) % 64).as("y"))
+    val df = grid.union(diagonal)
+    val out = tmpDir("zcell")
+    val files = 16
+    TableMaintenance.writeZOrdered(df, out, files, Seq("x", "y"), bitsPerKey = 6)
+    // 16 files over two keys: each file is one 16×16 z-cell, so its
+    // footer spans a quarter of each key's domain; a file cut inside a
+    // cell straddles the edge and spans twice that
+    for (k <- Seq("x", "y")) {
+      val ranges = footerRanges(out, k)
+      assert(ranges.size === files)
+      ranges.foreach { case (mn, mx) =>
+        assert(mx - mn + 1 <= 64 / 4, s"a file spans $k $mn..$mx")
+      }
+    }
+    val back = spark.read.parquet(out)
+    assert(back.count() === df.count())
+    assert(back.agg(sum("y")).head.getLong(0) === df.agg(sum("y")).head.getLong(0))
+  }
+
   test("zone-map manifest: readSkipping prunes the file LIST and returns the exact slice") {
     val out = tmpDir("zmap")
     val li = Tables.lineitem(spark, sfDir)

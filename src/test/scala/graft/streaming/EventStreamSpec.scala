@@ -317,22 +317,6 @@ class EventStreamSpec extends SparkSpec {
       "the stream-stream interval join must compute exactly the batch join")
   }
 
-  test("purchase context state path and stream-stream join path are row-identical") {
-    val key = "spark.sql.graft.streamPurchaseImpl"
-    val prev = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, "join")
-      val joined = EventStream.purchaseContextStreamed(spark, sfDir)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      spark.conf.set(key, "state")
-      val state = EventStream.purchaseContextStreamed(spark, sfDir)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      assert(state.toSeq === joined.toSeq,
-        "the single-store view-buffer processor must compute exactly the " +
-          "stream-stream interval join's result")
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
   test("purchase context over a user glob of shuffled files takes the join " +
       "path and equals the batch join") {
     import org.apache.hadoop.fs.Path
@@ -359,7 +343,6 @@ class EventStreamSpec extends SparkSpec {
     fs.delete(new Path(staging), true)
     val streamed = graft.SessionConf.withConf(spark,
         "spark.sql.graft.streamEventsGlob" -> "ev_*.parquet",
-        "spark.sql.graft.streamPurchaseImpl" -> "state",
         "spark.sql.graft.streamMaxFiles" -> "1") { // one file per batch
       EventStream.purchaseContextStreamed(spark, landing)
         .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -487,6 +470,41 @@ class EventStreamSpec extends SparkSpec {
       s"memory-sink table leaked: ${(viewsAfter -- viewsBefore).mkString(",")}")
     assert(spark.conf.getOption("spark.sql.session.timeZone") === tzBefore,
       "session timezone must be restored after the bounded replay")
+  }
+
+  test("a replay that fails mid-stream leaves no staging dir behind") {
+    import org.apache.hadoop.fs.Path
+    // a landing directory whose first file (by mtime) is good events and
+    // whose second stores `ts` as a string, which the pinned-schema
+    // reader refuses: batch 0 stages rows, batch 1 throws
+    val landing = java.nio.file.Files.createTempDirectory("graft-stage-leak").toString
+    val stagingRoot = java.nio.file.Files.createTempDirectory("graft-stage-root").toString
+    val fs = new Path(landing).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def land(df: org.apache.spark.sql.DataFrame, name: String, mtime: Long): Unit = {
+      val tmp = s"$landing/_tmp_$name"
+      df.coalesce(1).write.parquet(tmp)
+      val part = fs.listStatus(new Path(tmp))
+        .find(_.getPath.getName.endsWith(".parquet")).get.getPath
+      val target = new Path(landing, s"$name.parquet")
+      assert(fs.rename(part, target))
+      fs.setTimes(target, mtime, -1)
+      fs.delete(new Path(tmp), true)
+    }
+    val base = System.currentTimeMillis() - 60000L
+    graft.SessionConf.withConf(spark,
+        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
+      land(graft.Tables.events(spark, sfDir), "ev_0", base)
+      land(graft.Tables.events(spark, sfDir).limit(10)
+        .withColumn("ts", col("ts").cast("string")), "ev_1", base + 2000L)
+    }
+    graft.SessionConf.withConf(spark,
+        "spark.sql.graft.streamStagingDir" -> stagingRoot,
+        "spark.sql.graft.streamEventsGlob" -> "ev_*.parquet",
+        "spark.sql.graft.streamMaxFiles" -> "1") {
+      intercept[Exception](EventStream.sessionStatsStreamed(spark, landing).collect())
+    }
+    val left = new java.io.File(stagingRoot).list().filter(_.startsWith("stage_"))
+    assert(left.isEmpty, s"failed replay leaked staging dirs: ${left.mkString(",")}")
   }
 
   test("split replay layout builds once, serves twice, rebuilds on source change") {

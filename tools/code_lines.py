@@ -2,12 +2,16 @@
 """Count the code lines of Scala sources: lines that are neither blank nor
 comment-only.
 
-    python3 tools/code_lines.py [--rev REV] [FILE ...]
+    python3 tools/code_lines.py [--rev REV] [--conf-keys] [FILE ...]
 
 With no FILE, counts every `*.scala` under `src/main`. Without `--rev` it
 reads the working tree; with `--rev REV` it reads the files as committed at
 git revision REV (a file absent there counts 0). Prints one line per file,
 `<code lines>  <path>`, then `<total>  total`. Run it from the repo root.
+
+With `--conf-keys` it lists the graft session-conf keys instead: every
+`"spark.graft.*"` / `"spark.sql.graft.*"` string literal in the same files,
+one line per key, `<key>  <path:line> ...`, then `<count>  conf keys`.
 
 A line counts when any character of it lies outside a comment. `//` and
 `/* ... */` comments (Scaladoc included, nested blocks too) are skipped;
@@ -16,6 +20,7 @@ inside a string does not open a comment.
 """
 import argparse
 import os
+import re
 import subprocess
 import sys
 
@@ -74,6 +79,20 @@ def code_lines(text):
     return count
 
 
+CONF_KEY = re.compile(r'"(spark\.(?:sql\.)?graft\.[A-Za-z0-9_.]+)"')
+
+
+def conf_keys(sources):
+    """{key: [path:line, ...]} for each graft conf-key literal in `sources`,
+    an iterable of (path, text)."""
+    keys = {}
+    for path, text in sources:
+        for n, line in enumerate(text.splitlines(), 1):
+            for key in CONF_KEY.findall(line):
+                keys.setdefault(key, []).append(f"{path}:{n}")
+    return keys
+
+
 def git(*args):
     return subprocess.run(["git", *args], check=True, capture_output=True,
                           text=True).stdout
@@ -82,6 +101,8 @@ def git(*args):
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--rev", help="count the files as committed at this git revision")
+    ap.add_argument("--conf-keys", action="store_true",
+                    help="list the spark.(sql.)graft.* keys the files name")
     ap.add_argument("files", nargs="*", help="Scala files (default: src/main)")
     args = ap.parse_args()
 
@@ -94,16 +115,24 @@ def main():
                      for f in fs]
         files = sorted(f for f in files if f.endswith(".scala"))
 
-    total = 0
-    for path in files:
+    def read(path):
         if args.rev:
             shown = subprocess.run(["git", "show", f"{args.rev}:{path}"],
                                    capture_output=True, text=True)
-            text = shown.stdout if shown.returncode == 0 else ""
-        else:
-            with open(path, encoding="utf-8") as f:
-                text = f.read()
-        n = code_lines(text)
+            return shown.stdout if shown.returncode == 0 else ""
+        with open(path, encoding="utf-8") as f:
+            return f.read()
+
+    if args.conf_keys:
+        keys = conf_keys((path, read(path)) for path in files)
+        for key in sorted(keys):
+            print(f"{key}  {' '.join(keys[key])}")
+        print(f"{len(keys):7d}  conf keys")
+        return
+
+    total = 0
+    for path in files:
+        n = code_lines(read(path))
         total += n
         print(f"{n:7d}  {path}")
     print(f"{total:7d}  total")
