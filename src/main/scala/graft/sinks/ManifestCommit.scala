@@ -51,9 +51,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * READERS are always safe.
   *
   * Manifest entries are `key=value` lines. By convention a key starting
-  * with `dir.` names a data path relative to the root (its first path
-  * segment is a generation directory); other keys are scalar metadata
-  * (bucket counts, last-applied batch ids).
+  * with `dir.` names ONE data path relative to the root (its first path
+  * segment is a generation directory): a merge-sink bucket with appended
+  * segments has one entry per segment (`dir.7`, `dir.7+12`, see
+  * [[ParquetMergeSink.bucketOf]]), never a joined list. Other keys are
+  * scalar metadata (bucket counts, the merge sink's `hwm`, last-applied
+  * batch ids).
   */
 object ManifestCommit {
 

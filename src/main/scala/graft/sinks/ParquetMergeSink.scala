@@ -12,26 +12,39 @@ import graft.indexer.Upsert
   * reference's `INSERT ... ON CONFLICT DO UPDATE` target tables
   * (db.go:1171-1175) for a lake without a transactional format.
   *
-  * Scale design — bucket-scoped rewrite, not table rewrite: rows are
-  * hashed into `nBuckets` buckets on the merge keys. A merge touches ONLY
-  * the buckets containing the batch's keys: it reads those buckets'
-  * current files, resolves latest-wins, writes the result as a NEW
-  * immutable generation, and commits by flipping a single small manifest
-  * file ([[ManifestCommit]]). Buckets without conflicting keys are never
-  * read or rewritten — their manifest entries simply carry forward — so
-  * at 100 TB a small batch costs O(batch + touched-buckets), not
-  * O(table).
+  * Scale design — append past the high-water mark, else a bucket-scoped
+  * rewrite; never a table rewrite. Rows are hashed into `nBuckets` buckets
+  * on the merge keys, and every commit writes a NEW immutable generation
+  * and flips a single small manifest file ([[ManifestCommit]]). The
+  * manifest records `hwm`, an upper bound on every committed version.
+  * When the version column is one of the merge keys and a batch's
+  * smallest version is above `hwm`, no batch key can equal a committed
+  * one: the batch resolves latest-wins against itself only and its rows
+  * are APPENDED, one new segment per touched bucket (manifest entry
+  * `dir.<b>+<manifest version>` beside the base `dir.<b>`), without
+  * reading a committed row — O(batch). Every other commit (an update-wins
+  * table, a replay at or below `hwm`, [[mergeActions]]) reads ALL segments
+  * of ONLY the buckets the batch touches, resolves them and rewrites each
+  * as one base dir — O(batch + touched buckets). Untouched buckets' entries
+  * carry forward, so at 100 TB a small batch never costs O(table).
+  *
+  * Fold rule — a bucket holds at most [[MaxSegments]] dirs: an append that
+  * would add one more reads the bucket's segments and rewrites them,
+  * with the batch's rows, as one base dir in the same write, and a
+  * merge-path commit folds every bucket it touches. Reads stay bounded at
+  * `nBuckets · MaxSegments` dirs per table.
   *
   * Job shape — a merge runs ONE staging job, then the write. The staging
   * job materializes the aligned, bucketed batch behind a barrier and
-  * observes, in the same pass, the set of touched buckets and the row
-  * count (emptiness); no separate `isEmpty` or bucket-`distinct` job runs.
-  * The write is the bucket-commit tail [[merge]] and [[mergeActions]]
-  * share ([[commitBuckets]]): it reads the touched buckets, lets the
-  * caller resolve them (latest-wins for a merge; delete/update/insert
-  * for mergeActions) and writes the result (under AQE: the shuffle's map
-  * job plus the write job). At live-trigger batch sizes a merge's cost
-  * is mostly per-job planning and scheduling, so the job count is what
+  * observes, in the same pass, the set of touched buckets, the row count
+  * (emptiness) and an integral version's min, max and null count; no
+  * separate `isEmpty`, bucket-`distinct` or range job runs. The write is
+  * the bucket-commit tail every commit shares ([[commitBuckets]]): it
+  * reads the buckets it folds, lets the caller resolve them (latest-wins
+  * for a merge, the batch alone for an append, delete/update/insert for
+  * mergeActions) and writes the result (under AQE: the shuffle's map job
+  * plus the write job). At live-trigger batch sizes a merge's cost is
+  * mostly per-job planning and scheduling, so the job count is what
   * matters. The staged blocks are released as soon as the commit (or the
   * failure) is done, not left to the GC.
   *
@@ -64,6 +77,25 @@ object ParquetMergeSink {
   private[graft] val SchemaKey = "schema"
   private[graft] val PhysKey = "schema.phys"
   private[graft] val RetiredKey = "schema.retired"
+  private[graft] val HwmKey = "hwm"
+
+  /** Dirs one bucket may hold before an append folds it (the fold rule). */
+  private[graft] val MaxSegments = 8
+
+  private val BucketKey = "(\\d+)(?:\\+\\d+)?".r
+
+  /** The bucket a merge-sink dir key (`dir.` stripped) names: `7` is bucket
+    * 7's base dir, `7+12` the segment manifest v12 appended to it. None for
+    * every other entry (`table`, `deletes`, partition dirs).
+    */
+  private[graft] def bucketOf(key: String): Option[Int] = key match {
+    case BucketKey(b) => b.toIntOption
+    case _ => None
+  }
+
+  /** The version column is a merge key: the tables an append can serve. */
+  private def versionKeyed(keys: Seq[String], version: String): Boolean =
+    keys.exists(k => lcName(k) == lcName(version))
 
   /** The manifest-declared table schema, when the table carries one.
     * Tables created via [[createEmpty]] (SQL CREATE) carry it from birth;
@@ -496,7 +528,7 @@ object ParquetMergeSink {
     // ALTER there would record a declaration nothing honors (and a
     // DV-carrying table's delete epoch must compact before its shape
     // changes). Refuse loudly rather than half-evolve.
-    val nonBucket = m.dirs.keys.filterNot(_.forall(_.isDigit))
+    val nonBucket = m.dirs.keys.filter(bucketOf(_).isEmpty)
     require(nonBucket.isEmpty,
       s"$path is not a merge-sink bucket layout (entries: " +
         s"${nonBucket.take(3).mkString(", ")}…) — $op serves " +
@@ -685,13 +717,17 @@ object ParquetMergeSink {
       ManifestCommit.Manifest(v, entries)
     }
 
+  /** An integral version's range in a batch (min/max None if all null). */
+  private final case class Versions(min: Option[Long], max: Option[Long], nulls: Long)
+
   /** One batch staged for its write: `frame` is the aligned batch with
     * the bucket column, materialized behind a [[graft.Tables.barrier]];
-    * `touched` and `rows` were observed by that same job.
+    * `touched`, `rows` and `versions` (None unless the version column is
+    * integral) were observed by that same job.
     */
   private final case class Staged(frame: DataFrame, touched: Seq[Int],
       rows: Long, buckets: Int,
-      committed: Option[ManifestCommit.Manifest])
+      committed: Option[ManifestCommit.Manifest], versions: Option[Versions])
 
   /** The shared front of [[merge]] and [[mergeActions]]: ONE Spark job.
     *
@@ -699,21 +735,29 @@ object ParquetMergeSink {
     * WITHOUT creating anything, so the bucket count and declared schema
     * are known before the batch is touched; `shape` aligns the batch to
     * them. The bucket column is added, and a `Dataset.observe` of the
-    * touched-bucket set and the row count rides on the barrier's
-    * materializing job — the rows, the bucket list and emptiness all come
-    * from that one pass over the batch's lineage.
+    * touched-bucket set, the row count and an integral version's range
+    * rides on the barrier's materializing job — all of them come from that
+    * one pass over the batch's lineage.
     */
-  private def stage(fs: FileSystem, table: Path, keys: Seq[String],
+  private def stage(fs: FileSystem, table: Path, keys: Seq[String], version: String,
       nBuckets: Int)(shape: Option[ManifestCommit.Manifest] => DataFrame): Staged = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     val committed = ManifestCommit.latest(fs, table)
     val known = committed.orElse(
       legacyLayout(fs, table).map(ManifestCommit.Manifest(0L, _)))
     val buckets = known.fold(nBuckets)(_.entries("buckets").toInt)
-    val (frame, ran) = graft.Tables.materializedBarrier(shape(known)
+    val shaped = shape(known)
+    val integral = shaped.schema.find(f => lcName(f.name) == lcName(version))
+      .exists(f => Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType))
+    val v = col(version).cast("long")
+    val range = if (integral) Seq(min(v), max(v), count(when(v.isNull, 1))) else Nil
+    val (frame, ran) = graft.Tables.materializedBarrier(shaped
       .withColumn(BucketCol, bucketExpr(keys, buckets))
-      .observe(StageMetrics, collect_set(col(BucketCol)), count(lit(1))))
+      .observe(StageMetrics, collect_set(col(BucketCol)), count(lit(1)) +: range: _*))
     val seen = ran.observedMetrics(StageMetrics)
-    Staged(frame, seen.getSeq[Int](0).sorted, seen.getLong(1), buckets, committed)
+    def long(i: Int) = Option.unless(seen.isNullAt(i))(seen.getLong(i))
+    Staged(frame, seen.getSeq[Int](0).sorted, seen.getLong(1), buckets, committed,
+      Option.when(integral)(Versions(long(2), long(3), seen.getLong(4))))
   }
 
   /** The manifest a non-empty staged batch commits against: the one it
@@ -731,67 +775,91 @@ object ParquetMergeSink {
       m
     }
 
-  /** The bucket-commit tail [[merge]] and [[mergeActions]] share.
+  /** The bucket-commit tail every commit shares.
     *
-    * It reads the committed rows of ONLY the touched buckets: explicit dir
-    * reads from the manifest (partition pruning by construction —
-    * untouched bucket dirs never enter the scan). The bucket column is not
-    * stored in the files; it is recomputed from the keys, which is
-    * deterministic. `resolve` gets those rows (None when no touched bucket
-    * has a dir yet) and returns every row the touched buckets keep, with
-    * the bucket column.
+    * An `append` folds only the touched buckets already holding
+    * [[MaxSegments]] dirs; any other commit folds every touched bucket.
+    * It reads ONLY the folded buckets' rows, all their segments, by
+    * explicit dir (other bucket dirs never enter the scan); the bucket
+    * column is recomputed from the keys, deterministically. `resolve` gets
+    * those rows (None when no folded bucket has a dir) and returns every
+    * row to write, with the bucket column: for a folded bucket every row
+    * it keeps, for an appended one only the batch's new rows.
     *
     * Those rows become a NEW immutable generation; nothing live is
     * overwritten, so a crash before the commit is invisible to readers
     * (the orphan dir is vacuumed later). Files are written under PHYSICAL
     * column names — renamed columns keep the name they were born with, so
     * every generation shares one file schema. One listing of the new
-    * generation settles each touched bucket's entry: it points at the
-    * bucket's new dir, or is REMOVED when the generation has none — the
-    * bucket kept no row (mergeActions deleted them all). A touched
-    * bucket's old entry is never carried: the generation holds every row
-    * the bucket keeps, so the old files could only bring back superseded
-    * or deleted rows. (For a merge every touched bucket gets a dir, since
-    * latest-wins keeps one row per key, null keys included, in the
-    * bucket its key hashes to: Spark's hash folds -0.0 into 0.0 and all
-    * NaNs into one, as its grouping does.)
+    * generation settles each touched bucket's entries. An appended bucket
+    * keeps its segments and gains `dir.<b>+<version>` (or `dir.<b>` while
+    * it has none). A folded bucket's entries are ALL replaced by one
+    * `dir.<b>`, or REMOVED when the generation has no dir for it — the
+    * bucket kept no row (mergeActions deleted them all): the generation
+    * holds every row the bucket keeps, so its old files could only bring
+    * back superseded or deleted rows. (For a merge every touched bucket
+    * gets a dir, since latest-wins keeps one row per key, null keys
+    * included, in the bucket its key hashes to: Spark's hash folds -0.0
+    * into 0.0 and all NaNs into one, as its grouping does.)
     *
-    * The manifest flip then covers every touched bucket at once, and
-    * generations (and migrated legacy bucket dirs) that no retained
-    * manifest references are reclaimed. keep=2: the previous manifest's
-    * generations survive one more commit for in-flight readers.
+    * The same flip raises `hwm` to the batch's largest version (a table
+    * without one that can append takes it from one scan of its version
+    * column; a non-integral version drops it) and covers every touched
+    * bucket at once. Generations (and migrated legacy bucket dirs) no
+    * retained manifest references are reclaimed. keep=2: the previous
+    * manifest's generations survive one more commit for in-flight readers.
     */
   private def commitBuckets(fs: FileSystem, table: Path, staged: Staged,
-      keys: Seq[String], version: String)(
+      keys: Seq[String], version: String, append: Boolean)(
       resolve: Option[DataFrame] => DataFrame): Unit = {
+    val spark = staged.frame.sparkSession
     val manifest = manifestFor(fs, table, staged)
     val touched = staged.touched
-    val currentDirs = touched.flatMap(b => manifest.dirs.get(b.toString))
+    val segments = manifest.dirs.toSeq
+      .flatMap { case (k, rel) => bucketOf(k).map(_ -> rel) }.groupMap(_._1)(_._2)
+    def segs(b: Int) = segments.getOrElse(b, Nil)
+    val fold = touched.filter(b => !append || segs(b).size >= MaxSegments).toSet
+    val currentDirs = fold.toSeq.sorted.flatMap(segs(_).sorted)
     val merged = resolve(Option.when(currentDirs.nonEmpty)(
-      scan(staged.frame.sparkSession, table, manifest, currentDirs)
+      scan(spark, table, manifest, currentDirs)
         .withColumn(BucketCol, bucketExpr(keys, staged.buckets))))
 
     val declared = declaredSchema(manifest)
-    val gen = ManifestCommit.newGeneration(manifest.version + 1)
+    val next = manifest.version + 1
+    val gen = ManifestCommit.newGeneration(next)
     val genPath = new Path(table, gen)
     declared.fold(merged)(d => toPhysical(merged, d, physMap(manifest)))
       .write.mode(SaveMode.Overwrite)
       .partitionBy(BucketCol).parquet(genPath.toString)
     val written = fs.listStatus(genPath).map(_.getPath.getName).toSet
     val updated = touched.collect { case b if written(s"$BucketCol=$b") =>
-      s"dir.$b" -> s"$gen/$BucketCol=$b"
+      (if (fold(b) || segs(b).isEmpty) s"dir.$b" else s"dir.$b+$next") ->
+        s"$gen/$BucketCol=$b"
     }
     val carried = manifest.entries.filter { case (k, _) =>
-      !k.startsWith("dir.") || !touched.contains(k.stripPrefix("dir.").toInt)
+      k != HwmKey && !(k.startsWith("dir.") && bucketOf(k.stripPrefix("dir.")).exists(fold))
     }
+    val prevHwm = manifest.entries.get(HwmKey).map(_.toLong).orElse {
+      if (manifest.dirs.isEmpty) Some(Long.MinValue)
+      else Option.when(staged.versions.isDefined && versionKeyed(keys, version)) {
+        val top = scan(spark, table, manifest, manifest.dirs.values.toSeq.sorted)
+          .agg(max(col(version).cast("long"))).head()
+        if (top.isNullAt(0)) Long.MinValue else top.getLong(0)
+      }
+    }
+    val hwm = staged.versions.flatMap(v => prevHwm.map(h => v.max.fold(h)(math.max(h, _))))
+    graft.StrategyLog.record("merge_commit", if (append) "append" else "merge",
+      "table" -> table, "touched" -> touched.size, "folded" -> fold.size,
+      "hwm" -> manifest.entries.getOrElse(HwmKey, "none"),
+      "min_version" -> staged.versions.flatMap(_.min).getOrElse("none"))
     // Stamp the declared schema (or, first time, the batch-derived one):
     // pre-existing tables acquire the entry on their next merge, which is
     // what makes ALTER TABLE available to API-grown tables too.
     val schemaEntry = SchemaKey -> declared.getOrElse(
       stampable(org.apache.spark.sql.types.StructType(
         merged.schema.fields.filterNot(_.name == BucketCol)))).json
-    ManifestCommit.commit(fs, table,
-      carried ++ updated ++ writeMeta(keys, version) + schemaEntry)
+    ManifestCommit.commit(fs, table, carried ++ updated ++ writeMeta(keys, version) ++
+      hwm.map(HwmKey -> _.toString) + schemaEntry)
     ManifestCommit.vacuum(fs, table, keep = 2)
     val stillReferenced = ManifestCommit.committed(fs, table).takeRight(2)
       .flatMap(_.dirs.values).filter(!_.contains("/")).toSet
@@ -805,7 +873,9 @@ object ParquetMergeSink {
 
   /** Latest-wins upsert of `batch` into the table at `path`; returns the
     * number of batch rows staged (0 = an empty batch, which changes
-    * nothing and creates no table).
+    * nothing and creates no table). It appends when the version is a
+    * merge key and the batch's smallest version is above `hwm`, else it
+    * merges; [[graft.StrategyLog]] records which (`merge_commit`).
     *
     * Emptiness is only known once the staging job has run, so the
     * batch's shape is checked first: an EMPTY batch whose columns do not
@@ -822,7 +892,7 @@ object ParquetMergeSink {
     // write contract: the batch aligns onto it — null-fill for columns an
     // old writer doesn't know yet (post-ADD COLUMN), loud refusal for
     // columns the table doesn't have.
-    val staged = stage(fs, table, keys, nBuckets)(known =>
+    val staged = stage(fs, table, keys, version, nBuckets)(known =>
       known.flatMap(declaredSchema).fold(batch)(d =>
         alignToSchema(batch, d, s"merge batch into $path",
           required = keys :+ version, keepSourceOnly = false)))
@@ -830,13 +900,23 @@ object ParquetMergeSink {
       // Emptiness is known BEFORE any manifest is created: a no-op batch
       // against a nonexistent path leaves the filesystem untouched.
       if (staged.rows > 0) {
-        // incoming outranks current on version ties
-        val batchB = staged.frame.withColumn(PrefCol, lit(1))
-        commitBuckets(fs, table, staged, keys, version)(current =>
-          Upsert.latestWins(
-              current.fold(batchB)(_.withColumn(PrefCol, lit(0)).unionByName(batchB)),
-              keys, col(version), col(PrefCol))
-            .drop(PrefCol))
+        // Past `hwm` every key is new (the version is one of them): the
+        // batch resolves against itself alone and appends.
+        val hwm = staged.committed.flatMap(_.entries.get(HwmKey)).map(_.toLong)
+        val append = versionKeyed(keys, version) && staged.versions.exists(v =>
+          v.nulls == 0 && v.min.exists(lo => hwm.exists(lo > _)))
+        commitBuckets(fs, table, staged, keys, version, append) { current =>
+          if (append) {
+            val own = Upsert.latestWins(staged.frame, keys, col(version))
+            current.fold(own)(_.unionByName(own))
+          } else {
+            val batchB = staged.frame.withColumn(PrefCol, lit(1)) // wins ties
+            Upsert.latestWins(
+                current.fold(batchB)(_.withColumn(PrefCol, lit(0)).unionByName(batchB)),
+                keys, col(version), col(PrefCol))
+              .drop(PrefCol)
+          }
+        }
       }
       staged.rows
     } finally graft.Tables.release(staged.frame)
@@ -955,7 +1035,7 @@ object ParquetMergeSink {
     // declares long) would route to the wrong bucket and silently
     // duplicate the key across buckets. Source-only columns (the CDC op
     // flag) pass through untouched.
-    val staged = stage(fs, table, keys, nBuckets) { known =>
+    val staged = stage(fs, table, keys, version, nBuckets) { known =>
       tableSchema = known.flatMap(m => declaredSchema(m).orElse(
         Option.when(m.dirs.nonEmpty)(
           scan(spark, table, m, m.dirs.values.toSeq.sorted).schema)))
@@ -971,7 +1051,7 @@ object ParquetMergeSink {
         // intra-batch resolution first: one surviving row per source key,
         // so the WINNING row's delete/update verdict is what applies
         val resolved = Upsert.latestWins(staged.frame, keys, col(version)).barrier()
-        try commitBuckets(fs, table, staged, keys, version)(
+        try commitBuckets(fs, table, staged, keys, version, append = false)(
           applyActions(resolved, _, keys, tableSchema, tableCols))
         finally graft.Tables.release(resolved)
       }

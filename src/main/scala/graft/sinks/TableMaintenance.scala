@@ -110,7 +110,7 @@ object TableMaintenance {
   private val ZSampleRows = 1 << 16
 
   /** The `n - 1` boundaries that cut `xs` into `n` equal-count runs. */
-  private def quantiles[T: Ordering](xs: Seq[T], n: Int): Seq[T] = {
+  private[graft] def quantiles[T: Ordering](xs: Seq[T], n: Int): Seq[T] = {
     val sorted = xs.sorted
     if (sorted.isEmpty) Nil else (1 until n).map(i => sorted(i * sorted.size / n))
   }

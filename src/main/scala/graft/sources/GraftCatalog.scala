@@ -37,8 +37,10 @@ import graft.sinks.ManifestCommit
   * Resolution semantics — identical to the API readers by construction:
   *
   *  - the CURRENT table is the highest committed manifest's generation
-  *    dirs (merge-sink bucket entries `dir.N` or a maintained table's
-  *    `dir.table`); uncommitted/orphan generations are invisible.
+  *    dirs: a merge-sink table's bucket entries (`dir.N`, bucket N's base
+  *    dir, plus `dir.N+V`, a segment manifest vV appended to it — each
+  *    entry one dir) or a maintained table's `dir.table`;
+  *    uncommitted/orphan generations are invisible.
   *  - `VERSION AS OF n` loads manifest n if vacuum still retains it —
   *    the exact `readVersion` contract, including the loud listing of
   *    retained versions on a miss.
@@ -125,7 +127,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog {
     }
     val dataEntries = m.dirs.filter { case (k, _) => k != "deletes" }
     val unsupported = dataEntries.keys.filterNot(k =>
-      k == "table" || k.forall(_.isDigit))
+      k == "table" || graft.sinks.ParquetMergeSink.bucketOf(k).isDefined)
     require(unsupported.isEmpty,
       s"$p is partition-managed (${unsupported.take(3).mkString(", ")}…): " +
         "read it via TableMaintenance.readPartitioned — the catalog serves " +

@@ -12,7 +12,7 @@ import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sinks.{ManifestCommit, TableMaintenance}
+import graft.sinks.{ManifestCommit, ParquetMergeSink, TableMaintenance}
 
 /** The catalog's `CALL graft.system.*` maintenance procedures — the SQL
   * face of the manifest-protocol operations that are not statements
@@ -90,6 +90,10 @@ private[sources] object GraftProcedures {
   private def param(name: String, dt: DataType, default: String): ProcedureParameter =
     ProcedureParameter.in(name, dt).defaultValue(default).build()
 
+  /** True when `m` holds merge-sink bucket entries (base or segment). */
+  private def isBucketLayout(m: ManifestCommit.Manifest): Boolean =
+    m.dirs.keys.exists(ParquetMergeSink.bucketOf(_).isDefined)
+
   /** table-name argument → its managed root path (must exist). */
   private def tableRoot(root: Path, table: String): Path = {
     val p = new Path(root, table)
@@ -117,7 +121,7 @@ private[sources] object GraftProcedures {
           val rows = ManifestCommit.committed(fs, p).sortBy(-_.version).map { m =>
             val layout =
               if (m.dirs.keys.forall(k => k == "table" || k == "deletes")) "maintained"
-              else if (m.dirs.keys.exists(_.forall(_.isDigit))) "merge-sink"
+              else if (isBucketLayout(m)) "merge-sink"
               else "partitioned"
             val at = java.time.Instant.ofEpochMilli(
               fs.getFileStatus(ManifestCommit.commitPath(p, m.version))
@@ -166,11 +170,12 @@ private[sources] object GraftProcedures {
           val table = input.getString(0)
           val p = tableRoot(root, table)
           val m = ManifestCommit.latest(fs, p)
-          require(!m.exists(_.dirs.keys.exists(_.forall(_.isDigit))),
-            s"compact: $table is a merge-sink bucketed table — every merge " +
-              "already rewrites its touched buckets whole, so there is " +
-              "nothing for compaction to reclaim (maintenance procedures " +
-              "serve maintained single-table layouts)")
+          require(!m.exists(isBucketLayout),
+            s"compact: $table is a merge-sink bucketed table — its writes " +
+              "fold each bucket's appended segments themselves (at most " +
+              s"${ParquetMergeSink.MaxSegments} dirs per bucket), and a " +
+              "file-level rewrite would break bucket routing (maintenance " +
+              "procedures serve maintained single-table layouts)")
           val targetMb = input.getInt(1)
           require(targetMb >= 1, s"compact: target_mb must be >= 1, got $targetMb")
           val sortBy =
@@ -415,14 +420,13 @@ private[sources] object GraftProcedures {
   }
 
   /** [[tableRoot]] plus the merge-sink refusal every layout rewrite
-    * shares: bucket layouts are rewritten whole per merge — sorting or
+    * shares: a bucket layout's files are placed by key hash — sorting or
     * z-ordering them would destroy bucket routing.
     */
   private def maintainedRoot(root: Path, table: String, op: String): Path = {
     val p = tableRoot(root, table)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!ManifestCommit.latest(fs, p)
-        .exists(_.dirs.keys.exists(_.forall(_.isDigit))),
+    require(!ManifestCommit.latest(fs, p).exists(isBucketLayout),
       s"$op: $table is a merge-sink bucketed table — its physical layout " +
         "IS the bucket routing (keys hash to dirs); a clustering rewrite " +
         "would break key lookup. Compact into a fresh maintained table " +

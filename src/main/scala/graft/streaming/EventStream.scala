@@ -107,18 +107,38 @@ object EventStream {
     * 32 → 8 took the pair from ~18 s each to 4.8/4.9 s; at sf100 (120M
     * events) a controlled A/B (same window, fresh JVM per config,
     * min-of-2) ran width 8 at 113.3 s (dedup) / 82.2 s (EMA) vs width 32
-    * at 94.6 / 58.6 — so the cap applies below 50M events (parquet-footer
-    * row count, memoized) and releases above. The stream-stream JOIN
+    * at 94.6 / 58.6 — so the cap applies below 50M events and releases
+    * above. The count is what the resolved replay reads: the footer row
+    * counts of the files its glob admits (the split layout's files, or a
+    * user landing directory's). The stream-stream JOIN
     * keeps its fixed cap of 8 regardless: four stores per partition
     * quadruple the lifecycle cost and its horizon-bounded state stays
     * small at every measured SF (sf100: 133–136 s capped, faster than the
     * uncapped r12 shape).
     */
   private def replayStoreWidth(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Int =
-    if (graft.Tables.eventCount(spark, dir) >= 50000000L)
-      Int.MaxValue // leave the session width — no cap
+      spec: ReplaySpec): Int = {
+    import org.apache.hadoop.fs.Path
+    val conf = spark.sparkContext.hadoopConfiguration
+    val glob = new Path(spec.dir, spec.glob)
+    val rows = Option(glob.getFileSystem(conf).globStatus(glob)).toSeq.flatten
+      .filter(_.isFile).map { st =>
+        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        try rd.getRecordCount finally rd.close()
+      }.sum
+    if (rows >= 50000000L) Int.MaxValue // leave the session width — no cap
     else 8
+  }
+
+  /** Run `body` over `dir`'s resolved replay ([[resolveReplay]]) with the
+    * store width that replay calls for ([[replayStoreWidth]]).
+    */
+  private def withReplay[T](spark: org.apache.spark.sql.SparkSession,
+      dir: String)(body: ReplaySpec => T): T = {
+    val spec = resolveReplay(spark, dir)
+    withStoreCap(spark, replayStoreWidth(spark, spec))(body(spec))
+  }
 
   /** How many split-layout builds ran in this JVM (spec hook: serving
     * twice must build once).
@@ -162,18 +182,24 @@ object EventStream {
     * ts order by the generator, so the cross-file order agrees with both
     * event time (watermark correctness — a later file never carries an
     * earlier timestamp, so nothing is ever late under a 0s delay) and
-    * event_id (fold-order correctness for the EMA recurrence).
+    * event_id (fold-order correctness for the EMA recurrence). The cuts
+    * are exact quantiles of ONE fixed-seed sample of about
+    * [[SplitSampleRows]] keys, as in `TableMaintenance.writeZOrdered`, so
+    * the files — and with them every micro-batch's input, state and
+    * eviction counts — are a function of the input alone
+    * (`repartitionByRange` seeds its sampler with the RDD id, i.e. with how
+    * many RDDs the session made before the build).
     *
     * Fingerprinted against the SOURCE snapshot (bytes+mtime) and
     * published by staging-dir rename — the IvfPqIndex / ordersSkipLayout
     * cache discipline; rebuilds only when the source table changes.
     */
-  private def eventsSplitLayout(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def eventsSplitLayout(spark: org.apache.spark.sql.SparkSession,
       dir: String, splits: Int): String = {
     import org.apache.hadoop.fs.Path
     val src = s"$dir/events.parquet"
     val snap = graft.functions.IvfPqIndex.snapshotId(spark, src)
-    val fp = s"fmt=1;src=$dir;$snap;splits=$splits"
+    val fp = s"fmt=2;src=$dir;$snap;splits=$splits"
     val layout = graft.functions.IvfPqIndex.indexRoot(spark) +
       s"/stream_split_${graft.functions.IvfPqIndex.pathKey(dir)}"
     val built = graft.functions.LayoutCache.serve(spark, layout, fp) {
@@ -181,10 +207,23 @@ object EventStream {
         val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
         // micros, never INT96: the pinned-schema streaming reader
         // refuses INT96 (PARQUET_COLUMN_DATA_TYPE_MISMATCH)
-        withConf(spark, "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")(
-          graft.Tables.events(spark, dir)
-            .repartitionByRange(splits, col("ts"), col("event_id"))
-            .write.mode("overwrite").parquet(staging.toString))
+        withConf(spark, "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
+          val events = graft.Tables.events(spark, dir)
+          val tsu = unix_micros(col("ts"))
+          val sample = events.filter(col("ts").isNotNull && col("event_id").isNotNull)
+            .select(tsu, col("event_id"))
+            .sample(withReplacement = false, math.min(1.0,
+              SplitSampleRows.toDouble / math.max(1L, graft.Tables.eventCount(spark, dir))),
+              seed = 0L)
+            .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+          // a row's file: how many of the ascending (ts, event_id) cuts it reaches
+          val file = graft.sinks.TableMaintenance.quantiles(sample, splits)
+            .map { case (t, e) =>
+              when(tsu > t || (tsu === t && col("event_id") >= e), 1).otherwise(0)
+            }.foldLeft(lit(0))(_ + _)
+          events.repartitionById(splits, file)
+            .write.mode("overwrite").parquet(staging.toString)
+        }
         // part-NNNNN names carry the range order; rename into the glob
         // shape and stamp ascending mod times (2 s apart — coarser than
         // any filesystem's timestamp granularity) so admission order is
@@ -202,6 +241,9 @@ object EventStream {
     if (built) splitLayoutBuilds.incrementAndGet()
     layout
   }
+
+  /** Keys [[eventsSplitLayout]] samples for its file cuts. */
+  private val SplitSampleRows = 1 << 16
 
   /** Where and how a bounded gate replay reads the events table. */
   private case class ReplaySpec(dir: String, glob: String,
@@ -476,8 +518,7 @@ object EventStream {
     // behind a user-glob replay needs the legacy nanos conf set on THIS
     // session — without it a fresh session throws Illegal Parquet type
     // before the split-layout side effect of Tables.events can mask it.
-    withConf(spark, RocksDbStore, NanosAsLong)(withStoreCap(spark,
-        replayStoreWidth(spark, dir)) {
+    withConf(spark, RocksDbStore, NanosAsLong)(withReplay(spark, dir) { spec =>
       // The update stream emits one refreshed (ema, n) row per user per
       // micro-batch it appears in — O(users × batches) — so it stages
       // (see [[stagedResult]]): per-user EMA state hits the memory-sink
@@ -487,7 +528,7 @@ object EventStream {
       // fold order is the batch closed form's order); ts/event_type/props
       // prune at the parquet scan.
       stagedResult(spark, "update",
-          emaScores(replayStream(spark, resolveReplay(spark, dir))).toDF(),
+          emaScores(replayStream(spark, spec)).toDF(),
           "userId BIGINT, ema DOUBLE, nEvents BIGINT") {
         _.groupBy(col("userId").as("user_id"))
           .agg(
@@ -560,14 +601,13 @@ object EventStream {
       dir: String): DataFrame =
     // date_format buckets in the session timezone; the oracle's strftime
     // buckets raw UTC — agree only under UTC
-    withConf(spark, NanosAsLong, Utc)(withStoreCap(spark,
-        replayStoreWidth(spark, dir)) {
+    withConf(spark, NanosAsLong, Utc)(withReplay(spark, dir) { spec =>
       // The deduped stream is O(corpus) (one row per distinct key) — it
       // stages (see [[stagedResult]]; a memory sink died here at sf30).
       // The aggregate below reads the staged files distributed; only the
       // bounded per-day result ever reaches the driver.
       stagedResult(spark, "append",
-          replayStream(spark, resolveReplay(spark, dir))
+          replayStream(spark, spec)
             .select(col("ts"), col("user_id"), col("event_type"))
             .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
             .withWatermark("ts", "1 hour")
@@ -784,7 +824,7 @@ object EventStream {
   private def purchaseContextState(spark: org.apache.spark.sql.SparkSession,
       dir: String, spec: ReplaySpec): DataFrame =
     withConf(spark, RocksDbStore)(withStoreCap(spark,
-        replayStoreWidth(spark, dir)) {
+        replayStoreWidth(spark, spec)) {
       // one stream branch: purchases and views ride the same shuffle,
       // (ts, event_id) as plain micros/longs through the typed boundary
       val typed = replayStream(spark, spec)

@@ -123,6 +123,55 @@ class LiveIndexerSpec extends SparkSpec {
       "latest-wins must keep the newest commit")
   }
 
+  test("crash right after an append commits: the replay merges the " +
+      "committed tables, appends the rest, and converges") {
+    val landing = java.nio.file.Files.createTempDirectory("graft-live-app").toString
+    val base = java.nio.file.Files.createTempDirectory("graft-live-app-out").toString
+    writeLanding(landing, 1 to 6)
+    // the path the table's merge just took
+    def path() =
+      graft.StrategyLog.lastChoice("merge_commit").getOrElse("").split(" ").head
+    // batch 0 creates the tables; batch 1 appends past their hwm and
+    // dies right after `events` commits its append
+    var crashedOn = ""
+    val q1 = LiveIndexer.start(spark, landing, s"$base/stream", s"$base/ckpt",
+      maxHeightsPerTrigger = Some(2L),
+      afterTable = (id, table) =>
+        if (id == 1 && table == "events") {
+          crashedOn = path()
+          throw new RuntimeException("injected crash after an append")
+        })
+    intercept[StreamingQueryException](q1.awaitTermination())
+    assert(crashedOn === "append", "batch 1 must commit events as an append")
+
+    val replayed = scala.collection.mutable.Map.empty[(Long, String), String]
+    LiveIndexer.start(spark, landing, s"$base/stream", s"$base/ckpt",
+      maxHeightsPerTrigger = Some(2L),
+      afterTable = (id, table) => replayed((id, table)) = path())
+      .awaitTermination()
+    assert(Seq("block_info", "messages", "events").map(t => replayed((1L, t))) ===
+      Seq("merge", "merge", "merge"), s"committed tables must merge: $replayed")
+    assert(replayed((1L, "scores")) === "append", s"$replayed")
+    assert(replayed((1L, "last_commits")) === "merge", s"$replayed")
+    assert(Seq("block_info", "messages", "events", "scores")
+      .forall(t => replayed((2L, t)) == "append"), s"$replayed")
+
+    LiveIndexer.start(spark, landing, s"$base/clean", s"$base/ckpt-clean",
+      maxHeightsPerTrigger = Some(2L)).awaitTermination()
+    import spark.implicits._
+    val keysOf = LiveIndexer.tablesOf(
+      Seq((1L, envelope(1))).toDF("height", "block_json"),
+      classOf[Ingest.JsonPassthroughDecoder].getName)
+      .map { case (name, _, keys, _) => name -> keys }.toMap
+    tableNames.foreach { t =>
+      assert(tableRows(s"$base/stream", t) === tableRows(s"$base/clean", t),
+        s"crashed and clean runs diverged on table $t")
+      val df = ParquetMergeSink.read(spark, s"$base/stream/$t")
+      assert(df.count() === df.select(keysOf(t).map(col): _*).distinct().count(),
+        s"a key of $t is stored twice")
+    }
+  }
+
   test("mergeAll under the persist barrier releases a LogicalRDD-rooted batch") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}

@@ -684,4 +684,102 @@ class ParquetMergeSinkSpec extends SparkSpec {
       Map(1L -> "a2", 3L -> "c2", 4L -> "d", 5L -> "e"))
     assert((spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore).isEmpty)
   }
+
+  /** Rows `(h, k)` at version `h`, keyed on both: the shape of the
+    * indexer's insert-ignore tables, whose merge keys include the version.
+    */
+  private def heightRows(h: Long, ks: Seq[Long]) =
+    ks.map(k => (h, k, s"v$h-$k")).toDF("h", "k", "v")
+
+  private def choice(): String =
+    graft.StrategyLog.lastChoice("merge_commit").getOrElse("")
+
+  test("a batch past hwm appends; replays, update-wins, nulls, strings and " +
+      "tables without hwm merge; the (K+1)-th segment folds") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val base = java.nio.file.Files.createTempDirectory("graft-append").toString
+    val root = new org.apache.hadoop.fs.Path(base)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def manifest(t: String) =
+      ManifestCommit.latest(fs, new org.apache.hadoop.fs.Path(base, t)).get
+    def rows(t: String) = ParquetMergeSink.read(spark, s"$base/$t").collect()
+      .map(r => (r.getAs[Long]("h"), r.getAs[Long]("k"), r.getAs[String]("v"))).toSet
+
+    val t = s"$base/t"
+    ParquetMergeSink.merge(heightRows(1, 1L to 20L), t, Seq("h", "k"), "h", nBuckets = 4)
+    assert(choice().startsWith("merge "), choice())
+    assert(manifest("t").entries.get(ParquetMergeSink.HwmKey) === Some("1"))
+    val v1 = manifest("t")
+    // duplicate keys inside an appended batch still resolve latest-wins
+    val dup = heightRows(2, 1L to 20L).unionByName(
+      Seq((2L, 3L, "v2-3-dup")).toDF("h", "k", "v"))
+    ParquetMergeSink.merge(dup, t, Seq("h", "k"), "h")
+    assert(choice().startsWith("append "), choice())
+    assert(choice().contains(s"table=$t"), choice())
+    assert(choice().contains("hwm=1") && choice().contains("min_version=2") &&
+      choice().contains("folded=0"), choice())
+    val v2 = manifest("t")
+    assert(v2.entries.get(ParquetMergeSink.HwmKey) === Some("2"))
+    // every base entry carries forward; each touched bucket gains a segment
+    assert(v1.dirs.forall { case (k, rel) => v2.dirs.get(k).contains(rel) })
+    val segs = v2.dirs.keySet -- v1.dirs.keySet
+    assert(segs.nonEmpty && segs.forall(_.endsWith(s"+${v2.version}")), v2.dirs)
+    assert(rows("t").size === 40)
+
+    // a replay at hwm merges, folding each touched bucket into one dir
+    ParquetMergeSink.merge(heightRows(2, 1L to 20L), t, Seq("h", "k"), "h")
+    assert(choice().startsWith("merge ") && choice().contains("hwm=2"), choice())
+    assert(manifest("t").dirs.keySet.forall(!_.contains("+")), manifest("t").dirs)
+    assert(rows("t").size === 40)
+
+    // a null version merges, and hwm still bounds the non-null versions
+    val nulls = Seq((Some(5L), 1L, "n1"), (None, 2L, "n2")).toDF("h", "k", "v")
+    ParquetMergeSink.merge(nulls, t, Seq("h", "k"), "h")
+    assert(choice().startsWith("merge "), choice())
+    assert(manifest("t").entries.get(ParquetMergeSink.HwmKey) === Some("5"))
+
+    // update-wins (the version is not a key) always merges
+    val lc = s"$base/lc"
+    ParquetMergeSink.merge(heightRows(1, 1L to 4L), lc, Seq("k"), "h")
+    ParquetMergeSink.merge(heightRows(9, 1L to 4L), lc, Seq("k"), "h")
+    assert(choice().startsWith("merge ") && choice().contains("hwm=1"), choice())
+
+    // a string version merges and records no hwm
+    val str = s"$base/str"
+    def strRows(h: String) = Seq((h, 1L, "a")).toDF("h", "k", "v")
+    ParquetMergeSink.merge(strRows("1"), str, Seq("h", "k"), "h")
+    ParquetMergeSink.merge(strRows("2"), str, Seq("h", "k"), "h")
+    assert(choice().startsWith("merge ") && choice().contains("hwm=none"), choice())
+    assert(!manifest("str").entries.contains(ParquetMergeSink.HwmKey))
+
+    // a table from before hwm existed merges once, taking hwm from its rows
+    val old = s"$base/old"
+    ParquetMergeSink.merge(heightRows(7, 1L to 8L), old, Seq("h", "k"), "h")
+    val oldPath = new org.apache.hadoop.fs.Path(old)
+    ManifestCommit.commit(fs, oldPath, manifest("old").entries - "txid" - ParquetMergeSink.HwmKey)
+    ParquetMergeSink.merge(heightRows(8, 1L to 8L), old, Seq("h", "k"), "h")
+    assert(choice().startsWith("merge ") && choice().contains("hwm=none"), choice())
+    assert(manifest("old").entries.get(ParquetMergeSink.HwmKey) === Some("8"))
+    ParquetMergeSink.merge(heightRows(9, 1L to 8L), old, Seq("h", "k"), "h")
+    assert(choice().startsWith("append "), choice())
+    assert(rows("old").size === 24)
+
+    // fold rule: one bucket, so every append lands in bucket 0
+    val one = s"$base/one"
+    ParquetMergeSink.merge(heightRows(1, Seq(1L)), one, Seq("h", "k"), "h", nBuckets = 1)
+    (2 to ParquetMergeSink.MaxSegments).foreach { h =>
+      ParquetMergeSink.merge(heightRows(h, Seq(1L, 2L)), one, Seq("h", "k"), "h")
+      assert(choice().startsWith("append ") && choice().contains("folded=0"), choice())
+    }
+    assert(manifest("one").dirs.size === ParquetMergeSink.MaxSegments)
+    val before = ParquetMergeSink.MaxSegments + 1
+    ParquetMergeSink.merge(heightRows(before, Seq(1L, 2L)), one, Seq("h", "k"), "h")
+    assert(choice().startsWith("append ") && choice().contains("folded=1"), choice())
+    assert(manifest("one").dirs.keySet === Set("0"), manifest("one").dirs)
+    val all = rows("one")
+    assert(all.size === 1 + 2 * (before - 1))
+    assert(all.map(r => (r._1, r._2)).size === all.size, "no key may repeat")
+    val latest = ParquetMergeSink.read(spark, one).filter(col("h") === lit(before)).count()
+    assert(latest === 2L)
+  }
 }

@@ -310,4 +310,41 @@ class GraftProceduresSpec extends SparkSpec {
       s"CALL graftr.system.restore(src => '$broken')").collect())
     assert(e2.getMessage.contains("not a graft export archive"), e2.getMessage)
   }
+
+  test("segmented merge-sink buckets serve SQL, VERSION AS OF, vacuum, " +
+      "export/restore and ADD COLUMN") {
+    val dir = s"$root/seg"
+    def batch(h: Long) = (1L to 12L).map(k => (h, k, s"v$h-$k")).toDF("h", "k", "v")
+    ParquetMergeSink.merge(batch(1), dir, Seq("h", "k"), "h", nBuckets = 4)
+    (2L to 4L).foreach(h => ParquetMergeSink.merge(batch(h), dir, Seq("h", "k"), "h"))
+    val head = ManifestCommit.latest(fs, new Path(dir)).get
+    assert(head.dirs.keys.exists(_.contains("+")), s"no appended segment: ${head.dirs}")
+    def count(sql: String) = spark.sql(sql).head.getLong(0)
+    assert(count("SELECT count(*) FROM graftp.seg") === 48L)
+    assert(count(s"SELECT count(*) FROM graftp.seg VERSION AS OF ${head.version - 1}") === 36L)
+    assert(spark.sql("CALL graftp.system.history(table => 'seg')").collect()
+      .forall(_.getString(2) === "merge-sink"))
+
+    // keep=1 drops the previous manifest; the segments the head names stay
+    spark.sql("CALL graftp.system.vacuum(table => 'seg', keep => 1)").collect()
+    assert(count("SELECT count(*) FROM graftp.seg") === 48L)
+    assert(ParquetMergeSink.read(spark, dir).count() === 48L)
+
+    val archive = java.nio.file.Files
+      .createTempDirectory("graft-seg-archive").toString + "/arc"
+    spark.sql(s"CALL graftp.system.export(dest => '$archive', table => 'seg')").collect()
+    val root3 = java.nio.file.Files.createTempDirectory("graft-seg-restored").toString
+    spark.conf.set("spark.sql.catalog.graftq", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graftq.root", root3)
+    spark.sql(s"CALL graftq.system.restore(src => '$archive')").collect()
+    assert(count("SELECT count(*) FROM graftq.seg") === 48L)
+
+    // ADD COLUMN re-references every segment; the next append writes it
+    spark.sql("ALTER TABLE graftp.seg ADD COLUMN note STRING")
+    ParquetMergeSink.merge(batch(5).withColumn("note",
+      org.apache.spark.sql.functions.lit("new")), dir, Seq("h", "k"), "h")
+    assert(graft.StrategyLog.lastChoice("merge_commit").exists(_.startsWith("append ")))
+    assert(count("SELECT count(*) FROM graftp.seg WHERE note IS NULL") === 48L)
+    assert(count("SELECT count(*) FROM graftp.seg WHERE note = 'new'") === 12L)
+  }
 }

@@ -530,4 +530,47 @@ class EventStreamSpec extends SparkSpec {
     assert(EventStream.splitLayoutBuilds.get() === before + 2,
       "source snapshot change must rebuild the layout exactly once")
   }
+
+  test("a user-glob replay sizes its store width from the files it reads") {
+    import org.apache.hadoop.fs.Path
+    // a landing directory holding only ev_0.parquet: no events.parquet
+    val landing = java.nio.file.Files.createTempDirectory("graft-glob-width").toString
+    val fs = new Path(landing).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = s"$landing/_tmp"
+    graft.SessionConf.withConf(spark,
+        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
+      graft.Tables.events(spark, sfDir).coalesce(1).write.parquet(tmp)
+    }
+    val part = fs.listStatus(new Path(tmp))
+      .find(_.getPath.getName.endsWith(".parquet")).get.getPath
+    assert(fs.rename(part, new Path(landing, "ev_0.parquet")))
+    fs.delete(new Path(tmp), true)
+    val viaGlob = graft.SessionConf.withConf(spark,
+        "spark.sql.graft.streamEventsGlob" -> "ev_*.parquet") {
+      EventStream.streamDedupDaily(spark, landing).collect().toSeq
+    }
+    assert(viaGlob.nonEmpty)
+    assert(viaGlob === EventStream.streamDedupDaily(spark, sfDir).collect().toSeq)
+  }
+
+  test("split layout cuts do not depend on how many RDDs the session made") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val dir = Files.createTempDirectory("graft-split-cuts").toString
+    Files.copy(Paths.get(sfDir, "events.parquet"),
+      Paths.get(dir, "events.parquet"), StandardCopyOption.COPY_ATTRIBUTES)
+    val src = Paths.get(dir, "events.parquet").toFile
+    // per-file row counts of a fresh build, after `extra` throwaway RDDs
+    def build(extra: Int): Seq[Long] = {
+      (1 to extra).foreach(_ => spark.sparkContext.parallelize(1 to 4).count())
+      assert(src.setLastModified(src.lastModified() + 60000L)) // forces a rebuild
+      val layout = EventStream.eventsSplitLayout(spark, dir, 2)
+      new java.io.File(layout).listFiles().map(_.getName)
+        .filter(n => n.startsWith("split_") && n.endsWith(".parquet")).sorted.toSeq
+        .map(n => spark.read.parquet(s"$layout/$n").count())
+    }
+    val first = build(0)
+    assert(first.sum === graft.Tables.events(spark, sfDir).count())
+    assert(first.size > 1, s"cuts collapsed: $first")
+    Seq(1, 3, 7).foreach(n => assert(build(n) === first, s"after $n extra RDDs"))
+  }
 }

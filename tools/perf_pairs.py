@@ -2,7 +2,7 @@
 """Compare paired benchmark runs of a parent and a change checkout.
 
     python3 tools/perf_pairs.py PARENT_OUT CHANGE_OUT [--benchmark BENCHMARK.json]
-                                [--workload NAME] [--runs]
+                                [--workload NAME] [--runs] [--spans]
 
 PARENT_OUT and CHANGE_OUT are `perfbench/out` directories, one per
 checkout: `perfbench/run.py` writes each run to `<workload>-s<seed>-t<trace>/`
@@ -22,6 +22,13 @@ for neither side), and two verdicts:
 It also reports whether every run was correct with no failed operations,
 and flags runs that shared the machine with another JVM. It only reads
 files.
+
+--spans compares the traced runs (`-t1`) instead: for each workload and
+seed traced on both sides, it sums each side's `spans.jsonl` by span group,
+the name of the span's parent (`-` at top level) and its name, e.g.
+`trigger-1  foreach_batch  merge.events` (a live trigger's merge; the
+backfill's merges of the same group sit at top level), and prints wall ms,
+executor CPU ms, shuffle write bytes and tasks, parent -> change.
 """
 import argparse
 import glob
@@ -34,16 +41,60 @@ import sys
 TAG = re.compile(r"^(?P<workload>.+)-s(?P<seed>\d+)-t(?P<trace>[01])$")
 
 
-def load_runs(out_dir):
-    """{(workload, seed): record} for the untraced runs under out_dir."""
+def load_runs(out_dir, trace="0", name="record.json"):
+    """{(workload, seed): path} of `name` in each run under out_dir traced
+    as `trace` says; records (record.json) come back parsed."""
     runs = {}
-    for path in glob.glob(os.path.join(out_dir, "*", "record.json")):
+    for path in glob.glob(os.path.join(out_dir, "*", name)):
         m = TAG.match(os.path.basename(os.path.dirname(path)))
-        if not m or m["trace"] != "0":
+        if not m or m["trace"] != trace:
             continue
-        with open(path) as f:
-            runs[(m["workload"], int(m["seed"]))] = json.load(f)
+        key = (m["workload"], int(m["seed"]))
+        if name == "record.json":
+            with open(path) as f:
+                runs[key] = json.load(f)
+        else:
+            runs[key] = path
     return runs
+
+
+SPAN_FIELDS = (("ms", "wall ms"), ("executor_cpu_ms", "cpu ms"),
+               ("shuffle_write_bytes", "shuffle B"), ("tasks", "tasks"))
+
+
+def span_sums(path):
+    """{(group, parent name, name): {field: sum}} over one spans.jsonl."""
+    with open(path) as f:
+        spans = [json.loads(line) for line in f if line.strip()]
+    names = {s["id"]: s["name"] for s in spans}
+    sums = {}
+    for s in spans:
+        key = (s["group"], names.get(s["parent"], "-"), s["name"])
+        acc = sums.setdefault(key, {k: 0.0 for k, _ in SPAN_FIELDS})
+        for k, _ in SPAN_FIELDS:
+            acc[k] += s.get(k, 0) or 0
+    return sums
+
+
+def compare_spans(parent_out, change_out, workload):
+    """Print each traced pair's per-(group, name) span sums side by side."""
+    parent = load_runs(parent_out, trace="1", name="spans.jsonl")
+    change = load_runs(change_out, trace="1", name="spans.jsonl")
+    keys = sorted(k for k in set(parent) & set(change)
+                  if workload in (None, k[0]))
+    if not keys:
+        sys.exit("no traced run appears in both directories")
+    for w, seed in keys:
+        p, c = span_sums(parent[(w, seed)]), span_sums(change[(w, seed)])
+        print(f"\n== {w} seed {seed}: spans summed by group, parent span "
+              "and name, parent -> change")
+        print(f"{'group':<22} {'under':<16} {'name':<26} " + " ".join(
+            f"{label:>23}" for _, label in SPAN_FIELDS))
+        zero = {k: 0.0 for k, _ in SPAN_FIELDS}
+        for key in sorted(set(p) | set(c)):
+            a, b = p.get(key, zero), c.get(key, zero)
+            print(f"{key[0]:<22} {key[1]:<16} {key[2]:<26} " + " ".join(
+                f"{a[k]:>10.6g} ->{b[k]:>10.6g}" for k, _ in SPAN_FIELDS))
 
 
 def quartiles(xs):
@@ -116,7 +167,12 @@ def main():
     ap.add_argument("--workload", help="only this workload")
     ap.add_argument("--runs", action="store_true",
                     help="also print every pair's values")
+    ap.add_argument("--spans", action="store_true",
+                    help="compare the traced runs' spans instead")
     a = ap.parse_args()
+    if a.spans:
+        compare_spans(a.parent_out, a.change_out, a.workload)
+        return
     with open(a.benchmark) as f:
         spec = json.load(f)
     parent, change = load_runs(a.parent_out), load_runs(a.change_out)
