@@ -19,7 +19,7 @@ import graft.indexer.Upsert
   * manifest records `hwm`, an upper bound on every committed version.
   * When the version column is one of the merge keys and a batch's
   * smallest version is above `hwm`, no batch key can equal a committed
-  * one: the batch resolves latest-wins against itself only and its rows
+  * one: the batch resolves latest-wins within itself and its rows
   * are APPENDED, one new segment per touched bucket (manifest entry
   * `dir.<b>+<manifest version>` beside the base `dir.<b>`), without
   * reading a committed row — O(batch). Every other commit (an update-wins
@@ -28,11 +28,11 @@ import graft.indexer.Upsert
   * as one base dir — O(batch + touched buckets). Untouched buckets' entries
   * carry forward, so at 100 TB a small batch never costs O(table).
   *
-  * Fold rule — a bucket holds at most [[MaxSegments]] dirs: an append that
-  * would add one more reads the bucket's segments and rewrites them,
-  * with the batch's rows, as one base dir in the same write, and a
-  * merge-path commit folds every bucket it touches. Reads stay bounded at
-  * `nBuckets · MaxSegments` dirs per table.
+  * Fold rule — a table holds at most [[TableDirs]] dirs (or one per bucket
+  * when it has more buckets): a bucket may hold [[maxSegments]] of them,
+  * and an append that would add one more reads the bucket's segments and
+  * rewrites them, with the batch's rows, as one base dir in the same
+  * write; a merge-path commit folds every bucket it touches.
   *
   * Job shape — a merge runs ONE staging job, then the write. The staging
   * job materializes the aligned, bucketed batch behind a barrier and
@@ -40,13 +40,11 @@ import graft.indexer.Upsert
   * (emptiness) and an integral version's min, max and null count; no
   * separate `isEmpty`, bucket-`distinct` or range job runs. The write is
   * the bucket-commit tail every commit shares ([[commitBuckets]]): it
-  * reads the buckets it folds, lets the caller resolve them (latest-wins
-  * for a merge, the batch alone for an append, delete/update/insert for
-  * mergeActions) and writes the result (under AQE: the shuffle's map job
-  * plus the write job). At live-trigger batch sizes a merge's cost is
-  * mostly per-job planning and scheduling, so the job count is what
-  * matters. The staged blocks are released as soon as the commit (or the
-  * failure) is done, not left to the GC.
+  * reads the buckets it folds (for an append, only those at the fold
+  * bound), lets the caller resolve them with the batch (latest-wins for
+  * merge, delete/update/insert for mergeActions) and writes the result
+  * (under AQE: the shuffle's map job plus the write job). The staged
+  * blocks are released as soon as the commit (or the failure) is done.
   *
   * Durability: data files are immutable once written; the ONLY mutation
   * is the one-small-file manifest commit that tail makes, which covers
@@ -79,8 +77,15 @@ object ParquetMergeSink {
   private[graft] val RetiredKey = "schema.retired"
   private[graft] val HwmKey = "hwm"
 
-  /** Dirs one bucket may hold before an append folds it (the fold rule). */
-  private[graft] val MaxSegments = 8
+  /** Dirs a table may hold: a scan lists its dirs on the driver up to
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) paths,
+    * in a listing job past it (at 8 dirs a bucket, 128 a table, catalog
+    * queries planned ~10x slower on a long `index` run; see ROADMAP).
+    */
+  private val TableDirs = 32
+
+  /** Dirs a bucket may hold before an append folds it: 2 at 16 buckets. */
+  private[graft] def maxSegments(buckets: Int): Int = math.max(1, TableDirs / buckets)
 
   private val BucketKey = "(\\d+)(?:\\+\\d+)?".r
 
@@ -777,37 +782,30 @@ object ParquetMergeSink {
 
   /** The bucket-commit tail every commit shares.
     *
-    * An `append` folds only the touched buckets already holding
-    * [[MaxSegments]] dirs; any other commit folds every touched bucket.
-    * It reads ONLY the folded buckets' rows, all their segments, by
-    * explicit dir (other bucket dirs never enter the scan); the bucket
-    * column is recomputed from the keys, deterministically. `resolve` gets
-    * those rows (None when no folded bucket has a dir) and returns every
-    * row to write, with the bucket column: for a folded bucket every row
-    * it keeps, for an appended one only the batch's new rows.
+    * An `append` folds the touched buckets already holding [[maxSegments]]
+    * dirs; any other commit folds every touched bucket. It reads ONLY the
+    * folded buckets' segments, by explicit dir; the bucket column is
+    * recomputed from the keys. `resolve` gets those rows (None when no
+    * folded bucket has a dir) and returns every row to write, with the
+    * bucket column: all a folded bucket keeps, an appended one's new rows.
     *
-    * Those rows become a NEW immutable generation; nothing live is
-    * overwritten, so a crash before the commit is invisible to readers
-    * (the orphan dir is vacuumed later). Files are written under PHYSICAL
-    * column names — renamed columns keep the name they were born with, so
-    * every generation shares one file schema. One listing of the new
-    * generation settles each touched bucket's entries. An appended bucket
-    * keeps its segments and gains `dir.<b>+<version>` (or `dir.<b>` while
-    * it has none). A folded bucket's entries are ALL replaced by one
-    * `dir.<b>`, or REMOVED when the generation has no dir for it — the
-    * bucket kept no row (mergeActions deleted them all): the generation
-    * holds every row the bucket keeps, so its old files could only bring
-    * back superseded or deleted rows. (For a merge every touched bucket
-    * gets a dir, since latest-wins keeps one row per key, null keys
-    * included, in the bucket its key hashes to: Spark's hash folds -0.0
-    * into 0.0 and all NaNs into one, as its grouping does.)
+    * They become a NEW immutable generation, so a crash before the commit
+    * is invisible to readers (the orphan dir is vacuumed later), written
+    * under PHYSICAL column names (renamed columns keep the name they were
+    * born with). One listing of it settles each touched bucket's entries:
+    * an appended bucket gains `dir.<b>+<version>` (`dir.<b>` while it has
+    * none); a folded bucket's entries are ALL replaced by one `dir.<b>`,
+    * or REMOVED when the generation has no dir for it (mergeActions
+    * deleted all its rows) — its old files could only bring back
+    * superseded or deleted rows. (A merge gives every touched bucket a
+    * dir: latest-wins keeps one row per key, null keys included, and
+    * Spark's hash folds -0.0 into 0.0 and all NaNs into one.)
     *
-    * The same flip raises `hwm` to the batch's largest version (a table
-    * without one that can append takes it from one scan of its version
-    * column; a non-integral version drops it) and covers every touched
-    * bucket at once. Generations (and migrated legacy bucket dirs) no
-    * retained manifest references are reclaimed. keep=2: the previous
-    * manifest's generations survive one more commit for in-flight readers.
+    * The same flip covers every touched bucket and raises `hwm` to the
+    * batch's largest version (a table without one that can append takes
+    * it from one scan of its version column; a non-integral version drops
+    * it). Unreferenced generations and legacy bucket dirs are reclaimed;
+    * keep=2 leaves the previous manifest's for in-flight readers.
     */
   private def commitBuckets(fs: FileSystem, table: Path, staged: Staged,
       keys: Seq[String], version: String, append: Boolean)(
@@ -818,7 +816,8 @@ object ParquetMergeSink {
     val segments = manifest.dirs.toSeq
       .flatMap { case (k, rel) => bucketOf(k).map(_ -> rel) }.groupMap(_._1)(_._2)
     def segs(b: Int) = segments.getOrElse(b, Nil)
-    val fold = touched.filter(b => !append || segs(b).size >= MaxSegments).toSet
+    val fold = touched.filter(b =>
+      !append || segs(b).size >= maxSegments(staged.buckets)).toSet
     val currentDirs = fold.toSeq.sorted.flatMap(segs(_).sorted)
     val merged = resolve(Option.when(currentDirs.nonEmpty)(
       scan(spark, table, manifest, currentDirs)
@@ -900,22 +899,19 @@ object ParquetMergeSink {
       // Emptiness is known BEFORE any manifest is created: a no-op batch
       // against a nonexistent path leaves the filesystem untouched.
       if (staged.rows > 0) {
-        // Past `hwm` every key is new (the version is one of them): the
-        // batch resolves against itself alone and appends.
+        // Past `hwm` every key is new (the version is one of them), so the
+        // batch appends and only the buckets it folds are read back. Either
+        // way the rows read back and the batch resolve latest-wins in one
+        // shuffle, which also leaves a folded bucket's rows in few files.
         val hwm = staged.committed.flatMap(_.entries.get(HwmKey)).map(_.toLong)
         val append = versionKeyed(keys, version) && staged.versions.exists(v =>
           v.nulls == 0 && v.min.exists(lo => hwm.exists(lo > _)))
         commitBuckets(fs, table, staged, keys, version, append) { current =>
-          if (append) {
-            val own = Upsert.latestWins(staged.frame, keys, col(version))
-            current.fold(own)(_.unionByName(own))
-          } else {
-            val batchB = staged.frame.withColumn(PrefCol, lit(1)) // wins ties
-            Upsert.latestWins(
-                current.fold(batchB)(_.withColumn(PrefCol, lit(0)).unionByName(batchB)),
-                keys, col(version), col(PrefCol))
-              .drop(PrefCol)
-          }
+          val batchB = staged.frame.withColumn(PrefCol, lit(1)) // wins ties
+          Upsert.latestWins(
+              current.fold(batchB)(_.withColumn(PrefCol, lit(0)).unionByName(batchB)),
+              keys, col(version), col(PrefCol))
+            .drop(PrefCol)
         }
       }
       staged.rows

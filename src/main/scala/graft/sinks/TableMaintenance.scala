@@ -1,7 +1,7 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -58,9 +58,10 @@ object TableMaintenance {
     * quantile bins, and the bucket ids' bits interleave into one long
     * z-value that orders the rows within each file. The bin boundaries
     * and the `numFiles - 1` file boundaries come from ONE fixed-seed
-    * sample of about [[ZSampleRows]] rows (exact quantiles for the bins;
-    * the sampled rows' z-value quantiles, snapped to z-cell edges by
-    * [[zCuts]], for the files), so skewed keys still spread evenly and
+    * sample of about [[SampleRows]] rows, [[fixedSample]] (exact
+    * quantiles for the bins; the sampled rows' z-value quantiles,
+    * snapped to z-cell edges by [[zCuts]], for the files), so skewed
+    * keys still spread evenly and
     * files get near-equal row counts; they ship as plan
     * literals, and each row goes straight to its file's partition
     * (`repartitionById`). The layout is a function of the input alone:
@@ -86,10 +87,7 @@ object TableMaintenance {
     val zcol = "__graft_z"
     val fileCol = "__graft_file"
     val keyFrame = df.select(keys.map(k => col(k).cast("double").as(k)): _*)
-    val rows = keyFrame.count()
-    val sample = keyFrame.sample(withReplacement = false,
-      math.min(1.0, ZSampleRows.toDouble / math.max(rows, 1L)), seed = 0L)
-      .collect().toSeq
+    val sample = fixedSample(keyFrame, keyFrame.count())
     // Duplicated quantiles (heavy hitters) just merge bins.
     val bins = keys.indices.map(i => quantiles(
       sample.filterNot(_.isNullAt(i)).map(_.getDouble(i)),
@@ -106,8 +104,18 @@ object TableMaintenance {
       .drop(zcol, fileCol)
   }
 
-  /** Rows [[writeZOrdered]] samples for its bin and file boundaries. */
-  private val ZSampleRows = 1 << 16
+  /** About [[SampleRows]] rows of `df` in ONE fixed-seed draw, its
+    * fraction sized from `rows`, the row count of the snapshot `df`
+    * reads: a function of the input alone, so the layouts cut from it
+    * are too. [[writeZOrdered]] takes its bin and file boundaries from it
+    * (counting `df`), the stream replay's split layout its file cuts
+    * (from the source's parquet footers).
+    */
+  private[graft] def fixedSample(df: DataFrame, rows: Long): Seq[Row] =
+    df.sample(withReplacement = false,
+      math.min(1.0, SampleRows.toDouble / math.max(rows, 1L)), seed = 0L)
+      .collect().toSeq
+  private val SampleRows = 1 << 16
 
   /** The `n - 1` boundaries that cut `xs` into `n` equal-count runs. */
   private[graft] def quantiles[T: Ordering](xs: Seq[T], n: Int): Seq[T] = {

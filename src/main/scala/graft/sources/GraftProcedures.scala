@@ -172,8 +172,7 @@ private[sources] object GraftProcedures {
           val m = ManifestCommit.latest(fs, p)
           require(!m.exists(isBucketLayout),
             s"compact: $table is a merge-sink bucketed table — its writes " +
-              "fold each bucket's appended segments themselves (at most " +
-              s"${ParquetMergeSink.MaxSegments} dirs per bucket), and a " +
+              "fold each bucket's appended segments themselves, and a " +
               "file-level rewrite would break bucket routing (maintenance " +
               "procedures serve maintained single-table layouts)")
           val targetMb = input.getInt(1)

@@ -110,26 +110,43 @@ object EventStream {
     * at 94.6 / 58.6 — so the cap applies below 50M events and releases
     * above. The count is what the resolved replay reads: the footer row
     * counts of the files its glob admits (the split layout's files, or a
-    * user landing directory's). The stream-stream JOIN
+    * user landing directory's; [[footerRows]]). The stream-stream JOIN
     * keeps its fixed cap of 8 regardless: four stores per partition
     * quadruple the lifecycle cost and its horizon-bounded state stays
     * small at every measured SF (sf100: 133–136 s capped, faster than the
     * uncapped r12 shape).
     */
   private def replayStoreWidth(spark: org.apache.spark.sql.SparkSession,
-      spec: ReplaySpec): Int = {
+      spec: ReplaySpec): Int =
+    if (footerRows(spark, spec.dir, spec.glob) >= 50000000L)
+      Int.MaxValue // leave the session width — no cap
+    else 8
+
+  /** Rows in the parquet files `glob` admits under `dir` (a matched
+    * directory: the `.parquet` files in it), from their footers, each read
+    * once per file snapshot (path, length, mtime) in this JVM: no Spark
+    * job, and never stale when a file changes.
+    */
+  private def footerRows(spark: org.apache.spark.sql.SparkSession,
+      dir: String, glob: String): Long = {
     import org.apache.hadoop.fs.Path
     val conf = spark.sparkContext.hadoopConfiguration
-    val glob = new Path(spec.dir, spec.glob)
-    val rows = Option(glob.getFileSystem(conf).globStatus(glob)).toSeq.flatten
-      .filter(_.isFile).map { st =>
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-        try rd.getRecordCount finally rd.close()
+    val pattern = new Path(dir, glob)
+    val fs = pattern.getFileSystem(conf)
+    Option(fs.globStatus(pattern)).toSeq.flatten
+      .flatMap(st => if (!st.isDirectory) Seq(st) else fs.listStatus(st.getPath)
+        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet")).toSeq)
+      .map { st =>
+        footerCounts.computeIfAbsent(
+          s"${st.getPath}#${st.getLen}#${st.getModificationTime}", _ => {
+            val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+              org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+            try java.lang.Long.valueOf(rd.getRecordCount) finally rd.close()
+          }).longValue()
       }.sum
-    if (rows >= 50000000L) Int.MaxValue // leave the session width — no cap
-    else 8
   }
+  private val footerCounts =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
   /** Run `body` over `dir`'s resolved replay ([[resolveReplay]]) with the
     * store width that replay calls for ([[replayStoreWidth]]).
@@ -183,9 +200,10 @@ object EventStream {
     * event time (watermark correctness — a later file never carries an
     * earlier timestamp, so nothing is ever late under a 0s delay) and
     * event_id (fold-order correctness for the EMA recurrence). The cuts
-    * are exact quantiles of ONE fixed-seed sample of about
-    * [[SplitSampleRows]] keys, as in `TableMaintenance.writeZOrdered`, so
-    * the files — and with them every micro-batch's input, state and
+    * are exact quantiles of ONE fixed-seed sample sized from the footer
+    * row count of the snapshot being built ([[footerRows]];
+    * `TableMaintenance.fixedSample`, shared with `writeZOrdered`), so the
+    * files — and with them every micro-batch's input, state and
     * eviction counts — are a function of the input alone
     * (`repartitionByRange` seeds its sampler with the RDD id, i.e. with how
     * many RDDs the session made before the build).
@@ -210,12 +228,11 @@ object EventStream {
         withConf(spark, "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
           val events = graft.Tables.events(spark, dir)
           val tsu = unix_micros(col("ts"))
-          val sample = events.filter(col("ts").isNotNull && col("event_id").isNotNull)
-            .select(tsu, col("event_id"))
-            .sample(withReplacement = false, math.min(1.0,
-              SplitSampleRows.toDouble / math.max(1L, graft.Tables.eventCount(spark, dir))),
-              seed = 0L)
-            .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+          val sample = graft.sinks.TableMaintenance.fixedSample(
+              events.filter(col("ts").isNotNull && col("event_id").isNotNull)
+                .select(tsu, col("event_id")),
+              footerRows(spark, dir, "events.parquet"))
+            .map(r => (r.getLong(0), r.getLong(1)))
           // a row's file: how many of the ascending (ts, event_id) cuts it reaches
           val file = graft.sinks.TableMaintenance.quantiles(sample, splits)
             .map { case (t, e) =>
@@ -241,9 +258,6 @@ object EventStream {
     if (built) splitLayoutBuilds.incrementAndGet()
     layout
   }
-
-  /** Keys [[eventsSplitLayout]] samples for its file cuts. */
-  private val SplitSampleRows = 1 << 16
 
   /** Where and how a bounded gate replay reads the events table. */
   private case class ReplaySpec(dir: String, glob: String,

@@ -764,22 +764,30 @@ class ParquetMergeSinkSpec extends SparkSpec {
     assert(choice().startsWith("append "), choice())
     assert(rows("old").size === 24)
 
-    // fold rule: one bucket, so every append lands in bucket 0
-    val one = s"$base/one"
-    ParquetMergeSink.merge(heightRows(1, Seq(1L)), one, Seq("h", "k"), "h", nBuckets = 1)
-    (2 to ParquetMergeSink.MaxSegments).foreach { h =>
-      ParquetMergeSink.merge(heightRows(h, Seq(1L, 2L)), one, Seq("h", "k"), "h")
-      assert(choice().startsWith("append ") && choice().contains("folded=0"), choice())
+    // fold rule: 16 buckets hold at most 32 dirs, 2 per bucket; 256 keys
+    // touch every bucket
+    val wide = s"$base/wide"
+    val wideKeys = 1L to 256L
+    def wideDirs() = manifest("wide").dirs
+    ParquetMergeSink.merge(heightRows(1, wideKeys), wide, Seq("h", "k"), "h")
+    assert(ParquetMergeSink.maxSegments(16) === 2)
+    assert(wideDirs().size === 16, wideDirs())
+    ParquetMergeSink.merge(heightRows(2, wideKeys), wide, Seq("h", "k"), "h")
+    assert(choice().startsWith("append ") && choice().contains("folded=0"), choice())
+    assert(wideDirs().size === 32, wideDirs())
+    ParquetMergeSink.merge(heightRows(3, wideKeys), wide, Seq("h", "k"), "h")
+    assert(choice().startsWith("append ") && choice().contains("touched=16") &&
+      choice().contains("folded=16"), choice())
+    assert(wideDirs().keySet === (0 until 16).map(_.toString).toSet, wideDirs())
+    // a folded bucket is one file
+    wideDirs().values.foreach { rel =>
+      val files = fs.listStatus(new org.apache.hadoop.fs.Path(wide, rel))
+        .count(_.getPath.getName.endsWith(".parquet"))
+      assert(files === 1, rel)
     }
-    assert(manifest("one").dirs.size === ParquetMergeSink.MaxSegments)
-    val before = ParquetMergeSink.MaxSegments + 1
-    ParquetMergeSink.merge(heightRows(before, Seq(1L, 2L)), one, Seq("h", "k"), "h")
-    assert(choice().startsWith("append ") && choice().contains("folded=1"), choice())
-    assert(manifest("one").dirs.keySet === Set("0"), manifest("one").dirs)
-    val all = rows("one")
-    assert(all.size === 1 + 2 * (before - 1))
+    val all = rows("wide")
+    assert(all.size === 3 * wideKeys.size)
     assert(all.map(r => (r._1, r._2)).size === all.size, "no key may repeat")
-    val latest = ParquetMergeSink.read(spark, one).filter(col("h") === lit(before)).count()
-    assert(latest === 2L)
+    assert(ParquetMergeSink.read(spark, wide).filter(col("h") === lit(3L)).count() === 256L)
   }
 }

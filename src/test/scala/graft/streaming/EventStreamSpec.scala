@@ -573,4 +573,44 @@ class EventStreamSpec extends SparkSpec {
     assert(first.size > 1, s"cuts collapsed: $first")
     Seq(1, 3, 7).foreach(n => assert(build(n) === first, s"after $n extra RDDs"))
   }
+
+  test("split layout cuts follow the snapshot being built, not an earlier count") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.functions.{col, explode, lit, sequence}
+    // 100 copies of the events under fresh ids: past the sample size, so
+    // the sample fraction depends on the row count
+    val grown = Files.createTempDirectory("graft-split-grown").toString
+    val fs = new Path(grown).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = s"$grown/_tmp"
+    graft.SessionConf.withConf(spark,
+        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
+      graft.Tables.events(spark, sfDir)
+        .withColumn("copy", explode(sequence(lit(0L), lit(99L))))
+        .withColumn("event_id", col("event_id") + col("copy") * 1000000L)
+        .drop("copy").coalesce(1).write.parquet(tmp)
+    }
+    val part = fs.listStatus(new Path(tmp))
+      .find(_.getPath.getName.endsWith(".parquet")).get.getPath
+    assert(fs.rename(part, new Path(grown, "events.parquet")))
+    fs.delete(new Path(tmp), true)
+    def counts(dir: String): Seq[Long] = {
+      val layout = EventStream.eventsSplitLayout(spark, dir, 2)
+      new java.io.File(layout).listFiles().map(_.getName)
+        .filter(n => n.startsWith("split_") && n.endsWith(".parquet")).sorted.toSeq
+        .map(n => spark.read.parquet(s"$layout/$n").count())
+    }
+    // a dir laid out while small, then grown in place: its rebuild must
+    // cut like a dir this JVM never saw small
+    val dir = Files.createTempDirectory("graft-split-regrow").toString
+    Files.copy(Paths.get(sfDir, "events.parquet"), Paths.get(dir, "events.parquet"))
+    assert(counts(dir).sum === 1000L)
+    val before = EventStream.splitLayoutBuilds.get()
+    Files.copy(Paths.get(grown, "events.parquet"), Paths.get(dir, "events.parquet"),
+      StandardCopyOption.REPLACE_EXISTING)
+    val regrown = counts(dir)
+    assert(EventStream.splitLayoutBuilds.get() === before + 1, "grown source must rebuild")
+    assert(regrown.sum === 100000L)
+    assert(regrown === counts(grown))
+  }
 }

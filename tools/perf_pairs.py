@@ -41,20 +41,25 @@ import sys
 TAG = re.compile(r"^(?P<workload>.+)-s(?P<seed>\d+)-t(?P<trace>[01])$")
 
 
-def load_runs(out_dir, trace="0", name="record.json"):
-    """{(workload, seed): path} of `name` in each run under out_dir traced
-    as `trace` says; records (record.json) come back parsed."""
+def load_runs(out_dir):
+    """{(workload, seed): record} for the untraced runs under out_dir."""
     runs = {}
-    for path in glob.glob(os.path.join(out_dir, "*", name)):
+    for path in glob.glob(os.path.join(out_dir, "*", "record.json")):
         m = TAG.match(os.path.basename(os.path.dirname(path)))
-        if not m or m["trace"] != trace:
+        if not m or m["trace"] != "0":
             continue
-        key = (m["workload"], int(m["seed"]))
-        if name == "record.json":
-            with open(path) as f:
-                runs[key] = json.load(f)
-        else:
-            runs[key] = path
+        with open(path) as f:
+            runs[(m["workload"], int(m["seed"]))] = json.load(f)
+    return runs
+
+
+def span_paths(out_dir):
+    """{(workload, seed): spans.jsonl path} for the traced runs under out_dir."""
+    runs = {}
+    for path in glob.glob(os.path.join(out_dir, "*", "spans.jsonl")):
+        m = TAG.match(os.path.basename(os.path.dirname(path)))
+        if m and m["trace"] == "1":
+            runs[(m["workload"], int(m["seed"]))] = path
     return runs
 
 
@@ -78,8 +83,7 @@ def span_sums(path):
 
 def compare_spans(parent_out, change_out, workload):
     """Print each traced pair's per-(group, name) span sums side by side."""
-    parent = load_runs(parent_out, trace="1", name="spans.jsonl")
-    change = load_runs(change_out, trace="1", name="spans.jsonl")
+    parent, change = span_paths(parent_out), span_paths(change_out)
     keys = sorted(k for k in set(parent) & set(change)
                   if workload in (None, k[0]))
     if not keys:
