@@ -1,28 +1,77 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
 
-/** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line. A full warmup pass runs first so measurements see
-  * steady-state (codegen compiled, parquet footers cached) rather than JVM
-  * startup — the number the driver compares against BASELINE should be the
-  * throughput a long-running cluster would see.
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
+
+import graft.functions.CosineSimilarity
+import graft.operators.{Dedup, Similarity}
+
+/** The query harness. On SPARK_GRAFT_SF_DIR it runs one mode over the
+  * named SparkEntry queries (every query when none is named):
+  *
+  *   runMain graft.Bench [--plans | --skew | --state | --recall] [query ...]
+  *
+  *  - no flag: times each query and ends stdout with one JSON line
+  *    ([[time]]);
+  *  - `--plans`: prints each query's formatted physical plan ([[plans]]);
+  *  - `--skew`: per-stage task-duration skew ([[skew]]);
+  *  - `--state`: per-micro-batch streaming state ([[state]]);
+  *  - `--recall`: ANN and dedup recall against exact truth ([[recall]]).
+  *
+  * An unknown flag or query name is refused before the session starts.
+  * Each mode leaves the session as it found it: no listener or conf
+  * override outlives the mode.
   */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+  type Mode = (SparkSession, String, Seq[String]) => Unit
+
+  /** The named SparkEntry queries in the order given, or every query when
+    * `names` is empty. An unknown name throws IllegalArgumentException: a
+    * typo must not time, dump or explain nothing in silence.
+    */
+  def select(names: Seq[String]): Seq[(String, Query)] = {
+    val all = SparkEntry.queries
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown query ${unknown.mkString(", ")}")
+    if (names.isEmpty) all.toSeq else names.distinct.map(n => n -> all(n))
+  }
+
+  val modes: Map[String, Mode] = Map(
+    "--plans" -> (plans _), "--skew" -> (skew _), "--state" -> (state _),
+    "--recall" -> (recall _))
+
+  /** The mode an argument list names (timing when it names none) and its
+    * query names; refuses an unknown flag, a second flag or an unknown name.
+    */
+  def parse(args: Seq[String]): (Mode, Seq[String]) = {
+    val (flags, names) = args.partition(_.startsWith("--"))
+    require(flags.size <= 1 && flags.forall(modes.contains),
+      s"unknown mode ${flags.mkString(" ")}; modes: " +
+        modes.keys.toSeq.sorted.mkString(" "))
+    select(names)
+    (flags.headOption.fold[Mode](time)(modes), names)
+  }
+
   def main(args: Array[String]): Unit = {
+    val (mode, names) = parse(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Optional args = subset of query names (local iteration aid).
-    val selected =
-      if (args.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => args.contains(n) }
+    val spark = SessionConf.localSession()
+    try mode(spark, sfDir, names) finally spark.stop()
+  }
+
+  /** Times each query and prints one JSON line. A full warmup pass runs
+    * first so measurements see steady-state (codegen compiled, parquet
+    * footers cached) rather than JVM startup: the throughput a
+    * long-running cluster would see.
+    */
+  def time(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
+    val selected = select(names)
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions")
     // Query-boundary reclamation, OUTSIDE the clock: Spark frees shuffle
     // files and broadcast blocks only when the driver GCs their handles
     // (ContextCleaner is reference-triggered), and a large mostly-idle
@@ -33,12 +82,9 @@ object Bench {
     // same build/substrate). An explicit GC at each query boundary makes
     // every query start from a reclaimed state; each still pays its own
     // materialization inside the clock.
-    // SPARK_GRAFT_BENCH_GC=0 disables the explicit GC — an A/B isolation
-    // aid for timing investigations (used to exonerate the GC when a
-    // repeated-execution slowdown was traced to a localCheckpoint barrier).
     def reclaim(): Unit = {
       Tables.releaseIntermediates(spark)
-      if (sys.env.get("SPARK_GRAFT_BENCH_GC").forall(_ == "1")) System.gc()
+      System.gc()
     }
     // Warmup: one untimed pass over every query.
     selected.foreach { case (_, fn) =>
@@ -57,7 +103,7 @@ object Bench {
     // A failed run must NOT become a timing sample: elapsed-to-exception
     // would publish a broken query as the suite's fastest. Failures are
     // reported by name in `failed` and excluded from every statistic.
-    def timeOnce(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
+    def timeOnce(fn: Query): Option[Double] = {
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
       val dt = (System.nanoTime() - t0) / 1e9
@@ -69,7 +115,7 @@ object Bench {
       reclaim()
       name -> ts
     }
-    val failed = all.collect { case (n, ts) if ts.exists(_.isEmpty) => n }.toSeq.sorted
+    val failed = all.collect { case (n, ts) if ts.exists(_.isEmpty) => n }.sorted
     val samples = all.collect { case (n, ts) if ts.forall(_.isDefined) =>
       n -> ts.flatten.sorted
     }
@@ -93,9 +139,215 @@ object Bench {
     // it a few KB for the whole suite, so a consumer keeping a bounded
     // stdout tail still gets it whole.
     val qs = obj(medians.map { case (k, v) => k -> d3(v) })
-    println(s"""{"metric":"total","value":${d3(medians.values.sum)},"unit":"sec",""" +
+    println(s"""{"metric":"total","value":${d3(medians.map(_._2).sum)},"unit":"sec",""" +
       s""""runs":$timedRuns,"failed":$failedJson,"queries":$qs,""" +
       s""""spread_file":"${spreadFile.getAbsolutePath}","sf":"$sfDir"}""")
-    spark.stop()
+  }
+
+  /** Prints the formatted physical plan of each query, by name when none
+    * is named. Review for: PushedFilters reaching the scan, pruned
+    * ReadSchema, broadcast vs sort-merge joins, and wide WholeStageCodegen
+    * spans.
+    */
+  def plans(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
+    val selected = select(names)
+    (if (names.isEmpty) selected.sortBy(_._1) else selected).foreach {
+      case (name, fn) =>
+        println(s"\n========== $name ==========")
+        try fn(spark, sfDir).explain("formatted")
+        catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
+    }
+  }
+
+  /** Task-skew diagnostic: runs each query under a listener that records
+    * every task's duration per stage, then prints each stage's task-count /
+    * median / p95 / max and the max/median skew ratio. The straggler
+    * signature this exists to catch is ONE task holding a stage (a hot key
+    * in a collect_list/explode aggregate) — a shape per-query wall time
+    * cannot distinguish from an evenly-slow stage.
+    *
+    * Output: per query a `== <name> wall=` line, then one line per stage
+    * with skew ≥ 2× (and every stage ≥ 5 s), worst-first, and the three
+    * stages holding the most time.
+    */
+  def skew(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
+    val selected = select(names)
+    val durations = mutable.Map.empty[Int, mutable.ArrayBuffer[Long]]
+    val stageNames = mutable.Map.empty[Int, String]
+    val listener = new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        durations.synchronized {
+          durations.getOrElseUpdate(t.stageId, mutable.ArrayBuffer.empty) +=
+            t.taskInfo.duration
+        }
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        durations.synchronized {
+          stageNames(s.stageInfo.stageId) =
+            s.stageInfo.name.takeWhile(_ != '\n').take(80)
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try selected.foreach { case (name, fn) =>
+      durations.synchronized { durations.clear(); stageNames.clear() }
+      val t0 = System.nanoTime()
+      fn(spark, sfDir).count()
+      val wall = (System.nanoTime() - t0) / 1e9
+      GraftBridge.drainListenerBus(spark)
+      val stages = durations.synchronized {
+        durations.toSeq.map { case (sid, ds) =>
+          val s = ds.sorted
+          (sid, stageNames.getOrElse(sid, "?"), s.length,
+            s(s.length / 2), s((s.length * 95) / 100 min (s.length - 1)), s.last)
+        }
+      }
+      println(f"== $name%s wall=$wall%.1fs stages=${stages.size}%d")
+      stages
+        .filter { case (_, _, n, med, _, max) =>
+          max >= 5000L && n > 1 && med > 0 && max >= 2 * med }
+        .sortBy(-_._6)
+        .foreach { case (sid, nm, n, med, p95, max) =>
+          println(f"  stage $sid%4d tasks=$n%4d med=${med / 1e3}%7.1fs " +
+            f"p95=${p95 / 1e3}%7.1fs max=${max / 1e3}%7.1fs " +
+            f"skew=${max.toDouble / med}%5.1fx  $nm%s")
+        }
+      stages.sortBy(-_._6).take(3).foreach { case (sid, nm, n, med, _, max) =>
+        println(f"  top-time stage $sid%4d tasks=$n%4d med=${med / 1e3}%7.1fs " +
+          f"max=${max / 1e3}%7.1fs  $nm%s")
+      }
+      Tables.releaseIntermediates(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Streaming state-store diagnostic: runs each query under a
+    * [[StreamingQueryListener]] and prints, per micro-batch, the input
+    * volume, batch duration, and every stateful operator's rows / memory /
+    * update / eviction counts, read from the batch's
+    * `StreamingQueryProgress`. It separates "state grew" from "the same
+    * state was slower", and shows whether watermark eviction bounds state
+    * when a bounded replay is split into many batches.
+    *
+    * The batching is the query's own: the replay shape comes from the
+    * session's `spark.sql.graft.streamEventsGlob` / `streamMaxFiles`, as in
+    * every run. On a `java -cp` run set them as system properties
+    * (`-Dspark.sql.graft.streamEventsGlob=...`), which the session reads; an
+    * `sbt -D` does not reach a forked `runMain`.
+    */
+  def state(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
+    val selected = select(names)
+    val lines = mutable.ArrayBuffer.empty[String]
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+        val p = e.progress
+        val ops = p.stateOperators.map { s =>
+          f"${s.operatorName}%s[rows=${s.numRowsTotal}%d upd=${s.numRowsUpdated}%d " +
+            f"evict=${s.numRowsRemoved}%d mem=${s.memoryUsedBytes / 1024.0 / 1024.0}%.1fMB " +
+            f"commitMs=${s.allRemovalsTimeMs + s.allUpdatesTimeMs + s.commitTimeMs}%d]"
+        }.mkString(" ")
+        lines.synchronized {
+          lines += f"  batch=${p.batchId}%d in=${p.numInputRows}%d " +
+            f"triggerMs=${p.durationMs.getOrDefault("triggerExecution", -1L)}%d " +
+            f"addBatchMs=${p.durationMs.getOrDefault("addBatch", -1L)}%d $ops%s"
+        }
+      }
+    }
+    spark.streams.addListener(listener)
+    try selected.foreach { case (name, fn) =>
+      lines.synchronized(lines.clear())
+      val t0 = System.nanoTime()
+      val n = fn(spark, sfDir).count()
+      val wall = (System.nanoTime() - t0) / 1e9
+      // listener events are async — give the bus a moment to drain
+      GraftBridge.drainListenerBus(spark)
+      Thread.sleep(500)
+      lines.synchronized {
+        println(f"== $name%s wall=$wall%.1fs rows=$n%d batches=${lines.size}%d")
+        lines.foreach(println)
+      }
+      Tables.releaseIntermediates(spark)
+    } finally spark.streams.removeListener(listener)
+  }
+
+  /** ANN recall at the given SF — the evidence the small-SF spec floors
+    * cannot give: banding/probe curves shift with corpus size, so the
+    * floors pinned at 500 vectors need a measured counterpart at the
+    * scaled SFs (200k vectors at sf10). Runs a fixed protocol, so it takes
+    * no query names:
+    *
+    *  1. Serving recall@3 — sim_lsh/ivf/pq/ivfpq_topk against the exact
+    *     brute-force top-3 over the same fixed query set (vec_id < 10),
+    *     the SimilaritySpec measurement re-run at scale.
+    *  2. Dedup pair recall (sampled) — dd_embedding_blocked under BOTH
+    *     forced quantizers (flat IVF and two-level IMI): exact ground
+    *     truth is every cos ≥ 0.3 pair touching a 512-vector deterministic
+    *     probe sample (512 × n native cosines — the all-pairs truth is
+    *     n²/2 and unpayable at scale, which is the point of the operator),
+    *     recall = fraction of those pairs the blocked candidates recover.
+    */
+  def recall(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
+    require(names.isEmpty, s"--recall takes no query names: ${names.mkString(" ")}")
+    // ---- 1. serving recall@3 vs brute force ----------------------------
+    val exact = Similarity.topkBruteforce(spark, sfDir).collect()
+      .filter(_.getAs[Long]("rank") <= 3)
+      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("cand_id"))).toSet
+    select(Seq("sim_lsh_topk", "sim_ivf_topk", "sim_pq_topk", "sim_ivfpq_topk"))
+      .foreach { case (name, fn) =>
+        val t0 = System.nanoTime()
+        val got = fn(spark, sfDir).collect()
+          .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("cand_id"))).toSet
+        val wall = (System.nanoTime() - t0) / 1e9
+        val recall = (exact & got).size.toDouble / exact.size
+        println(f"RECALL $name%s recall@3=$recall%.3f truth=${exact.size}%d " +
+          f"wall=$wall%.1fs")
+        Tables.releaseIntermediates(spark)
+      }
+
+    // ---- 2. dedup pair recall, probe-sampled ground truth ---------------
+    val emb = Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), col("embedding"))
+    val probes = emb
+      .orderBy(xxhash64(lit(7L), col("vec_id")))
+      .limit(512)
+      .select(col("vec_id").as("p_id"), col("embedding").as("p_emb"))
+    // truth stratified by cosine band: IVF blocking recall is
+    // cosine-dependent by construction (same-cell probability rises with
+    // similarity), so one number at the operator's 0.3 floor would hide
+    // the near-dup band the operator exists for
+    val bands = Seq(0.3, 0.5, 0.7, 0.9)
+    val truthRows = emb.join(broadcast(probes), col("vec_id") =!= col("p_id"))
+      .select(col("p_id"), col("vec_id"),
+        CosineSimilarity(col("p_emb"), col("embedding")).as("cos"))
+      .filter(col("cos") >= 0.3)
+      .select(least(col("p_id"), col("vec_id")).as("vec_a"),
+        greatest(col("p_id"), col("vec_id")).as("vec_b"), col("cos"))
+      .dropDuplicates("vec_a", "vec_b").collect()
+      .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))
+    val truth = truthRows.map(_._1).toSet
+    val probeIds = probes.select("p_id").collect().map(_.getLong(0)).toSet
+    println(s"DEDUP-TRUTH probes=${probeIds.size} pairs=${truth.size}")
+    Seq("ivf", "imi").foreach { side =>
+      SessionConf.withConf(spark, "spark.sql.graft.embBlocking" -> side) {
+        val t0 = System.nanoTime()
+        val found = Dedup.embeddingCosBlocked(spark, sfDir).collect()
+          .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b")))
+          .filter(p => probeIds.contains(p._1) || probeIds.contains(p._2))
+          .toSet
+        val wall = (System.nanoTime() - t0) / 1e9
+        val perBand = bands.zip(bands.tail :+ 1.01).map { case (lo, hi) =>
+          val t = truthRows.filter { case (_, c) => c >= lo && c < hi }
+          val r = if (t.isEmpty) Double.NaN
+            else t.count(p => found.contains(p._1)).toDouble / t.size
+          f"[$lo%.1f,${math.min(hi, 1.0)}%.1f)=${r}%.3f(n=${t.size}%d)"
+        }.mkString(" ")
+        val recall =
+          if (truth.isEmpty) 1.0
+          else (truth & found).size.toDouble / truth.size
+        println(f"RECALL dd_embedding_blocked[$side%s] pairRecall=$recall%.3f " +
+          f"found=${found.size}%d truth=${truth.size}%d wall=$wall%.1fs")
+        println(s"  byBand[$side] $perBand")
+      }
+      Tables.releaseIntermediates(spark)
+    }
   }
 }

@@ -67,18 +67,11 @@ object ScaleUp {
     // typo'd copy count fails loudly instead of minting 10⁶ copies.
     require(copies <= 64 * 2 * 32, s"copies=$copies > ${64 * 2 * 32}: add " +
       "another orthogonal transform level before scaling further")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Spark's default timestamp layout is INT96, which pinned-schema
-      // streaming readers cannot consume; micros is the modern layout
-      // both engines and the streaming schema probe understand.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionConf.localSession()
+    // Spark's default timestamp layout is INT96, which pinned-schema
+    // streaming readers cannot consume; micros is the modern layout
+    // both engines and the streaming schema probe understand.
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
 
     def rep(df: DataFrame): DataFrame = replicate(df, copies)
 

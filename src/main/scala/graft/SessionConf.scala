@@ -2,8 +2,27 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-conf overrides scoped to one block. */
+/** The local session the graft mains run on, and session-conf overrides
+  * scoped to one block.
+  */
 object SessionConf {
+
+  /** The session `Bench`, `Verify` and `ScaleUp` run on:
+    * `local[$SPARK_GRAFT_CPUS]` (default 4) with as many shuffle
+    * partitions, UTC, the UI off and WARN logging. Other `spark.*` confs
+    * reach it as `-D` system properties of the JVM.
+    */
+  def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** Run `body` with every `key -> value` set on `spark`'s session conf,
     * then put each key back as it was — its previous value, or unset when

@@ -57,24 +57,16 @@ object Verify {
     case c => c.toString
   } + "\""
 
+  /** `Verify <sfDir> <outDir> [query ...]`: dumps the named queries (every
+    * query when none is named); an unknown name is refused up front.
+    */
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query ...]")
+    val (sfDir, outDir) = (args(0), args(1))
+    val selected = Bench.select(args.toSeq.drop(2)).sortBy(_._1)
+    val spark = SessionConf.localSession()
     new java.io.File(outDir).mkdirs()
-    // Optional comma-separated allowlist for local iteration on a few
-    // queries (the driver leaves it unset → full sweep).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only.fold(SparkEntry.queries)(names =>
-      SparkEntry.queries.filter { case (n, _) => names(n) })
-    val failures = selected.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+    val failures = selected.flatMap { case (name, fn) =>
       // Oracle pins (SparkEntry.oraclePins): force the oracle-shaped
       // strategy of adaptive operators for the dump, restore afterwards —
       // the oracle contract is unconditional at any sweep SF.

@@ -305,12 +305,12 @@ object Similarity {
     * Plan: the node set is broadcast against itself (self-pairs excluded),
     * each side's top-5 kept by the bounded-heap [[TopKPerKey]] operator
     * (one hash shuffle, no per-node full sort), and the edge list — at most
-    * 5·|nodes| rows — reverse-self-joined for mutuality (broadcast by
-    * default; `spark.sql.graft.graphJoin=shuffle` pins a ShuffledHashJoin
-    * for the unbounded-graph deployment — see [[graphSide]]). At
-    * corpus scale the all-pairs scoring step swaps for IVF-cell candidate
-    * generation (the [[graft.operators.Dedup.embeddingCosBlocked]] shape);
-    * the top-k and mutual join stages are unchanged.
+    * 5·|nodes| rows — reverse-self-joined for mutuality against a
+    * broadcast of itself (2,500 rows at most: [[knnEdges]] keeps nodes
+    * with `vec_id < 500`). At corpus scale the all-pairs scoring step
+    * swaps for IVF-cell candidate generation (the
+    * [[graft.operators.Dedup.embeddingCosBlocked]] shape); the top-k and
+    * mutual join stages are unchanged.
     */
   /** Directed k=5 nearest-neighbor edge list (src, rank, dst, cosine) —
     * shared by [[knnGraph]] (mutuality report) and [[pagerank]]
@@ -329,25 +329,11 @@ object Similarity {
         trunc4(col("cos")).as("cosine"))
   }
 
-  /** Edge-frame join-side strategy for the graph family ([[knnGraph]],
-    * [[triangles]]): `spark.sql.graft.graphJoin` ∈ {broadcast (default),
-    * shuffle}. The edge list is ≤ k·|nodes| rows — broadcastable while
-    * the node set is a bounded slice, a scale-killer the moment the graph
-    * covers the corpus. `shuffle` pins a ShuffledHashJoin on the edge key
-    * instead (hash-partitioned both sides, no driver collect, no
-    * per-executor full copy); results are flag-invariant (spec-pinned
-    * row-identical), only the exchange strategy moves.
-    */
-  private def graphSide(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.get("spark.sql.graft.graphJoin", "broadcast") == "shuffle")
-      df.hint("shuffle_hash")
-    else broadcast(df)
-
   def knnGraph(spark: SparkSession, dir: String): DataFrame = {
     val edges = knnEdges(spark, dir)
       .barrier() // both the output and its reverse image read this frame
     val rev = edges.select(col("src").as("r_dst"), col("dst").as("r_src"))
-    edges.join(graphSide(rev),
+    edges.join(broadcast(rev),
         col("src") === col("r_src") && col("dst") === col("r_dst"), "left")
       .select(col("src"), col("rank"), col("dst"), col("cosine"),
         col("r_src").isNotNull.as("mutual"))
@@ -529,8 +515,8 @@ object Similarity {
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
     val e2 = und.select(col("a").as("b2"), col("b").as("c"))
     val e3 = und.select(col("a").as("a3"), col("b").as("c3"))
-    val tri = und.join(graphSide(e2), col("b") === col("b2"))
-      .join(graphSide(e3), col("a") === col("a3") && col("c") === col("c3"))
+    val tri = und.join(broadcast(e2), col("b") === col("b2"))
+      .join(broadcast(e3), col("a") === col("a3") && col("c") === col("c3"))
       .select(col("a"), col("b"), col("c"))
     val perNode = tri
       .select(explode(array(col("a"), col("b"), col("c"))).as("node"))

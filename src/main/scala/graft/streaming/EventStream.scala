@@ -86,7 +86,7 @@ object EventStream {
     * lifecycles dominate: at 32 partitions a single keyed-state query
     * pays 288 store commit cycles for state that fits in a handful.
     * Width=8 was measured for stream_purchase_context at sf10 in round 9
-    * (StreamStateAudit, interleaved min-of-3: 8 partitions min 15.7 s vs
+    * (`Bench --state`, interleaved min-of-3: 8 partitions min 15.7 s vs
     * 32 partitions min 20.0 s even with 4M state rows) and purchase
     * context got FASTER at sf100 while gaining eviction under it. An
     * unbounded deployment sizes the width to its key cardinality instead;

@@ -1,0 +1,89 @@
+package graft
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftBridge
+
+/** The `graft.Bench` modes run on the shared session: each prints its
+  * report, refuses an unknown query name or mode flag before any Spark job
+  * runs, and leaves the session as it found it.
+  */
+class BenchModesSpec extends SparkSpec {
+
+  private def stdoutOf(body: => Unit): String = {
+    val buf = new java.io.ByteArrayOutputStream
+    Console.withOut(new java.io.PrintStream(buf, true, "UTF-8"))(body)
+    buf.toString("UTF-8")
+  }
+
+  /** Spark jobs started by `body` on this thread (its job group), with the
+    * listener bus drained so every job start has been delivered. */
+  private def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"bench-modes-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "bench modes")
+    try body
+    finally {
+      sc.clearJobGroup()
+      GraftBridge.drainListenerBus(spark)
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
+
+  test("--plans prints the query's header and its physical plan") {
+    val out = stdoutOf(Bench.plans(spark, sfDir, Seq("q05_region_revenue")))
+    assert(out.contains("========== q05_region_revenue =========="))
+    assert(out.contains("== Physical Plan =="))
+    assert(!out.contains("explain failed"), out)
+  }
+
+  test("--skew prints a per-query wall line") {
+    val out = stdoutOf(Bench.skew(spark, sfDir, Seq("q05_region_revenue")))
+    assert(out.contains("== q05_region_revenue wall="), out)
+  }
+
+  test("--state prints the stream's batches and leaves no listener behind") {
+    val before = spark.streams.listListeners().toSeq
+    val out = stdoutOf(Bench.state(spark, sfDir, Seq("stream_ema_scores")))
+    assert(out.contains("== stream_ema_scores wall="), out)
+    assert(out.linesIterator.exists(_.trim.startsWith("batch=")), out)
+    assert(spark.streams.listListeners().toSeq === before)
+  }
+
+  test("--recall prints recall lines and restores the blocking conf") {
+    val before = spark.conf.getAll.get("spark.sql.graft.embBlocking")
+    val out = stdoutOf(Bench.recall(spark, sfDir, Nil))
+    assert(out.contains("RECALL sim_lsh_topk recall@3="), out)
+    assert(out.contains("RECALL dd_embedding_blocked[ivf] pairRecall="), out)
+    assert(out.contains("RECALL dd_embedding_blocked[imi] pairRecall="), out)
+    assert(spark.conf.getAll.get("spark.sql.graft.embBlocking") === before)
+  }
+
+  test("an unknown query name or mode flag is refused before any Spark job") {
+    val jobs = jobsOf {
+      intercept[IllegalArgumentException](Bench.parse(Seq("q05_regon_revenue")))
+      intercept[IllegalArgumentException](Bench.parse(Seq("--plan")))
+      intercept[IllegalArgumentException](Bench.parse(Seq("--plans", "--skew")))
+      intercept[IllegalArgumentException](
+        Bench.skew(spark, sfDir, Seq("q05_region_revenue", "nope")))
+      intercept[IllegalArgumentException](Bench.recall(spark, sfDir, Seq("dd_exact")))
+    }
+    assert(jobs === 0)
+    val (mode, names) = Bench.parse(Seq("--plans", "q05_region_revenue"))
+    assert(mode eq Bench.modes("--plans"))
+    assert(names === Seq("q05_region_revenue"))
+    assert(Bench.select(Nil).map(_._1).toSet === SparkEntry.queries.keySet)
+  }
+
+  test("the shared session is still usable after the modes") {
+    assert(spark.range(10).count() === 10)
+    assert(Bench.select(Seq("q05_region_revenue")).head._2(spark, sfDir).count() > 0)
+  }
+}

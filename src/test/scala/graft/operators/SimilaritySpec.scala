@@ -323,38 +323,6 @@ class SimilaritySpec extends SparkSpec {
     assert(g.exists(!_.getAs[Boolean]("mutual")))
   }
 
-  test("graphJoin=shuffle swaps edge-frame broadcasts for shuffle joins, rows identical") {
-    def planOf(df: org.apache.spark.sql.DataFrame): String =
-      df.queryExecution.executedPlan.toString
-    def nBroadcast(p: String): Int = "BroadcastExchange".r.findAllIn(p).length
-    // baseline (broadcast mode): rows + plan shape
-    val gB = Similarity.knnGraph(spark, sfDir)
-    val gBPlan = planOf(gB)
-    val gBRows = gB.collect().map(_.toSeq)
-    val tB = Similarity.triangles(spark, sfDir)
-    val tBPlan = planOf(tB)
-    val tBRows = tB.collect().map(_.toSeq)
-    spark.conf.set("spark.sql.graft.graphJoin", "shuffle")
-    try {
-      val gS = Similarity.knnGraph(spark, sfDir)
-      val gSPlan = planOf(gS)
-      assert(gSPlan.contains("ShuffledHashJoin") || gSPlan.contains("SortMergeJoin"),
-        s"mutual join must shuffle under the flag:\n$gSPlan")
-      assert(nBroadcast(gSPlan) < nBroadcast(gBPlan),
-        "the edge frame must stop broadcasting under the flag")
-      assert(gS.collect().map(_.toSeq).toSeq === gBRows.toSeq,
-        "knnGraph results must be join-strategy invariant")
-      val tS = Similarity.triangles(spark, sfDir)
-      val tSPlan = planOf(tS)
-      assert(tSPlan.contains("ShuffledHashJoin") || tSPlan.contains("SortMergeJoin"),
-        s"triangle joins must shuffle under the flag:\n$tSPlan")
-      assert(nBroadcast(tSPlan) < nBroadcast(tBPlan),
-        "the two triangle join legs must stop broadcasting under the flag")
-      assert(tS.collect().map(_.toSeq).toSeq === tBRows.toSeq,
-        "triangles results must be join-strategy invariant")
-    } finally spark.conf.unset("spark.sql.graft.graphJoin")
-  }
-
   test("power component: positive unit-scaled direction, deterministic") {
     val v = Similarity.powerComponent(spark, sfDir).collect()
       .map(r => r.getAs[Long]("dim") -> r.getAs[Long]("component")).toMap

@@ -7,7 +7,7 @@ class ParquetMergeSinkSpec extends SparkSpec {
 
   /** Spark jobs `body` starts. Scoped by job group, so jobs another suite
     * runs meanwhile are not counted; the listener bus is drained (as
-    * SkewAudit does) so every job start has been delivered.
+    * `graft.Bench --skew` does) so every job start has been delivered.
     */
   private def jobsOf(body: => Any): Int = {
     val sc = spark.sparkContext
