@@ -5,12 +5,36 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** Parquet table loaders for the driver-generated testdata layout
-  * (`TESTDATA.md`). Parquet embeds the schema, so no inference cost; column
-  * pruning and filter pushdown happen at the scan via Catalyst.
+  * (`TESTDATA.md`). Column pruning and filter pushdown happen at the scan
+  * via Catalyst.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Opens `<dir>/<name>.parquet`. Spark infers a parquet schema in a job
+    * (a footer read) on every plain open, so the schema it inferred is
+    * kept per file snapshot (each file's path, length and mtime) and per
+    * value of the confs that shape inference; a later open passes it with
+    * `.schema(...)` and runs no job. A rewritten file is inferred again.
+    */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(path)) return spark.read.parquet(path.toString)
+    val files = fs.listFiles(path, true)
+    val snapshot = Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+      .map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}").toSeq.sorted
+    val key = (snapshot ++ InferenceConfs.map(k => s"$k=${spark.conf.getOption(k)}"))
+      .mkString("\n")
+    Option(schemaCache.get(key)).fold {
+      val df = spark.read.parquet(path.toString)
+      schemaCache.put(key, df.schema)
+      df
+    }(schema => spark.read.schema(schema).parquet(path.toString))
+  }
+  private val InferenceConfs = Seq("spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp")
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    String, org.apache.spark.sql.types.StructType]()
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")

@@ -155,6 +155,19 @@ case class PqEncode(child: Expression, books: Array[Array[Array[Double]]])
   override protected def withNewChildInternal(newChild: Expression): PqEncode =
     copy(child = newChild)
 
+  // Array fields break case-class equality/semanticEquals; compare content.
+  override def equals(other: Any): Boolean = other match {
+    case PqEncode(c, b) => c == child && java.util.Arrays.deepEquals(
+      b.asInstanceOf[Array[Object]], books.asInstanceOf[Array[Object]])
+    case _ => false
+  }
+  override def hashCode(): Int = java.util.Objects.hash(child,
+    Integer.valueOf(java.util.Arrays.deepHashCode(books.asInstanceOf[Array[Object]])))
+
+  // Plans show the codebooks' shape and content, not their JVM identity.
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, NearestCells.fingerprint("codebooks", books))
+
   override def prettyName: String = "graft_pq_encode"
 }
 

@@ -152,10 +152,26 @@ case class NearestCells(child: Expression, centroids: Array[Array[Double]], npro
     java.util.Objects.hash(child, Integer.valueOf(nprobe),
       Integer.valueOf(centroids.length))
 
+  // Plans show the centroids' shape and content, not their JVM identity.
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, NearestCells.fingerprint("centroids", centroids), nprobe)
+
   override def prettyName: String = "graft_nearest_cells"
 }
 
 object NearestCells {
+  /** `name[d1xd2… hash=<hex>]`: an array constant's shape and a hash of
+    * its content, the same in every JVM.
+    */
+  private[graft] def fingerprint(name: String, a: Array[_ <: AnyRef]): String = {
+    def dims(x: Any): List[Int] = x match {
+      case arr: Array[_] => arr.length :: arr.headOption.fold(List.empty[Int])(dims)
+      case _ => Nil
+    }
+    f"$name[${dims(a).mkString("x")} hash=${java.util.Arrays.deepHashCode(
+      a.asInstanceOf[Array[Object]])}%08x]"
+  }
+
   /** Executor-side entry: widen the ArrayData once, then run the ONE
     * shared kernel. Driver probe lists and executor cell assignment must
     * never diverge — routing both through [[computeLocal]] makes the

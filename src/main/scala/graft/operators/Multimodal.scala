@@ -22,6 +22,16 @@ import graft.Tables
   */
 object Multimodal {
 
+  /** A partition function that plans render by `name`, where a closure
+    * would print its JVM identity (`Multimodal$$$Lambda$…@…`).
+    */
+  private def named(name: String)(
+      f: Iterator[Row] => Iterator[Row]): Iterator[Row] => Iterator[Row] =
+    new (Iterator[Row] => Iterator[Row]) with Serializable {
+      def apply(rows: Iterator[Row]): Iterator[Row] = f(rows)
+      override def toString: String = name
+    }
+
   /** Deterministic fake "decode": byte-level features standing in for a
     * real decoder's output (dimensions, channels, histogram, ...).
     */
@@ -55,7 +65,7 @@ object Multimodal {
           .otherwise("video/mp4").as("media_type"),
         length(col("text")).cast("long").as("n_bytes")).as("meta"))
     val enc = RowEncoder.encoderFor(outputSchema)
-    media.mapPartitions { rows =>
+    media.mapPartitions(named("binaryMeta.decode") { rows =>
       // Per-partition init happens here (decoder/codec handle in real life).
       rows.map { r =>
         val payload = r.getAs[Array[Byte]]("payload")
@@ -63,7 +73,7 @@ object Multimodal {
         val (crc, mean, len) = fakeDecode(payload)
         Row(r.getAs[Long]("doc_id"), meta.getString(0), meta.getLong(1), crc, mean, len)
       }
-    }(enc).toDF()
+    })(enc).toDF()
   }
 
   val frameSchema: StructType = StructType(Seq(
@@ -87,7 +97,7 @@ object Multimodal {
     val video = d.filter(col("doc_id") % 3 === 2) // the video/mp4 slice
       .select(col("doc_id"), col("text").cast("binary").as("payload"))
     val enc = RowEncoder.encoderFor(frameSchema)
-    video.mapPartitions { rows =>
+    video.mapPartitions(named("frameSample.frames") { rows =>
       // per-partition init seam (demuxer/codec handle in real life)
       rows.flatMap { r =>
         val payload = r.getAs[Array[Byte]]("payload")
@@ -98,7 +108,7 @@ object Multimodal {
           Row(r.getAs[Long]("doc_id"), i, crc.getValue, frame.length)
         }
       }
-    }(enc).toDF().orderBy("doc_id", "frame_idx")
+    })(enc).toDF().orderBy("doc_id", "frame_idx")
   }
 
   val thumbSchema: StructType = StructType(Seq(
@@ -119,7 +129,7 @@ object Multimodal {
     val images = d.filter(col("doc_id") % 3 === 0) // the image/png slice
       .select(col("doc_id"), col("text").cast("binary").as("payload"))
     val enc = RowEncoder.encoderFor(thumbSchema)
-    images.mapPartitions { rows =>
+    images.mapPartitions(named("resize.thumbs") { rows =>
       rows.map { r =>
         val p = r.getAs[Array[Byte]]("payload")
         val rowsIn = p.length / width
@@ -138,7 +148,7 @@ object Multimodal {
         val crc = new CRC32(); crc.update(thumb)
         Row(r.getAs[Long]("doc_id"), thumb, thumb.length, crc.getValue)
       }
-    }(enc).toDF().orderBy("doc_id")
+    })(enc).toDF().orderBy("doc_id")
   }
 
   val energySchema: StructType = StructType(Seq(
@@ -161,7 +171,7 @@ object Multimodal {
     val audio = d.filter(col("doc_id") % 3 === 1) // the audio/wav slice
       .select(col("doc_id"), col("text").cast("binary").as("payload"))
     val enc = RowEncoder.encoderFor(energySchema)
-    audio.mapPartitions { rows =>
+    audio.mapPartitions(named("audioEnergy.windows") { rows =>
       // per-partition init seam (codec/resampler handle in real life)
       rows.flatMap { r =>
         val p = r.getAs[Array[Byte]]("payload")
@@ -181,7 +191,7 @@ object Multimodal {
           Row(r.getAs[Long]("doc_id"), w, rms, peak)
         }
       }
-    }(enc).toDF().orderBy("doc_id", "window_idx")
+    })(enc).toDF().orderBy("doc_id", "window_idx")
   }
 
   /** Per-media-type rollup of the decoded features (oracle-checkable: CRC32

@@ -52,11 +52,15 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *
   * Manifest entries are `key=value` lines. By convention a key starting
   * with `dir.` names ONE data path relative to the root (its first path
-  * segment is a generation directory): a merge-sink bucket with appended
-  * segments has one entry per segment (`dir.7`, `dir.7+12`, see
-  * [[ParquetMergeSink.bucketOf]]), never a joined list. Other keys are
-  * scalar metadata (bucket counts, the merge sink's `hwm`, last-applied
-  * batch ids).
+  * segment is a generation directory), never a joined list. A merge-sink
+  * table's are `dir.<b>` (bucket b's base dir) and `dir.+<v>` (the
+  * table-level segment manifest v appended; `dir.<b>+<v>` is a per-bucket
+  * segment of the earlier layout), see [[ParquetMergeSink.isSinkKey]]: an
+  * append adds one entry, a merge replaces the entries of the buckets it
+  * folds and of the segments it read, and a drain replaces them all.
+  * Other keys are scalar metadata (bucket counts, the merge sink's `hwm`,
+  * last-applied batch ids). A generation write leaves no `_SUCCESS`
+  * marker: the manifest flip is the commit record.
   */
 object ManifestCommit {
 

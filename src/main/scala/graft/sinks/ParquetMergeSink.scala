@@ -13,38 +13,54 @@ import graft.indexer.Upsert
   * (db.go:1171-1175) for a lake without a transactional format.
   *
   * Scale design — append past the high-water mark, else a bucket-scoped
-  * rewrite; never a table rewrite. Rows are hashed into `nBuckets` buckets
-  * on the merge keys, and every commit writes a NEW immutable generation
-  * and flips a single small manifest file ([[ManifestCommit]]). The
-  * manifest records `hwm`, an upper bound on every committed version.
-  * When the version column is one of the merge keys and a batch's
-  * smallest version is above `hwm`, no batch key can equal a committed
-  * one: the batch resolves latest-wins within itself and its rows
-  * are APPENDED, one new segment per touched bucket (manifest entry
-  * `dir.<b>+<manifest version>` beside the base `dir.<b>`), without
-  * reading a committed row — O(batch). Every other commit (an update-wins
-  * table, a replay at or below `hwm`, [[mergeActions]]) reads ALL segments
-  * of ONLY the buckets the batch touches, resolves them and rewrites each
-  * as one base dir — O(batch + touched buckets). Untouched buckets' entries
-  * carry forward, so at 100 TB a small batch never costs O(table).
+  * rewrite; never a table rewrite per commit. Rows are hashed into
+  * `nBuckets` buckets on the merge keys, and every commit writes a NEW
+  * immutable generation and flips a single small manifest file
+  * ([[ManifestCommit]]). The manifest records `hwm`, an upper bound on
+  * every committed version. When the version column is one of the merge
+  * keys and a batch's smallest version is above `hwm`, no batch key can
+  * equal a committed one: the batch resolves latest-wins within itself
+  * and is APPENDED as ONE table-level segment, without reading a committed
+  * row — O(batch), one file per write task. A path with no committed rows
+  * appends its first batch the same way, whatever its keys. Every other
+  * commit (an update-wins table, a replay at or below `hwm`,
+  * [[mergeActions]]) reads the base dirs of ONLY the buckets the batch
+  * touches plus every segment, buckets the segments' rows from the keys,
+  * and rewrites each touched bucket as one base dir; the segments' other
+  * rows are rewritten as one segment — O(batch + touched buckets +
+  * segments). Untouched buckets' entries carry forward.
   *
-  * Fold rule — a table holds at most [[TableDirs]] dirs (or one per bucket
-  * when it has more buckets): a bucket may hold [[maxSegments]] of them,
-  * and an append that would add one more reads the bucket's segments and
-  * rewrites them, with the batch's rows, as one base dir in the same
-  * write; a merge-path commit folds every bucket it touches.
+  * Entry grammar (`dir.` stripped, see [[isSinkKey]]): `<b>` is bucket b's
+  * base dir; `+<v>` a segment manifest v wrote (`<gen>/__bucket=-1`, a
+  * sentinel bucket on the same `partitionBy` write, so the leaf is not a
+  * name Spark's hidden-path filter skips); `<b>+<v>` a per-bucket segment
+  * of the earlier layout, read and folded as part of bucket b. A segment's
+  * keys never equal another committed key, so reads union every dir as it
+  * lies.
+  *
+  * Fold and drain — a table holds at most [[TableDirs]] dirs (or one per
+  * bucket plus one). An append at the bound rewrites every segment and the
+  * batch as one segment, a plain concatenation that reads no base bucket.
+  * Any commit that reads segments DRAINS them instead — folds every bucket,
+  * segment rows into their buckets — once they hold more rows than an
+  * average base bucket (or when concatenating cannot bring the table under
+  * the bound). Amortized over a table of N rows taking r rows a trigger
+  * at 16 buckets: concatenations rewrite about N/512 rows a trigger and a
+  * drain N + N/16 rows every N/(16r) triggers, about N/512 + 17r rows a
+  * trigger in all, where the per-bucket layout refolded about half the
+  * touched buckets every trigger (k touched buckets: kN/32 rows).
   *
   * Job shape — a merge runs ONE staging job, then the write. The staging
   * job materializes the aligned, bucketed batch behind a barrier and
   * observes, in the same pass, the set of touched buckets, the row count
   * (emptiness) and an integral version's min, max and null count; no
   * separate `isEmpty`, bucket-`distinct` or range job runs. The write is
-  * the bucket-commit tail every commit shares ([[commitBuckets]]): it
-  * reads the buckets it folds (for an append, only those at the fold
-  * bound), lets the caller resolve them with the batch (latest-wins for
-  * merge, delete/update/insert for mergeActions) and writes the result
-  * (under AQE: the shuffle's map job plus the write job). The staged
-  * blocks are released as soon as the commit (or the failure) is done.
+  * the commit tail every commit shares ([[commitBuckets]]): it reads what
+  * the commit folds (nothing for a plain append), lets the caller resolve
+  * it with the batch (latest-wins for merge, delete/update/insert for
+  * mergeActions) and writes the result (under AQE: the shuffle's map job
+  * plus the write job). The staged blocks are released as soon as the
+  * commit (or the failure) is done.
   *
   * Durability: data files are immutable once written; the ONLY mutation
   * is the one-small-file manifest commit that tail makes, which covers
@@ -84,19 +100,34 @@ object ParquetMergeSink {
     */
   private val TableDirs = 32
 
-  /** Dirs a bucket may hold before an append folds it: 2 at 16 buckets. */
-  private[graft] def maxSegments(buckets: Int): Int = math.max(1, TableDirs / buckets)
+  /** The `__bucket` value a table-level segment is written under. */
+  private val SegmentBucket = -1
+
+  /** Generation writes leave no `_SUCCESS` marker: the manifest flip is
+    * the commit record (a Hadoop write option, not a session conf).
+    */
+  private val NoSuccessMarker = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
 
   private val BucketKey = "(\\d+)(?:\\+\\d+)?".r
+  private val SegmentKey = "\\+\\d+".r
 
-  /** The bucket a merge-sink dir key (`dir.` stripped) names: `7` is bucket
-    * 7's base dir, `7+12` the segment manifest v12 appended to it. None for
-    * every other entry (`table`, `deletes`, partition dirs).
+  /** The bucket a dir key (`dir.` stripped) belongs to: `7` is bucket 7's
+    * base dir, `7+12` a per-bucket segment of the earlier layout.
     */
-  private[graft] def bucketOf(key: String): Option[Int] = key match {
+  private def bucketOf(key: String): Option[Int] = key match {
     case BucketKey(b) => b.toIntOption
     case _ => None
   }
+
+  /** `+12`: the table-level segment manifest v12 appended. */
+  private def isSegment(key: String): Boolean = SegmentKey.matches(key)
+
+  /** Whether a dir key (`dir.` stripped) holds merge-sink data — a base
+    * dir or a segment — rather than `table`, `deletes` or a partition dir:
+    * the one layout test the catalog, the procedures and ALTER share.
+    */
+  private[graft] def isSinkKey(key: String): Boolean =
+    bucketOf(key).isDefined || isSegment(key)
 
   /** The version column is a merge key: the tables an append can serve. */
   private def versionKeyed(keys: Seq[String], version: String): Boolean =
@@ -162,24 +193,15 @@ object ParquetMergeSink {
   private def lcName(s: String) = s.toLowerCase(java.util.Locale.ROOT)
 
   /** Lossless type widenings the parquet readers serve WITHOUT a data
-    * rewrite (probed against Spark's vectorized and row readers: a file
-    * written at `from` reads back correctly when the requested schema
-    * says `to`; everything else — narrowing, long→double, any string
-    * conversion — fails the scan loudly with
-    * PARQUET_COLUMN_DATA_TYPE_MISMATCH). This is exactly the set
-    * `ALTER TABLE … ALTER COLUMN … TYPE` may declare and the set an
-    * old-shape writer's batch may implicitly upcast through at the merge
-    * door; it mirrors Delta's type-widening table feature:
-    *
-    *   - integer upcasts: byte → short → int → long
-    *   - exact float upcasts: float → double, {byte,short,int} → double
-    *     (every int32 is exact in an f64; long → double is LOSSY above
-    *     2⁵³ and refused)
-    *   - into decimal: {byte,short,int,long} → decimal(p,s) with enough
-    *     integer digits (3/5/10/20) — scale-0 values rescale exactly
-    *   - decimal(p,s) → decimal(p′,s′) when s′ ≥ s and p′−s′ ≥ p−s
-    *   - date → timestamp_ntz (midnight, no zone reinterpretation;
-    *     date → timestamp LTZ would shift by session zone and is refused)
+    * rewrite (probed against Spark's vectorized and row readers; anything
+    * else fails the scan with PARQUET_COLUMN_DATA_TYPE_MISMATCH): the set
+    * `ALTER COLUMN … TYPE` may declare and an old-shape batch may upcast
+    * through at the merge door, as Delta's type widening. Integer upcasts
+    * byte → short → int → long; float → double and {byte,short,int} →
+    * double (long → double is lossy above 2⁵³); integers into a decimal
+    * with enough integer digits (3/5/10/20); decimal(p,s) → decimal(p′,s′)
+    * when s′ ≥ s and p′−s′ ≥ p−s; date → timestamp_ntz (midnight, no zone
+    * shift).
     */
   private[graft] def widens(from: org.apache.spark.sql.types.DataType,
       to: org.apache.spark.sql.types.DataType): Boolean = {
@@ -245,30 +267,18 @@ object ParquetMergeSink {
     }
 
   /** The merge door [[merge]] and [[mergeActions]] share: `df`'s columns
-    * match the declared schema by name (case-insensitive). Three things
-    * REFUSE loudly — the sink never repairs a malformed batch implicitly:
+    * match the declared schema by name (case-insensitive). It REFUSES
+    * type mismatches outside [[widens]]' upcasts (those cast implicitly),
+    * a batch missing any of `required` (a null-filled key or version
+    * would silently collapse or mis-order rows under latest-wins), and
+    * two columns that differ only by case (the match cannot pick one).
     *
-    *   - type mismatches that are not lossless upcasts (an incoming type
-    *     inside [[widens]]' set — an old-shape writer after `ALTER
-    *     COLUMN … TYPE` — upcasts implicitly; anything else casts
-    *     explicitly or refuses);
-    *   - a batch missing any of `required` (the merge keys + version
-    *     column): null-filling a key would hash every such row into one
-    *     bucket and collapse them to a single row under latest-wins, and
-    *     a null version silently loses the tie-break — both are silent
-    *     data loss for a malformed writer, so they fail at the door;
-    *   - two incoming columns that differ only by case (`V` and `v`):
-    *     the case-insensitive name match cannot pick one without
-    *     silently dropping the other.
-    *
-    * The callers differ in what leaves the door. [[merge]] stores the
-    * batch as it comes out: extra columns refuse too (widening is what
-    * `ALTER TABLE … ADD COLUMN` is for), declared-but-absent DATA columns
+    * [[merge]] stores the batch as it comes out: extra columns refuse
+    * too (`ADD COLUMN` widens), declared-but-absent data columns
     * null-fill, and order follows the declaration. With `keepSourceOnly`
-    * ([[mergeActions]]) the source keeps its own columns: source-only
-    * ones such as a CDC op flag feed the delete predicate and pass
-    * through, and declared columns the source lacks are resolved per
-    * action later.
+    * ([[mergeActions]]) the source keeps its own columns: a CDC op flag
+    * feeds the delete predicate, and declared columns the source lacks
+    * are resolved per action later.
     */
   private def alignToSchema(df: DataFrame,
       declared: org.apache.spark.sql.types.StructType, what: String,
@@ -322,19 +332,13 @@ object ParquetMergeSink {
   }
 
   /** `ALTER TABLE … ADD COLUMN` as ONE metadata-only manifest commit (no
-    * data is read or rewritten — Delta/Iceberg add-column semantics): the
-    * new head re-references the current generations unchanged and records
-    * the widened declared schema; every reader resolving through the
-    * manifest ([[read]]/[[readVersion]], the SQL catalog) null-fills the
-    * new columns for pre-ALTER generations by name. Time travel to a
-    * pre-ALTER version serves that manifest's OWN schema — the old shape,
-    * as the protocol requires.
-    *
-    * Only nullable, non-duplicate, top-level columns are addable; drops,
-    * renames, and type changes refuse loudly at the catalog (a lake scan
-    * cannot un-write immutable files). A legacy table without a declared
-    * schema adopts its current data schema as the base in the same
-    * commit.
+    * data read or rewritten — Delta/Iceberg add-column semantics): the new
+    * head re-references the current generations and records the widened
+    * declared schema; every reader resolving through the manifest
+    * null-fills the new columns for older generations by name, and time
+    * travel to a pre-ALTER version serves that manifest's own schema.
+    * Only nullable, non-duplicate, top-level columns are addable. A legacy
+    * table without a declared schema adopts its data schema as the base.
     */
   def addColumns(spark: SparkSession, path: String,
       newFields: Seq[org.apache.spark.sql.types.StructField]): Unit = {
@@ -416,17 +420,13 @@ object ParquetMergeSink {
 
   /** `ALTER TABLE … RENAME COLUMN` as ONE metadata-only manifest commit:
     * the declared schema takes the new logical name while the PHYSICAL
-    * name — the name every generation's files were written with — stays
-    * what it was, recorded in the manifest's logical→physical map. Reads
-    * scan physical and project to logical, so existing data serves under
-    * the new name immediately, and generations written after the rename
-    * use the SAME physical name, keeping one file schema forever (Delta
-    * column-mapping "name" mode; Iceberg gets the same effect from field
-    * ids). Renaming a merge key or the version column updates the write
-    * contract entries in the same atomic commit. Time travel to a
-    * pre-RENAME version serves the old name. An old writer still sending
-    * the old name refuses at the door (undeclared column) — exactly
-    * Delta's behavior after a rename.
+    * name every generation was written with stays, recorded in the
+    * manifest's logical→physical map (Delta column-mapping "name" mode).
+    * Reads scan physical and project to logical; later generations keep
+    * the same physical name. Renaming a merge key or the version column
+    * updates the write contract in the same commit. Time travel to a
+    * pre-RENAME version serves the old name; a writer still sending the
+    * old name refuses at the door (undeclared column).
     */
   def renameColumn(spark: SparkSession, path: String,
       from: String, to: String): Unit =
@@ -454,23 +454,14 @@ object ParquetMergeSink {
     }
 
   /** `ALTER TABLE … ALTER COLUMN c TYPE t` as ONE metadata-only manifest
-    * commit, allowed ONLY for the lossless widenings in [[widens]] (the
-    * Delta type-widening set): the declared schema takes the wider type
-    * and every reader asks parquet for it — Spark's readers upcast old
-    * generations' narrower physical values at scan time, so no file is
-    * rewritten and generations written before and after the ALTER read
-    * together. Narrowing and lossy conversions (long → double, anything
-    * → string) refuse: committed immutable files cannot change physical
-    * type, and the readers fail such scans loudly anyway.
-    *
-    * MERGE KEYS are not widenable: bucket routing hashes the key's typed
-    * value (xxhash64 of int 5 ≠ xxhash64 of long 5), so a widened key
-    * would route existing keys to different buckets — silent duplication.
-    * Compact to a fresh table to re-type a key. The version column and
-    * data columns widen freely (version ordering is value-order, which
-    * every widening preserves). Time travel to a pre-ALTER version
-    * serves the old (narrow) type; an old-shape writer still sending the
-    * narrow type keeps merging — the door upcasts it losslessly
+    * commit, allowed ONLY for the lossless widenings in [[widens]]: the
+    * declared schema takes the wider type and Spark's readers upcast old
+    * generations at scan time, so no file is rewritten. Narrowing and
+    * lossy conversions refuse. MERGE KEYS are not widenable: bucket
+    * routing hashes the typed key (xxhash64 of int 5 ≠ of long 5), so a
+    * widened key would re-route existing keys (compact to a fresh table to
+    * re-type one). Time travel to a pre-ALTER version serves the old type;
+    * an old-shape writer keeps merging — the door upcasts it
     * ([[alignToSchema]]).
     */
   def widenColumnType(spark: SparkSession, path: String,
@@ -533,7 +524,7 @@ object ParquetMergeSink {
     // ALTER there would record a declaration nothing honors (and a
     // DV-carrying table's delete epoch must compact before its shape
     // changes). Refuse loudly rather than half-evolve.
-    val nonBucket = m.dirs.keys.filter(bucketOf(_).isEmpty)
+    val nonBucket = m.dirs.keys.filterNot(isSinkKey)
     require(nonBucket.isEmpty,
       s"$path is not a merge-sink bucket layout (entries: " +
         s"${nonBucket.take(3).mkString(", ")}…) — $op serves " +
@@ -594,7 +585,7 @@ object ParquetMergeSink {
   }
 
   /** The committed table as a DataFrame, or None before the first merge
-    * lands data. Reads exactly the bucket dirs the current manifest
+    * lands data. Reads exactly the data dirs the current manifest
     * references.
     */
   def readIfExists(spark: SparkSession, path: String): Option[DataFrame] = {
@@ -627,14 +618,10 @@ object ParquetMergeSink {
     readIfExists(spark, path).getOrElse(throw new IllegalStateException(
       s"$path has no committed merge-sink data"))
 
-  /** The table as of a RETAINED manifest version — time travel for
-    * audits and incident forensics ("what did the upsert state look like
-    * before batch N?"), free under the generation-log commit protocol:
-    * an old manifest still names its immutable bucket dirs, so reading
-    * it is exactly [[read]] against that manifest. Only versions vacuum
-    * retains are addressable (the merge path keeps 2); the error lists
-    * what is. Paired with [[ManifestCommit.rollback]], which re-commits
-    * an old version's entries as the new head without deleting history.
+  /** The table as of a RETAINED manifest version (time travel): an old
+    * manifest still names its immutable dirs, so this is [[read]] against
+    * it. Only versions vacuum retains (2) are addressable; the error lists
+    * them. [[ManifestCommit.rollback]] re-commits one as the new head.
     */
   def readVersion(spark: SparkSession, path: String, version: Long): DataFrame = {
     val table = new Path(path)
@@ -649,20 +636,12 @@ object ParquetMergeSink {
   }
 
   /** An EMPTY merge-sink table whose schema and write contract are
-    * committed before any data: generation 1 holds a single ZERO-ROW
-    * parquet file in bucket 0 (the schema lives in its footer, so every
-    * reader — API or catalog — resolves columns without special-casing
-    * emptiness), and manifest v1 records `merge.keys`/`merge.version`/
-    * `buckets`, making the table immediately writable through every SQL
-    * and API write path. This is `CREATE TABLE`'s protocol (the
-    * reference gets it from PostgreSQL DDL, db.go's migrations); the
-    * seed bucket behaves like any committed generation dir — the first
-    * merge touching bucket 0 supersedes it, untouched it carries
-    * forward as 0 rows.
-    *
-    * Refuses an existing table (CREATE is not idempotent-overwrite) and
-    * key/version columns absent from the schema — the write contract
-    * must be satisfiable or every later INSERT would fail at a distance.
+    * committed before any data (`CREATE TABLE`'s protocol): generation 1
+    * holds one ZERO-ROW parquet file in bucket 0 (its footer carries the
+    * schema for every reader), and manifest v1 records `merge.keys`,
+    * `merge.version` and `buckets`, so every SQL and API write path works
+    * at once. The seed is an ordinary base dir. Refuses an existing table
+    * and key/version columns absent from the schema.
     */
   def createEmpty(spark: SparkSession, path: String,
       schema: org.apache.spark.sql.types.StructType, keys: Seq[String],
@@ -728,11 +707,12 @@ object ParquetMergeSink {
   /** One batch staged for its write: `frame` is the aligned batch with
     * the bucket column, materialized behind a [[graft.Tables.barrier]];
     * `touched`, `rows` and `versions` (None unless the version column is
-    * integral) were observed by that same job.
+    * integral) were observed by that same job. `noData`: no committed or
+    * legacy dir holds a row the batch could conflict with.
     */
   private final case class Staged(frame: DataFrame, touched: Seq[Int],
-      rows: Long, buckets: Int,
-      committed: Option[ManifestCommit.Manifest], versions: Option[Versions])
+      rows: Long, buckets: Int, committed: Option[ManifestCommit.Manifest],
+      noData: Boolean, versions: Option[Versions])
 
   /** The shared front of [[merge]] and [[mergeActions]]: ONE Spark job.
     *
@@ -762,6 +742,7 @@ object ParquetMergeSink {
     val seen = ran.observedMetrics(StageMetrics)
     def long(i: Int) = Option.unless(seen.isNullAt(i))(seen.getLong(i))
     Staged(frame, seen.getSeq[Int](0).sorted, seen.getLong(1), buckets, committed,
+      known.forall(_.dirs.isEmpty),
       Option.when(integral)(Versions(long(2), long(3), seen.getLong(4))))
   }
 
@@ -780,63 +761,85 @@ object ParquetMergeSink {
       m
     }
 
-  /** The bucket-commit tail every commit shares.
+  /** The rows under `rels` (dirs relative to `table`), from the files'
+    * footers: a small file's bytes are mostly footer, so bytes would
+    * weigh a few one-row segments like a whole bucket.
+    */
+  private def rowsOf(fs: FileSystem, table: Path, rels: Iterable[String]): Long =
+    rels.iterator.flatMap(rel => fs.listStatus(new Path(table, rel)))
+      .filter(_.getPath.getName.endsWith(".parquet")).map { st =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, fs.getConf))
+        try r.getRecordCount finally r.close()
+      }.sum
+
+  /** The commit tail every commit shares.
     *
-    * An `append` folds the touched buckets already holding [[maxSegments]]
-    * dirs; any other commit folds every touched bucket. It reads ONLY the
-    * folded buckets' segments, by explicit dir; the bucket column is
-    * recomputed from the keys. `resolve` gets those rows (None when no
-    * folded bucket has a dir) and returns every row to write, with the
-    * bucket column: all a folded bucket keeps, an appended one's new rows.
+    * An `append` under the dir bound reads nothing; at the bound it reads
+    * every segment (a concatenation). Any other commit reads the base dirs
+    * of every touched bucket and every segment. Either drains — reads every
+    * dir and folds every bucket — when the segments hold more rows than
+    * an average base bucket, or when an append could not bring the table
+    * under the bound by concatenating. Rows read get the bucket column
+    * from the keys; `resolve` gets them (None when nothing is read) and
+    * returns every row to write. A row of a folded bucket goes to that
+    * bucket's base dir, every other row to one new segment.
     *
     * They become a NEW immutable generation, so a crash before the commit
     * is invisible to readers (the orphan dir is vacuumed later), written
     * under PHYSICAL column names (renamed columns keep the name they were
-    * born with). One listing of it settles each touched bucket's entries:
-    * an appended bucket gains `dir.<b>+<version>` (`dir.<b>` while it has
-    * none); a folded bucket's entries are ALL replaced by one `dir.<b>`,
-    * or REMOVED when the generation has no dir for it (mergeActions
-    * deleted all its rows) — its old files could only bring back
-    * superseded or deleted rows. (A merge gives every touched bucket a
-    * dir: latest-wins keeps one row per key, null keys included, and
-    * Spark's hash folds -0.0 into 0.0 and all NaNs into one.)
+    * born with). One listing of it settles the entries: a folded bucket's
+    * entries are ALL replaced by one `dir.<b>`, or REMOVED when the
+    * generation has no dir for it (mergeActions deleted all its rows) —
+    * its old files could only bring back superseded or deleted rows; the
+    * segments read are replaced by `dir.+<version>`, if any row is left
+    * for it. (A merge gives every touched bucket a dir: latest-wins keeps
+    * one row per key, null keys included, and Spark's hash folds -0.0 into
+    * 0.0 and all NaNs into one.)
     *
-    * The same flip covers every touched bucket and raises `hwm` to the
-    * batch's largest version (a table without one that can append takes
-    * it from one scan of its version column; a non-integral version drops
-    * it). Unreferenced generations and legacy bucket dirs are reclaimed;
-    * keep=2 leaves the previous manifest's for in-flight readers.
+    * The same flip raises `hwm` to the batch's largest version (a table
+    * without one that can append takes it from one scan of its version
+    * column; a non-integral version drops it). Unreferenced generations
+    * and legacy bucket dirs are reclaimed; keep=2 leaves the previous
+    * manifest's for in-flight readers.
     */
   private def commitBuckets(fs: FileSystem, table: Path, staged: Staged,
       keys: Seq[String], version: String, append: Boolean)(
       resolve: Option[DataFrame] => DataFrame): Unit = {
     val spark = staged.frame.sparkSession
     val manifest = manifestFor(fs, table, staged)
-    val touched = staged.touched
-    val segments = manifest.dirs.toSeq
-      .flatMap { case (k, rel) => bucketOf(k).map(_ -> rel) }.groupMap(_._1)(_._2)
-    def segs(b: Int) = segments.getOrElse(b, Nil)
-    val fold = touched.filter(b =>
-      !append || segs(b).size >= maxSegments(staged.buckets)).toSet
-    val currentDirs = fold.toSeq.sorted.flatMap(segs(_).sorted)
-    val merged = resolve(Option.when(currentDirs.nonEmpty)(
-      scan(spark, table, manifest, currentDirs)
+    val (segments, bases) = manifest.dirs.toSeq.partition(d => isSegment(d._1))
+    val bound = math.max(TableDirs, staged.buckets + 1)
+    val plain = append && manifest.dirs.size < bound
+    val drain = !plain && (append && bases.size >= bound || segments.nonEmpty &&
+      rowsOf(fs, table, segments.map(_._2)) * staged.buckets >
+        rowsOf(fs, table, bases.map(_._2)))
+    val fold =
+      if (drain) (0 until staged.buckets).toSet
+      else if (append) Set.empty[Int] else staged.touched.toSet
+    val readDirs = bases.collect { case (k, rel) if bucketOf(k).exists(fold) => rel } ++
+      (if (plain) Nil else segments.map(_._2))
+    val resolved = resolve(Option.when(readDirs.nonEmpty)(
+      scan(spark, table, manifest, readDirs.sorted)
         .withColumn(BucketCol, bucketExpr(keys, staged.buckets))))
+    val merged = resolved.withColumn(BucketCol,
+      when(col(BucketCol).isin(fold.toSeq: _*), col(BucketCol)).otherwise(lit(SegmentBucket)))
 
     val declared = declaredSchema(manifest)
     val next = manifest.version + 1
     val gen = ManifestCommit.newGeneration(next)
     val genPath = new Path(table, gen)
     declared.fold(merged)(d => toPhysical(merged, d, physMap(manifest)))
-      .write.mode(SaveMode.Overwrite)
+      .write.mode(SaveMode.Overwrite).option(NoSuccessMarker, "false")
       .partitionBy(BucketCol).parquet(genPath.toString)
     val written = fs.listStatus(genPath).map(_.getPath.getName).toSet
-    val updated = touched.collect { case b if written(s"$BucketCol=$b") =>
-      (if (fold(b) || segs(b).isEmpty) s"dir.$b" else s"dir.$b+$next") ->
-        s"$gen/$BucketCol=$b"
-    }
+    def leaf(b: Int) = Option.when(written(s"$BucketCol=$b"))(s"$gen/$BucketCol=$b")
+    val updated = fold.flatMap(b => leaf(b).map(s"dir.$b" -> _)) ++
+      leaf(SegmentBucket).map(s"dir.+$next" -> _)
     val carried = manifest.entries.filter { case (k, _) =>
-      k != HwmKey && !(k.startsWith("dir.") && bucketOf(k.stripPrefix("dir.")).exists(fold))
+      val d = k.stripPrefix("dir.")
+      k != HwmKey && !(k.startsWith("dir.") &&
+        (bucketOf(d).exists(fold) || !plain && isSegment(d)))
     }
     val prevHwm = manifest.entries.get(HwmKey).map(_.toLong).orElse {
       if (manifest.dirs.isEmpty) Some(Long.MinValue)
@@ -848,7 +851,8 @@ object ParquetMergeSink {
     }
     val hwm = staged.versions.flatMap(v => prevHwm.map(h => v.max.fold(h)(math.max(h, _))))
     graft.StrategyLog.record("merge_commit", if (append) "append" else "merge",
-      "table" -> table, "touched" -> touched.size, "folded" -> fold.size,
+      "table" -> table, "touched" -> staged.touched.size, "folded" -> fold.size,
+      "read" -> readDirs.size, "drain" -> drain,
       "hwm" -> manifest.entries.getOrElse(HwmKey, "none"),
       "min_version" -> staged.versions.flatMap(_.min).getOrElse("none"))
     // Stamp the declared schema (or, first time, the batch-derived one):
@@ -872,9 +876,11 @@ object ParquetMergeSink {
 
   /** Latest-wins upsert of `batch` into the table at `path`; returns the
     * number of batch rows staged (0 = an empty batch, which changes
-    * nothing and creates no table). It appends when the version is a
-    * merge key and the batch's smallest version is above `hwm`, else it
-    * merges; [[graft.StrategyLog]] records which (`merge_commit`).
+    * nothing and creates no table). It appends when no committed row can
+    * share a key with the batch — the path holds no data yet, or the
+    * version is a merge key and the batch's smallest version is above
+    * `hwm` — else it merges; [[graft.StrategyLog]] records which
+    * (`merge_commit`).
     *
     * Emptiness is only known once the staging job has run, so the
     * batch's shape is checked first: an EMPTY batch whose columns do not
@@ -900,12 +906,13 @@ object ParquetMergeSink {
       // against a nonexistent path leaves the filesystem untouched.
       if (staged.rows > 0) {
         // Past `hwm` every key is new (the version is one of them), so the
-        // batch appends and only the buckets it folds are read back. Either
-        // way the rows read back and the batch resolve latest-wins in one
-        // shuffle, which also leaves a folded bucket's rows in few files.
+        // batch appends and reads back only what a concatenation or a
+        // drain needs. Either way the rows read back and the batch resolve
+        // latest-wins in one shuffle, which also leaves the written rows
+        // in few files.
         val hwm = staged.committed.flatMap(_.entries.get(HwmKey)).map(_.toLong)
-        val append = versionKeyed(keys, version) && staged.versions.exists(v =>
-          v.nulls == 0 && v.min.exists(lo => hwm.exists(lo > _)))
+        val append = staged.noData || versionKeyed(keys, version) &&
+          staged.versions.exists(v => v.nulls == 0 && v.min.exists(lo => hwm.exists(lo > _)))
         commitBuckets(fs, table, staged, keys, version, append) { current =>
           val batchB = staged.frame.withColumn(PrefCol, lit(1)) // wins ties
           Upsert.latestWins(
@@ -972,8 +979,9 @@ object ParquetMergeSink {
     * A bucket whose rows are ALL deleted drops out of the manifest
     * entirely (its entry is removed, not carried).
     *
-    * Scale shape is [[merge]]'s: cost O(batch + touched buckets), never
-    * O(table); untouched bucket entries carry forward byte-identical.
+    * Scale shape is [[merge]]'s merge path: cost O(batch + touched buckets
+    * + segments) until a drain; untouched bucket entries carry forward
+    * byte-identical.
     * As in [[merge]], an empty source is refused when its types do not
     * fit the existing table's, and is a no-op otherwise.
     */
@@ -984,21 +992,15 @@ object ParquetMergeSink {
     val table = new Path(path)
     val fs = fsFor(spark, table)
     guardReadable(fs, table)
-    // The table's schema BEFORE this commit, from the manifest staging
-    // reads: the declared one, or the data schema of a legacy table that
-    // carries no stamp. The action projection null-fills declared columns
-    // the source predates (a CDC writer that has not learned a post-ALTER
-    // column yet).
+    // The table's schema BEFORE this commit (declared, or a legacy
+    // table's data schema); the action projection null-fills declared
+    // columns the source predates.
     var tableSchema = Option.empty[org.apache.spark.sql.types.StructType]
-    // table columns BEFORE this commit: align the stored projection.
-    // On the CREATE path there is no existing schema to project onto, so
-    // columns referenced only by the delete predicate (a CDC op flag)
-    // would otherwise be adopted INTO the new table's schema — drifting
-    // it from what merge-into-existing would store. Default: drop
-    // deleteWhen's referenced columns unless they are keys/version; a
-    // caller whose predicate reads genuine data columns passes
-    // `targetCols` explicitly (Delta's target-schema declaration).
-    // lazy: an empty batch returns without validating targetCols
+    // The stored columns. On the CREATE path, columns only the delete
+    // predicate reads (a CDC op flag) are dropped unless they are keys or
+    // the version, so the schema matches what merge-into-existing stores;
+    // `targetCols` declares it explicitly. Lazy: an empty batch returns
+    // without validating targetCols.
     lazy val tableCols: Seq[String] = tableSchema
       .map(_.fieldNames.toSeq)
       .orElse(Some(targetCols).filter(_.nonEmpty).map { tc =>
@@ -1021,16 +1023,10 @@ object ParquetMergeSink {
         source.columns.toSeq.filterNot(c =>
           delRefs.contains(c) && !keys.contains(c) && c != version)
       }
-    // Same front door as merge(): the source must actually carry the
-    // key/version columns (never null-fill them), must not carry
-    // case-duplicate names the by-name projection would silently
-    // collapse, and overlapping columns take the DECLARED types before
-    // anything hashes or stores them: bucket routing hashes the typed key
-    // value, so an un-cast narrower key (an old-shape writer after ALTER
-    // COLUMN TYPE — or a writer that simply sends int where the table
-    // declares long) would route to the wrong bucket and silently
-    // duplicate the key across buckets. Source-only columns (the CDC op
-    // flag) pass through untouched.
+    // Same front door as merge(): keys/version present, no case
+    // duplicates, and overlapping columns take the DECLARED types before
+    // anything hashes them (an un-cast narrower key would route to the
+    // wrong bucket). Source-only columns (the CDC op flag) pass through.
     val staged = stage(fs, table, keys, version, nBuckets) { known =>
       tableSchema = known.flatMap(m => declaredSchema(m).orElse(
         Option.when(m.dirs.nonEmpty)(

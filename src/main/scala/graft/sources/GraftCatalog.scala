@@ -127,7 +127,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog {
     }
     val dataEntries = m.dirs.filter { case (k, _) => k != "deletes" }
     val unsupported = dataEntries.keys.filterNot(k =>
-      k == "table" || graft.sinks.ParquetMergeSink.bucketOf(k).isDefined)
+      k == "table" || graft.sinks.ParquetMergeSink.isSinkKey(k))
     require(unsupported.isEmpty,
       s"$p is partition-managed (${unsupported.take(3).mkString(", ")}…): " +
         "read it via TableMaintenance.readPartitioned — the catalog serves " +

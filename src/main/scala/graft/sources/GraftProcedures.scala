@@ -90,9 +90,9 @@ private[sources] object GraftProcedures {
   private def param(name: String, dt: DataType, default: String): ProcedureParameter =
     ProcedureParameter.in(name, dt).defaultValue(default).build()
 
-  /** True when `m` holds merge-sink bucket entries (base or segment). */
+  /** True when `m` holds merge-sink data entries (base or segment). */
   private def isBucketLayout(m: ManifestCommit.Manifest): Boolean =
-    m.dirs.keys.exists(ParquetMergeSink.bucketOf(_).isDefined)
+    m.dirs.keys.exists(ParquetMergeSink.isSinkKey)
 
   /** table-name argument → its managed root path (must exist). */
   private def tableRoot(root: Path, table: String): Path = {

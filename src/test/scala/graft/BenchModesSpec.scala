@@ -44,6 +44,23 @@ class BenchModesSpec extends SparkSpec {
     assert(!out.contains("explain failed"), out)
   }
 
+  test("--plans renders centroids, codebooks and partition functions by " +
+      "content and name, so two renderings in one JVM are equal") {
+    val names = Seq("sim_ivf_topk", "sim_pq_topk", "sim_ivfpq_topk") ++
+      SparkEntry.queries.keys.filter(_.startsWith("mm_")).toSeq.sorted
+    // expression, exchange and lambda-variable ids are the tokens that move
+    def render() = stdoutOf(Bench.plans(spark, sfDir, names))
+      .replaceAll("#\\d+", "#N").replaceAll("plan_id=\\d+", "plan_id=N")
+      .replaceAll("(lambda [a-z]+)_\\d+", "$1_N").split("\n").toSeq
+    val first = render()
+    assert(first.exists(_.contains("graft_nearest_cells(embedding#N, centroids[")) &&
+      first.exists(_.contains("graft_pq_encode(embedding#N, codebooks[")))
+    assert(!first.exists(l => l.contains("[[D@") || l.contains("$Lambda")), first)
+    assert(!first.exists(_.contains("explain failed")), first)
+    val diff = first.zipAll(render(), "", "").filter { case (a, b) => a != b }
+    assert(diff.isEmpty, diff.take(5))
+  }
+
   test("--skew prints a per-query wall line") {
     val out = stdoutOf(Bench.skew(spark, sfDir, Seq("q05_region_revenue")))
     assert(out.contains("== q05_region_revenue wall="), out)

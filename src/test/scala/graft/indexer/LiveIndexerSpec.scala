@@ -158,6 +158,19 @@ class LiveIndexerSpec extends SparkSpec {
 
     LiveIndexer.start(spark, landing, s"$base/clean", s"$base/ckpt-clean",
       maxHeightsPerTrigger = Some(2L)).awaitTermination()
+    // layout: each of the clean run's three triggers appended ONE segment
+    // of one file to each append table; last_commits drained into buckets
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    tableNames.foreach { t =>
+      val root = new org.apache.hadoop.fs.Path(s"$base/clean/$t")
+      val dirs = graft.sinks.ManifestCommit.latest(fs, root).get.dirs
+      if (t == "last_commits") assert(!dirs.keys.exists(_.startsWith("+")), s"$t: $dirs")
+      else {
+        assert(dirs.size === 3 && dirs.keys.forall(_.startsWith("+")), s"$t: $dirs")
+        dirs.values.foreach(rel => assert(fs.listStatus(new org.apache.hadoop.fs.Path(root, rel))
+          .count(_.getPath.getName.endsWith(".parquet")) === 1, s"$t: $rel"))
+      }
+    }
     import spark.implicits._
     val keysOf = LiveIndexer.tablesOf(
       Seq((1L, envelope(1))).toDF("height", "block_json"),

@@ -55,13 +55,16 @@ class ParquetMergeSinkSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-sink-part").toString + "/t"
     // enough keys that all 4 buckets are populated
     val b1 = (1L to 40L).map(k => (k, s"v$k", 10L)).toDF("k", "v", "ver")
+    // the first batch appends one segment; its replay drains it into buckets
+    ParquetMergeSink.merge(b1, dir, Seq("k"), "ver", nBuckets = 4)
     ParquetMergeSink.merge(b1, dir, Seq("k"), "ver", nBuckets = 4)
 
     def fileState(): Map[String, (Long, Long)] = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
       walk(new java.io.File(dir))
-        .filter(_.getName.endsWith(".parquet"))
+        .filter(f => f.getName.endsWith(".parquet") &&
+          !f.getParentFile.getName.endsWith("=-1")) // the drained segment
         .map(f => f.getAbsolutePath -> (f.length(), f.lastModified()))
         .toMap
     }
@@ -93,10 +96,12 @@ class ParquetMergeSinkSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-sink-atomic").toString + "/t"
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ParquetMergeSink.merge(
+    // the first batch appends one segment; its replay drains it into buckets
+    (1 to 2).foreach(_ => ParquetMergeSink.merge(
       (1L to 40L).map(k => (k, s"v$k", 1L)).toDF("k", "v", "ver"),
-      dir, Seq("k"), "ver", nBuckets = 4)
+      dir, Seq("k"), "ver", nBuckets = 4))
     val v1 = ManifestCommit.latest(fs, new org.apache.hadoop.fs.Path(dir)).get
+    assert(v1.dirs.keySet === Set("0", "1", "2", "3"), v1.dirs)
     // second merge touches ALL buckets; exactly ONE new manifest version
     // appears, and every touched bucket's entry moves in that single flip
     ParquetMergeSink.merge(
@@ -695,7 +700,7 @@ class ParquetMergeSinkSpec extends SparkSpec {
     graft.StrategyLog.lastChoice("merge_commit").getOrElse("")
 
   test("a batch past hwm appends; replays, update-wins, nulls, strings and " +
-      "tables without hwm merge; the (K+1)-th segment folds") {
+      "tables without hwm merge; a new path appends its first batch") {
     import org.apache.spark.sql.functions.{col, lit}
     val base = java.nio.file.Files.createTempDirectory("graft-append").toString
     val root = new org.apache.hadoop.fs.Path(base)
@@ -705,11 +710,13 @@ class ParquetMergeSinkSpec extends SparkSpec {
     def rows(t: String) = ParquetMergeSink.read(spark, s"$base/$t").collect()
       .map(r => (r.getAs[Long]("h"), r.getAs[Long]("k"), r.getAs[String]("v"))).toSet
 
+    // a brand-new path has no rows to conflict with: its first batch appends
     val t = s"$base/t"
     ParquetMergeSink.merge(heightRows(1, 1L to 20L), t, Seq("h", "k"), "h", nBuckets = 4)
-    assert(choice().startsWith("merge "), choice())
+    assert(choice().startsWith("append ") && choice().contains("read=0"), choice())
     assert(manifest("t").entries.get(ParquetMergeSink.HwmKey) === Some("1"))
     val v1 = manifest("t")
+    assert(v1.dirs.keySet === Set(s"+${v1.version}"), v1.dirs)
     // duplicate keys inside an appended batch still resolve latest-wins
     val dup = heightRows(2, 1L to 20L).unionByName(
       Seq((2L, 3L, "v2-3-dup")).toDF("h", "k", "v"))
@@ -717,18 +724,19 @@ class ParquetMergeSinkSpec extends SparkSpec {
     assert(choice().startsWith("append "), choice())
     assert(choice().contains(s"table=$t"), choice())
     assert(choice().contains("hwm=1") && choice().contains("min_version=2") &&
-      choice().contains("folded=0"), choice())
+      choice().contains("folded=0") && choice().contains("read=0"), choice())
     val v2 = manifest("t")
     assert(v2.entries.get(ParquetMergeSink.HwmKey) === Some("2"))
-    // every base entry carries forward; each touched bucket gains a segment
+    // an append carries every entry forward and adds ONE segment entry
     assert(v1.dirs.forall { case (k, rel) => v2.dirs.get(k).contains(rel) })
-    val segs = v2.dirs.keySet -- v1.dirs.keySet
-    assert(segs.nonEmpty && segs.forall(_.endsWith(s"+${v2.version}")), v2.dirs)
+    assert(v2.dirs.keySet -- v1.dirs.keySet === Set(s"+${v2.version}"), v2.dirs)
     assert(rows("t").size === 40)
 
-    // a replay at hwm merges, folding each touched bucket into one dir
+    // a replay at hwm merges; with no base to outweigh them the segments
+    // drain into the buckets
     ParquetMergeSink.merge(heightRows(2, 1L to 20L), t, Seq("h", "k"), "h")
-    assert(choice().startsWith("merge ") && choice().contains("hwm=2"), choice())
+    assert(choice().startsWith("merge ") && choice().contains("hwm=2") &&
+      choice().contains("drain=true"), choice())
     assert(manifest("t").dirs.keySet.forall(!_.contains("+")), manifest("t").dirs)
     assert(rows("t").size === 40)
 
@@ -738,11 +746,12 @@ class ParquetMergeSinkSpec extends SparkSpec {
     assert(choice().startsWith("merge "), choice())
     assert(manifest("t").entries.get(ParquetMergeSink.HwmKey) === Some("5"))
 
-    // update-wins (the version is not a key) always merges
+    // update-wins (the version is not a key) merges once it holds rows
     val lc = s"$base/lc"
     ParquetMergeSink.merge(heightRows(1, 1L to 4L), lc, Seq("k"), "h")
     ParquetMergeSink.merge(heightRows(9, 1L to 4L), lc, Seq("k"), "h")
     assert(choice().startsWith("merge ") && choice().contains("hwm=1"), choice())
+    assert(rows("lc") === (1L to 4L).map(k => (9L, k, s"v9-$k")).toSet)
 
     // a string version merges and records no hwm
     val str = s"$base/str"
@@ -763,31 +772,135 @@ class ParquetMergeSinkSpec extends SparkSpec {
     ParquetMergeSink.merge(heightRows(9, 1L to 8L), old, Seq("h", "k"), "h")
     assert(choice().startsWith("append "), choice())
     assert(rows("old").size === 24)
+    assert(ParquetMergeSink.read(spark, old).filter(col("h") === lit(9L)).count() === 8L)
+  }
 
-    // fold rule: 16 buckets hold at most 32 dirs, 2 per bucket; 256 keys
-    // touch every bucket
+  test("an append writes one segment of one file; at 32 dirs appends " +
+      "concatenate the segments, and outgrown segments drain") {
+    val base = java.nio.file.Files.createTempDirectory("graft-bound").toString
     val wide = s"$base/wide"
-    val wideKeys = 1L to 256L
-    def wideDirs() = manifest("wide").dirs
-    ParquetMergeSink.merge(heightRows(1, wideKeys), wide, Seq("h", "k"), "h")
-    assert(ParquetMergeSink.maxSegments(16) === 2)
-    assert(wideDirs().size === 16, wideDirs())
-    ParquetMergeSink.merge(heightRows(2, wideKeys), wide, Seq("h", "k"), "h")
-    assert(choice().startsWith("append ") && choice().contains("folded=0"), choice())
-    assert(wideDirs().size === 32, wideDirs())
-    ParquetMergeSink.merge(heightRows(3, wideKeys), wide, Seq("h", "k"), "h")
-    assert(choice().startsWith("append ") && choice().contains("touched=16") &&
-      choice().contains("folded=16"), choice())
-    assert(wideDirs().keySet === (0 until 16).map(_.toString).toSet, wideDirs())
-    // a folded bucket is one file
-    wideDirs().values.foreach { rel =>
-      val files = fs.listStatus(new org.apache.hadoop.fs.Path(wide, rel))
-        .count(_.getPath.getName.endsWith(".parquet"))
-      assert(files === 1, rel)
+    val table = new org.apache.hadoop.fs.Path(wide)
+    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def m() = ManifestCommit.latest(fs, table).get
+    def files(rel: String) = fs.listStatus(new org.apache.hadoop.fs.Path(table, rel))
+      .count(_.getPath.getName.endsWith(".parquet"))
+    def merge(h: Long, ks: Seq[Long]) =
+      ParquetMergeSink.merge(heightRows(h, ks), wide, Seq("h", "k"), "h")
+    val expected = scala.collection.mutable.Set.empty[(Long, Long)]
+    def check(): Unit = {
+      val got = ParquetMergeSink.read(spark, wide).collect()
+        .map(r => (r.getAs[Long]("h"), r.getAs[Long]("k"))).toSeq
+      assert(got.size === got.toSet.size, "no key may repeat")
+      assert(got.toSet === expected.toSet)
     }
-    val all = rows("wide")
-    assert(all.size === 3 * wideKeys.size)
-    assert(all.map(r => (r._1, r._2)).size === all.size, "no key may repeat")
-    assert(ParquetMergeSink.read(spark, wide).filter(col("h") === lit(3L)).count() === 256L)
+
+    // 4,096 keys touch all 16 buckets: still one entry and one file
+    merge(1, 1L to 4096L); expected ++= (1L to 4096L).map((1L, _))
+    val seg = m().dirs(s"+${m().version}")
+    assert(seg.split("/").last === "__bucket=-1", seg)
+    assert(files(seg) === 1, seg)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(table, s"${seg.split("/").head}/_SUCCESS")),
+      "a generation write leaves no _SUCCESS marker")
+    check()
+    // a replay drains the segment into 16 base dirs of one file each
+    merge(1, Seq(1L))
+    assert(choice().contains("drain=true") && choice().contains("folded=16"), choice())
+    val bases = m().dirs
+    assert(bases.keySet === (0 until 16).map(_.toString).toSet, bases)
+    bases.values.foreach(rel => assert(files(rel) === 1, rel))
+
+    // 16 small appends reach the bound without reading a committed dir
+    (2L to 17L).foreach { h =>
+      merge(h, Seq(h)); expected += ((h, h))
+      assert(choice().startsWith("append ") && choice().contains("read=0"), choice())
+    }
+    assert(m().dirs.size === 32)
+    // at the bound an append concatenates the 16 segments and its batch:
+    // it reads no base dir, and every base entry carries forward
+    merge(18, Seq(18L)); expected += ((18L, 18L))
+    assert(choice().startsWith("append ") && choice().contains("read=16") &&
+      choice().contains("folded=0") && choice().contains("drain=false"), choice())
+    assert(m().dirs.size === 17 && bases.forall { case (k, rel) => m().dirs(k) == rel },
+      m().dirs)
+    check()
+
+    // a merge-path commit reads the touched bucket and the segment, folds
+    // the bucket's segment rows into it and keeps the rest as one segment
+    merge(18, Seq(18L, 2L))
+    def field(name: String) = choice().split(" ").collectFirst {
+      case kv if kv.startsWith(s"$name=") => kv.stripPrefix(s"$name=").toInt
+    }.get
+    assert(choice().startsWith("merge ") && choice().contains("drain=false"), choice())
+    assert(field("read") === field("touched") + 1, choice())
+    expected += ((18L, 2L))
+    assert(m().dirs.keySet.count(_.startsWith("+")) === 1, m().dirs)
+    check()
+
+    // once the segments outweigh an average bucket, the next commit that
+    // reads them drains: 16 base dirs and no segment
+    merge(19, 1L to 2048L); expected ++= (1L to 2048L).map((19L, _))
+    assert(choice().startsWith("append ") && choice().contains("read=0"), choice())
+    merge(19, Seq(5L))
+    assert(choice().contains("drain=true"), choice())
+    assert(m().dirs.keySet === (0 until 16).map(_.toString).toSet, m().dirs)
+    check()
+  }
+
+  test("merge-path commits over segments match a latest-wins model; " +
+      "mergeActions folds them too") {
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("graft-seg-model").toString + "/t"
+    // model: key (h, k) -> (v, ver); the incoming row wins version ties
+    var model = Map.empty[(Long, Long), String]
+    def upsert(rows: Seq[(Long, Long, String)]): Unit = {
+      ParquetMergeSink.merge(rows.toDF("h", "k", "v"), dir, Seq("h", "k"), "h", nBuckets = 4)
+      model ++= rows.map { case (h, k, v) => (h, k) -> v }
+    }
+    def state() = ParquetMergeSink.read(spark, dir).collect()
+      .map(r => (r.getAs[Long]("h"), r.getAs[Long]("k")) -> r.getAs[String]("v")).toMap
+    upsert((1L to 6L).map(k => (1L, k, s"a$k")))   // new path: a segment
+    upsert(Seq((1L, 2L, "b2"), (1L, 9L, "b9")))     // replay: drains
+    upsert((1L to 6L).map(k => (2L, k, s"c$k")))   // appends
+    upsert((1L to 3L).map(k => (3L, k, s"d$k")))
+    assert(graft.StrategyLog.lastChoice("merge_commit").exists(_.startsWith("append ")))
+    upsert(Seq((2L, 4L, "e4"), (3L, 1L, "e1"))) // replays over two segments
+    assert(state() === model)
+    // mergeActions over the segments: delete one row, update one, insert one
+    ParquetMergeSink.merge(heightRows(4, Seq(1L, 2L)), dir, Seq("h", "k"), "h")
+    model ++= Seq((4L, 1L) -> "v4-1", (4L, 2L) -> "v4-2")
+    ParquetMergeSink.mergeActions(
+      Seq((4L, 1L, "x", true), (4L, 2L, "upd", false), (5L, 1L, "new", false))
+        .toDF("h", "k", "v", "del"), dir, Seq("h", "k"), "h", col("del"))
+    model = model - ((4L, 1L)) + ((4L, 2L) -> "upd") + ((5L, 1L) -> "new")
+    assert(state() === model)
+  }
+
+  test("a manifest of per-bucket segments (dir.<b>+<v>) still reads, " +
+      "appends and merges") {
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    val dir = java.nio.file.Files.createTempDirectory("graft-seg-legacy").toString + "/t"
+    val table = new org.apache.hadoop.fs.Path(dir)
+    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    ParquetMergeSink.merge(heightRows(1, 1L to 20L), dir, Seq("h", "k"), "h", nBuckets = 4)
+    ParquetMergeSink.merge(heightRows(1, Seq(1L)), dir, Seq("h", "k"), "h") // drains
+    val m = ManifestCommit.latest(fs, table).get
+    // hand-write the earlier layout's append: one dir per touched bucket
+    val gen = ManifestCommit.newGeneration(m.version + 1)
+    heightRows(2, 1L to 20L)
+      .withColumn("__bucket", pmod(xxhash64(col("h"), col("k")), lit(4)).cast("int"))
+      .write.partitionBy("__bucket").parquet(new org.apache.hadoop.fs.Path(table, gen).toString)
+    val segs = (0 until 4).map(b => s"dir.$b+${m.version + 1}" -> s"$gen/__bucket=$b")
+    ManifestCommit.commit(fs, table, m.entries - "txid" ++ segs + ("hwm" -> "2"))
+    def rows() = ParquetMergeSink.read(spark, dir).collect()
+      .map(r => (r.getAs[Long]("h"), r.getAs[Long]("k"), r.getAs[String]("v"))).toSet
+    val expected = (1L to 2L).flatMap(h => (1L to 20L).map(k => (h, k, s"v$h-$k"))).toSet
+    assert(rows() === expected)
+    ParquetMergeSink.merge(heightRows(3, Seq(1L)), dir, Seq("h", "k"), "h")
+    assert(graft.StrategyLog.lastChoice("merge_commit").exists(_.startsWith("append ")))
+    // a replay folds the touched buckets' old segments into their bases
+    ParquetMergeSink.merge(heightRows(2, 1L to 20L), dir, Seq("h", "k"), "h")
+    assert(rows() === expected + ((3L, 1L, "v3-1")))
+    assert(!ManifestCommit.latest(fs, table).get.dirs.keys.exists(k =>
+      k.contains("+") && !k.startsWith("+")))
   }
 }

@@ -311,19 +311,24 @@ class GraftProceduresSpec extends SparkSpec {
     assert(e2.getMessage.contains("not a graft export archive"), e2.getMessage)
   }
 
-  test("segmented merge-sink buckets serve SQL, VERSION AS OF, vacuum, " +
-      "export/restore and ADD COLUMN") {
+  test("a table of segments only serves SQL, VERSION AS OF, history, " +
+      "vacuum, export/restore and ADD COLUMN; compact and zorder refuse it") {
     val dir = s"$root/seg"
     def batch(h: Long) = (1L to 12L).map(k => (h, k, s"v$h-$k")).toDF("h", "k", "v")
-    ParquetMergeSink.merge(batch(1), dir, Seq("h", "k"), "h", nBuckets = 4)
-    (2L to 4L).foreach(h => ParquetMergeSink.merge(batch(h), dir, Seq("h", "k"), "h"))
+    (1L to 4L).foreach(h => ParquetMergeSink.merge(batch(h), dir, Seq("h", "k"), "h", nBuckets = 4))
     val head = ManifestCommit.latest(fs, new Path(dir)).get
-    assert(head.dirs.keys.exists(_.contains("+")), s"no appended segment: ${head.dirs}")
+    assert(head.dirs.size === 4 && head.dirs.keys.forall(_.startsWith("+")),
+      s"not a table of segments only: ${head.dirs}")
     def count(sql: String) = spark.sql(sql).head.getLong(0)
     assert(count("SELECT count(*) FROM graftp.seg") === 48L)
     assert(count(s"SELECT count(*) FROM graftp.seg VERSION AS OF ${head.version - 1}") === 36L)
     assert(spark.sql("CALL graftp.system.history(table => 'seg')").collect()
       .forall(_.getString(2) === "merge-sink"))
+    Seq("CALL graftp.system.compact(table => 'seg')",
+        "CALL graftp.system.zorder(table => 'seg', keys => 'k,h')").foreach { q =>
+      val e = intercept[Exception](spark.sql(q).collect())
+      assert(e.getMessage.contains("merge-sink"), e.getMessage)
+    }
 
     // keep=1 drops the previous manifest; the segments the head names stay
     spark.sql("CALL graftp.system.vacuum(table => 'seg', keep => 1)").collect()
@@ -346,5 +351,19 @@ class GraftProceduresSpec extends SparkSpec {
     assert(graft.StrategyLog.lastChoice("merge_commit").exists(_.startsWith("append ")))
     assert(count("SELECT count(*) FROM graftp.seg WHERE note IS NULL") === 48L)
     assert(count("SELECT count(*) FROM graftp.seg WHERE note = 'new'") === 12L)
+
+    // SQL UPDATE and MERGE take the merge path over the segments
+    spark.sql("UPDATE graftp.seg SET v = 'upd' WHERE h = 2 AND k = 3")
+    Seq((5L, 1L, "m", "x", "d"), (6L, 1L, "ins", "x", "u"))
+      .toDF("h", "k", "v", "note", "op")
+      .createOrReplaceTempView("segsrc")
+    spark.sql("""MERGE INTO graftp.seg AS t USING segsrc AS s
+      ON t.h = s.h AND t.k = s.k
+      WHEN MATCHED AND s.op = 'd' THEN DELETE
+      WHEN MATCHED THEN UPDATE SET *
+      WHEN NOT MATCHED AND s.op <> 'd' THEN INSERT *""")
+    assert(count("SELECT count(*) FROM graftp.seg") === 60L)
+    assert(spark.sql("SELECT v FROM graftp.seg WHERE h = 2 AND k = 3").head.getString(0) === "upd")
+    assert(count("SELECT count(*) FROM graftp.seg WHERE h = 6") === 1L)
   }
 }

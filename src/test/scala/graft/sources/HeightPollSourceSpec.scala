@@ -226,6 +226,22 @@ class HeightPollSourceSpec extends SparkSpec {
       s"the landing directory was listed ${CountingDirClient.polls.get()} times")
   }
 
+  test("a DirHeightClient's tip advances as heights land; a gap stops the probe") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-poll-probe").toString
+    val client = new DirHeightClient(dir)
+    assert(client.latestHeight() === 0L, "an empty landing dir has no tip")
+    writeHeights(dir, 5 to 7)
+    assert(client.latestHeight() === 7L, "the first tip comes from one listing")
+    assert(client.latestHeight() === 7L)
+    writeHeights(dir, 8 to 9)
+    assert(client.latestHeight() === 9L)
+    // 10 has not landed: 11 stays past the gap until it does
+    writeHeights(dir, 11 to 11)
+    assert(client.latestHeight() === 9L)
+    writeHeights(dir, 10 to 10)
+    assert(client.latestHeight() === 11L)
+  }
+
   test("non-positive maxHeightsPerTrigger or heightsPerPartition is refused before any batch") {
     val dir = java.nio.file.Files.createTempDirectory("graft-poll-bad").toString
     val base = java.nio.file.Files.createTempDirectory("graft-poll-bad-out").toString
