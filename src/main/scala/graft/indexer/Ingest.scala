@@ -1,40 +1,67 @@
 package graft.indexer
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 /** Raw chain JSON → normalized frames.
   *
   * The reference's per-height worker loop (main.go:255-312: fetch block,
   * write block_info, decode txs, insert messages, fetch block_results,
-  * insert events) becomes three declarative transforms over a DataFrame of
+  * insert events) becomes declarative transforms over a DataFrame of
   * `(height, raw_json)` rows. At scale the input is a partitioned landing
   * zone of raw block dumps; each transform is a single pass with native
   * `from_json` — no per-row RPC, no driver-side loops.
+  *
+  * Each table has ONE builder over parsed struct columns (`block`,
+  * `block_results`): [[blockInfoOf]], [[txsOf]], [[eventsOf]]. The
+  * JSON-string entry points ([[blockInfo]], [[txsFromBlocks]],
+  * [[events]]) are one `from_json` plus that builder, and the live path
+  * parses each landed envelope once ([[parseEnvelope]]) and runs the same
+  * builders over the parsed rows.
   */
 object Ingest {
 
+  /** Live landing envelopes `(height, block_json)` → `(height, block,
+    * block_results)`: ONE `from_json` per row, whether the document is an
+    * envelope `{"block":{…},"block_results":{…}}` or a plain block
+    * document (its top-level `header` and `data` become `block`, and its
+    * `block_results` is null: zero events). A malformed document parses to
+    * an all-null `block`, as [[blockInfo]] parses it.
+    */
+  def parseEnvelope(raw: DataFrame): DataFrame =
+    raw.select(col("height"), from_json(col("block_json"), Model.envelopeSchema).as("e"))
+      .select(
+        col("height"),
+        coalesce(col("e.block"),
+          struct(col("e.header").as("header"), col("e.data").as("data"))).as("block"),
+        col("e.block_results").as("block_results"))
+
+  private def parseBlocks(blocks: DataFrame): DataFrame =
+    blocks.select(col("height"), from_json(col("block_json"), Model.blockSchema).as("block"))
+
   /** Blocks: `(height, block_json)` → block_info (db.go:178-201 columns). */
-  def blockInfo(blocks: DataFrame): DataFrame = {
-    val b = from_json(col("block_json"), Model.blockSchema).as("q")
-    blocks.select(col("height"), b).select(
+  def blockInfo(blocks: DataFrame): DataFrame = blockInfoOf(parseBlocks(blocks))
+
+  /** [[blockInfo]] over a parsed `block` struct column. */
+  def blockInfoOf(parsed: DataFrame): DataFrame =
+    parsed.select(
       col("height"),
-      col("q.header.last_block_id.hash").as("block_hash"),
-      col("q.header.last_block_id.part_set_header.total").as("last_block_total_parts"),
-      col("q.header.last_block_id.part_set_header.hash").as("last_block_part_set_header_hash"),
-      col("q.header.version.block").as("block_version"),
-      col("q.header.chain_id").as("chain_id"),
-      to_timestamp(col("q.header.time")).as("block_time"),
-      col("q.header.last_commit_hash").as("last_commit_hash"),
-      col("q.header.data_hash").as("data_hash"),
-      col("q.header.validators_hash").as("validators_hash"),
-      col("q.header.next_validators_hash").as("next_validators_hash"),
-      col("q.header.consensus_hash").as("consensus_hash"),
-      col("q.header.app_hash").as("app_hash"),
-      col("q.header.last_results_hash").as("last_results_hash"),
-      col("q.header.evidence_hash").as("evidence_hash"),
-      col("q.header.proposer_address").as("proposer_address"))
-  }
+      col("block.header.last_block_id.hash").as("block_hash"),
+      col("block.header.last_block_id.part_set_header.total").as("last_block_total_parts"),
+      col("block.header.last_block_id.part_set_header.hash").as("last_block_part_set_header_hash"),
+      col("block.header.version.block").as("block_version"),
+      col("block.header.chain_id").as("chain_id"),
+      to_timestamp(col("block.header.time")).as("block_time"),
+      col("block.header.last_commit_hash").as("last_commit_hash"),
+      col("block.header.data_hash").as("data_hash"),
+      col("block.header.validators_hash").as("validators_hash"),
+      col("block.header.next_validators_hash").as("next_validators_hash"),
+      col("block.header.consensus_hash").as("consensus_hash"),
+      col("block.header.app_hash").as("app_hash"),
+      col("block.header.last_results_hash").as("last_results_hash"),
+      col("block.header.evidence_hash").as("evidence_hash"),
+      col("block.header.proposer_address").as("proposer_address"))
 
   /** Block JSON → `(height, tx_json)`: explodes `data.txs`, closing the
     * block→tx→message lineage without a separate tx input frame.
@@ -47,10 +74,11 @@ object Ingest {
     * by [[messages]] (`try_variant_get` yields no messages for them) —
     * they never fail the pipeline.
     */
-  def txsFromBlocks(blocks: DataFrame): DataFrame =
-    blocks
-      .select(col("height"), from_json(col("block_json"), Model.blockSchema).as("q"))
-      .select(col("height"), explode(col("q.data.txs")).as("tx_json"))
+  def txsFromBlocks(blocks: DataFrame): DataFrame = txsOf(parseBlocks(blocks))
+
+  /** [[txsFromBlocks]] over a parsed `block` struct column. */
+  def txsOf(parsed: DataFrame): DataFrame =
+    parsed.select(col("height"), explode(col("block.data.txs")).as("tx_json"))
 
   /** Full lineage: block JSON → exploded txs → one row per message. */
   def messagesFromBlocks(blocks: DataFrame): DataFrame =
@@ -136,23 +164,29 @@ object Ingest {
     * committing to a schema; per-type routers re-parse `data` with their
     * own schemas.
     */
-  def messages(txs: DataFrame): DataFrame = {
-    val msgs = txs.select(
+  def messages(txs: DataFrame): DataFrame =
+    txs.select(
       col("height"),
       // try_parse_json: a non-JSON entry (still-encoded base64, corrupt
-      // landing line) contributes zero messages instead of failing the scan
-      explode(try_variant_get(try_parse_json(col("tx_json")), "$.body.messages", "array<variant>"))
-        .as("m"))
-    msgs.select(
-      col("height"),
-      try_variant_get(col("m"), "$['@type']", "string").as("type"),
-      coalesce(
-        try_variant_get(col("m"), "$.creator", "string"),
-        try_variant_get(col("m"), "$.sender", "string"),
-        try_variant_get(col("m"), "$.from_address", "string")).as("sender"),
-      to_json(col("m")).as("data"),
-      xxhash64(to_json(col("m"))).as("hash"))
-  }
+      // landing line) contributes zero messages instead of failing the
+      // scan. Outer explode, then its synthetic null row dropped: an inner
+      // explode would get `size(...) > 0` inferred and pushed below it,
+      // parsing every tx twice (see Routers.zipScores).
+      posexplode_outer(try_variant_get(try_parse_json(col("tx_json")),
+        "$.body.messages", "array<variant>")).as(Seq("pos", "m")))
+      .filter(col("pos").isNotNull)
+      // `data` in its own projection: `hash` reuses it instead of
+      // serializing the message again
+      .select(col("height"), col("m"), to_json(col("m")).as("data"))
+      .select(
+        col("height"),
+        try_variant_get(col("m"), "$['@type']", "string").as("type"),
+        coalesce(
+          try_variant_get(col("m"), "$.creator", "string"),
+          try_variant_get(col("m"), "$.sender", "string"),
+          try_variant_get(col("m"), "$.from_address", "string")).as("sender"),
+        col("data"),
+        xxhash64(col("data")).as("hash"))
 
   /** Consensus params: `(params_json)` → one flattened row per snapshot
     * (process_consensus.go:10-30, db.go:203-214 columns; pub_key_types
@@ -183,23 +217,34 @@ object Ingest {
     * event, block-level and tx-level merged (process_events.go:119-145),
     * with attributes kept structured and the sender attribute lifted.
     */
-  def events(results: DataFrame): DataFrame = {
-    val r = results.select(
-      col("height"),
-      from_json(col("results_json"), Model.blockResultsSchema).as("br"))
-    val blockEvents = r.select(col("height"),
-      explode(col("br.finalize_block_events")).as("ev"))
-    val txEvents = r.select(col("height"),
-      explode(col("br.txs_results")).as("tx"))
-      .select(col("height"), explode(col("tx.events")).as("ev"))
-    val all = blockEvents.unionByName(txEvents)
+  def events(results: DataFrame): DataFrame =
+    eventsOf(results.select(col("height"),
+      from_json(col("results_json"), Model.blockResultsSchema).as("block_results")))
+
+  /** [[events]] over a parsed `block_results` struct column (null: no
+    * events). Block-level and tx-level events explode in ONE generator.
+    * Every list is made non-null first: `concat` and `flatten` return null
+    * when any input array is null, so one tx with null `events` would
+    * otherwise drop its siblings' events. The explode is outer with its
+    * synthetic null row dropped, so no `size(...) > 0` filter is inferred
+    * and pushed below it (see Routers.zipScores).
+    */
+  def eventsOf(parsed: DataFrame): DataFrame = {
+    val none = array().cast(ArrayType(Model.eventSchema))
+    val txEvents = flatten(transform(col("block_results.txs_results"),
+      tx => coalesce(tx.getField("events"), none)))
+    val all = concat(
+      coalesce(col("block_results.finalize_block_events"), none),
+      coalesce(txEvents, none))
     val attrsMap = map_from_entries(col("ev.attributes"))
-    all.select(
-      col("height"),
-      col("ev.type").as("type"),
-      element_at(split(col("ev.type"), "\\."), -1).as("base_type"),
-      col("ev.attributes").as("attributes"),
-      attrsMap.getItem("sender").as("sender"),
-      xxhash64(to_json(col("ev.attributes"))).as("hash"))
+    parsed.select(col("height"), posexplode_outer(all).as(Seq("pos", "ev")))
+      .filter(col("pos").isNotNull)
+      .select(
+        col("height"),
+        col("ev.type").as("type"),
+        element_at(split(col("ev.type"), "\\."), -1).as("base_type"),
+        col("ev.attributes").as("attributes"),
+        attrsMap.getItem("sender").as("sender"),
+        xxhash64(to_json(col("ev.attributes"))).as("hash"))
   }
 }

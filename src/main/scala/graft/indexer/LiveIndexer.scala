@@ -2,7 +2,6 @@ package graft.indexer
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.CodegenObjectFactoryMode
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -15,10 +14,11 @@ import graft.sinks.ParquetMergeSink
   * pieces:
   *
   *   HeightPollSource (offset = chain height, capped catch-up)
-  *     → envelope split (block + block_results per height — the two RPC
-  *       responses the reference fetches per height, landed as one doc)
-  *     → Ingest.blockInfo / txsFromBlocks → decodeTxs → messages
-  *     → Ingest.events → Routers (whitelist, scores, last-commits)
+  *     → envelope parse (block + block_results per height — the two RPC
+  *       responses the reference fetches per height, landed as one doc —
+  *       in one from_json, behind the batch's barrier)
+  *     → Ingest.blockInfoOf / txsOf → decodeTxs → messages
+  *     → Ingest.eventsOf → Routers (whitelist, scores, last-commits)
   *     → ParquetMergeSink per table (manifest-committed generations,
   *       latest-wins merge = ON CONFLICT semantics)
   *
@@ -41,42 +41,46 @@ object LiveIndexer {
     * table (db.go:1171-1175), everything else insert-ignore.
     */
   def tablesOf(raw: DataFrame, decoderClass: String)
+      : Seq[(String, DataFrame, Seq[String], String)] =
+    parsedTables(Ingest.parseEnvelope(raw), decoderClass)
+
+  /** [[tablesOf]] over [[Ingest.parseEnvelope]]'s rows: every table only
+    * projects and explodes the parsed `block` and `block_results` structs.
+    * `last_commits` carries every last-commit event unresolved
+    * ([[Routers.lastCommitRows]]): the sink's merge resolves latest-wins
+    * per key, as [[Routers.actorLastCommit]] would, without a shuffle of
+    * its own.
+    */
+  private def parsedTables(parsed: DataFrame, decoderClass: String)
       : Seq[(String, DataFrame, Seq[String], String)] = {
-    // Live landing stores both per-height RPC responses in one document
-    // {"block":{…},"block_results":{…}}; a plain block document (no
-    // envelope) still flows — with zero events.
-    val env = raw.select(
-      col("height"),
-      coalesce(get_json_object(col("block_json"), "$.block"),
-        col("block_json")).as("block_json"),
-      get_json_object(col("block_json"), "$.block_results").as("results_json"))
-    val blocks = env.select("height", "block_json")
-    val results = env.filter(col("results_json").isNotNull)
-      .select("height", "results_json")
-    val msgs = Ingest.messages(
-      Ingest.decodeTxs(Ingest.txsFromBlocks(blocks), decoderClass))
-    val evts = Ingest.events(results)
+    val msgs = Ingest.messages(Ingest.decodeTxs(Ingest.txsOf(parsed), decoderClass))
+    val evts = Ingest.eventsOf(parsed)
     Seq(
-      ("block_info", Ingest.blockInfo(blocks), Seq("height"), "height"),
+      ("block_info", Ingest.blockInfoOf(parsed), Seq("height"), "height"),
       ("messages", msgs, Seq("height", "hash"), "height"),
       ("events", Routers.routeEvents(evts),
         Seq("height", "type", "hash"), "height"),
       ("scores", Routers.scores(evts),
         Seq("height_tx", "topic_id", "type", "address"), "height_tx"),
-      ("last_commits", Routers.actorLastCommit(evts),
+      ("last_commits", Routers.lastCommitRows(evts),
         Seq("topic_id", "is_worker"), "height_tx"))
   }
 
-  /** Merge one micro-batch into every table under `tableRoot`. The raw
-    * batch is barriered once (the five lineages all start from it; without
-    * the barrier each table's merge would re-fetch every block).
+  /** Merge one micro-batch into every table under `tableRoot`. The batch
+    * is parsed ([[Ingest.parseEnvelope]]) and barriered once: the five
+    * lineages all start from the parsed rows, so no table reads the JSON
+    * again, and without the barrier each table's merge would re-fetch
+    * every block.
     *
-    * Job shape per trigger: one job for the raw-batch barrier, then per
-    * table [[ParquetMergeSink.merge]]'s one staging job (the table's rows,
-    * touched buckets and emptiness in one pass) followed by its write.
-    * Each merge releases its staged blocks after its commit, and the raw
-    * batch's blocks are released when the last table is merged — a
-    * trigger leaves no persisted RDD behind.
+    * Job shape per trigger (16 jobs for one height, with AQE on): one job
+    * for the barrier, then per table [[ParquetMergeSink.merge]]'s staging
+    * job (the table's rows, touched buckets and emptiness in one pass)
+    * followed by its write, the latest-wins shuffle's map job plus the
+    * write job. No table shuffles before its merge: `last_commits` is
+    * staged unresolved and resolved by that same shuffle. Each merge
+    * releases its staged blocks after its commit, and the parsed batch's
+    * blocks are released when the last table is merged — a trigger leaves
+    * no persisted RDD behind.
     *
     * The whole trigger runs on Spark's interpreted evaluator
     * (`spark.sql.codegen.factoryMode=NO_CODEGEN`, which also turns off
@@ -102,9 +106,9 @@ object LiveIndexer {
       batchId: Long = -1L): Unit =
     withConf(batch.sparkSession,
         SQLConf.CODEGEN_FACTORY_MODE.key -> CodegenObjectFactoryMode.NO_CODEGEN.toString) {
-      val b = graft.Tables.barrier(batch)
+      val b = graft.Tables.barrier(Ingest.parseEnvelope(batch))
       try
-        tablesOf(b, decoderClass).foreach { case (name, df, keys, version) =>
+        parsedTables(b, decoderClass).foreach { case (name, df, keys, version) =>
           ParquetMergeSink.merge(df, s"$tableRoot/$name", keys, version)
           afterTable(batchId, name)
         }

@@ -57,6 +57,16 @@ object Model {
       StructField("code", IntegerType),
       StructField("events", ArrayType(eventSchema))))))))
 
+  /** The live landing document: `{"block":{…},"block_results":{…}}`, the
+    * two RPC responses of one height. A plain block document has no
+    * envelope; its top-level `header` and `data` are parsed by the same
+    * schema, so either shape takes one `from_json`
+    * ([[Ingest.parseEnvelope]]).
+    */
+  val envelopeSchema: StructType = StructType(Seq(
+    StructField("block", blockSchema),
+    StructField("block_results", blockResultsSchema)) ++ blockSchema.fields)
+
   /** The reference stores NUMERIC(72,18) (db.go:414); Spark's maximum
     * decimal precision is 38, which still carries 18 fractional digits for
     * values up to 10^20 — the working range of chain scores/rewards.

@@ -173,9 +173,16 @@ object Routers {
   /** Worker/Reputer last-commit events → last_commit_values with
     * update-wins per (topic_id, is_worker) (db.go:1118-1185).
     */
-  def actorLastCommit(events: DataFrame): DataFrame = {
+  def actorLastCommit(events: DataFrame): DataFrame =
+    Upsert.latestWins(lastCommitRows(events), Seq("topic_id", "is_worker"), col("height_tx"))
+
+  /** Every last-commit event as a last_commit_values row, before the
+    * update-wins resolution of [[actorLastCommit]]. The live indexer
+    * stages these: its sink resolves latest-wins per key anyway.
+    */
+  def lastCommitRows(events: DataFrame): DataFrame = {
     val nonceSchema = MapType(StringType, StringType)
-    val raw = events
+    events
       .filter(isEvent("emissions.v", "EventWorkerLastCommitSet") ||
         isEvent("emissions.v", "EventReputerLastCommitSet"))
       .select(
@@ -184,7 +191,6 @@ object Routers {
           .cast(LongType).as("height"),
         attr("topic_id").cast(IntegerType).as("topic_id"),
         col("type").endsWith("EventWorkerLastCommitSet").as("is_worker"))
-    Upsert.latestWins(raw, Seq("topic_id", "is_worker"), col("height_tx"))
   }
 
   /** EventTokenomicsSet → tokenomics (db.go:1352-1410). */

@@ -68,9 +68,12 @@ import graft.indexer.Upsert
   * previous manifest, so the table is observed wholly at either
   * generation even across a multi-bucket merge (strictly stronger than
   * a per-bucket rename swap, which could commit a prefix of buckets).
-  * Valid on object stores: no directory renames, no overwrites of live
-  * data — the commit is one small-object move. Single-writer per table,
-  * like the reference indexer; replaying a batch converges (latest-wins).
+  * No overwrites of live data, and the commit itself is one small-object
+  * move. The generation write is not rename-free: it commits through
+  * Hadoop's `FileOutputCommitter`, whose task and job commits rename every
+  * file, O(data) copies on S3A (ROADMAP Direction 8). Single-writer per
+  * table, like the reference indexer; replaying a batch converges
+  * (latest-wins).
   *
   * Version ties: ON CONFLICT DO UPDATE semantics — the incoming row wins
   * (a source-precedence tie-break, so version collisions like

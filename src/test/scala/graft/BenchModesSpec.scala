@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.GraftBridge
-
 /** The `graft.Bench` modes run on the shared session: each prints its
   * report, refuses an unknown query name or mode flag before any Spark job
   * runs, and leaves the session as it found it.
@@ -13,28 +10,6 @@ class BenchModesSpec extends SparkSpec {
     val buf = new java.io.ByteArrayOutputStream
     Console.withOut(new java.io.PrintStream(buf, true, "UTF-8"))(body)
     buf.toString("UTF-8")
-  }
-
-  /** Spark jobs started by `body` on this thread (its job group), with the
-    * listener bus drained so every job start has been delivered. */
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"bench-modes-${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "bench modes")
-    try body
-    finally {
-      sc.clearJobGroup()
-      GraftBridge.drainListenerBus(spark)
-      sc.removeSparkListener(listener)
-    }
-    n.get
   }
 
   test("--plans prints the query's header and its physical plan") {

@@ -1,32 +1,8 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.GraftBridge
-
 /** `Tables.table` infers a table's schema once per file snapshot. */
 class TablesSpec extends SparkSpec {
   import spark.implicits._
-
-  /** Spark jobs `body` starts on this thread (its job group). */
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"tables-${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "table opens")
-    try body
-    finally {
-      sc.clearJobGroup()
-      GraftBridge.drainListenerBus(spark)
-      sc.removeSparkListener(listener)
-    }
-    n.get
-  }
 
   test("two opens of an unchanged table infer its schema once; a rewrite infers again") {
     val dir = java.nio.file.Files.createTempDirectory("graft-tables").toString

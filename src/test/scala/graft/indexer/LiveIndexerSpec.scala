@@ -47,12 +47,14 @@ class LiveIndexerSpec extends SparkSpec {
         java.nio.file.Paths.get(dir, s"$h.json"), envelope(h).getBytes)
     }
 
-  private def tableRows(root: String, name: String): Set[Seq[Any]] = {
-    val df = ParquetMergeSink.read(spark, s"$root/$name")
-    // canonical column order + stringified cells (attributes arrays etc.)
+  private def tableRows(root: String, name: String): Set[Seq[Any]] =
+    rowsOf(ParquetMergeSink.read(spark, s"$root/$name"))
+
+  /** Canonical column order + stringified cells (attributes arrays etc.). */
+  private def rowsOf(df: DataFrame): Set[Seq[Any]] = {
     val cols = df.columns.sorted.toSeq
     df.select(cols.map(col): _*).collect()
-      .map(_.toSeq.map(String.valueOf)).map(identity).toSet
+      .map(_.toSeq.map(String.valueOf)).toSet
   }
 
   private val tableNames =
@@ -102,7 +104,7 @@ class LiveIndexerSpec extends SparkSpec {
     val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
     LiveIndexer.mergeAll(all, batchRoot,
       classOf[Ingest.JsonPassthroughDecoder].getName)
-    // the raw-batch barrier and every merge's staged batch are released
+    // the parsed-batch barrier and every merge's staged batch are released
     // on return — none waits for a GC and the ContextCleaner
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
     assert(leaked.isEmpty, s"mergeAll left persisted RDDs behind: $leaked")
@@ -276,6 +278,97 @@ class LiveIndexerSpec extends SparkSpec {
       assert(tableRows(s"$base/interpreted", t) === tableRows(s"$base/codegen", t),
         s"interpreted and codegen merges diverged on table $t")
     }
+  }
+
+  /** Landed documents the live path must take, each as (height, landed
+    * document, block document, block_results document).
+    */
+  private val edgeLandings: Seq[(Long, String, String, Option[String])] = {
+    def env(h: Long, results: String) =
+      (h, s"""{"block":${blockJson(h)},"block_results":$results}""", blockJson(h),
+        Some(results))
+    // the block-level event list of resultsJson(h)
+    def events(h: Long) = resultsJson(h)
+      .replaceAll(""".*"finalize_block_events":(\[.*\]),"txs_results".*""", "$1")
+    val truncated = envelope(5).take(40)
+    Seq(
+      (1L, blockJson(1), blockJson(1), None), // a plain block document
+      env(2, s"""{"height":"2","finalize_block_events":${events(2)},"txs_results":null}"""),
+      env(3, s"""{"height":"3","finalize_block_events":${events(3)},"txs_results":[]}"""),
+      // a tx with null events beside one with events: a flatten of the
+      // two lists is null, so a naive single explode drops the sibling's
+      env(4, s"""{"height":"4","finalize_block_events":null,"txs_results":[""" +
+        s"""{"code":0,"events":null},{"code":0,"events":${events(4)}}]}"""),
+      (5L, truncated, truncated, None)) // a malformed envelope
+  }
+
+  test("mergeAll and the JSON-string entry points build identical rows " +
+      "from plain, partial and malformed landings") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-live-edge").toString
+    val raw = spark.sparkContext.parallelize(edgeLandings.map(l => (l._1, l._2)), 2)
+      .toDF("height", "block_json")
+    LiveIndexer.mergeAll(raw, root, decoder)
+
+    val blocks = edgeLandings.map(l => (l._1, l._3)).toDF("height", "block_json")
+    val results = edgeLandings.flatMap(l => l._4.map(l._1 -> _)).toDF("height", "results_json")
+    val events = Ingest.events(results)
+    val expected = Map(
+      "block_info" -> Ingest.blockInfo(blocks),
+      "messages" -> Ingest.messages(Ingest.decodeTxs(Ingest.txsFromBlocks(blocks), decoder)),
+      "events" -> Routers.routeEvents(events),
+      "scores" -> Routers.scores(events),
+      "last_commits" -> Routers.actorLastCommit(events))
+    tableNames.foreach { t =>
+      assert(tableRows(root, t) === rowsOf(expected(t)), s"table $t")
+    }
+    // the shapes the fixtures stand for
+    def heights(t: String) = ParquetMergeSink.read(spark, s"$root/$t")
+      .select("height").as[Long].collect().groupBy(identity).map { case (h, hs) => h -> hs.length }
+    assert(heights("block_info") === (1L to 5L).map(_ -> 1).toMap)
+    assert(heights("messages") === (1L to 4L).map(_ -> 1).toMap)
+    assert(heights("events") === Map(2L -> 2, 3L -> 2, 4L -> 2),
+      "height 4's second tx must keep its events")
+    assert(ParquetMergeSink.read(spark, s"$root/block_info")
+      .filter(col("height") === 5L && col("chain_id").isNull).count() === 1)
+  }
+
+  test("a one-height trigger runs 16 jobs, and only its barrier parses the " +
+      "landed JSON") {
+    import org.apache.spark.sql.catalyst.expressions.{GetJsonObject, JsonToStructs}
+    import org.apache.spark.sql.execution.QueryExecution
+    // a from_json of a block or block_results document, or of an envelope
+    // holding one
+    val documents = Set[org.apache.spark.sql.types.DataType](
+      Model.blockSchema, Model.blockResultsSchema)
+    def landed(j: JsonToStructs) = documents(j.schema) || (j.schema match {
+      case s: org.apache.spark.sql.types.StructType => s.fields.exists(f => documents(f.dataType))
+      case _ => false
+    })
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(f -> qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val root = java.nio.file.Files.createTempDirectory("graft-live-jobs").toString
+    LiveIndexer.mergeAll(rawBatch(spark, 1 to 1), root, decoder) // the tables exist
+    val batch = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq((2L, envelope(2))), 1)).toDF("height", "block_json")
+    spark.listenerManager.register(listener)
+    val jobs = try jobsOf(LiveIndexer.mergeAll(batch, root, decoder))
+      finally spark.listenerManager.unregister(listener)
+
+    assert(jobs === 16, "one barrier job, then three jobs per table merge")
+    // (action, get_json_object count, from_json-of-the-landing count)
+    val parses = plans.toArray(Array.empty[(String, QueryExecution)]).toSeq.map { case (f, qe) =>
+      val exprs = qe.optimizedPlan.collect { case p => p.expressions }.flatten
+        .flatMap(_.collect { case e => e })
+      (f, exprs.count(_.isInstanceOf[GetJsonObject]),
+        exprs.count { case j: JsonToStructs => landed(j); case _ => false })
+    }
+    assert(parses.map(_._2).sum === 0, s"get_json_object in a trigger's plans: $parses")
+    assert(parses.filter(_._3 > 0) === Seq(("localCheckpoint", 0, 1)),
+      s"the landed JSON must be parsed once, by the barrier: $parses")
   }
 
   test("HTTP client polls a loopback server end-to-end through the " +

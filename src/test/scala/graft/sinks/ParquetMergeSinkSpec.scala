@@ -5,31 +5,6 @@ import graft.SparkSpec
 class ParquetMergeSinkSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Spark jobs `body` starts. Scoped by job group, so jobs another suite
-    * runs meanwhile are not counted; the listener bus is drained (as
-    * `graft.Bench --skew` does) so every job start has been delivered.
-    */
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"merge-jobs-${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "merge job shape")
-    try body
-    finally {
-      sc.clearJobGroup()
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-      sc.removeSparkListener(listener)
-    }
-    n.get
-  }
-
   test("merge is an idempotent latest-wins upsert") {
     val dir = java.nio.file.Files.createTempDirectory("graft-sink").toString + "/t"
     val b1 = Seq((1L, "a", 10L), (2L, "b", 10L)).toDF("k", "v", "ver")

@@ -28,7 +28,7 @@ seed traced on both sides, it sums each side's `spans.jsonl` by span group,
 the name of the span's parent (`-` at top level) and its name, e.g.
 `trigger-1  foreach_batch  merge.events` (a live trigger's merge; the
 backfill's merges of the same group sit at top level), and prints wall ms,
-executor CPU ms, shuffle write bytes and tasks, parent -> change.
+executor CPU ms, shuffle write bytes, Spark jobs and tasks, parent -> change.
 """
 import argparse
 import glob
@@ -64,7 +64,8 @@ def span_paths(out_dir):
 
 
 SPAN_FIELDS = (("ms", "wall ms"), ("executor_cpu_ms", "cpu ms"),
-               ("shuffle_write_bytes", "shuffle B"), ("tasks", "tasks"))
+               ("shuffle_write_bytes", "shuffle B"), ("jobs", "jobs"),
+               ("tasks", "tasks"))
 
 
 def span_sums(path):
