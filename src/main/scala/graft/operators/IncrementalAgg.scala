@@ -113,7 +113,7 @@ object IncrementalAgg {
     // can never leave generation dirs without a log (see guard above).
     val manifest = ManifestCommit.latest(fs, root).getOrElse {
       fs.mkdirs(root)
-      val v = ManifestCommit.commit(fs, root, Map.empty)
+      val v = ManifestCommit.commit(fs, root, 0L, Map.empty)
       ManifestCommit.Manifest(v, Map.empty)
     }
     val lastApplied = manifest.entries.get("batch").map(_.toLong)
@@ -144,7 +144,8 @@ object IncrementalAgg {
       .parquet(new org.apache.hadoop.fs.Path(root, gen).toString)
     val progress = (batchId.toSeq ++ lastApplied).reduceOption(_ max _)
       .map(id => "batch" -> id.toString)
-    ManifestCommit.commit(fs, root, Map("dir.state" -> gen) ++ progress)
+    ManifestCommit.commit(fs, root, manifest.version,
+      Map("dir.state" -> gen) ++ progress)
     ManifestCommit.vacuum(fs, root, keep = 2)
   }
 

@@ -28,17 +28,20 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *
   * Generation dirs are `_`-prefixed on purpose: Spark's file listing
   * skips `_`/`.`-prefixed children, so a plain `spark.read.parquet(root)`
-  * over a half-migrated table sees only the legacy top-level files, never
-  * a mix of layouts; managed readers address the generation dir
-  * explicitly via the manifest.
+  * over a table that [[TableMaintenance]] is migrating from plain files
+  * sees only the top-level files, never a mix of layouts; managed readers
+  * address the generation dir explicitly via the manifest.
   *
-  * Commit discipline: the payload is written to `_commits/.tmp-<uuid>`
-  * and renamed (no overwrite) to the next version number. The rename
-  * moves ONE object of a few hundred bytes: effectively atomic on every
-  * store, and the create-fails-if-exists target catches a racing writer.
-  * Readers list `_commits`, take the highest fully-committed version, and
-  * resolve data paths from its entries — they see the previous or the
-  * next generation, never a mix, with no coordination.
+  * Commit discipline: a writer reads the head manifest, builds the next
+  * one from it, and claims exactly the slot after the version it read;
+  * the claim fails if any other writer took that slot first (a writer
+  * that read v5 never lands v7 on top of someone else's v6). The payload
+  * is written to `_commits/.tmp-<uuid>` and moved to the slot without
+  * overwrite: ONE object of a few hundred bytes, effectively atomic on
+  * every store. Readers list `_commits`, take the highest
+  * fully-committed version, and resolve data paths from its entries —
+  * they see the previous or the next generation, never a mix, with no
+  * coordination.
   *
   * Crash windows, by construction:
   *  - before the manifest rename: the new generation dir is an orphan no
@@ -54,13 +57,13 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * with `dir.` names ONE data path relative to the root (its first path
   * segment is a generation directory), never a joined list. A merge-sink
   * table's are `dir.<b>` (bucket b's base dir) and `dir.+<v>` (the
-  * table-level segment manifest v appended; `dir.<b>+<v>` is a per-bucket
-  * segment of the earlier layout), see [[ParquetMergeSink.isSinkKey]]: an
-  * append adds one entry, a merge replaces the entries of the buckets it
-  * folds and of the segments it read, and a drain replaces them all.
-  * Other keys are scalar metadata (bucket counts, the merge sink's `hwm`,
-  * last-applied batch ids). A generation write leaves no `_SUCCESS`
-  * marker: the manifest flip is the commit record.
+  * table-level segment manifest v appended), see
+  * [[ParquetMergeSink.isSinkKey]]: an append adds one entry, a merge
+  * replaces the entries of the buckets it folds and of the segments it
+  * read, and a drain replaces them all. Other keys are scalar metadata
+  * (bucket counts, the merge sink's `hwm`, last-applied batch ids). A
+  * generation write leaves no `_SUCCESS` marker: the manifest flip is the
+  * commit record.
   */
 object ManifestCommit {
 
@@ -80,6 +83,9 @@ object ManifestCommit {
 
   private[graft] def commitPath(root: Path, version: Long): Path =
     new Path(new Path(root, CommitDir), f"$version%020d")
+
+  /** Whether a root child's name is a generation dir (`_g<n>-<hex>`). */
+  def isGeneration(name: String): Boolean = name.matches("_g\\d+-[0-9a-f]+")
 
   private def parseVersion(name: String): Option[Long] =
     if (name.forall(_.isDigit) && name.length == 20) Some(name.toLong) else None
@@ -115,10 +121,14 @@ object ManifestCommit {
     }.toMap
   }
 
-  /** Publish `entries` as the next manifest version. The data dirs the
-    * entries reference must already be fully written — this call is the
-    * commit point. Returns the committed version. Fails (leaving the
-    * table at the previous generation) if another writer took the slot.
+  /** Publish `entries` as the manifest version after `read`, the version
+    * the writer built them from (0 when the table had none). The data
+    * dirs the entries reference must already be fully written — this call
+    * is the commit point. Returns the committed version. Fails (leaving
+    * the table at the previous generation) if another writer took the
+    * slot: a writer whose head went stale between its read and its commit
+    * fails instead of landing a manifest built from an older state on
+    * top of the newer one.
     *
     * The slot is claimed with an ATOMIC put-if-absent, dispatched per
     * store the way Delta's LogStore is (one primitive per store's actual
@@ -142,8 +152,9 @@ object ManifestCommit {
     * Tables are single-writer by contract; this turns a misconfigured
     * double-writer into a loud failure instead of data loss.
     */
-  def commit(fs: FileSystem, root: Path, entries: Map[String, String]): Long = {
-    val version = latest(fs, root).map(_.version).getOrElse(0L) + 1L
+  def commit(fs: FileSystem, root: Path, read: Long,
+      entries: Map[String, String]): Long = {
+    val version = read + 1L
     val dir = new Path(root, CommitDir)
     fs.mkdirs(dir)
     val txid = java.util.UUID.randomUUID().toString
@@ -158,9 +169,10 @@ object ManifestCommit {
     def lose(): Nothing = {
       fs.delete(tmp, false)
       throw new java.io.IOException(
-        s"manifest commit lost the race for version $version at $root — " +
-          "tables are single-writer; the data generation written for this " +
-          "commit is an orphan and will be vacuumed")
+        s"manifest commit lost the race for version $version at $root " +
+          s"(built from version $read) — tables are single-writer; the " +
+          "data generation written for this commit is an orphan and will " +
+          "be vacuumed")
     }
     if (fs.exists(target)) lose()
     if (fs.getScheme == "file") {
@@ -193,15 +205,16 @@ object ManifestCommit {
     * resurrected a half-reclaimed generation would serve partial data.
     */
   def rollback(fs: FileSystem, root: Path, toVersion: Long): Long = {
-    val m = at(fs, root, toVersion).getOrElse(
+    val all = committed(fs, root)
+    val m = all.find(_.version == toVersion).getOrElse(
       throw new IllegalArgumentException(
         s"version $toVersion is not in the retained commit log at $root — " +
-          s"retained: ${committed(fs, root).map(_.version).mkString(", ")}"))
+          s"retained: ${all.map(_.version).mkString(", ")}"))
     val missing = m.liveGenerations.filterNot(g => fs.exists(new Path(root, g)))
     require(missing.isEmpty,
       s"cannot roll back to version $toVersion: generation dir(s) " +
         s"${missing.mkString(", ")} already vacuumed")
-    commit(fs, root, m.entries - "txid")
+    commit(fs, root, all.last.version, m.entries - "txid")
   }
 
   /** New generation dir name for `version` (collision-free under crash
@@ -225,7 +238,7 @@ object ManifestCommit {
     fs.listStatus(root).foreach { st =>
       val name = st.getPath.getName
       if (st.isDirectory && name != CommitDir &&
-          name.matches("_g\\d+-[0-9a-f]+") && !live.contains(name))
+          isGeneration(name) && !live.contains(name))
         fs.delete(st.getPath, true)
     }
     all.dropRight(keep).foreach(m => fs.delete(commitPath(root, m.version), false))
@@ -247,6 +260,5 @@ object ManifestCommit {
     */
   def orphanedGenerations(fs: FileSystem, root: Path): Boolean =
     fs.exists(root) && latest(fs, root).isEmpty &&
-      fs.listStatus(root).exists(s =>
-        s.isDirectory && s.getPath.getName.matches("_g\\d+-[0-9a-f]+"))
+      fs.listStatus(root).exists(s => s.isDirectory && isGeneration(s.getPath.getName))
 }

@@ -1,9 +1,9 @@
 package graft.sinks
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 import graft.Tables.BarrierOps
 import graft.indexer.Upsert
@@ -33,10 +33,15 @@ import graft.indexer.Upsert
   * Entry grammar (`dir.` stripped, see [[isSinkKey]]): `<b>` is bucket b's
   * base dir; `+<v>` a segment manifest v wrote (`<gen>/__bucket=-1`, a
   * sentinel bucket on the same `partitionBy` write, so the leaf is not a
-  * name Spark's hidden-path filter skips); `<b>+<v>` a per-bucket segment
-  * of the earlier layout, read and folded as part of bucket b. A segment's
-  * keys never equal another committed key, so reads union every dir as it
-  * lies.
+  * name Spark's hidden-path filter skips). Every dir lies in a `_g<n>-`
+  * generation, and every manifest that names one carries the table's
+  * schema stamp. A segment's keys never equal another committed key, so
+  * reads union every dir as it lies.
+  *
+  * One format — tables of an older format (pre-manifest bucket dirs,
+  * per-bucket segments, an unstamped manifest) are refused by every read,
+  * merge and ALTER with an error that names [[upgrade]] (`CALL
+  * <catalog>.system.upgrade`), which commits them once in this grammar.
   *
   * Fold and drain — a table holds at most [[TableDirs]] dirs (or one per
   * bucket plus one). An append at the bound rewrites every segment and the
@@ -47,8 +52,7 @@ import graft.indexer.Upsert
   * the bound). Amortized over a table of N rows taking r rows a trigger
   * at 16 buckets: concatenations rewrite about N/512 rows a trigger and a
   * drain N + N/16 rows every N/(16r) triggers, about N/512 + 17r rows a
-  * trigger in all, where the per-bucket layout refolded about half the
-  * touched buckets every trigger (k touched buckets: kN/32 rows).
+  * trigger in all.
   *
   * Job shape — a merge runs ONE staging job, then the write. The staging
   * job materializes the aligned, bucketed batch behind a barrier and
@@ -111,16 +115,12 @@ object ParquetMergeSink {
     */
   private val NoSuccessMarker = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
 
-  private val BucketKey = "(\\d+)(?:\\+\\d+)?".r
+  private val BucketKey = "\\d+".r
   private val SegmentKey = "\\+\\d+".r
 
-  /** The bucket a dir key (`dir.` stripped) belongs to: `7` is bucket 7's
-    * base dir, `7+12` a per-bucket segment of the earlier layout.
-    */
-  private def bucketOf(key: String): Option[Int] = key match {
-    case BucketKey(b) => b.toIntOption
-    case _ => None
-  }
+  /** The bucket of a base-dir key (`dir.` stripped): `7` is bucket 7's. */
+  private def bucketOf(key: String): Option[Int] =
+    Option.when(BucketKey.matches(key))(key.toInt)
 
   /** `+12`: the table-level segment manifest v12 appended. */
   private def isSegment(key: String): Boolean = SegmentKey.matches(key)
@@ -136,28 +136,26 @@ object ParquetMergeSink {
   private def versionKeyed(keys: Seq[String], version: String): Boolean =
     keys.exists(k => lcName(k) == lcName(version))
 
-  /** The manifest-declared table schema, when the table carries one.
-    * Tables created via [[createEmpty]] (SQL CREATE) carry it from birth;
-    * API-grown tables acquire it on their next merge commit. It is the
-    * source of truth for reads the moment generations stop agreeing —
+  /** The manifest-declared table schema, when the manifest carries one:
+    * every manifest that names a data dir does (tables created via
+    * [[createEmpty]] from birth, API-grown ones from their first data
+    * commit). It is the source of truth for reads the moment generations
+    * stop agreeing —
     * i.e. after `ALTER TABLE … ADD COLUMN` ([[addColumns]]): reading the
     * dirs with the declared schema makes parquet align files BY NAME and
     * null-fill columns a pre-ALTER generation never wrote (the
     * Delta/Iceberg add-column read contract, no data rewrite).
     */
   private[graft] def declaredSchema(
-      m: ManifestCommit.Manifest): Option[org.apache.spark.sql.types.StructType] =
-    m.entries.get(SchemaKey).map(org.apache.spark.sql.types.DataType.fromJson(_)
-      .asInstanceOf[org.apache.spark.sql.types.StructType])
+      m: ManifestCommit.Manifest): Option[StructType] =
+    m.entries.get(SchemaKey).map(DataType.fromJson(_).asInstanceOf[StructType])
 
   /** Nullability/metadata-normalized form for stamping into a manifest:
     * parquet reads surface everything nullable, so a stable declared
     * schema must too (otherwise the stamp would flap between commits).
     */
-  private def stampable(s: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(s.fields.map(f =>
-      org.apache.spark.sql.types.StructField(f.name, f.dataType, nullable = true)))
+  private def stampable(s: StructType): StructType =
+    StructType(s.fields.map(f => StructField(f.name, f.dataType)))
 
   /** Logical→physical column-name mapping (Delta column-mapping
     * "name"-mode shape): RENAME is a metadata flip that keeps the
@@ -206,8 +204,7 @@ object ParquetMergeSink {
     * when s′ ≥ s and p′−s′ ≥ p−s; date → timestamp_ntz (midnight, no zone
     * shift).
     */
-  private[graft] def widens(from: org.apache.spark.sql.types.DataType,
-      to: org.apache.spark.sql.types.DataType): Boolean = {
+  private[graft] def widens(from: DataType, to: DataType): Boolean = {
     import org.apache.spark.sql.types._
     def intDigits(d: DataType): Option[Int] = d match {
       case ByteType => Some(3)
@@ -240,14 +237,12 @@ object ParquetMergeSink {
   /** The declared schema with physical field names — what the parquet
     * scan is asked for; files of every generation align to it by name.
     */
-  private[graft] def physicalSchema(declared: org.apache.spark.sql.types.StructType,
-      map: Map[String, String]): org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(declared.fields.map(f =>
-      f.copy(name = physOf(map, f.name))))
+  private[graft] def physicalSchema(declared: StructType,
+      map: Map[String, String]): StructType =
+    StructType(declared.fields.map(f => f.copy(name = physOf(map, f.name))))
 
   /** Project a physical-named scan onto the logical declared shape. */
-  private def toLogical(df: DataFrame,
-      declared: org.apache.spark.sql.types.StructType,
+  private def toLogical(df: DataFrame, declared: StructType,
       map: Map[String, String]): DataFrame =
     if (map.isEmpty) df
     else df.select(declared.fields.map(f =>
@@ -257,8 +252,7 @@ object ParquetMergeSink {
     * generation write (extra non-declared columns, e.g. the bucket
     * column, pass through unchanged).
     */
-  private def toPhysical(df: DataFrame,
-      declared: org.apache.spark.sql.types.StructType,
+  private def toPhysical(df: DataFrame, declared: StructType,
       map: Map[String, String]): DataFrame =
     if (map.isEmpty) df
     else {
@@ -284,7 +278,7 @@ object ParquetMergeSink {
     * are resolved per action later.
     */
   private def alignToSchema(df: DataFrame,
-      declared: org.apache.spark.sql.types.StructType, what: String,
+      declared: StructType, what: String,
       required: Seq[String], keepSourceOnly: Boolean): DataFrame = {
     val caseDups = df.schema.fields.groupBy(f => lcName(f.name))
       .filter(_._2.length > 1).values.map(_.map(_.name).mkString("/"))
@@ -307,9 +301,7 @@ object ParquetMergeSink {
         "(post-ADD COLUMN) null-fill; a null-filled key or version would " +
         "silently collapse or mis-order rows under latest-wins")
     // None: the incoming type is the declared one
-    def castTo(src: org.apache.spark.sql.types.StructField,
-        f: org.apache.spark.sql.types.StructField)
-        : Option[org.apache.spark.sql.types.DataType] =
+    def castTo(src: StructField, f: StructField): Option[DataType] =
       if (src.dataType.catalogString == f.dataType.catalogString) None
       // an old-shape writer after ALTER COLUMN … TYPE: its narrower
       // value upcasts losslessly onto the declared type — the same
@@ -340,11 +332,10 @@ object ParquetMergeSink {
     * declared schema; every reader resolving through the manifest
     * null-fills the new columns for older generations by name, and time
     * travel to a pre-ALTER version serves that manifest's own schema.
-    * Only nullable, non-duplicate, top-level columns are addable. A legacy
-    * table without a declared schema adopts its data schema as the base.
+    * Only nullable, non-duplicate, top-level columns are addable.
     */
   def addColumns(spark: SparkSession, path: String,
-      newFields: Seq[org.apache.spark.sql.types.StructField]): Unit = {
+      newFields: Seq[StructField]): Unit = {
     require(newFields.nonEmpty, "ADD COLUMN needs at least one column")
     val notNullable = newFields.filterNot(_.nullable).map(_.name)
     require(notNullable.isEmpty,
@@ -357,9 +348,7 @@ object ParquetMergeSink {
         newFields.groupBy(f => lcName(f.name)).filter(_._2.size > 1).keys
       require(dup.isEmpty,
         s"ADD COLUMN ${dup.distinct.mkString(", ")}: column already exists")
-      val widened = org.apache.spark.sql.types.StructType(
-        base.fields ++ newFields.map(f =>
-          org.apache.spark.sql.types.StructField(f.name, f.dataType, nullable = true)))
+      val widened = StructType(base.fields ++ stampable(StructType(newFields)).fields)
       // Physical-name assignment: a new column normally keeps its own name,
       // but a name some generation may already carry data under — a DROPPED
       // column's retired physical name, or a physical name a rename left
@@ -415,7 +404,7 @@ object ParquetMergeSink {
       val retired = retiredPhys(m) ++
         base.fields.filter(f => dropLc.contains(lcName(f.name)))
           .map(f => physOf(pmap, f.name))
-      Some(Altered(org.apache.spark.sql.types.StructType(remaining),
+      Some(Altered(StructType(remaining),
         pmap.filterNot { case (k, _) => dropLc.contains(lcName(k)) },
         Map(RetiredKey -> retired.toSeq.sorted.mkString(","))))
     }
@@ -441,7 +430,7 @@ object ParquetMergeSink {
         s"RENAME COLUMN $from TO $to: column $to already exists")
       val pmap = physMap(m)
       val phys = physOf(pmap, from)
-      val renamed = org.apache.spark.sql.types.StructType(base.fields.map(f =>
+      val renamed = StructType(base.fields.map(f =>
         if (lcName(f.name) == lcName(from)) f.copy(name = to) else f))
       val newMap = pmap.filterNot { case (k, _) => lcName(k) == lcName(from) } ++
         (if (lcName(to) == lcName(phys)) Map.empty[String, String]
@@ -468,7 +457,7 @@ object ParquetMergeSink {
     * ([[alignToSchema]]).
     */
   def widenColumnType(spark: SparkSession, path: String,
-      name: String, newType: org.apache.spark.sql.types.DataType): Unit =
+      name: String, newType: DataType): Unit =
     alter(spark, path, "ALTER COLUMN TYPE") { (m, base) =>
       val field = base.fields.find(f => lcName(f.name) == lcName(name))
         .getOrElse(throw new IllegalArgumentException(
@@ -492,7 +481,7 @@ object ParquetMergeSink {
             "upcast set (byte→short→int→long, float→double, int→double, " +
             "int/long→decimal, decimal precision growth, date→timestamp_ntz) " +
             "is declarable")
-        Altered(org.apache.spark.sql.types.StructType(base.fields.map(f =>
+        Altered(StructType(base.fields.map(f =>
           if (lcName(f.name) == lcName(name)) f.copy(dataType = newType) else f)),
           physMap(m))
       }
@@ -502,26 +491,23 @@ object ParquetMergeSink {
     * logical→physical name map, and any other manifest entries it
     * rewrites.
     */
-  private final case class Altered(schema: org.apache.spark.sql.types.StructType,
+  private final case class Altered(schema: StructType,
       phys: Map[String, String], other: Map[String, String] = Map.empty)
 
   /** The preamble and commit every ALTER shares. The table must hold a
-    * committed merge-sink bucket layout; `change` validates against its
-    * manifest and declared schema (a legacy table without one adopts its
-    * data schema as the base) and returns what to commit, or None for a
-    * no-op. The commit is ONE metadata-only manifest flip that
-    * re-references the current generations unchanged. `op` names the
-    * ALTER in the layout refusal.
+    * committed merge-sink bucket layout in the current format; `change`
+    * validates against its manifest and declared schema and returns what
+    * to commit, or None for a no-op. The commit is ONE metadata-only
+    * manifest flip that re-references the current generations unchanged.
+    * `op` names the ALTER in the layout refusal.
     */
   private def alter(spark: SparkSession, path: String, op: String)(
-      change: (ManifestCommit.Manifest, org.apache.spark.sql.types.StructType) =>
-        Option[Altered]): Unit = {
+      change: (ManifestCommit.Manifest, StructType) => Option[Altered]): Unit = {
     val table = new Path(path)
     val fs = fsFor(spark, table)
-    guardReadable(fs, table)
-    val m = ManifestCommit.latest(fs, table).getOrElse(
-      throw new IllegalStateException(
-        s"$path has no committed merge-sink table to alter"))
+    def none = new IllegalStateException(
+      s"$path has no committed merge-sink table to alter")
+    val m = head(fs, table).getOrElse(throw none)
     // merge-sink bucket layouts only: maintained/partitioned tables read
     // through TableMaintenance, which resolves schema from data — an
     // ALTER there would record a declaration nothing honors (and a
@@ -533,9 +519,8 @@ object ParquetMergeSink {
         s"${nonBucket.take(3).mkString(", ")}…) — $op serves " +
         "merge-sink tables; rewrite maintained layouts through " +
         "TableMaintenance")
-    val base = declaredSchema(m).getOrElse(stampable(read(spark, path).schema))
-    change(m, base).foreach { a =>
-      ManifestCommit.commit(fs, table,
+    change(m, declaredSchema(m).getOrElse(throw none)).foreach { a =>
+      ManifestCommit.commit(fs, table, m.version,
         (m.entries - "txid" - PhysKey) ++ a.other ++
           Map(SchemaKey -> a.schema.json) ++
           (if (a.phys.nonEmpty) Map(PhysKey -> renderNameMap(a.phys)) else Map.empty))
@@ -543,48 +528,137 @@ object ParquetMergeSink {
     }
   }
 
-  private def fsFor(spark: SparkSession, p: Path): FileSystem = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    p.getFileSystem(if (conf != null) conf else new Configuration())
-  }
+  private def fsFor(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def bucketExpr(keys: Seq[String], buckets: Int) =
     pmod(xxhash64(keys.map(col): _*), lit(buckets)).cast("int")
 
-  private def guardReadable(fs: FileSystem, table: Path): Unit =
-    if (ManifestCommit.orphanedGenerations(fs, table))
-      throw new IllegalStateException(
-        s"$table has generation dirs but no ${ManifestCommit.CommitDir} " +
-          "log: bucket layout unknowable; refusing to guess (re-bucketing " +
-          "would silently duplicate keys). Restore the commit log.")
-
-  private val LegacyMarker = ".graft-buckets"
-
-  /** A pre-protocol table (top-level `__bucket=N` dirs + `.graft-buckets`
-    * marker, the layout this sink wrote before the manifest commit):
-    * synthesized as a virtual manifest so reads serve it unchanged and
-    * the first merge commits it as v1. Bucket dirs WITHOUT the marker
-    * are the same unknowable state the marker always guarded against —
-    * fail loudly rather than re-bucket.
+  /** Old formats, named only by [[oldFormat]], [[head]] and [[upgrade]]:
+    * the marker file of the pre-manifest layout (top-level `__bucket=N`
+    * dirs, its content the bucket count) and the key of a per-bucket
+    * segment, `<b>+<v>`.
     */
-  private def legacyLayout(fs: FileSystem, table: Path): Option[Map[String, String]] = {
-    if (!fs.exists(table)) return None
-    val bucketDirs = fs.listStatus(table)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$BucketCol="))
-    if (bucketDirs.isEmpty) return None
+  private val LegacyMarker = ".graft-buckets"
+  private val BucketSegmentKey = "(\\d+)\\+\\d+".r
+
+  /** `m`'s merge-sink data dirs of any format, each with its bucket (None:
+    * a table-level segment).
+    */
+  private def sinkDirs(m: ManifestCommit.Manifest): Map[String, (String, Option[Int])] =
+    m.dirs.flatMap { case (k, rel) => k match {
+      case BucketSegmentKey(b) => Some(k -> (rel, Some(b.toInt)))
+      case _ => Option.when(isSinkKey(k))(k -> (rel, bucketOf(k)))
+    }}
+
+  private def outsideGeneration(rel: String) = !ManifestCommit.isGeneration(rel.split("/").head)
+
+  /** Why `m` is not in the current grammar, if it is not: a per-bucket
+    * segment key, a bucket dir outside a generation (the pre-manifest
+    * dirs a manifest adopted), or data dirs without a schema stamp.
+    */
+  private[graft] def oldFormat(m: ManifestCommit.Manifest): Option[String] = {
+    val data = sinkDirs(m)
+    if (data.keys.exists(BucketSegmentKey.matches)) Some("per-bucket segments dir.<b>+<v>")
+    else if (data.values.exists(d => outsideGeneration(d._1))) Some("dirs outside a generation")
+    else Option.when(data.nonEmpty && !m.entries.contains(SchemaKey))("no schema stamp")
+  }
+
+  private def refuseOld(table: Path, what: String): Nothing =
+    throw new IllegalStateException(
+      s"$table is a merge-sink table of an old format ($what): run " +
+        s"CALL <catalog>.system.upgrade('<table>') (ParquetMergeSink.upgrade) " +
+        "once — reads and writes refuse it rather than misread it")
+
+  /** `m`, refused unless it is in the current grammar. */
+  private[graft] def requireCurrent(table: Path,
+      m: ManifestCommit.Manifest): ManifestCommit.Manifest = {
+    oldFormat(m).foreach(refuseOld(table, _))
+    m
+  }
+
+  /** `CALL <catalog>.system.upgrade('<table>')`: commit the table at `path`
+    * as ONE manifest in the current grammar — the one place the old
+    * formats are read. Every entry but the data dirs carries as it is
+    * (`buckets`, `merge.keys`, `merge.version`, `hwm`, the rename map, the
+    * retired names). Rows are rewritten only where an old layout needs it:
+    * every dir of a bucket that has a per-bucket segment or a dir outside a
+    * generation (pre-manifest bucket dirs, whose bucket numbers come from
+    * their names and are never re-hashed) folds into that bucket's base
+    * dir in one new generation; an unstamped manifest is stamped with its
+    * files' schema. Returns the committed version, or None when the table
+    * already was current.
+    *
+    * Crash-safe by re-run: the old layout stays untouched until the
+    * commit, so a crash before it leaves an orphan generation that the
+    * re-run's vacuum reclaims; the pre-manifest dirs and their marker are
+    * deleted after the commit, marker last, so a re-run over a current
+    * head finishes that reclaim and commits nothing.
+    */
+  def upgrade(spark: SparkSession, path: String): Option[Long] = {
+    val table = new Path(path)
+    val fs = fsFor(spark, table)
     val marker = new Path(table, LegacyMarker)
-    if (!fs.exists(marker))
-      throw new IllegalStateException(
-        s"$table has $BucketCol= dirs but neither a manifest nor a " +
-          s"$LegacyMarker marker: bucket count unknowable; refusing to " +
-          "guess (re-bucketing would silently duplicate keys).")
-    val in = fs.open(marker)
-    val buckets = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8).trim.toInt finally in.close()
-    Some(Map("buckets" -> buckets.toString) ++ bucketDirs.map { d =>
-      val name = d.getPath.getName
-      s"dir.${name.stripPrefix(s"$BucketCol=")}" -> name
-    })
+    // bucket dirs `__bucket=<b>` under `dir`, as `dir.<b>` -> `<prefix><name>`
+    def bucketDirs(dir: Path, prefix: String) = fs.listStatus(dir).map(_.getPath.getName)
+      .collect { case n if n.startsWith(s"$BucketCol=") =>
+        s"dir.${n.stripPrefix(s"$BucketCol=")}" -> s"$prefix$n" }.toMap
+    val m = ManifestCommit.latest(fs, table).getOrElse {
+      if (!fs.exists(marker)) head(fs, table) // bucket dirs alone: unknowable
+      require(fs.exists(marker), s"$path holds no merge-sink table to upgrade")
+      val in = fs.open(marker)
+      val buckets = try new String(in.readAllBytes(), "UTF-8").trim.toInt finally in.close()
+      ManifestCommit.Manifest(0L, bucketDirs(table, "") + ("buckets" -> buckets.toString))
+    }
+    val committed = oldFormat(m).map { _ =>
+      val data = sinkDirs(m)
+      val refold = data.collect { case (k, (rel, b)) if BucketSegmentKey.matches(k) ||
+        outsideGeneration(rel) => b }.flatten.toSet
+      val rewrite = data.filter(_._2._2.exists(refold))
+      val declared = declaredSchema(m).getOrElse(stampable(spark.read.parquet(
+        data.values.map(d => new Path(table, d._1).toString).toSeq: _*).schema))
+      val gen = ManifestCommit.newGeneration(m.version + 1)
+      if (rewrite.nonEmpty) rewrite.values.map { case (rel, b) =>
+        spark.read.schema(physicalSchema(declared, physMap(m)))
+          .parquet(new Path(table, rel).toString).withColumn(BucketCol, lit(b.get))
+      }.reduce(_ unionByName _)
+        .write.mode(SaveMode.Overwrite).option(NoSuccessMarker, "false")
+        .partitionBy(BucketCol).parquet(new Path(table, gen).toString)
+      ManifestCommit.commit(fs, table, m.version, m.entries - "txid" --
+        rewrite.keys.map("dir." + _) ++
+        (if (rewrite.isEmpty) Map.empty else bucketDirs(new Path(table, gen), s"$gen/")) +
+        (SchemaKey -> declared.json))
+    }
+    if (fs.exists(marker)) {
+      bucketDirs(table, "").values.foreach(n => fs.delete(new Path(table, n), true))
+      fs.delete(marker, false)
+    }
+    if (committed.isDefined) ManifestCommit.vacuum(fs, table, keep = 2)
+    committed
+  }
+
+  /** The head manifest of `table`, or None at a path without one: the one
+    * format check every read, staging pass, ALTER and catalog load runs
+    * first. It refuses an old-format head ([[requireCurrent]]), and a path
+    * without a manifest that holds bucket dirs or generation dirs — data
+    * no reader may guess a layout for.
+    */
+  private[graft] def head(fs: FileSystem, table: Path): Option[ManifestCommit.Manifest] = {
+    val m = ManifestCommit.latest(fs, table)
+    m.foreach(requireCurrent(table, _))
+    if (m.isEmpty && fs.exists(table)) {
+      val names = fs.listStatus(table).filter(_.isDirectory).map(_.getPath.getName)
+      val buckets = names.exists(_.startsWith(s"$BucketCol="))
+      if (buckets && fs.exists(new Path(table, LegacyMarker)))
+        refuseOld(table, "pre-manifest bucket dirs")
+      if (buckets || names.exists(ManifestCommit.isGeneration))
+        throw new IllegalStateException(
+          s"$table has data dirs but no ${ManifestCommit.CommitDir} log (nor " +
+            s"a $LegacyMarker marker): bucket layout unknowable; refusing to " +
+            "guess (re-bucketing would silently duplicate keys). Restore the " +
+            "commit log.")
+    }
+    m
   }
 
   /** The committed table as a DataFrame, or None before the first merge
@@ -593,28 +667,22 @@ object ParquetMergeSink {
     */
   def readIfExists(spark: SparkSession, path: String): Option[DataFrame] = {
     val table = new Path(path)
-    val fs = fsFor(spark, table)
-    guardReadable(fs, table)
-    ManifestCommit.latest(fs, table)
-      .orElse(legacyLayout(fs, table).map(ManifestCommit.Manifest(0L, _)))
-      .filter(_.dirs.nonEmpty)
+    head(fsFor(spark, table), table).filter(_.dirs.nonEmpty)
       .map(m => scan(spark, table, m, m.dirs.values.toSeq.sorted))
   }
 
   /** The parquet scan of `rels` (data dirs relative to `table`) as
     * manifest `m` declares them: with `m`'s OWN schema and name mapping
-    * when it has them (pre-ALTER versions keep the old shape, pre-RENAME
-    * versions the old names), else with the schema the files carry.
+    * (pre-ALTER versions keep the old shape, pre-RENAME versions the old
+    * names). `m` names data dirs and passed [[requireCurrent]], so it
+    * carries its schema stamp.
     */
   private def scan(spark: SparkSession, table: Path,
       m: ManifestCommit.Manifest, rels: Seq[String]): DataFrame = {
-    val dirs = rels.map(rel => new Path(table, rel).toString)
+    val d = declaredSchema(m).get
     val pmap = physMap(m)
-    declaredSchema(m) match {
-      case None => spark.read.parquet(dirs: _*)
-      case Some(d) => toLogical(
-        spark.read.schema(physicalSchema(d, pmap)).parquet(dirs: _*), d, pmap)
-    }
+    toLogical(spark.read.schema(physicalSchema(d, pmap))
+      .parquet(rels.map(rel => new Path(table, rel).toString): _*), d, pmap)
   }
 
   def read(spark: SparkSession, path: String): DataFrame =
@@ -629,11 +697,11 @@ object ParquetMergeSink {
   def readVersion(spark: SparkSession, path: String, version: Long): DataFrame = {
     val table = new Path(path)
     val fs = fsFor(spark, table)
-    guardReadable(fs, table)
-    val m = ManifestCommit.at(fs, table, version).getOrElse(
+    head(fs, table) // an old-format or pre-manifest head refuses every version
+    val m = requireCurrent(table, ManifestCommit.at(fs, table, version).getOrElse(
       throw new IllegalArgumentException(
         s"version $version of $path is not retained — retained: " +
-          ManifestCommit.committed(fs, table).map(_.version).mkString(", ")))
+          ManifestCommit.committed(fs, table).map(_.version).mkString(", "))))
     require(m.dirs.nonEmpty, s"version $version of $path references no data dirs")
     scan(spark, table, m, m.dirs.values.toSeq.sorted)
   }
@@ -646,13 +714,11 @@ object ParquetMergeSink {
     * at once. The seed is an ordinary base dir. Refuses an existing table
     * and key/version columns absent from the schema.
     */
-  def createEmpty(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType, keys: Seq[String],
-      version: String, nBuckets: Int = 16): Unit = {
+  def createEmpty(spark: SparkSession, path: String, schema: StructType,
+      keys: Seq[String], version: String, nBuckets: Int = 16): Unit = {
     val table = new Path(path)
     val fs = fsFor(spark, table)
-    require(ManifestCommit.latest(fs, table).isEmpty &&
-        legacyLayout(fs, table).isEmpty,
+    require(head(fs, table).isEmpty,
       s"$path already holds a committed table — createEmpty refuses to " +
         "redefine it (merge into it, or remove it first)")
     require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
@@ -679,30 +745,11 @@ object ParquetMergeSink {
     require(fs.rename(part, new Path(seedDir, part.getName)),
       s"rename $part -> $seedDir failed")
     fs.delete(tmp, true)
-    ManifestCommit.commit(fs, table, Map(
+    ManifestCommit.commit(fs, table, 0L, Map(
       "buckets" -> nBuckets.toString,
       "dir.0" -> s"$gen/$BucketCol=0",
       schemaEntry) ++ writeMeta(keys, version))
   }
-
-  /** Table creation commits the bucket count FIRST, before any data
-    * generation exists: a crash mid-first-merge leaves a committed count,
-    * so a later merge (even with a different requested nBuckets) reads
-    * the committed layout instead of silently re-bucketing keys. A
-    * pre-protocol table migrates here: its marker count and existing
-    * bucket dirs become manifest v1, so the first post-upgrade merge
-    * reads the legacy rows instead of silently starting an empty table
-    * beside them.
-    */
-  private def ensureManifest(fs: FileSystem, table: Path,
-      nBuckets: Int): ManifestCommit.Manifest =
-    ManifestCommit.latest(fs, table).getOrElse {
-      fs.mkdirs(table)
-      val entries = legacyLayout(fs, table)
-        .getOrElse(Map("buckets" -> nBuckets.toString))
-      val v = ManifestCommit.commit(fs, table, entries)
-      ManifestCommit.Manifest(v, entries)
-    }
 
   /** An integral version's range in a batch (min/max None if all null). */
   private final case class Versions(min: Option[Long], max: Option[Long], nulls: Long)
@@ -710,8 +757,8 @@ object ParquetMergeSink {
   /** One batch staged for its write: `frame` is the aligned batch with
     * the bucket column, materialized behind a [[graft.Tables.barrier]];
     * `touched`, `rows` and `versions` (None unless the version column is
-    * integral) were observed by that same job. `noData`: no committed or
-    * legacy dir holds a row the batch could conflict with.
+    * integral) were observed by that same job. `noData`: no committed
+    * dir holds a row the batch could conflict with.
     */
   private final case class Staged(frame: DataFrame, touched: Seq[Int],
       rows: Long, buckets: Int, committed: Option[ManifestCommit.Manifest],
@@ -719,7 +766,7 @@ object ParquetMergeSink {
 
   /** The shared front of [[merge]] and [[mergeActions]]: ONE Spark job.
     *
-    * Reads the committed manifest (or a legacy layout's synthesized one)
+    * Reads the committed manifest ([[head]], refusing an old format)
     * WITHOUT creating anything, so the bucket count and declared schema
     * are known before the batch is touched; `shape` aligns the batch to
     * them. The bucket column is added, and a `Dataset.observe` of the
@@ -730,11 +777,9 @@ object ParquetMergeSink {
   private def stage(fs: FileSystem, table: Path, keys: Seq[String], version: String,
       nBuckets: Int)(shape: Option[ManifestCommit.Manifest] => DataFrame): Staged = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val committed = ManifestCommit.latest(fs, table)
-    val known = committed.orElse(
-      legacyLayout(fs, table).map(ManifestCommit.Manifest(0L, _)))
-    val buckets = known.fold(nBuckets)(_.entries("buckets").toInt)
-    val shaped = shape(known)
+    val committed = head(fs, table)
+    val buckets = committed.fold(nBuckets)(_.entries("buckets").toInt)
+    val shaped = shape(committed)
     val integral = shaped.schema.find(f => lcName(f.name) == lcName(version))
       .exists(f => Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType))
     val v = col(version).cast("long")
@@ -745,23 +790,25 @@ object ParquetMergeSink {
     val seen = ran.observedMetrics(StageMetrics)
     def long(i: Int) = Option.unless(seen.isNullAt(i))(seen.getLong(i))
     Staged(frame, seen.getSeq[Int](0).sorted, seen.getLong(1), buckets, committed,
-      known.forall(_.dirs.isEmpty),
+      committed.forall(_.dirs.isEmpty),
       Option.when(integral)(Versions(long(2), long(3), seen.getLong(4))))
   }
 
   /** The manifest a non-empty staged batch commits against: the one it
-    * was staged on, or — for a new or legacy table — manifest v1, created
-    * only now that the batch is known to carry rows.
+    * was staged on, or — for a new table — manifest v1, which commits the
+    * bucket count BEFORE any data generation exists: a crash mid-first-merge
+    * leaves a committed count, so a later merge (even with a different
+    * requested nBuckets) reads the committed layout instead of silently
+    * re-bucketing keys. It is created only now that the batch is known to
+    * carry rows; a writer that created the table meanwhile makes this
+    * commit fail.
     */
   private def manifestFor(fs: FileSystem, table: Path,
       staged: Staged): ManifestCommit.Manifest =
     staged.committed.getOrElse {
-      val m = ensureManifest(fs, table, staged.buckets)
-      require(m.entries("buckets").toInt == staged.buckets,
-        s"$table was created with ${m.entries("buckets")} buckets while a " +
-          s"batch was being staged for ${staged.buckets} — single writer " +
-          "per table; retry the merge")
-      m
+      fs.mkdirs(table)
+      val entries = Map("buckets" -> staged.buckets.toString)
+      ManifestCommit.Manifest(ManifestCommit.commit(fs, table, 0L, entries), entries)
     }
 
   /** The rows under `rels` (dirs relative to `table`), from the files'
@@ -803,8 +850,8 @@ object ParquetMergeSink {
     * The same flip raises `hwm` to the batch's largest version (a table
     * without one that can append takes it from one scan of its version
     * column; a non-integral version drops it). Unreferenced generations
-    * and legacy bucket dirs are reclaimed; keep=2 leaves the previous
-    * manifest's for in-flight readers.
+    * are reclaimed; keep=2 leaves the previous manifest's for in-flight
+    * readers.
     */
   private def commitBuckets(fs: FileSystem, table: Path, staged: Staged,
       keys: Seq[String], version: String, append: Boolean)(
@@ -858,23 +905,14 @@ object ParquetMergeSink {
       "read" -> readDirs.size, "drain" -> drain,
       "hwm" -> manifest.entries.getOrElse(HwmKey, "none"),
       "min_version" -> staged.versions.flatMap(_.min).getOrElse("none"))
-    // Stamp the declared schema (or, first time, the batch-derived one):
-    // pre-existing tables acquire the entry on their next merge, which is
-    // what makes ALTER TABLE available to API-grown tables too.
-    val schemaEntry = SchemaKey -> declared.getOrElse(
-      stampable(org.apache.spark.sql.types.StructType(
-        merged.schema.fields.filterNot(_.name == BucketCol)))).json
-    ManifestCommit.commit(fs, table, carried ++ updated ++ writeMeta(keys, version) ++
-      hwm.map(HwmKey -> _.toString) + schemaEntry)
+    // Stamp the declared schema (or, on a new table's first data commit,
+    // the batch-derived one): it is what makes ALTER TABLE available to
+    // API-grown tables too.
+    val schemaEntry = SchemaKey -> declared.getOrElse(stampable(
+      StructType(merged.schema.fields.filterNot(_.name == BucketCol)))).json
+    ManifestCommit.commit(fs, table, manifest.version, carried ++ updated ++
+      writeMeta(keys, version) ++ hwm.map(HwmKey -> _.toString) + schemaEntry)
     ManifestCommit.vacuum(fs, table, keep = 2)
-    val stillReferenced = ManifestCommit.committed(fs, table).takeRight(2)
-      .flatMap(_.dirs.values).filter(!_.contains("/")).toSet
-    fs.listStatus(table).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isDirectory && name.startsWith(s"$BucketCol=") &&
-          !stillReferenced.contains(name))
-        fs.delete(st.getPath, true)
-    }
   }
 
   /** Latest-wins upsert of `batch` into the table at `path`; returns the
@@ -895,7 +933,6 @@ object ParquetMergeSink {
     val spark = batch.sparkSession
     val table = new Path(path)
     val fs = fsFor(spark, table)
-    guardReadable(fs, table)
     // A declared schema (SQL-created, or stamped by a prior merge) is the
     // write contract: the batch aligns onto it — null-fill for columns an
     // old writer doesn't know yet (post-ADD COLUMN), loud refusal for
@@ -994,11 +1031,9 @@ object ParquetMergeSink {
     val spark = source.sparkSession
     val table = new Path(path)
     val fs = fsFor(spark, table)
-    guardReadable(fs, table)
-    // The table's schema BEFORE this commit (declared, or a legacy
-    // table's data schema); the action projection null-fills declared
-    // columns the source predates.
-    var tableSchema = Option.empty[org.apache.spark.sql.types.StructType]
+    // The table's declared schema BEFORE this commit; the action
+    // projection null-fills declared columns the source predates.
+    var tableSchema = Option.empty[StructType]
     // The stored columns. On the CREATE path, columns only the delete
     // predicate reads (a CDC op flag) are dropped unless they are keys or
     // the version, so the schema matches what merge-into-existing stores;
@@ -1031,11 +1066,8 @@ object ParquetMergeSink {
     // anything hashes them (an un-cast narrower key would route to the
     // wrong bucket). Source-only columns (the CDC op flag) pass through.
     val staged = stage(fs, table, keys, version, nBuckets) { known =>
-      tableSchema = known.flatMap(m => declaredSchema(m).orElse(
-        Option.when(m.dirs.nonEmpty)(
-          scan(spark, table, m, m.dirs.values.toSeq.sorted).schema)))
-      alignToSchema(source,
-          tableSchema.getOrElse(org.apache.spark.sql.types.StructType(Nil)),
+      tableSchema = known.flatMap(declaredSchema)
+      alignToSchema(source, tableSchema.getOrElse(StructType(Nil)),
           s"mergeActions source for $path", keys :+ version, keepSourceOnly = true)
         .withColumn(DelCol, coalesce(deleteWhen.cast("boolean"), lit(false)))
     }
@@ -1058,8 +1090,7 @@ object ParquetMergeSink {
     * not touch ∪ source rows not marked for delete.
     */
   private def applyActions(resolved: DataFrame, current: Option[DataFrame],
-      keys: Seq[String],
-      tableSchema: Option[org.apache.spark.sql.types.StructType],
+      keys: Seq[String], tableSchema: Option[StructType],
       tableCols: Seq[String]): DataFrame = {
     // matched+delete: current dropped by the anti join, source filtered out;
     // matched+update: current dropped, source row inserted;

@@ -360,13 +360,13 @@ object TableMaintenance {
       keys: Seq[String]): Unit = {
     val root = new Path(path)
     val fs = root.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    val gen = ManifestCommit.newGeneration(
-      ManifestCommit.latest(fs, root).map(_.version).getOrElse(0L) + 1L)
+    val prev = ManifestCommit.latest(fs, root).map(_.version).getOrElse(0L)
+    val gen = ManifestCommit.newGeneration(prev + 1L)
     df.repartitionByRange(numFiles, keys.map(col): _*)
       .sortWithinPartitions(keys.map(col): _*)
       .write.mode(SaveMode.Overwrite)
       .parquet(new Path(root, gen).toString)
-    ManifestCommit.commit(fs, root, Map("dir.table" -> gen))
+    ManifestCommit.commit(fs, root, prev, Map("dir.table" -> gen))
     ManifestCommit.vacuum(fs, root, keep = 2)
   }
 
@@ -450,11 +450,12 @@ object TableMaintenance {
     val prevKeys = m.flatMap(_.dirs.get("deletes")).map(rel =>
       spark.read.parquet(new Path(root, rel).toString))
     val allKeys = prevKeys.fold(newKeys)(_.union(newKeys).distinct())
-    val gen = ManifestCommit.newGeneration(m.map(_.version).getOrElse(0L) + 1L)
+    val prev = m.map(_.version).getOrElse(0L)
+    val gen = ManifestCommit.newGeneration(prev + 1L)
     allKeys.coalesce(1).write.mode(SaveMode.Overwrite)
       .parquet(new Path(root, gen).toString)
     val carried = m.map(_.entries).getOrElse(Map.empty) - "dir.deletes"
-    val v = ManifestCommit.commit(fs, root,
+    val v = ManifestCommit.commit(fs, root, prev,
       carried ++ Map("dir.deletes" -> gen, "delete.key" -> keyCol))
     ManifestCommit.vacuum(fs, root, keep = 2)
     v
@@ -532,7 +533,7 @@ object TableMaintenance {
     val manifest = ManifestCommit.latest(fs, root)
     if (manifest.isDefined) ManifestCommit.vacuum(fs, root, keep = 2)
     else fs.listStatus(root).foreach { st =>
-      if (st.isDirectory && st.getPath.getName.matches("_g\\d+-[0-9a-f]+"))
+      if (st.isDirectory && ManifestCommit.isGeneration(st.getPath.getName))
         fs.delete(st.getPath, true) // crashed-run orphan, unreferenced
     }
     val entries = manifest.map(_.dirs).getOrElse(Map.empty)
@@ -583,8 +584,8 @@ object TableMaintenance {
     }
     if (work.isEmpty) return Seq.empty
 
-    val gen = ManifestCommit.newGeneration(
-      manifest.map(_.version).getOrElse(0L) + 1L)
+    val prev = manifest.map(_.version).getOrElse(0L)
+    val gen = ManifestCommit.newGeneration(prev + 1L)
     work.foreach { case (part, managedDir, lateFiles, nOut) =>
       val srcs = managedDir.map(_.toString).toSeq ++
         lateFiles.map(_.getPath.toString)
@@ -615,7 +616,7 @@ object TableMaintenance {
           !updated.contains("dir." + k.stripPrefix("absorbed.")))
     }
     // THE commit: every rewritten partition flips in this one small file
-    ManifestCommit.commit(fs, root, carried ++ updated)
+    ManifestCommit.commit(fs, root, prev, carried ++ updated)
     ManifestCommit.vacuum(fs, root, keep = 2)
     // Absorbed plain files are NOT deleted here: a reader that resolved
     // the PREVIOUS manifest may still have them in its scan plan.
@@ -758,7 +759,7 @@ object TableMaintenance {
           fs.delete(st.getPath, false)
       }
     } else if (manifest.isEmpty) fs.listStatus(root).foreach { st =>
-      if (st.isDirectory && st.getPath.getName.matches("_g\\d+-[0-9a-f]+"))
+      if (st.isDirectory && ManifestCommit.isGeneration(st.getPath.getName))
         fs.delete(st.getPath, true)
     }
     val dataDir = new Path(resolveDataDir(spark, path))
@@ -789,11 +790,11 @@ object TableMaintenance {
     val root = new Path(path)
     val fs: FileSystem =
       root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gen = ManifestCommit.newGeneration(
-      ManifestCommit.latest(fs, root).map(_.version).getOrElse(0L) + 1L)
+    val prev = ManifestCommit.latest(fs, root).map(_.version).getOrElse(0L)
+    val gen = ManifestCommit.newGeneration(prev + 1L)
     shaped.write.mode(SaveMode.Overwrite)
       .parquet(new Path(root, gen).toString)
-    val v = ManifestCommit.commit(fs, root,
+    val v = ManifestCommit.commit(fs, root, prev,
       extraEntries ++ Map("dir.table" -> gen))
     ManifestCommit.vacuum(fs, root, keep = 2)
     v

@@ -37,10 +37,11 @@ import graft.sinks.ManifestCommit
   * Resolution semantics — identical to the API readers by construction:
   *
   *  - the CURRENT table is the highest committed manifest's generation
-  *    dirs: a merge-sink table's bucket entries (`dir.N`, bucket N's base
-  *    dir, plus `dir.N+V`, a segment manifest vV appended to it — each
-  *    entry one dir) or a maintained table's `dir.table`;
-  *    uncommitted/orphan generations are invisible.
+  *    dirs: a merge-sink table's entries (`dir.N`, bucket N's base dir,
+  *    and `dir.+V`, the segment manifest vV appended — each entry one
+  *    dir) or a maintained table's `dir.table`; uncommitted/orphan
+  *    generations are invisible. A merge-sink table of an older format is
+  *    refused until `CALL <catalog>.system.upgrade` commits it anew.
   *  - `VERSION AS OF n` loads manifest n if vacuum still retains it —
   *    the exact `readVersion` contract, including the loud listing of
   *    retained versions on a miss.
@@ -116,15 +117,14 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog {
 
   private def load(ident: Identifier, version: Option[Long]): Table = {
     val p = tablePath(ident)
-    if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    val m = version match {
-      case None => ManifestCommit.latest(fs, p)
-        .getOrElse(throw new NoSuchTableException(ident))
-      case Some(v) => ManifestCommit.at(fs, p, v).getOrElse(
-        throw new IllegalArgumentException(
-          s"version $v of $p is not retained — retained: " +
-            ManifestCommit.committed(fs, p).map(_.version).mkString(", ")))
-    }
+    // the sink's format check: an old-format merge-sink table (or its
+    // pre-manifest dirs) is refused with the upgrade procedure's name
+    val head = graft.sinks.ParquetMergeSink.head(fs, p)
+      .getOrElse(throw new NoSuchTableException(ident))
+    val m = version.fold(head)(v => graft.sinks.ParquetMergeSink.requireCurrent(p,
+      ManifestCommit.at(fs, p, v).getOrElse(throw new IllegalArgumentException(
+        s"version $v of $p is not retained — retained: " +
+          ManifestCommit.committed(fs, p).map(_.version).mkString(", ")))))
     val dataEntries = m.dirs.filter { case (k, _) => k != "deletes" }
     val unsupported = dataEntries.keys.filterNot(k =>
       k == "table" || graft.sinks.ParquetMergeSink.isSinkKey(k))

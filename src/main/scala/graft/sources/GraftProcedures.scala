@@ -32,6 +32,10 @@ import graft.sinks.{ManifestCommit, ParquetMergeSink, TableMaintenance}
   *  - `vacuum(table, keep)` — drop all but the newest `keep` manifest
   *    versions and every generation dir only they referenced
   *    ([[ManifestCommit.vacuum]]); the storage-reclaim half of rollback.
+  *  - `upgrade(table)` — commit a merge-sink table of an older on-disk
+  *    format once in the current one ([[ParquetMergeSink.upgrade]]);
+  *    every other read and write refuses such a table with an error that
+  *    names this procedure. A current table commits nothing.
   *  - `compact(table, target_mb, sort_by)` — rewrite a maintained
   *    single-table layout into target-sized files via
   *    [[TableMaintenance.compact]], MATERIALIZING any committed deletion
@@ -68,6 +72,10 @@ private[sources] object GraftProcedures {
   private def result(schema: StructType, rows: Seq[InternalRow]): JIterator[Scan] =
     java.util.Collections.singletonList(RowScan(schema, rows): Scan).iterator()
 
+  /** A result schema of non-null columns. */
+  private def columns(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) })
+
   private def utf8(s: String): UTF8String = UTF8String.fromString(s)
 
   /** Shared shape: every procedure takes the table name first and binds
@@ -90,9 +98,9 @@ private[sources] object GraftProcedures {
   private def param(name: String, dt: DataType, default: String): ProcedureParameter =
     ProcedureParameter.in(name, dt).defaultValue(default).build()
 
-  /** True when `m` holds merge-sink data entries (base or segment). */
+  /** True when `m` holds merge-sink data entries, of any format. */
   private def isBucketLayout(m: ManifestCommit.Manifest): Boolean =
-    m.dirs.keys.exists(ParquetMergeSink.isSinkKey)
+    m.dirs.keys.exists(ParquetMergeSink.isSinkKey) || ParquetMergeSink.oldFormat(m).isDefined
 
   /** table-name argument → its managed root path (must exist). */
   private def tableRoot(root: Path, table: String): Path = {
@@ -113,11 +121,8 @@ private[sources] object GraftProcedures {
           Array(param("table", StringType))) {
         override def invoke(input: InternalRow): JIterator[Scan] = {
           val p = tableRoot(root, input.getString(0))
-          val schema = StructType(Seq(
-            StructField("version", LongType, nullable = false),
-            StructField("committed_at", StringType, nullable = false),
-            StructField("layout", StringType, nullable = false),
-            StructField("entries", StringType, nullable = false)))
+          val schema = columns("version" -> LongType, "committed_at" -> StringType,
+            "layout" -> StringType, "entries" -> StringType)
           val rows = ManifestCommit.committed(fs, p).sortBy(-_.version).map { m =>
             val layout =
               if (m.dirs.keys.forall(k => k == "table" || k == "deletes")) "maintained"
@@ -138,10 +143,7 @@ private[sources] object GraftProcedures {
         override def invoke(input: InternalRow): JIterator[Scan] = {
           val p = tableRoot(root, input.getString(0))
           val v = ManifestCommit.rollback(fs, p, input.getLong(1))
-          result(
-            StructType(Seq(
-              StructField("restored_version", LongType, nullable = false),
-              StructField("new_version", LongType, nullable = false))),
+          result(columns("restored_version" -> LongType, "new_version" -> LongType),
             Seq(new GenericInternalRow(Array[Any](input.getLong(1), v))))
         }
       }
@@ -153,13 +155,19 @@ private[sources] object GraftProcedures {
           require(keep >= 1, s"vacuum: keep must be >= 1, got $keep")
           ManifestCommit.vacuum(fs, p, keep)
           val retained = ManifestCommit.committed(fs, p).map(_.version).sorted
-          result(
-            StructType(Seq(
-              StructField("retained_versions", IntegerType, nullable = false),
-              StructField("oldest", LongType, nullable = false),
-              StructField("newest", LongType, nullable = false))),
-            Seq(new GenericInternalRow(
-              Array[Any](retained.size, retained.min, retained.max))))
+          result(columns("retained_versions" -> IntegerType, "oldest" -> LongType,
+              "newest" -> LongType),
+            Seq(new GenericInternalRow(Array[Any](retained.size, retained.min, retained.max))))
+        }
+      }
+      case "upgrade" => new GraftProcedure("upgrade",
+          Array(param("table", StringType))) {
+        override def invoke(input: InternalRow): JIterator[Scan] = {
+          val p = new Path(root, input.getString(0))
+          val v = ParquetMergeSink.upgrade(spark, p.toString)
+          result(columns("committed" -> BooleanType, "version" -> LongType),
+            Seq(new GenericInternalRow(Array[Any](v.isDefined,
+              ManifestCommit.latest(fs, p).map(_.version).getOrElse(0L)))))
         }
       }
       case "compact" => new GraftProcedure("compact",
@@ -186,10 +194,7 @@ private[sources] object GraftProcedures {
           val files = TableMaintenance.compact(
             spark, p.toString, targetMb.toLong << 20, sortBy)
           val v = ManifestCommit.latest(fs, p).map(_.version).getOrElse(0L)
-          result(
-            StructType(Seq(
-              StructField("version", LongType, nullable = false),
-              StructField("files", IntegerType, nullable = false))),
+          result(columns("version" -> LongType, "files" -> IntegerType),
             Seq(new GenericInternalRow(Array[Any](v, files))))
         }
       }
@@ -203,10 +208,7 @@ private[sources] object GraftProcedures {
           val files = input.getInt(2)
           require(files >= 1, s"sort: files must be >= 1, got $files")
           val v = TableMaintenance.sortManaged(spark, p.toString, files, keys)
-          result(
-            StructType(Seq(
-              StructField("version", LongType, nullable = false),
-              StructField("files", IntegerType, nullable = false))),
+          result(columns("version" -> LongType, "files" -> IntegerType),
             Seq(new GenericInternalRow(Array[Any](v, committedFileCount(p)))))
         }
       }
@@ -222,10 +224,7 @@ private[sources] object GraftProcedures {
           require(files >= 1, s"zorder: files must be >= 1, got $files")
           val v = TableMaintenance.zorderManaged(
             spark, p.toString, files, keys, input.getInt(3))
-          result(
-            StructType(Seq(
-              StructField("version", LongType, nullable = false),
-              StructField("files", IntegerType, nullable = false))),
+          result(columns("version" -> LongType, "files" -> IntegerType),
             Seq(new GenericInternalRow(Array[Any](v, committedFileCount(p)))))
         }
       }
@@ -236,12 +235,8 @@ private[sources] object GraftProcedures {
           val p = maintainedRoot(root, table, "stats_index")
           val keys = splitKeys(input.getString(1), "stats_index")
           val n = TableMaintenance.statsIndexManaged(spark, p.toString, keys)
-          result(
-            StructType(Seq(
-              StructField("files_indexed", IntegerType, nullable = false),
-              StructField("keys", StringType, nullable = false))),
-            Seq(new GenericInternalRow(
-              Array[Any](n, utf8(keys.mkString(","))))))
+          result(columns("files_indexed" -> IntegerType, "keys" -> StringType),
+            Seq(new GenericInternalRow(Array[Any](n, utf8(keys.mkString(","))))))
         }
       }
       case "export" => new GraftProcedure("export",
@@ -359,13 +354,8 @@ private[sources] object GraftProcedures {
                 s"manifest says ${archived(name)} — archive corrupt")
             (name, v)
           }
-          result(
-            StructType(Seq(
-              StructField("table", StringType, nullable = false),
-              StructField("version", LongType, nullable = false))),
-            rows.map { case (n, v) =>
-              new GenericInternalRow(Array[Any](utf8(n), v))
-            })
+          result(columns("table" -> StringType, "version" -> LongType),
+            rows.map { case (n, v) => new GenericInternalRow(Array[Any](utf8(n), v)) })
         }
       }
       case other => throw new RuntimeException(
@@ -381,11 +371,8 @@ private[sources] object GraftProcedures {
     */
   private val ArchiveManifest = "_graft_export"
 
-  private val exportSchema = StructType(Seq(
-    StructField("table", StringType, nullable = false),
-    StructField("version", LongType, nullable = false),
-    StructField("files", LongType, nullable = false),
-    StructField("bytes", LongType, nullable = false)))
+  private val exportSchema = columns("table" -> StringType, "version" -> LongType,
+    "files" -> LongType, "bytes" -> LongType)
 
   /** Every managed table under the catalog root (a child dir carrying a
     * manifest log).
@@ -435,6 +422,6 @@ private[sources] object GraftProcedures {
   }
 
   val All: Array[String] = Array(
-    "history", "rollback", "vacuum", "compact", "sort", "zorder",
+    "history", "rollback", "vacuum", "upgrade", "compact", "sort", "zorder",
     "stats_index", "export", "restore")
 }

@@ -14,8 +14,8 @@ class ManifestCommitSpec extends SparkSpec {
 
   test("commits are monotonically versioned and the latest wins reads") {
     val (r, fs) = root()
-    val v1 = ManifestCommit.commit(fs, r, Map("dir.table" -> "_g1-aaaa1111"))
-    val v2 = ManifestCommit.commit(fs, r, Map("dir.table" -> "_g2-bbbb2222"))
+    val v1 = ManifestCommit.commit(fs, r, 0L, Map("dir.table" -> "_g1-aaaa1111"))
+    val v2 = ManifestCommit.commit(fs, r, v1, Map("dir.table" -> "_g2-bbbb2222"))
     assert(v1 === 1L && v2 === 2L)
     val m = ManifestCommit.latest(fs, r).get
     assert(m.version === 2L && m.dirs("table") === "_g2-bbbb2222")
@@ -24,29 +24,33 @@ class ManifestCommitSpec extends SparkSpec {
 
   test("an interleaved writer never clobbers a committed manifest") {
     val (r, fs) = root()
-    ManifestCommit.commit(fs, r, Map("dir.table" -> "_g1-aaaa1111"))
+    val read = ManifestCommit.commit(fs, r, 0L, Map("dir.table" -> "_g1-aaaa1111"))
     // another writer committed version 2 out from under us
     val taken = new Path(new Path(r, ManifestCommit.CommitDir), f"${2L}%020d")
+    val racer = "dir.table=_g2-cccc3333\ntxid=racer\n".getBytes("UTF-8")
     val out = fs.create(taken, false)
-    out.write("dir.table=_g2-cccc3333\ntxid=racer\n".getBytes("UTF-8"))
+    out.write(racer)
     out.close()
-    // our commit re-reads latest() inside the call, takes the NEXT slot,
-    // and leaves the racer's manifest byte-for-byte intact (the in-call
-    // race window itself is closed by the txid read-back after rename —
-    // the loser of a true same-slot interleaving throws "lost the race")
-    val v = ManifestCommit.commit(fs, r, Map("dir.table" -> "_g3-dddd4444"))
-    assert(v === 3L)
-    val all = ManifestCommit.committed(fs, r)
-    assert(all.map(_.version) === Seq(1L, 2L, 3L))
-    assert(all(1).dirs("table") === "_g2-cccc3333", "racer's commit clobbered")
-    assert(ManifestCommit.latest(fs, r).get.dirs("table") === "_g3-dddd4444")
+    // our commit was built from v1: it claims exactly v2, finds it taken
+    // and fails loudly — it neither lands v3 on top of the racer's v2
+    // (which would drop v2's changes) nor touches the racer's manifest
+    val e = intercept[java.io.IOException](
+      ManifestCommit.commit(fs, r, read, Map("dir.table" -> "_g3-dddd4444")))
+    assert(e.getMessage.contains("lost the race for version 2"), e.getMessage)
+    assert(ManifestCommit.committed(fs, r).map(_.version) === Seq(1L, 2L))
+    val in = fs.open(taken)
+    try assert(in.readAllBytes().toSeq === racer.toSeq, "racer's commit clobbered")
+    finally in.close()
+    assert(fs.listStatus(new Path(r, ManifestCommit.CommitDir))
+      .forall(!_.getPath.getName.startsWith(".tmp-")), "the loser left its tmp file")
   }
 
   test("vacuum keeps generations any retained manifest references, reclaims the rest") {
     val (r, fs) = root()
-    Seq("_g1-aaaa1111", "_g2-bbbb2222", "_g3-cccc3333").foreach { g =>
-      fs.mkdirs(new Path(r, g))
-      ManifestCommit.commit(fs, r, Map("dir.table" -> g))
+    Seq("_g1-aaaa1111", "_g2-bbbb2222", "_g3-cccc3333").zipWithIndex.foreach {
+      case (g, read) =>
+        fs.mkdirs(new Path(r, g))
+        ManifestCommit.commit(fs, r, read, Map("dir.table" -> g))
     }
     // crashed-commit debris in _commits must also be reclaimed
     val tmp = new Path(new Path(r, ManifestCommit.CommitDir), ".tmp-deadbeef")
@@ -64,7 +68,7 @@ class ManifestCommitSpec extends SparkSpec {
   test("two racing committers: one winner per version, loud loser, " +
       "a polling reader never sees a mixed manifest") {
     val (r, fs) = root()
-    ManifestCommit.commit(fs, r, Map("dir.t" -> "gen-base", "n" -> "1"))
+    ManifestCommit.commit(fs, r, 0L, Map("dir.t" -> "gen-base", "n" -> "1"))
 
     // A concurrent reader polls latest() for the whole race; every
     // observation must be ONE writer's complete entry set — never a mix,
@@ -89,9 +93,9 @@ class ManifestCommitSpec extends SparkSpec {
       val outcome = new java.util.concurrent.ConcurrentHashMap[String, Either[Throwable, Long]]()
       val ws = Seq("A", "B").map { tag =>
         new Thread(() => {
-          gate.await() // both writers enter commit() together
+          gate.await() // both writers read the head and commit together
           val res =
-            try Right(ManifestCommit.commit(fs, r,
+            try Right(ManifestCommit.commit(fs, r, ManifestCommit.latest(fs, r).get.version,
               Map("dir.t" -> s"gen-$tag", "dir.u" -> s"gen-$tag", "n" -> "2")))
             catch { case e: Throwable => Left(e) }
           outcome.put(tag, res)
@@ -138,9 +142,8 @@ class ManifestCommitSpec extends SparkSpec {
     val (r, fs) = root()
     fs.mkdirs(new Path(r, "day=2024-01-01")) // partitioned-table plain dir
     fs.mkdirs(new Path(r, "_g1-aaaa1111"))
-    ManifestCommit.commit(fs, r, Map("dir.x" -> "_g1-aaaa1111"))
-    (1 to 3).foreach(i =>
-      ManifestCommit.commit(fs, r, Map("dir.x" -> "_g1-aaaa1111")))
+    (0 to 3).foreach(read =>
+      ManifestCommit.commit(fs, r, read, Map("dir.x" -> "_g1-aaaa1111")))
     ManifestCommit.vacuum(fs, r, keep = 2)
     assert(fs.exists(new Path(r, "day=2024-01-01")),
       "vacuum must only ever touch _g* generation dirs")

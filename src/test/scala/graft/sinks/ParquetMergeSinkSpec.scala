@@ -171,39 +171,114 @@ class ParquetMergeSinkSpec extends SparkSpec {
       .map(_.getAs[String]("v")).toSeq === Seq("c"))
   }
 
-  test("a pre-protocol table (bucket dirs + marker) migrates instead of resetting") {
-    // hand-build the OLD layout this sink wrote before the manifest
-    // protocol: top-level __bucket=N dirs + a .graft-buckets marker
-    val dir = java.nio.file.Files.createTempDirectory("graft-sink-legacy").toString + "/t"
-    import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
-    val legacy = (1L to 20L).map(k => (k, s"v$k", 1L)).toDF("k", "v", "ver")
-      .withColumn("__bucket", pmod(xxhash64($"k"), lit(4)).cast("int"))
-    legacy.write.partitionBy("__bucket").parquet(dir)
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, ".graft-buckets"), "4".getBytes)
-    // reads serve the legacy rows as-is
-    assert(ParquetMergeSink.read(spark, dir).count() === 20)
-    // the first post-upgrade merge folds INTO the legacy rows (a silent
-    // fresh-table reset would drop 19 of them / duplicate key 7)
-    ParquetMergeSink.merge(Seq((7L, "v7-new", 2L)).toDF("k", "v", "ver"),
-      dir, Seq("k"), "ver", nBuckets = 16) // wrong count must be ignored too
-    val rows = ParquetMergeSink.read(spark, dir).collect()
-      .map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toMap
-    assert(rows.size === 20 && rows(7L) === "v7-new" && rows(8L) === "v8")
-    // legacy dirs get the same keep=2 grace as generations, then reclaim
-    ParquetMergeSink.merge(Seq((7L, "v7-n2", 3L)).toDF("k", "v", "ver"),
-      dir, Seq("k"), "ver")
-    ParquetMergeSink.merge(Seq((8L, "v8-n2", 3L)).toDF("k", "v", "ver"),
-      dir, Seq("k"), "ver")
-    assert(ParquetMergeSink.read(spark, dir).count() === 20)
-    // bucket dirs without marker or manifest stay a loud failure
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-sink-nomark").toString + "/t"
-    legacy.write.partitionBy("__bucket").parquet(dir2)
-    new java.io.File(dir2, "_SUCCESS").delete()
-    val ex = intercept[IllegalStateException] {
-      ParquetMergeSink.merge(Seq((1L, "x", 9L)).toDF("k", "v", "ver"),
-        dir2, Seq("k"), "ver")
+  /** Asserts that every read, staging pass and ALTER refuses the table at
+    * `dir` with an error that names the upgrade procedure, runs no Spark
+    * job and creates no file under the table root.
+    */
+  private def assertRefused(dir: String): Unit = {
+    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.types.{LongType, StringType, StructField}
+    val before = SinkFormats.files(dir)
+    val batch = Seq((1L, 1L, "x")).toDF("h", "k", "v")
+    Seq[(String, () => Any)](
+      "read" -> (() => ParquetMergeSink.read(spark, dir)),
+      "readVersion" -> (() => ParquetMergeSink.readVersion(spark, dir, 1L)),
+      "merge" -> (() => ParquetMergeSink.merge(batch, dir, Seq("h", "k"), "h")),
+      "mergeActions" -> (() => ParquetMergeSink.mergeActions(
+        batch.withColumn("del", lit(false)), dir, Seq("h", "k"), "h", col("del"))),
+      "ADD COLUMN" -> (() => ParquetMergeSink.addColumns(spark, dir,
+        Seq(StructField("note", StringType)))),
+      "DROP COLUMN" -> (() => ParquetMergeSink.dropColumns(spark, dir, Seq("v"))),
+      "RENAME COLUMN" -> (() => ParquetMergeSink.renameColumn(spark, dir, "v", "w")),
+      "ALTER COLUMN TYPE" -> (() =>
+        ParquetMergeSink.widenColumnType(spark, dir, "v", LongType))
+    ).foreach { case (what, call) =>
+      var e: Throwable = null
+      assert(jobsOf { e = intercept[IllegalStateException](call()) } === 0, what)
+      assert(e.getMessage.contains("system.upgrade"), s"$what: ${e.getMessage}")
     }
-    assert(ex.getMessage.contains("unknowable"))
+    assert(SinkFormats.files(dir) === before, "a refusal changed the table's files")
+  }
+
+  /** The first word of the `merge_commit` choice `merge` records for
+    * `batch`: the commit path, `append` or `merge`.
+    */
+  private def pathOf(batch: org.apache.spark.sql.DataFrame, dir: String,
+      keys: Seq[String], version: String): String = {
+    ParquetMergeSink.merge(batch, dir, keys, version)
+    choice().split(" ").head
+  }
+
+  test("upgrade: a pre-protocol table (bucket dirs + marker) keeps rows") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.functions.{col, concat, input_file_name, lit, pmod, xxhash64}
+    val base = java.nio.file.Files.createTempDirectory("graft-sink-legacy").toString
+    val dir = s"$base/t"
+    val table = new Path(dir)
+    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val legacy = (1L to 20L).map(k => (k, s"v$k", 1L)).toDF("k", "v", "ver")
+    SinkFormats.preManifest(legacy, dir, Seq("k"), 4)
+    assertRefused(dir)
+    // a crash before the commit left an orphan generation beside the old dirs
+    val orphan = new Path(dir, "_g1-0badcafe")
+    fs.mkdirs(new Path(orphan, "__bucket=0"))
+    assertRefused(dir)
+
+    assert(ParquetMergeSink.upgrade(spark, dir) === Some(1L))
+    SinkFormats.assertCurrent(spark, dir)
+    assert(!fs.exists(orphan) && !fs.exists(new Path(dir, ".graft-buckets")) &&
+      !fs.listStatus(table).exists(_.getPath.getName.startsWith("__bucket=")),
+      "the orphan, the marker and the old bucket dirs must be reclaimed")
+    def rows() = ParquetMergeSink.read(spark, dir).collect()
+      .map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toMap
+    assert(rows() === (1L to 20L).map(k => k -> s"v$k").toMap)
+    // each row stays in the bucket its old dir was named for
+    assert(ParquetMergeSink.read(spark, dir)
+      .withColumn("b", pmod(xxhash64(col("k")), lit(4)).cast("int"))
+      .filter(!input_file_name().contains(concat(lit("/__bucket="), col("b"), lit("/"))))
+      .isEmpty, "a row left its bucket")
+
+    // the first merge folds INTO the upgraded rows (a silent fresh-table
+    // reset would drop 19 of them / duplicate key 7), on the path a
+    // current table of the same rows takes; the wrong count is ignored
+    val twin = s"$base/twin"
+    ParquetMergeSink.merge(legacy, twin, Seq("k"), "ver", nBuckets = 4)
+    val batch = Seq((7L, "v7-new", 2L)).toDF("k", "v", "ver")
+    assert(pathOf(batch, dir, Seq("k"), "ver") === pathOf(batch, twin, Seq("k"), "ver"))
+    assert(choice().startsWith("merge "), choice())
+    assert(rows().size === 20 && rows()(7L) === "v7-new" && rows()(8L) === "v8")
+    // a re-run on a current table commits nothing
+    val head = ManifestCommit.latest(fs, table).get.version
+    assert(ParquetMergeSink.upgrade(spark, dir) === None)
+    assert(ManifestCommit.latest(fs, table).get.version === head)
+
+    // a crash after the commit left the old dirs and marker in place: reads
+    // serve the new head, and a re-run reclaims them without a commit
+    val dir3 = s"$base/t3"
+    SinkFormats.preManifest(legacy, dir3, Seq("k"), 4)
+    val aside = s"$base/aside"
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(dir3), new java.io.File(aside))
+    assert(ParquetMergeSink.upgrade(spark, dir3) === Some(1L))
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(aside), new java.io.File(dir3))
+    assert(ParquetMergeSink.read(spark, dir3).count() === 20)
+    assert(ParquetMergeSink.upgrade(spark, dir3) === None)
+    assert(ManifestCommit.latest(fs, new Path(dir3)).get.version === 1L)
+    assert(!new java.io.File(dir3, ".graft-buckets").exists() &&
+      !new java.io.File(dir3).list().exists(_.startsWith("__bucket=")))
+    assert(ParquetMergeSink.read(spark, dir3).count() === 20)
+
+    // bucket dirs without marker or manifest stay a loud failure
+    val dir2 = s"$base/nomark"
+    legacy.withColumn("__bucket", pmod(xxhash64(col("k")), lit(4)).cast("int"))
+      .write.partitionBy("__bucket").parquet(dir2)
+    Seq[() => Any](
+      () => ParquetMergeSink.merge(Seq((1L, "x", 9L)).toDF("k", "v", "ver"),
+        dir2, Seq("k"), "ver"),
+      () => ParquetMergeSink.read(spark, dir2),
+      () => ParquetMergeSink.upgrade(spark, dir2)).foreach { call =>
+      val ex = intercept[IllegalStateException](call())
+      assert(ex.getMessage.contains("unknowable"), ex.getMessage)
+    }
   }
 
   test("time travel reads a retained version; rollback re-commits it as the head") {
@@ -235,6 +310,7 @@ class ParquetMergeSinkSpec extends SparkSpec {
     // the overwritten head remains addressable for forensics
     val vRestored = ManifestCommit.rollback(fs, root, vOrig)
     assert(vRestored === vHead + 1)
+    SinkFormats.assertCurrent(spark, dir)
     assert(vNow(dir) === Map(1L -> "a", 2L -> "b"))
     assert(vAt(dir, vHead) === Map(1L -> "a2", 2L -> "b"))
 
@@ -285,6 +361,7 @@ class ParquetMergeSinkSpec extends SparkSpec {
       (7L, "early-delete", 20L, true)
     ).toDF("k", "v", "ver", "del")
     ParquetMergeSink.mergeActions(src, dir, Seq("k"), "ver", col("del"))
+    SinkFormats.assertCurrent(spark, dir)
 
     def state(): Map[Long, String] = ParquetMergeSink.read(spark, dir).collect()
       .map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toMap
@@ -508,6 +585,7 @@ class ParquetMergeSinkSpec extends SparkSpec {
       fs, new org.apache.hadoop.fs.Path(dir)).get.version
 
     ParquetMergeSink.renameColumn(spark, dir, "v", "label")
+    SinkFormats.assertCurrent(spark, dir)
     // values survive under the new name; old name is gone
     val read = ParquetMergeSink.read(spark, dir)
     assert(read.columns.toSeq === Seq("k", "label", "ver"))
@@ -539,10 +617,12 @@ class ParquetMergeSinkSpec extends SparkSpec {
 
     // dropColumns retires the physical name; re-add starts a fresh one
     ParquetMergeSink.dropColumns(spark, dir, Seq("label"))
+    SinkFormats.assertCurrent(spark, dir)
     assert(ParquetMergeSink.read(spark, dir).columns.toSeq === Seq("k", "ver"))
     ParquetMergeSink.addColumns(spark, dir, Seq(
       org.apache.spark.sql.types.StructField("v",
         org.apache.spark.sql.types.StringType)))
+    SinkFormats.assertCurrent(spark, dir)
     val vVals = ParquetMergeSink.read(spark, dir).collect()
       .map(r => Option(r.getAs[String]("v")))
     assert(vVals.nonEmpty && vVals.forall(_.isEmpty),
@@ -598,22 +678,14 @@ class ParquetMergeSinkSpec extends SparkSpec {
     // The same door with rows behind it: a non-empty source whose data
     // column does not widen losslessly is refused before anything is
     // written, and a source-only column (the CDC flag) passes through.
-    def files() = {
-      val root = java.nio.file.Paths.get(dir)
-      val walk = java.nio.file.Files.walk(root)
-      try walk.filter(java.nio.file.Files.isRegularFile(_)).toArray.toSeq
-        .map { case f: java.nio.file.Path =>
-          root.relativize(f).toString -> java.nio.file.Files.readAllBytes(f).toSeq
-        }.toMap
-      finally walk.close()
-    }
-    val before = files()
+    val before = SinkFormats.files(dir)
     val rowsNarrowing = intercept[IllegalArgumentException] {
       ParquetMergeSink.mergeActions(Seq((2L, true, 20L, false)).toDF("k", "v", "ver", "del"),
         dir, Seq("k"), "ver", col("del"))
     }
     assert(rowsNarrowing.getMessage.contains("losslessly"), rowsNarrowing.getMessage)
-    assert(files() === before, "a refused source must leave the table byte-identical")
+    assert(SinkFormats.files(dir) === before,
+      "a refused source must leave the table byte-identical")
     ParquetMergeSink.mergeActions(Seq((2L, "b", 20L, false)).toDF("k", "v", "ver", "del"),
       dir, Seq("k"), "ver", col("del"))
     val after = ParquetMergeSink.read(spark, dir)
@@ -689,6 +761,7 @@ class ParquetMergeSinkSpec extends SparkSpec {
     val t = s"$base/t"
     ParquetMergeSink.merge(heightRows(1, 1L to 20L), t, Seq("h", "k"), "h", nBuckets = 4)
     assert(choice().startsWith("append ") && choice().contains("read=0"), choice())
+    SinkFormats.assertCurrent(spark, t)
     assert(manifest("t").entries.get(ParquetMergeSink.HwmKey) === Some("1"))
     val v1 = manifest("t")
     assert(v1.dirs.keySet === Set(s"+${v1.version}"), v1.dirs)
@@ -701,6 +774,7 @@ class ParquetMergeSinkSpec extends SparkSpec {
     assert(choice().contains("hwm=1") && choice().contains("min_version=2") &&
       choice().contains("folded=0") && choice().contains("read=0"), choice())
     val v2 = manifest("t")
+    SinkFormats.assertCurrent(spark, t)
     assert(v2.entries.get(ParquetMergeSink.HwmKey) === Some("2"))
     // an append carries every entry forward and adds ONE segment entry
     assert(v1.dirs.forall { case (k, rel) => v2.dirs.get(k).contains(rel) })
@@ -713,6 +787,7 @@ class ParquetMergeSinkSpec extends SparkSpec {
     assert(choice().startsWith("merge ") && choice().contains("hwm=2") &&
       choice().contains("drain=true"), choice())
     assert(manifest("t").dirs.keySet.forall(!_.contains("+")), manifest("t").dirs)
+    SinkFormats.assertCurrent(spark, t)
     assert(rows("t").size === 40)
 
     // a null version merges, and hwm still bounds the non-null versions
@@ -740,7 +815,8 @@ class ParquetMergeSinkSpec extends SparkSpec {
     val old = s"$base/old"
     ParquetMergeSink.merge(heightRows(7, 1L to 8L), old, Seq("h", "k"), "h")
     val oldPath = new org.apache.hadoop.fs.Path(old)
-    ManifestCommit.commit(fs, oldPath, manifest("old").entries - "txid" - ParquetMergeSink.HwmKey)
+    ManifestCommit.commit(fs, oldPath, manifest("old").version,
+      manifest("old").entries - "txid" - ParquetMergeSink.HwmKey)
     ParquetMergeSink.merge(heightRows(8, 1L to 8L), old, Seq("h", "k"), "h")
     assert(choice().startsWith("merge ") && choice().contains("hwm=none"), choice())
     assert(manifest("old").entries.get(ParquetMergeSink.HwmKey) === Some("8"))
@@ -797,6 +873,7 @@ class ParquetMergeSinkSpec extends SparkSpec {
       choice().contains("folded=0") && choice().contains("drain=false"), choice())
     assert(m().dirs.size === 17 && bases.forall { case (k, rel) => m().dirs(k) == rel },
       m().dirs)
+    SinkFormats.assertCurrent(spark, wide)
     check()
 
     // a merge-path commit reads the touched bucket and the segment, folds
@@ -809,6 +886,7 @@ class ParquetMergeSinkSpec extends SparkSpec {
     assert(field("read") === field("touched") + 1, choice())
     expected += ((18L, 2L))
     assert(m().dirs.keySet.count(_.startsWith("+")) === 1, m().dirs)
+    SinkFormats.assertCurrent(spark, wide)
     check()
 
     // once the segments outweigh an average bucket, the next commit that
@@ -818,6 +896,7 @@ class ParquetMergeSinkSpec extends SparkSpec {
     merge(19, Seq(5L))
     assert(choice().contains("drain=true"), choice())
     assert(m().dirs.keySet === (0 until 16).map(_.toString).toSet, m().dirs)
+    SinkFormats.assertCurrent(spark, wide)
     check()
   }
 
@@ -850,32 +929,77 @@ class ParquetMergeSinkSpec extends SparkSpec {
     assert(state() === model)
   }
 
-  test("a manifest of per-bucket segments (dir.<b>+<v>) still reads, " +
-      "appends and merges") {
-    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-    val dir = java.nio.file.Files.createTempDirectory("graft-seg-legacy").toString + "/t"
-    val table = new org.apache.hadoop.fs.Path(dir)
+  test("upgrade folds per-bucket segments (dir.<b>+<v>) into their bases") {
+    import org.apache.hadoop.fs.Path
+    val base = java.nio.file.Files.createTempDirectory("graft-seg-legacy").toString
+    val dir = s"$base/t"
+    val table = new Path(dir)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ParquetMergeSink.merge(heightRows(1, 1L to 20L), dir, Seq("h", "k"), "h", nBuckets = 4)
-    ParquetMergeSink.merge(heightRows(1, Seq(1L)), dir, Seq("h", "k"), "h") // drains
+    SinkFormats.perBucketSegments(heightRows(1, 1L to 20L), heightRows(2, 1L to 20L),
+      dir, Seq("h", "k"), "h", buckets = 4, hwm = 2)
+    val old = ManifestCommit.latest(fs, table).get
+    assert(old.dirs.keys.exists(_.contains("+")), old.dirs)
+    assertRefused(dir)
+    // a crash before the commit left an orphan generation
+    val orphan = new Path(dir, s"_g${old.version + 1}-0badcafe")
+    fs.mkdirs(new Path(orphan, "__bucket=0"))
+
+    assert(ParquetMergeSink.upgrade(spark, dir) === Some(old.version + 1))
+    SinkFormats.assertCurrent(spark, dir)
+    assert(!fs.exists(orphan))
     val m = ManifestCommit.latest(fs, table).get
-    // hand-write the earlier layout's append: one dir per touched bucket
-    val gen = ManifestCommit.newGeneration(m.version + 1)
-    heightRows(2, 1L to 20L)
-      .withColumn("__bucket", pmod(xxhash64(col("h"), col("k")), lit(4)).cast("int"))
-      .write.partitionBy("__bucket").parquet(new org.apache.hadoop.fs.Path(table, gen).toString)
-    val segs = (0 until 4).map(b => s"dir.$b+${m.version + 1}" -> s"$gen/__bucket=$b")
-    ManifestCommit.commit(fs, table, m.entries - "txid" ++ segs + ("hwm" -> "2"))
+    assert(m.dirs.keySet === (0 until 4).map(_.toString).toSet, m.dirs)
+    def kept(e: Map[String, String]) = e.filter { case (k, _) => !k.startsWith("dir.") } - "txid"
+    assert(kept(m.entries) === kept(old.entries), "every entry but the data dirs must carry")
     def rows() = ParquetMergeSink.read(spark, dir).collect()
       .map(r => (r.getAs[Long]("h"), r.getAs[Long]("k"), r.getAs[String]("v"))).toSet
     val expected = (1L to 2L).flatMap(h => (1L to 20L).map(k => (h, k, s"v$h-$k"))).toSet
     assert(rows() === expected)
-    ParquetMergeSink.merge(heightRows(3, Seq(1L)), dir, Seq("h", "k"), "h")
-    assert(graft.StrategyLog.lastChoice("merge_commit").exists(_.startsWith("append ")))
-    // a replay folds the touched buckets' old segments into their bases
-    ParquetMergeSink.merge(heightRows(2, 1L to 20L), dir, Seq("h", "k"), "h")
+    // the pre-upgrade version is refused, never misread
+    val e = intercept[IllegalStateException](
+      ParquetMergeSink.readVersion(spark, dir, old.version))
+    assert(e.getMessage.contains("system.upgrade"), e.getMessage)
+
+    // later merges take the paths a current table of the same rows takes
+    val twin = s"$base/twin"
+    (1 to 2).foreach(_ => ParquetMergeSink.merge(heightRows(1, 1L to 20L), twin,
+      Seq("h", "k"), "h", nBuckets = 4))
+    ParquetMergeSink.merge(heightRows(2, 1L to 20L), twin, Seq("h", "k"), "h")
+    Seq(heightRows(3, Seq(1L)), heightRows(2, 1L to 20L)).foreach { b =>
+      assert(pathOf(b, dir, Seq("h", "k"), "h") === pathOf(b, twin, Seq("h", "k"), "h"))
+    }
     assert(rows() === expected + ((3L, 1L, "v3-1")))
-    assert(!ManifestCommit.latest(fs, table).get.dirs.keys.exists(k =>
-      k.contains("+") && !k.startsWith("+")))
+    SinkFormats.assertCurrent(spark, dir)
+    assert(ParquetMergeSink.upgrade(spark, dir) === None)
+  }
+
+  test("upgrade stamps unstamped manifests; current tables commit nothing") {
+    import org.apache.hadoop.fs.Path
+    val base = java.nio.file.Files.createTempDirectory("graft-unstamped").toString
+    val dir = s"$base/t"
+    val table = new Path(dir)
+    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    SinkFormats.unstamped(heightRows(1, 1L to 8L), dir, Seq("h", "k"), "h", 4)
+    val old = ManifestCommit.latest(fs, table).get
+    assertRefused(dir)
+
+    assert(ParquetMergeSink.upgrade(spark, dir) === Some(old.version + 1))
+    SinkFormats.assertCurrent(spark, dir)
+    val m = ManifestCommit.latest(fs, table).get
+    assert(m.dirs === old.dirs, "stamping rewrites no rows")
+    assert(ParquetMergeSink.declaredSchema(m).map(_.fieldNames.toSeq) === Some(Seq("h", "k", "v")))
+    assert(ParquetMergeSink.read(spark, dir).collect()
+      .map(r => (r.getAs[Long]("h"), r.getAs[Long]("k"), r.getAs[String]("v"))).toSet ===
+      (1L to 8L).map(k => (1L, k, s"v1-$k")).toSet)
+    val twin = s"$base/twin"
+    ParquetMergeSink.merge(heightRows(1, 1L to 8L), twin, Seq("h", "k"), "h", nBuckets = 4)
+    val b = heightRows(2, 1L to 8L)
+    assert(pathOf(b, dir, Seq("h", "k"), "h") === pathOf(b, twin, Seq("h", "k"), "h"))
+    assert(ParquetMergeSink.read(spark, dir).count() === 16L)
+
+    // a current table commits nothing and changes no file
+    val before = SinkFormats.files(twin)
+    assert(ParquetMergeSink.upgrade(spark, twin) === None)
+    assert(SinkFormats.files(twin) === before)
   }
 }

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
-import graft.sinks.{ParquetMergeSink, TableMaintenance}
+import graft.sinks.{ParquetMergeSink, SinkFormats, TableMaintenance}
 
 class GraftCatalogSpec extends SparkSpec {
   import spark.implicits._
@@ -101,6 +101,7 @@ class GraftCatalogSpec extends SparkSpec {
 
     mk(s"$root/w")
     spark.sql("INSERT INTO graft.w VALUES (2, 'b2', 20), (3, 'c', 20)")
+    SinkFormats.assertCurrent(spark, s"$root/w")
     val afterOnce = rows(s"$root/w")
     assert(afterOnce === Set(Seq(1L, "a", 10L), Seq(2L, "b2", 20L), Seq(3L, "c", 20L)),
       "INSERT must upsert latest-wins on the merge keys, not append")
@@ -202,6 +203,7 @@ class GraftCatalogSpec extends SparkSpec {
     """
     val before = versions(s"$root/m").max
     spark.sql(mergeSql)
+    SinkFormats.assertCurrent(spark, s"$root/m")
     val after = rows(s"$root/m")
     assert(after === Set(Seq(2L, "b2", 20L), Seq(3L, "c30", 30L)),
       "MERGE must delete, update (source wins), insert, and resolve " +
@@ -295,6 +297,7 @@ class GraftCatalogSpec extends SparkSpec {
     // columns and untouched rows carry
     val before = versions(s"$root/u").max
     spark.sql("UPDATE graft.u SET v = 'fixed', score = score * 2 WHERE score < 2.0")
+    SinkFormats.assertCurrent(spark, s"$root/u")
     val after = rows(s"$root/u")
     assert(after === Set(
       Seq(1L, "fixed", 10L, 2.0), Seq(2L, "b", 10L, 2.0),
@@ -365,6 +368,7 @@ class GraftCatalogSpec extends SparkSpec {
     val _ = root
     spark.sql("""CREATE TABLE graft.ct (k BIGINT, v STRING, ver BIGINT)
       TBLPROPERTIES('merge.keys'='k','merge.version'='ver','buckets'='4')""")
+    SinkFormats.assertCurrent(spark, s"$root/ct")
     // empty but schema-resolving, through both SQL and the API reader
     assert(spark.sql("SELECT * FROM graft.ct").columns.toSeq === Seq("k", "v", "ver"))
     assert(spark.sql("SELECT count(*) FROM graft.ct").head.getLong(0) === 0L)
@@ -557,6 +561,7 @@ class GraftCatalogSpec extends SparkSpec {
     val preAlter = versions.last
 
     spark.sql("ALTER TABLE graft.wt ALTER COLUMN qty TYPE BIGINT")
+    SinkFormats.assertCurrent(spark, dir)
 
     // time travel to the pre-ALTER version (still retained, keep=2)
     // serves the NARROW types

@@ -3,11 +3,11 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 import graft.SparkSpec
-import graft.sinks.{ManifestCommit, ParquetMergeSink, TableMaintenance}
+import graft.sinks.{ManifestCommit, ParquetMergeSink, SinkFormats, TableMaintenance}
 
 /** `CALL graftp.system.*` — the SQL maintenance procedures
-  * ([[GraftProcedures]]): history, rollback, vacuum, compact. Each test
-  * pins the SQL route against the underlying manifest-protocol API it
+  * ([[GraftProcedures]]): history, rollback, vacuum, upgrade, compact.
+  * Each test pins the SQL route against the underlying manifest-protocol API it
   * fronts, the same ≡-discipline as the INSERT/DELETE/MERGE specs.
   */
 class GraftProceduresSpec extends SparkSpec {
@@ -74,6 +74,7 @@ class GraftProceduresSpec extends SparkSpec {
       s"CALL graftp.system.rollback(table => 'rb', version => $v1)").head
     assert(row.getLong(0) === v1)
     assert(row.getLong(1) > v2, "rollback commits a NEW version (history preserved)")
+    SinkFormats.assertCurrent(spark, dir)
     // SQL reads now serve the restored state
     assert(spark.sql("SELECT k, v FROM graftp.rb").collect().map(_.toSeq).toSet
       === Set(Seq(1L, "a")),
@@ -365,5 +366,51 @@ class GraftProceduresSpec extends SparkSpec {
     assert(count("SELECT count(*) FROM graftp.seg") === 60L)
     assert(spark.sql("SELECT v FROM graftp.seg WHERE h = 2 AND k = 3").head.getString(0) === "upd")
     assert(count("SELECT count(*) FROM graftp.seg WHERE h = 6") === 1L)
+  }
+
+  test("upgrade commits each old format once; SQL refuses it before") {
+    def batch(h: Long) = (1L to 12L).map(k => (h, k, s"v$h-$k")).toDF("h", "k", "v")
+    def count(sql: String) = spark.sql(sql).head.getLong(0)
+    SinkFormats.preManifest((1L to 12L).map(k => (k, s"v$k", 1L)).toDF("k", "v", "ver"),
+      s"$root/up_pre", Seq("k"), 4)
+    SinkFormats.perBucketSegments(batch(1), batch(2), s"$root/up_seg",
+      Seq("h", "k"), "h", buckets = 4, hwm = 2)
+    SinkFormats.unstamped(batch(1), s"$root/up_uns", Seq("h", "k"), "h", 4)
+    Seq("up_pre" -> 12L, "up_seg" -> 24L, "up_uns" -> 12L).foreach { case (t, n) =>
+      val dir = new Path(s"$root/$t")
+      val old = ManifestCommit.latest(fs, dir)
+      // history lists an old table's versions, never as partitioned
+      if (old.isDefined) {
+        val layouts = spark.sql(s"CALL graftp.system.history(table => '$t')")
+          .collect().map(_.getString(2)).toSeq
+        assert(layouts.head === "merge-sink" && !layouts.contains("partitioned"), s"$t: $layouts")
+      }
+      // a SELECT is refused before any job, and creates no file
+      val before = SinkFormats.files(dir.toString)
+      var e: Throwable = null
+      assert(jobsOf { e = intercept[Exception](spark.sql(s"SELECT * FROM graftp.$t")) } === 0)
+      assert(e.getMessage.contains("system.upgrade"), s"$t: ${e.getMessage}")
+      assert(SinkFormats.files(dir.toString) === before, t)
+
+      val up = spark.sql(s"CALL graftp.system.upgrade(table => '$t')").head
+      assert(up.getBoolean(0), t)
+      val v = up.getLong(1)
+      assert(v === old.fold(1L)(_.version + 1), t)
+      SinkFormats.assertCurrent(spark, dir.toString)
+      assert(count(s"SELECT count(*) FROM graftp.$t") === n, t)
+      assert(count(s"SELECT count(*) FROM graftp.$t VERSION AS OF $v") === n, t)
+      val history = spark.sql(s"CALL graftp.system.history(table => '$t')").collect()
+      assert(history.head.getLong(0) === v && history.head.getString(2) === "merge-sink" &&
+        history.head.getString(3).contains("schema="), t)
+      // the pre-upgrade version is refused loudly, never misread
+      old.foreach { o =>
+        val e = intercept[Exception](
+          spark.sql(s"SELECT * FROM graftp.$t VERSION AS OF ${o.version}").collect())
+        assert(e.getMessage.contains("system.upgrade"), s"$t: ${e.getMessage}")
+      }
+      // a re-run commits nothing
+      val again = spark.sql(s"CALL graftp.system.upgrade(table => '$t')").head
+      assert(!again.getBoolean(0) && again.getLong(1) === v, t)
+    }
   }
 }
