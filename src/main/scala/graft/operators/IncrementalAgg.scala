@@ -83,10 +83,10 @@ object IncrementalAgg {
     * read-modify-write of the AGGREGATE (one row per group, O(state +
     * batch)), never the fact history. The new state is written as an
     * immutable generation dir and published by flipping one small
-    * manifest file ([[graft.sinks.ManifestCommit]]): a crash before the
-    * flip leaves readers on the previous state (the orphan generation is
-    * vacuumed); a crash after is a completed fold. No directory renames,
-    * so the guarantee holds on object stores too.
+    * manifest file ([[graft.sinks.ManifestCommit.publish]]): a crash
+    * before the flip leaves readers on the previous state (the orphan
+    * generation is vacuumed); a crash after is a completed fold. No
+    * directory renames, so the guarantee holds on object stores too.
     *
     * Exactly-once on top of at-least-once replay: pass foreachBatch's
     * `batchId` and the LAST APPLIED id rides inside the same manifest
@@ -138,15 +138,12 @@ object IncrementalAgg {
           Some(spark.read.parquet(statePath))
         else None
       }
-    val merged = state.fold(delta)(st => merge(st, delta, keys))
-    val gen = ManifestCommit.newGeneration(manifest.version + 1)
-    merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(root, gen).toString)
     val progress = (batchId.toSeq ++ lastApplied).reduceOption(_ max _)
       .map(id => "batch" -> id.toString)
-    ManifestCommit.commit(fs, root, manifest.version,
-      Map("dir.state" -> gen) ++ progress)
-    ManifestCommit.vacuum(fs, root, keep = 2)
+    ManifestCommit.publish(fs, root, manifest.version) { gen =>
+      gen.write(state.fold(delta)(st => merge(st, delta, keys)))
+      Map("dir.state" -> gen.name) ++ progress
+    }
   }
 
   /** Gate query: replay the events table as three height-ordered batches

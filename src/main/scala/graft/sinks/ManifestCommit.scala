@@ -1,6 +1,7 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Object-store-safe commit protocol: immutable generation directories
   * plus a log of tiny numbered manifest files. The ONLY mutation a commit
@@ -32,6 +33,13 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * sees only the top-level files, never a mix of layouts; managed readers
   * address the generation dir explicitly via the manifest.
   *
+  * One writer, [[publish]]: every generation write in graft goes through
+  * it. It names the generation, hands it to the caller's body, which
+  * writes its data with [[Generation.write]] and returns the entries of
+  * the next manifest, commits them in the slot after the version the
+  * caller read, and vacuums with `keep = 2`. A write with no generation
+  * data (ALTER, rollback, a table's first manifest) calls [[commit]].
+  *
   * Commit discipline: a writer reads the head manifest, builds the next
   * one from it, and claims exactly the slot after the version it read;
   * the claim fails if any other writer took that slot first (a writer
@@ -57,10 +65,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * with `dir.` names ONE data path relative to the root (its first path
   * segment is a generation directory), never a joined list. A merge-sink
   * table's are `dir.<b>` (bucket b's base dir) and `dir.+<v>` (the
-  * table-level segment manifest v appended), see
-  * [[ParquetMergeSink.isSinkKey]]: an append adds one entry, a merge
-  * replaces the entries of the buckets it folds and of the segments it
-  * read, and a drain replaces them all. Other keys are scalar metadata
+  * table-level segment manifest v appended): an append adds one entry, a
+  * merge replaces the entries of the buckets it folds and of the segments
+  * it read, and a drain replaces them all. Other keys are scalar metadata
   * (bucket counts, the merge sink's `hwm`, last-applied batch ids). A
   * generation write leaves no `_SUCCESS` marker: the manifest flip is the
   * commit record.
@@ -217,11 +224,41 @@ object ManifestCommit {
     commit(fs, root, all.last.version, m.entries - "txid")
   }
 
-  /** New generation dir name for `version` (collision-free under crash
-    * retries of the same version: the uuid disambiguates).
+  /** A Hadoop write option, not a session conf: see [[Generation.write]]. */
+  private val NoSuccessMarker = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+
+  /** The generation a [[publish]] body writes: `name`, a dir under `root`. */
+  final case class Generation(root: Path, name: String) {
+    def path: Path = new Path(root, name)
+
+    /** Write `df` as parquet into this generation, or into its `sub` dir,
+      * partitioned by `partitionBy`. No `_SUCCESS` marker: the manifest
+      * flip is the commit record.
+      */
+    def write(df: DataFrame, sub: String = "", partitionBy: Seq[String] = Nil): Unit = {
+      val w = df.write.mode(SaveMode.Overwrite).option(NoSuccessMarker, "false")
+      (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*))
+        .parquet((if (sub.isEmpty) path else new Path(path, sub)).toString)
+    }
+  }
+
+  /** The whole protocol for a write that lands generation data: `body`
+    * writes a new generation and returns the next manifest's entries,
+    * which commit in the slot after `read`, the version the caller built
+    * them from (0 for a table without a manifest); then [[vacuum]] keeps 2.
+    * Returns the committed version. A stale `read` fails the [[commit]]
+    * loudly, leaving the head untouched and the generation an orphan that
+    * the next publish's vacuum reclaims.
     */
-  def newGeneration(version: Long): String =
-    s"_g$version-${java.util.UUID.randomUUID().toString.take(8)}"
+  def publish(fs: FileSystem, root: Path, read: Long)(
+      body: Generation => Map[String, String]): Long = {
+    // named for the version it commits as; the uuid keeps crash retries
+    // of the same version collision-free
+    val gen = Generation(root, s"_g${read + 1L}-${java.util.UUID.randomUUID().toString.take(8)}")
+    val version = commit(fs, root, read, body(gen))
+    vacuum(fs, root, keep = 2)
+    version
+  }
 
   /** Remove orphaned generation dirs and manifests older than the last
     * `keep` commits. A dir survives if ANY retained manifest references
@@ -252,11 +289,12 @@ object ManifestCommit {
   }
 
   /** True when the root holds generation-pattern dirs but no committed
-    * manifest — an unreadable state that can only arise from `_commits`
-    * being lost (writers commit a v1 manifest BEFORE writing any
-    * generation data, so a crash can never produce it). Writers treat it
-    * as fatal rather than guessing a layout and silently re-keying or
-    * resetting data — the same discipline as the old bucket-count marker.
+    * manifest. [[ParquetMergeSink]] and [[graft.operators.IncrementalAgg]]
+    * commit a v1 manifest BEFORE writing any generation data, so for their
+    * tables a crash never produces this state: only a lost `_commits` does.
+    * They treat it as fatal rather than guessing a layout and silently
+    * re-keying or resetting data. [[TableMaintenance]] writes its first
+    * generation before any manifest, and reclaims such orphans itself.
     */
   def orphanedGenerations(fs: FileSystem, root: Path): Boolean =
     fs.exists(root) && latest(fs, root).isEmpty &&

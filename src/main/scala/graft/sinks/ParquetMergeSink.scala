@@ -1,7 +1,7 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
@@ -16,18 +16,20 @@ import graft.indexer.Upsert
   * rewrite; never a table rewrite per commit. Rows are hashed into
   * `nBuckets` buckets on the merge keys, and every commit writes a NEW
   * immutable generation and flips a single small manifest file
-  * ([[ManifestCommit]]). The manifest records `hwm`, an upper bound on
-  * every committed version. When the version column is one of the merge
-  * keys and a batch's smallest version is above `hwm`, no batch key can
-  * equal a committed one: the batch resolves latest-wins within itself
-  * and is APPENDED as ONE table-level segment, without reading a committed
-  * row — O(batch), one file per write task. A path with no committed rows
-  * appends its first batch the same way, whatever its keys. Every other
-  * commit (an update-wins table, a replay at or below `hwm`,
-  * [[mergeActions]]) reads the base dirs of ONLY the buckets the batch
-  * touches plus every segment, buckets the segments' rows from the keys,
-  * and rewrites each touched bucket as one base dir; the segments' other
-  * rows are rewritten as one segment — O(batch + touched buckets +
+  * ([[ManifestCommit.publish]]). The manifest records `hwm`, an upper
+  * bound on every committed version, from a table's first data commit on
+  * (a table written before `hwm` existed merges until [[upgrade]] stamps
+  * it). When the version column is one of the merge keys and a batch's
+  * smallest version is above `hwm`, no batch key can equal a committed
+  * one: the batch resolves latest-wins within itself and is APPENDED as
+  * ONE table-level segment, without reading a committed row — O(batch),
+  * one file per write task. A path with no committed rows (new, or made
+  * by [[createEmpty]]) appends its first batch the same way, whatever its
+  * keys. Every other commit (an update-wins table, a replay at or below
+  * `hwm`, [[mergeActions]]) reads the base dirs of ONLY the buckets the
+  * batch touches plus every segment, buckets the segments' rows from the
+  * keys, and rewrites each touched bucket as one base dir; the segments'
+  * other rows are rewritten as one segment — O(batch + touched buckets +
   * segments). Untouched buckets' entries carry forward.
   *
   * Entry grammar (`dir.` stripped, see [[isSinkKey]]): `<b>` is bucket b's
@@ -48,11 +50,10 @@ import graft.indexer.Upsert
   * batch as one segment, a plain concatenation that reads no base bucket.
   * Any commit that reads segments DRAINS them instead — folds every bucket,
   * segment rows into their buckets — once they hold more rows than an
-  * average base bucket (or when concatenating cannot bring the table under
-  * the bound). Amortized over a table of N rows taking r rows a trigger
-  * at 16 buckets: concatenations rewrite about N/512 rows a trigger and a
-  * drain N + N/16 rows every N/(16r) triggers, about N/512 + 17r rows a
-  * trigger in all.
+  * average base bucket. Amortized over a table of N rows taking r rows a
+  * trigger at 16 buckets: concatenations rewrite about N/512 rows a
+  * trigger and a drain N + N/16 rows every N/(16r) triggers, about
+  * N/512 + 17r rows a trigger in all.
   *
   * Job shape — a merge runs ONE staging job, then the write. The staging
   * job materializes the aligned, bucketed batch behind a barrier and
@@ -86,9 +87,11 @@ import graft.indexer.Upsert
   * The bucket count is committed in manifest v1 BEFORE any data
   * generation is written — a caller's `nBuckets` only applies to a NEW
   * table, so two writers can never bucket the same key differently
-  * (which would silently duplicate keys across buckets). A root with
-  * generation dirs but no commit log is unreadable (`_commits` lost) and
-  * fails loudly rather than guessing.
+  * (which would silently duplicate keys across buckets). That `buckets`
+  * entry is also the one layout test ([[isSinkTable]]): every merge-sink
+  * manifest carries it from v1 on, dirs or none. A root with generation
+  * dirs but no commit log is unreadable (`_commits` lost) and fails loudly
+  * rather than guessing.
   */
 object ParquetMergeSink {
 
@@ -99,6 +102,13 @@ object ParquetMergeSink {
   private[graft] val PhysKey = "schema.phys"
   private[graft] val RetiredKey = "schema.retired"
   private[graft] val HwmKey = "hwm"
+  private[graft] val BucketsKey = "buckets"
+
+  /** The version types `hwm` serves (it bounds versions as longs). */
+  private val Integral: Set[DataType] = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    Set(ByteType, ShortType, IntegerType, LongType)
+  }
 
   /** Dirs a table may hold: a scan lists its dirs on the driver up to
     * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) paths,
@@ -109,11 +119,6 @@ object ParquetMergeSink {
 
   /** The `__bucket` value a table-level segment is written under. */
   private val SegmentBucket = -1
-
-  /** Generation writes leave no `_SUCCESS` marker: the manifest flip is
-    * the commit record (a Hadoop write option, not a session conf).
-    */
-  private val NoSuccessMarker = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
 
   private val BucketKey = "\\d+".r
   private val SegmentKey = "\\+\\d+".r
@@ -126,11 +131,17 @@ object ParquetMergeSink {
   private def isSegment(key: String): Boolean = SegmentKey.matches(key)
 
   /** Whether a dir key (`dir.` stripped) holds merge-sink data — a base
-    * dir or a segment — rather than `table`, `deletes` or a partition dir:
-    * the one layout test the catalog, the procedures and ALTER share.
+    * dir or a segment — in the current grammar.
     */
-  private[graft] def isSinkKey(key: String): Boolean =
+  private def isSinkKey(key: String): Boolean =
     bucketOf(key).isDefined || isSegment(key)
+
+  /** Whether `m` is a merge-sink manifest, of any format: it carries
+    * `buckets`, from v1 on, with or without dirs. The one layout test the
+    * catalog, the procedures, [[TableMaintenance]] and ALTER share.
+    */
+  private[graft] def isSinkTable(m: ManifestCommit.Manifest): Boolean =
+    m.entries.contains(BucketsKey)
 
   /** The version column is a merge key: the tables an append can serve. */
   private def versionKeyed(keys: Seq[String], version: String): Boolean =
@@ -138,7 +149,7 @@ object ParquetMergeSink {
 
   /** The manifest-declared table schema, when the manifest carries one:
     * every manifest that names a data dir does (tables created via
-    * [[createEmpty]] from birth, API-grown ones from their first data
+    * [[createEmpty]] from v1, API-grown ones from their first data
     * commit). It is the source of truth for reads the moment generations
     * stop agreeing —
     * i.e. after `ALTER TABLE … ADD COLUMN` ([[addColumns]]): reading the
@@ -494,8 +505,8 @@ object ParquetMergeSink {
   private final case class Altered(schema: StructType,
       phys: Map[String, String], other: Map[String, String] = Map.empty)
 
-  /** The preamble and commit every ALTER shares. The table must hold a
-    * committed merge-sink bucket layout in the current format; `change`
+  /** The preamble and commit every ALTER shares. The table must be a
+    * committed merge-sink table in the current format; `change`
     * validates against its manifest and declared schema and returns what
     * to commit, or None for a no-op. The commit is ONE metadata-only
     * manifest flip that re-references the current generations unchanged.
@@ -508,17 +519,15 @@ object ParquetMergeSink {
     def none = new IllegalStateException(
       s"$path has no committed merge-sink table to alter")
     val m = head(fs, table).getOrElse(throw none)
-    // merge-sink bucket layouts only: maintained/partitioned tables read
+    // merge-sink tables only: maintained/partitioned tables read
     // through TableMaintenance, which resolves schema from data — an
     // ALTER there would record a declaration nothing honors (and a
     // DV-carrying table's delete epoch must compact before its shape
     // changes). Refuse loudly rather than half-evolve.
-    val nonBucket = m.dirs.keys.filterNot(isSinkKey)
-    require(nonBucket.isEmpty,
-      s"$path is not a merge-sink bucket layout (entries: " +
-        s"${nonBucket.take(3).mkString(", ")}…) — $op serves " +
-        "merge-sink tables; rewrite maintained layouts through " +
-        "TableMaintenance")
+    require(isSinkTable(m),
+      s"$path is not a merge-sink table (its manifest carries no " +
+        s"$BucketsKey) — $op serves merge-sink tables; rewrite maintained " +
+        "layouts through TableMaintenance")
     change(m, declaredSchema(m).getOrElse(throw none)).foreach { a =>
       ManifestCommit.commit(fs, table, m.version,
         (m.entries - "txid" - PhysKey) ++ a.other ++
@@ -557,7 +566,7 @@ object ParquetMergeSink {
     * segment key, a bucket dir outside a generation (the pre-manifest
     * dirs a manifest adopted), or data dirs without a schema stamp.
     */
-  private[graft] def oldFormat(m: ManifestCommit.Manifest): Option[String] = {
+  private def oldFormat(m: ManifestCommit.Manifest): Option[String] = {
     val data = sinkDirs(m)
     if (data.keys.exists(BucketSegmentKey.matches)) Some("per-bucket segments dir.<b>+<v>")
     else if (data.values.exists(d => outsideGeneration(d._1))) Some("dirs outside a generation")
@@ -586,7 +595,11 @@ object ParquetMergeSink {
     * generation (pre-manifest bucket dirs, whose bucket numbers come from
     * their names and are never re-hashed) folds into that bucket's base
     * dir in one new generation; an unstamped manifest is stamped with its
-    * files' schema. Returns the committed version, or None when the table
+    * files' schema. A version-keyed table with rows and no `hwm` (written
+    * before the sink recorded one; it merges correctly but never appends)
+    * is stamped with its largest version; a pre-manifest table records its
+    * keys on its first merge after the upgrade, and a second upgrade then
+    * stamps it. Returns the committed version, or None when the table
     * already was current.
     *
     * Crash-safe by re-run: the old layout stays untouched until the
@@ -608,32 +621,39 @@ object ParquetMergeSink {
       require(fs.exists(marker), s"$path holds no merge-sink table to upgrade")
       val in = fs.open(marker)
       val buckets = try new String(in.readAllBytes(), "UTF-8").trim.toInt finally in.close()
-      ManifestCommit.Manifest(0L, bucketDirs(table, "") + ("buckets" -> buckets.toString))
+      ManifestCommit.Manifest(0L, bucketDirs(table, "") + (BucketsKey -> buckets.toString))
     }
-    val committed = oldFormat(m).map { _ =>
-      val data = sinkDirs(m)
+    val data = sinkDirs(m)
+    lazy val declared = declaredSchema(m).getOrElse(stampable(spark.read.parquet(
+      data.values.map(d => new Path(table, d._1).toString).toSeq: _*).schema))
+    def rows(rels: Iterable[String]) = spark.read.schema(physicalSchema(declared, physMap(m)))
+      .parquet(rels.map(rel => new Path(table, rel).toString).toSeq: _*)
+    // a version-keyed table with rows and no `hwm` predates it
+    val hwm = m.entries.get("merge.version").filter(v => data.nonEmpty &&
+      !m.entries.contains(HwmKey) &&
+      m.entries.get("merge.keys").exists(ks => versionKeyed(ks.split(",").toSeq, v)) &&
+      declared.exists(f => lcName(f.name) == lcName(v) && Integral(f.dataType))).map { v =>
+      val top = rows(data.values.map(_._1))
+        .agg(max(col(physOf(physMap(m), v)).cast("long"))).head()
+      HwmKey -> (if (top.isNullAt(0)) Long.MinValue else top.getLong(0)).toString
+    }
+    val committed = Option.when(oldFormat(m).isDefined || hwm.isDefined) {
       val refold = data.collect { case (k, (rel, b)) if BucketSegmentKey.matches(k) ||
         outsideGeneration(rel) => b }.flatten.toSet
       val rewrite = data.filter(_._2._2.exists(refold))
-      val declared = declaredSchema(m).getOrElse(stampable(spark.read.parquet(
-        data.values.map(d => new Path(table, d._1).toString).toSeq: _*).schema))
-      val gen = ManifestCommit.newGeneration(m.version + 1)
-      if (rewrite.nonEmpty) rewrite.values.map { case (rel, b) =>
-        spark.read.schema(physicalSchema(declared, physMap(m)))
-          .parquet(new Path(table, rel).toString).withColumn(BucketCol, lit(b.get))
-      }.reduce(_ unionByName _)
-        .write.mode(SaveMode.Overwrite).option(NoSuccessMarker, "false")
-        .partitionBy(BucketCol).parquet(new Path(table, gen).toString)
-      ManifestCommit.commit(fs, table, m.version, m.entries - "txid" --
-        rewrite.keys.map("dir." + _) ++
-        (if (rewrite.isEmpty) Map.empty else bucketDirs(new Path(table, gen), s"$gen/")) +
-        (SchemaKey -> declared.json))
+      ManifestCommit.publish(fs, table, m.version) { gen =>
+        if (rewrite.nonEmpty) gen.write(rewrite.values.map { case (rel, b) =>
+          rows(Seq(rel)).withColumn(BucketCol, lit(b.get))
+        }.reduce(_ unionByName _), partitionBy = Seq(BucketCol))
+        m.entries - "txid" -- rewrite.keys.map("dir." + _) ++
+          (if (rewrite.isEmpty) Map.empty else bucketDirs(gen.path, s"${gen.name}/")) ++
+          hwm + (SchemaKey -> declared.json)
+      }
     }
     if (fs.exists(marker)) {
       bucketDirs(table, "").values.foreach(n => fs.delete(new Path(table, n), true))
       fs.delete(marker, false)
     }
-    if (committed.isDefined) ManifestCommit.vacuum(fs, table, keep = 2)
     committed
   }
 
@@ -661,21 +681,22 @@ object ParquetMergeSink {
     m
   }
 
-  /** The committed table as a DataFrame, or None before the first merge
-    * lands data. Reads exactly the data dirs the current manifest
-    * references.
+  /** The committed table as a DataFrame, or None before it has a schema
+    * (no manifest, or only the `buckets` v1 a first merge commits ahead of
+    * its data). Reads exactly the data dirs the current manifest
+    * references: none for a table [[createEmpty]] made, which reads as 0
+    * rows with its declared columns.
     */
   def readIfExists(spark: SparkSession, path: String): Option[DataFrame] = {
     val table = new Path(path)
-    head(fsFor(spark, table), table).filter(_.dirs.nonEmpty)
+    head(fsFor(spark, table), table).filter(_.entries.contains(SchemaKey))
       .map(m => scan(spark, table, m, m.dirs.values.toSeq.sorted))
   }
 
-  /** The parquet scan of `rels` (data dirs relative to `table`) as
-    * manifest `m` declares them: with `m`'s OWN schema and name mapping
-    * (pre-ALTER versions keep the old shape, pre-RENAME versions the old
-    * names). `m` names data dirs and passed [[requireCurrent]], so it
-    * carries its schema stamp.
+  /** The parquet scan of `rels` (data dirs relative to `table`, maybe
+    * none) as manifest `m` declares them: with `m`'s OWN schema and name
+    * mapping (pre-ALTER versions keep the old shape, pre-RENAME versions
+    * the old names). `m` carries its schema stamp.
     */
   private def scan(spark: SparkSession, table: Path,
       m: ManifestCommit.Manifest, rels: Seq[String]): DataFrame = {
@@ -702,17 +723,18 @@ object ParquetMergeSink {
       throw new IllegalArgumentException(
         s"version $version of $path is not retained — retained: " +
           ManifestCommit.committed(fs, table).map(_.version).mkString(", "))))
-    require(m.dirs.nonEmpty, s"version $version of $path references no data dirs")
+    require(m.entries.contains(SchemaKey),
+      s"version $version of $path has no schema: it only commits the bucket count")
     scan(spark, table, m, m.dirs.values.toSeq.sorted)
   }
 
   /** An EMPTY merge-sink table whose schema and write contract are
-    * committed before any data (`CREATE TABLE`'s protocol): generation 1
-    * holds one ZERO-ROW parquet file in bucket 0 (its footer carries the
-    * schema for every reader), and manifest v1 records `merge.keys`,
-    * `merge.version` and `buckets`, so every SQL and API write path works
-    * at once. The seed is an ordinary base dir. Refuses an existing table
-    * and key/version columns absent from the schema.
+    * committed before any data (`CREATE TABLE`'s protocol): ONE manifest,
+    * v1, with `buckets`, the schema stamp, `merge.keys` and
+    * `merge.version`, and no dirs and no generation — no Spark job runs.
+    * Every reader serves it as 0 rows with the declared columns, and every
+    * SQL and API write path works at once; its first batch appends. Refuses
+    * an existing table and key/version columns absent from the schema.
     */
   def createEmpty(spark: SparkSession, path: String, schema: StructType,
       keys: Seq[String], version: String, nBuckets: Int = 16): Unit = {
@@ -727,28 +749,8 @@ object ParquetMergeSink {
     require(missing.isEmpty,
       s"key/version columns ${missing.mkString(", ")} are not in the " +
         s"schema (${schema.fieldNames.mkString(", ")})")
-
-    val gen = ManifestCommit.newGeneration(1)
-    val seedDir = new Path(new Path(table, gen), s"$BucketCol=0")
-    val tmp = new Path(table, s"_seed_${java.util.UUID.randomUUID()}")
-    // A zero-row single-partition write still emits one part file with
-    // the schema in its footer (FileFormatWriter's empty-task file).
-    spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      .repartition(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val schemaEntry = SchemaKey -> stampable(schema).json
-    val part = fs.listStatus(tmp).map(_.getPath)
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(
-        s"empty seed write for $path produced no parquet part file"))
-    fs.mkdirs(seedDir)
-    require(fs.rename(part, new Path(seedDir, part.getName)),
-      s"rename $part -> $seedDir failed")
-    fs.delete(tmp, true)
-    ManifestCommit.commit(fs, table, 0L, Map(
-      "buckets" -> nBuckets.toString,
-      "dir.0" -> s"$gen/$BucketCol=0",
-      schemaEntry) ++ writeMeta(keys, version))
+    ManifestCommit.commit(fs, table, 0L, Map(BucketsKey -> nBuckets.toString,
+      SchemaKey -> stampable(schema).json) ++ writeMeta(keys, version))
   }
 
   /** An integral version's range in a batch (min/max None if all null). */
@@ -776,12 +778,11 @@ object ParquetMergeSink {
     */
   private def stage(fs: FileSystem, table: Path, keys: Seq[String], version: String,
       nBuckets: Int)(shape: Option[ManifestCommit.Manifest] => DataFrame): Staged = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     val committed = head(fs, table)
-    val buckets = committed.fold(nBuckets)(_.entries("buckets").toInt)
+    val buckets = committed.fold(nBuckets)(_.entries(BucketsKey).toInt)
     val shaped = shape(committed)
     val integral = shaped.schema.find(f => lcName(f.name) == lcName(version))
-      .exists(f => Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType))
+      .exists(f => Integral(f.dataType))
     val v = col(version).cast("long")
     val range = if (integral) Seq(min(v), max(v), count(when(v.isNull, 1))) else Nil
     val (frame, ran) = graft.Tables.materializedBarrier(shaped
@@ -807,7 +808,7 @@ object ParquetMergeSink {
       staged: Staged): ManifestCommit.Manifest =
     staged.committed.getOrElse {
       fs.mkdirs(table)
-      val entries = Map("buckets" -> staged.buckets.toString)
+      val entries = Map(BucketsKey -> staged.buckets.toString)
       ManifestCommit.Manifest(ManifestCommit.commit(fs, table, 0L, entries), entries)
     }
 
@@ -829,29 +830,28 @@ object ParquetMergeSink {
     * every segment (a concatenation). Any other commit reads the base dirs
     * of every touched bucket and every segment. Either drains — reads every
     * dir and folds every bucket — when the segments hold more rows than
-    * an average base bucket, or when an append could not bring the table
-    * under the bound by concatenating. Rows read get the bucket column
+    * an average base bucket. Rows read get the bucket column
     * from the keys; `resolve` gets them (None when nothing is read) and
     * returns every row to write. A row of a folded bucket goes to that
     * bucket's base dir, every other row to one new segment.
     *
-    * They become a NEW immutable generation, so a crash before the commit
-    * is invisible to readers (the orphan dir is vacuumed later), written
-    * under PHYSICAL column names (renamed columns keep the name they were
-    * born with). One listing of it settles the entries: a folded bucket's
-    * entries are ALL replaced by one `dir.<b>`, or REMOVED when the
-    * generation has no dir for it (mergeActions deleted all its rows) —
-    * its old files could only bring back superseded or deleted rows; the
-    * segments read are replaced by `dir.+<version>`, if any row is left
-    * for it. (A merge gives every touched bucket a dir: latest-wins keeps
+    * They become a NEW immutable generation ([[ManifestCommit.publish]]
+    * against the manifest the batch was staged on), so a crash before the
+    * commit is invisible to readers (the orphan dir is vacuumed later),
+    * written under PHYSICAL column names (renamed columns keep the name
+    * they were born with). One listing of it settles the entries: a
+    * folded bucket's entries are ALL replaced by one `dir.<b>`, or
+    * REMOVED when the generation has no dir for it (mergeActions deleted
+    * all its rows) — its old files could only bring back superseded or
+    * deleted rows; the segments read are replaced by `dir.+<version>`, if
+    * any row is left for it. (A merge gives every touched bucket a dir: latest-wins keeps
     * one row per key, null keys included, and Spark's hash folds -0.0 into
     * 0.0 and all NaNs into one.)
     *
-    * The same flip raises `hwm` to the batch's largest version (a table
-    * without one that can append takes it from one scan of its version
-    * column; a non-integral version drops it). Unreferenced generations
-    * are reclaimed; keep=2 leaves the previous manifest's for in-flight
-    * readers.
+    * The same flip raises `hwm` to the batch's largest version, from
+    * `Long.MinValue` on a table without rows; a non-integral version drops
+    * it. A table with rows and no `hwm` predates it: it keeps merging
+    * without one until [[upgrade]] stamps it.
     */
   private def commitBuckets(fs: FileSystem, table: Path, staged: Staged,
       keys: Seq[String], version: String, append: Boolean)(
@@ -861,9 +861,9 @@ object ParquetMergeSink {
     val (segments, bases) = manifest.dirs.toSeq.partition(d => isSegment(d._1))
     val bound = math.max(TableDirs, staged.buckets + 1)
     val plain = append && manifest.dirs.size < bound
-    val drain = !plain && (append && bases.size >= bound || segments.nonEmpty &&
+    val drain = !plain && segments.nonEmpty &&
       rowsOf(fs, table, segments.map(_._2)) * staged.buckets >
-        rowsOf(fs, table, bases.map(_._2)))
+        rowsOf(fs, table, bases.map(_._2))
     val fold =
       if (drain) (0 until staged.buckets).toSet
       else if (append) Set.empty[Int] else staged.touched.toSet
@@ -876,29 +876,13 @@ object ParquetMergeSink {
       when(col(BucketCol).isin(fold.toSeq: _*), col(BucketCol)).otherwise(lit(SegmentBucket)))
 
     val declared = declaredSchema(manifest)
-    val next = manifest.version + 1
-    val gen = ManifestCommit.newGeneration(next)
-    val genPath = new Path(table, gen)
-    declared.fold(merged)(d => toPhysical(merged, d, physMap(manifest)))
-      .write.mode(SaveMode.Overwrite).option(NoSuccessMarker, "false")
-      .partitionBy(BucketCol).parquet(genPath.toString)
-    val written = fs.listStatus(genPath).map(_.getPath.getName).toSet
-    def leaf(b: Int) = Option.when(written(s"$BucketCol=$b"))(s"$gen/$BucketCol=$b")
-    val updated = fold.flatMap(b => leaf(b).map(s"dir.$b" -> _)) ++
-      leaf(SegmentBucket).map(s"dir.+$next" -> _)
     val carried = manifest.entries.filter { case (k, _) =>
       val d = k.stripPrefix("dir.")
       k != HwmKey && !(k.startsWith("dir.") &&
         (bucketOf(d).exists(fold) || !plain && isSegment(d)))
     }
-    val prevHwm = manifest.entries.get(HwmKey).map(_.toLong).orElse {
-      if (manifest.dirs.isEmpty) Some(Long.MinValue)
-      else Option.when(staged.versions.isDefined && versionKeyed(keys, version)) {
-        val top = scan(spark, table, manifest, manifest.dirs.values.toSeq.sorted)
-          .agg(max(col(version).cast("long"))).head()
-        if (top.isNullAt(0)) Long.MinValue else top.getLong(0)
-      }
-    }
+    val prevHwm = manifest.entries.get(HwmKey).map(_.toLong)
+      .orElse(Option.when(manifest.dirs.isEmpty)(Long.MinValue))
     val hwm = staged.versions.flatMap(v => prevHwm.map(h => v.max.fold(h)(math.max(h, _))))
     graft.StrategyLog.record("merge_commit", if (append) "append" else "merge",
       "table" -> table, "touched" -> staged.touched.size, "folded" -> fold.size,
@@ -910,9 +894,16 @@ object ParquetMergeSink {
     // API-grown tables too.
     val schemaEntry = SchemaKey -> declared.getOrElse(stampable(
       StructType(merged.schema.fields.filterNot(_.name == BucketCol)))).json
-    ManifestCommit.commit(fs, table, manifest.version, carried ++ updated ++
-      writeMeta(keys, version) ++ hwm.map(HwmKey -> _.toString) + schemaEntry)
-    ManifestCommit.vacuum(fs, table, keep = 2)
+    ManifestCommit.publish(fs, table, manifest.version) { gen =>
+      gen.write(declared.fold(merged)(d => toPhysical(merged, d, physMap(manifest))),
+        partitionBy = Seq(BucketCol))
+      val written = fs.listStatus(gen.path).map(_.getPath.getName).toSet
+      def leaf(b: Int) = Option.when(written(s"$BucketCol=$b"))(s"${gen.name}/$BucketCol=$b")
+      val updated = fold.flatMap(b => leaf(b).map(s"dir.$b" -> _)) ++
+        leaf(SegmentBucket).map(s"dir.+${manifest.version + 1}" -> _)
+      carried ++ updated ++ writeMeta(keys, version) ++
+        hwm.map(HwmKey -> _.toString) + schemaEntry
+    }
   }
 
   /** Latest-wins upsert of `batch` into the table at `path`; returns the

@@ -19,13 +19,15 @@ import scala.jdk.CollectionConverters._
   * b-tree indexes on every fact table (db.go:394-524 `CREATE INDEX`
   * statements); a lake gets the same effect from physical layout.
   *
-  * All I/O goes through the Hadoop FileSystem API. Compaction publishes
-  * through [[ManifestCommit]] — immutable generation dirs plus a single
-  * small manifest flip — so its crash guarantee ("whole table at either
-  * generation") holds on object stores too, where directory renames are
-  * non-atomic copies. [[read]] resolves the manifest when one exists and
-  * falls back to a plain directory read otherwise, so both layouts are
-  * served by one call.
+  * All I/O goes through the Hadoop FileSystem API. Every managed write
+  * publishes through [[ManifestCommit.publish]] — immutable generation
+  * dirs plus a single small manifest flip — so its crash guarantee
+  * ("whole table at either generation") holds on object stores too, where
+  * directory renames are non-atomic copies. [[read]] resolves the
+  * manifest when one exists and falls back to a plain directory read
+  * otherwise, so both layouts are served by one call. Merge-sink tables
+  * ([[ParquetMergeSink.isSinkTable]]) are refused by [[deleteWhere]] and
+  * every whole-table rewrite: their merges place and rewrite their files.
   */
 object TableMaintenance {
 
@@ -361,25 +363,50 @@ object TableMaintenance {
     val root = new Path(path)
     val fs = root.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     val prev = ManifestCommit.latest(fs, root).map(_.version).getOrElse(0L)
-    val gen = ManifestCommit.newGeneration(prev + 1L)
-    df.repartitionByRange(numFiles, keys.map(col): _*)
-      .sortWithinPartitions(keys.map(col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(new Path(root, gen).toString)
-    ManifestCommit.commit(fs, root, prev, Map("dir.table" -> gen))
-    ManifestCommit.vacuum(fs, root, keep = 2)
+    ManifestCommit.publish(fs, root, prev) { gen =>
+      gen.write(df.repartitionByRange(numFiles, keys.map(col): _*)
+        .sortWithinPartitions(keys.map(col): _*))
+      Map("dir.table" -> gen.name)
+    }
   }
 
   /** The directory the current committed generation lives in — `path`
     * itself for a plain (never-compacted) table.
     */
-  def resolveDataDir(spark: SparkSession, path: String): String = {
+  def resolveDataDir(spark: SparkSession, path: String): String =
+    dataDir(path, head(spark, path))
+
+  private def head(spark: SparkSession, path: String): Option[ManifestCommit.Manifest] = {
     val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ManifestCommit.latest(fs, root).flatMap(_.dirs.get("table"))
-      .map(rel => new Path(root, rel).toString)
-      .getOrElse(path)
+    ManifestCommit.latest(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
   }
+
+  /** [[resolveDataDir]] as manifest `m` has it. */
+  private def dataDir(path: String, m: Option[ManifestCommit.Manifest]): String =
+    m.flatMap(_.dirs.get("table")).fold(path)(rel => new Path(new Path(path), rel).toString)
+
+  /** The table at manifest `m` (the plain directory when None), without
+    * the rows whose key `m`'s deletion vector ([[deleteWhere]]) lists.
+    */
+  private def readAt(spark: SparkSession, path: String,
+      m: Option[ManifestCommit.Manifest]): DataFrame =
+    withoutDeleted(spark, path, m, spark.read.parquet(dataDir(path, m)))
+
+  /** `data` without the rows whose key `m`'s deletion vector lists: the
+    * one anti-join every manifest-resolved reader applies.
+    */
+  private def withoutDeleted(spark: SparkSession, path: String,
+      m: Option[ManifestCommit.Manifest], data: DataFrame): DataFrame =
+    (for {
+      mm <- m
+      rel <- mm.dirs.get("deletes")
+      key <- mm.entries.get("delete.key")
+    } yield {
+      val dels = spark.read.parquet(new Path(new Path(path), rel).toString)
+      // delete lists are usually tiny next to the table — the file-size
+      // stats Spark reads at planning let the anti-join broadcast itself
+      data.join(dels, data(key) === dels(key), "left_anti")
+    }).getOrElse(data)
 
   /** Read a maintained table: manifest-resolved when compaction has run,
     * plain directory read before that. Safe on a half-migrated table:
@@ -388,21 +415,8 @@ object TableMaintenance {
     * deletion vector ([[deleteWhere]]), the deleted keys are anti-joined
     * out here — every manifest-resolved reader sees deletes applied.
     */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val data = spark.read.parquet(resolveDataDir(spark, path))
-    (for {
-      m <- ManifestCommit.latest(fs, root)
-      rel <- m.dirs.get("deletes")
-      key <- m.entries.get("delete.key")
-    } yield {
-      val dels = spark.read.parquet(new Path(root, rel).toString)
-      // delete lists are usually tiny next to the table — the file-size
-      // stats Spark reads at planning let the anti-join broadcast itself
-      data.join(dels, data(key) === dels(key), "left_anti")
-    }).getOrElse(data)
-  }
+  def read(spark: SparkSession, path: String): DataFrame =
+    readAt(spark, path, head(spark, path))
 
   /** Row-level delete WITHOUT rewriting data files: a deletion vector.
     *
@@ -427,38 +441,55 @@ object TableMaintenance {
     * the post-compaction version, after which no retained manifest can
     * reach the deleted rows.
     *
-    * `predicate` is evaluated against the CURRENT table state (existing
-    * deletes applied), and the keys it matches are stored — so the
-    * vector stays valid even as later appends reuse nothing of it.
-    * Returns the committed manifest version.
+    * `predicate` is evaluated against the table state the commit is
+    * built on (existing deletes applied), and the keys it matches are
+    * stored — so the vector stays valid even as later appends reuse
+    * nothing of it. Returns the committed manifest version.
     */
   def deleteWhere(spark: SparkSession, path: String, keyCol: String,
       predicate: Column): Long = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val m = ManifestCommit.latest(fs, root)
-    m.foreach { mm =>
-      mm.entries.get("delete.key").foreach(k => require(k == keyCol,
-        s"deleteWhere: $path already carries a deletion vector keyed by " +
-          s"'$k'; got '$keyCol' — one key column per table"))
-      require(!mm.dirs.exists { case (k, _) => k != "table" && k != "deletes" },
-        s"deleteWhere: $path is partition-managed — deletion vectors " +
-          "cover single-table layouts")
-    }
-    val newKeys = read(spark, path).filter(predicate)
+    requireSingleTable(path, m, "deleteWhere")
+    m.flatMap(_.entries.get("delete.key")).foreach(k => require(k == keyCol,
+      s"deleteWhere: $path already carries a deletion vector keyed by " +
+        s"'$k'; got '$keyCol' — one key column per table"))
+    val newKeys = readAt(spark, path, m).filter(predicate)
       .select(col(keyCol)).distinct()
     val prevKeys = m.flatMap(_.dirs.get("deletes")).map(rel =>
       spark.read.parquet(new Path(root, rel).toString))
     val allKeys = prevKeys.fold(newKeys)(_.union(newKeys).distinct())
-    val prev = m.map(_.version).getOrElse(0L)
-    val gen = ManifestCommit.newGeneration(prev + 1L)
-    allKeys.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(new Path(root, gen).toString)
-    val carried = m.map(_.entries).getOrElse(Map.empty) - "dir.deletes"
-    val v = ManifestCommit.commit(fs, root, prev,
-      carried ++ Map("dir.deletes" -> gen, "delete.key" -> keyCol))
-    ManifestCommit.vacuum(fs, root, keep = 2)
-    v
+    ManifestCommit.publish(fs, root, m.fold(0L)(_.version)) { gen =>
+      gen.write(allKeys.coalesce(1))
+      m.fold(Map.empty[String, String])(_.entries) - "dir.deletes" ++
+        Map("dir.deletes" -> gen.name, "delete.key" -> keyCol)
+    }
+  }
+
+  /** Whether `m`, not a merge-sink manifest, is a maintained single-table
+    * layout: it names at most the table's generation (`dir.table`) and
+    * its deletion vector, where a partition-managed one names a dir per
+    * partition. The test the catalog and `history` share.
+    */
+  private[graft] def isSingleTable(m: ManifestCommit.Manifest): Boolean =
+    m.dirs.keySet.subsetOf(Set("table", "deletes"))
+
+  /** The guard [[deleteWhere]] and every whole-table rewrite share, run
+    * before they touch a file: `m` must be a maintained single-table
+    * layout (or absent: a plain directory). A merge-sink table is refused
+    * whether or not it holds dirs — its files are placed by key hash and
+    * rewritten by its own merges — and so is a partition-managed one.
+    */
+  private def requireSingleTable(path: String, m: Option[ManifestCommit.Manifest],
+      op: String): Unit = m.foreach { mm =>
+    require(!ParquetMergeSink.isSinkTable(mm),
+      s"$op: $path is a merge-sink table — its merges place its files by " +
+        "key hash and rewrite them; maintenance serves maintained " +
+        "single-table layouts")
+    require(isSingleTable(mm),
+      s"$op: $path is partition-managed — $op serves single-table " +
+        "layouts; compactPartitioned rewrites partitioned ones")
   }
 
   private def encPart(name: String): String =
@@ -584,40 +615,36 @@ object TableMaintenance {
     }
     if (work.isEmpty) return Seq.empty
 
-    val prev = manifest.map(_.version).getOrElse(0L)
-    val gen = ManifestCommit.newGeneration(prev + 1L)
-    work.foreach { case (part, managedDir, lateFiles, nOut) =>
-      val srcs = managedDir.map(_.toString).toSeq ++
-        lateFiles.map(_.getPath.toString)
-      val df = spark.read.parquet(srcs: _*)
-      val shaped =
-        if (sortKeys.nonEmpty)
-          df.repartitionByRange(nOut, sortKeys.map(col): _*)
-            .sortWithinPartitions(sortKeys.map(col): _*)
-        else df.repartition(nOut)
-      shaped.write.mode(SaveMode.Overwrite)
-        .parquet(new Path(root, s"$gen/$part").toString)
-    }
-    val updated = work.flatMap { case (part, _, lateFiles, _) =>
-      Seq(s"dir.${encPart(part)}" -> s"$gen/$part") ++
-        (if (lateFiles.nonEmpty)
-           Seq(s"absorbed.${encPart(part)}" ->
-             lateFiles.map(_.getPath.getName).mkString(","))
-         else Seq.empty)
-    }.toMap
-    val carried = prevEntries.filter { case (k, _) =>
-      val isDir = k.startsWith("dir.")
-      val isAbs = k.startsWith("absorbed.")
-      // absorbed markers only carry while their partition's files may
-      // still exist; a rewritten partition gets a fresh (or no) marker
-      (!isDir && !isAbs && !updated.contains(k)) ||
-        (isDir && !updated.contains(k)) ||
-        (isAbs && !updated.contains(k) &&
-          !updated.contains("dir." + k.stripPrefix("absorbed.")))
-    }
     // THE commit: every rewritten partition flips in this one small file
-    ManifestCommit.commit(fs, root, prev, carried ++ updated)
-    ManifestCommit.vacuum(fs, root, keep = 2)
+    ManifestCommit.publish(fs, root, manifest.map(_.version).getOrElse(0L)) { gen =>
+      work.foreach { case (part, managedDir, lateFiles, nOut) =>
+        val srcs = managedDir.map(_.toString).toSeq ++
+          lateFiles.map(_.getPath.toString)
+        val df = spark.read.parquet(srcs: _*)
+        gen.write(if (sortKeys.nonEmpty)
+            df.repartitionByRange(nOut, sortKeys.map(col): _*)
+              .sortWithinPartitions(sortKeys.map(col): _*)
+          else df.repartition(nOut), sub = part)
+      }
+      val updated = work.flatMap { case (part, _, lateFiles, _) =>
+        Seq(s"dir.${encPart(part)}" -> s"${gen.name}/$part") ++
+          (if (lateFiles.nonEmpty)
+             Seq(s"absorbed.${encPart(part)}" ->
+               lateFiles.map(_.getPath.getName).mkString(","))
+           else Seq.empty)
+      }.toMap
+      val carried = prevEntries.filter { case (k, _) =>
+        val isDir = k.startsWith("dir.")
+        val isAbs = k.startsWith("absorbed.")
+        // absorbed markers only carry while their partition's files may
+        // still exist; a rewritten partition gets a fresh (or no) marker
+        (!isDir && !isAbs && !updated.contains(k)) ||
+          (isDir && !updated.contains(k)) ||
+          (isAbs && !updated.contains(k) &&
+            !updated.contains("dir." + k.stripPrefix("absorbed.")))
+      }
+      carried ++ updated
+    }
     // Absorbed plain files are NOT deleted here: a reader that resolved
     // the PREVIOUS manifest may still have them in its scan plan.
     // They are invisible to readers of the new manifest (absorbed list)
@@ -643,19 +670,19 @@ object TableMaintenance {
     */
   def compact(spark: SparkSession, path: String, targetBytes: Long,
       sortKeys: Seq[String] = Nil): Int = {
-    val dataFiles = preRewrite(spark, path, "compact")
+    val (m, dataFiles) = preRewrite(spark, path, "compact")
     val totalBytes = dataFiles.map(_.getLen).sum
     val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    // [[read]] applies any committed deletion vector, so compaction
+    // [[readAt]] applies any committed deletion vector, so compaction
     // MATERIALIZES pending deletes: the new generation holds surviving
     // rows only and the fresh manifest drops the vector entries.
-    val df = read(spark, path)
+    val df = readAt(spark, path, m)
     val shaped =
       if (sortKeys.nonEmpty)
         df.repartitionByRange(nOut, sortKeys.map(col): _*)
           .sortWithinPartitions(sortKeys.map(col): _*)
       else df.repartition(nOut)
-    commitRewrite(spark, path, shaped, Map.empty)
+    commitRewrite(spark, path, m, shaped, Map.empty)
     nOut
   }
 
@@ -671,11 +698,11 @@ object TableMaintenance {
   def sortManaged(spark: SparkSession, path: String, numFiles: Int,
       keys: Seq[String]): Long = {
     require(keys.nonEmpty, "sortManaged needs at least one key")
-    preRewrite(spark, path, "sort")
-    val shaped = read(spark, path)
+    val (m, _) = preRewrite(spark, path, "sort")
+    val shaped = readAt(spark, path, m)
       .repartitionByRange(numFiles, keys.map(col): _*)
       .sortWithinPartitions(keys.map(col): _*)
-    commitRewrite(spark, path, shaped,
+    commitRewrite(spark, path, m, shaped,
       Map("layout" -> s"sorted(${keys.mkString(",")})"))
   }
 
@@ -685,8 +712,8 @@ object TableMaintenance {
     */
   def zorderManaged(spark: SparkSession, path: String, numFiles: Int,
       keys: Seq[String], bitsPerKey: Int = 8): Long = {
-    preRewrite(spark, path, "zorder")
-    commitRewrite(spark, path, zOrdered(read(spark, path), numFiles, keys, bitsPerKey),
+    val (m, _) = preRewrite(spark, path, "zorder")
+    commitRewrite(spark, path, m, zOrdered(readAt(spark, path, m), numFiles, keys, bitsPerKey),
       Map("layout" -> s"zorder(${keys.mkString(",")})"))
   }
 
@@ -700,8 +727,8 @@ object TableMaintenance {
   def statsIndexManaged(spark: SparkSession, path: String,
       keys: Seq[String]): Int = {
     require(keys.nonEmpty, "statsIndexManaged needs at least one key")
-    val dataFiles = preRewrite(spark, path, "stats_index")
-    writeStatsIndex(spark, resolveDataDir(spark, path), keys)
+    val (m, dataFiles) = preRewrite(spark, path, "stats_index")
+    writeStatsIndex(spark, dataDir(path, m), keys)
     dataFiles.size
   }
 
@@ -711,46 +738,33 @@ object TableMaintenance {
     */
   def readSkippingManaged(spark: SparkSession, path: String,
       ranges: Seq[KeyRange]): DataFrame = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val data = readSkipping(spark, resolveDataDir(spark, path), ranges)
-    (for {
-      m <- ManifestCommit.latest(fs, root)
-      rel <- m.dirs.get("deletes")
-      key <- m.entries.get("delete.key")
-    } yield {
-      val dels = spark.read.parquet(new Path(root, rel).toString)
-      data.join(dels, data(key) === dels(key), "left_anti")
-    }).getOrElse(data)
+    val m = head(spark, path)
+    withoutDeleted(spark, path, m, readSkipping(spark, dataDir(path, m), ranges))
   }
 
   /** Guards + debris reclamation shared by every whole-table managed
     * rewrite ([[compact]] / [[sortManaged]] / [[zorderManaged]]; also
-    * the pre-flight for [[statsIndexManaged]]): refuses
+    * the pre-flight for [[statsIndexManaged]]): refuses merge-sink,
     * partition-managed and directory-partitioned layouts, reclaims
     * crashed-run orphans and post-grace migration debris, and returns
-    * the current generation's data files so callers can size output.
+    * the head manifest — the one the rewrite reads and commits against —
+    * and its data files, so callers can size output.
     */
-  private def preRewrite(spark: SparkSession, path: String,
-      op: String): Seq[org.apache.hadoop.fs.FileStatus] = {
+  private def preRewrite(spark: SparkSession, path: String, op: String)
+      : (Option[ManifestCommit.Manifest], Seq[org.apache.hadoop.fs.FileStatus]) = {
     val root = new Path(path)
     val fs: FileSystem =
       root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val manifest = ManifestCommit.latest(fs, root)
-    // A crashed previous rewrite leaves an orphan generation that no
-    // manifest references; reclaim it before writing the next one. On a
-    // managed table, top-level plain files are migration debris: their
+    // A merge-sink or partition-managed table's generations are live data
+    // this method must never touch (and dataDir would misread them as
+    // plain). A crashed previous rewrite leaves an orphan generation that
+    // no manifest references; reclaim it before writing the next one. On
+    // a managed table, top-level plain files are migration debris: their
     // rows live in the committed generation, and they have now had a
     // full rewrite interval of grace for readers that were mid-scan
     // when the migration committed — reclaim them too.
-    // A manifest whose dir entries are NOT the single-table pointer (or
-    // its deletion vector) is a partition-managed table: its generations
-    // are live data this method must never touch (and resolveDataDir
-    // would misread it as plain).
-    if (manifest.exists(_.dirs.exists {
-        case (k, _) => k != "table" && k != "deletes" }))
-      throw new IllegalArgumentException(
-        s"$op: $path is partition-managed — use compactPartitioned")
+    requireSingleTable(path, manifest, op)
     if (manifest.exists(_.dirs.contains("table"))) {
       ManifestCommit.vacuum(fs, root, keep = 2)
       fs.listStatus(root).foreach { st =>
@@ -762,8 +776,7 @@ object TableMaintenance {
       if (st.isDirectory && ManifestCommit.isGeneration(st.getPath.getName))
         fs.delete(st.getPath, true)
     }
-    val dataDir = new Path(resolveDataDir(spark, path))
-    val entries = fs.listStatus(dataDir)
+    val entries = fs.listStatus(new Path(dataDir(path, manifest)))
     val dataFiles = entries
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
     // A directory-partitioned table (day=… subdirs) has no top-level data
@@ -774,29 +787,28 @@ object TableMaintenance {
       throw new IllegalArgumentException(
         s"$op: $path is directory-partitioned — use compactPartitioned, " +
           "which rewrites strewn partitions and commits them atomically")
-    dataFiles.toSeq
+    (manifest, dataFiles.toSeq)
   }
 
   /** Write `shaped` as the next immutable generation and flip the
     * manifest — THE commit: readers resolve to the new generation from
-    * that point on and never observe a partial table. First-migration
-    * plain files are NOT deleted here (a plain reader that listed the
-    * directory before the commit may still be scanning them); the next
-    * rewrite reclaims them after a full interval of grace
-    * ([[preRewrite]]). Returns the committed version.
+    * that point on and never observe a partial table. It commits against
+    * `read`, the manifest [[preRewrite]] read and `shaped` was built
+    * from, so a write that landed since (a [[deleteWhere]]) fails it
+    * loudly instead of being silently undone. First-migration plain files
+    * are NOT deleted here (a plain reader that listed the directory
+    * before the commit may still be scanning them); the next rewrite
+    * reclaims them after a full interval of grace ([[preRewrite]]).
+    * Returns the committed version.
     */
   private def commitRewrite(spark: SparkSession, path: String,
-      shaped: DataFrame, extraEntries: Map[String, String]): Long = {
+      read: Option[ManifestCommit.Manifest], shaped: DataFrame,
+      extraEntries: Map[String, String]): Long = {
     val root = new Path(path)
-    val fs: FileSystem =
-      root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prev = ManifestCommit.latest(fs, root).map(_.version).getOrElse(0L)
-    val gen = ManifestCommit.newGeneration(prev + 1L)
-    shaped.write.mode(SaveMode.Overwrite)
-      .parquet(new Path(root, gen).toString)
-    val v = ManifestCommit.commit(fs, root, prev,
-      extraEntries ++ Map("dir.table" -> gen))
-    ManifestCommit.vacuum(fs, root, keep = 2)
-    v
+    ManifestCommit.publish(root.getFileSystem(spark.sparkContext.hadoopConfiguration),
+        root, read.fold(0L)(_.version)) { gen =>
+      gen.write(shaped)
+      extraEntries + ("dir.table" -> gen.name)
+    }
   }
 }

@@ -63,8 +63,8 @@ import graft.sinks.ManifestCommit
   * the vector and restores the fast path — the same trade Delta makes.
   *
   * Write surface — every statement is the SQL face of ONE idempotent
-  * sink commit, never a parallel write protocol: CREATE TABLE (seed
-  * generation + declared merge contract, [[ParquetMergeSink.createEmpty]]),
+  * sink commit, never a parallel write protocol: CREATE TABLE (one
+  * manifest declaring the merge contract, [[ParquetMergeSink.createEmpty]]),
   * INSERT (V1Write seam → merge), DELETE (`SupportsDelete` → deletion
   * vectors), MERGE/UPDATE (post-resolution rewrites → mergeActions/
   * merge), DROP TABLE (managed-dir delete, gated by `tableExists`).
@@ -125,16 +125,17 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog {
       ManifestCommit.at(fs, p, v).getOrElse(throw new IllegalArgumentException(
         s"version $v of $p is not retained — retained: " +
           ManifestCommit.committed(fs, p).map(_.version).mkString(", ")))))
-    val dataEntries = m.dirs.filter { case (k, _) => k != "deletes" }
-    val unsupported = dataEntries.keys.filterNot(k =>
-      k == "table" || graft.sinks.ParquetMergeSink.isSinkKey(k))
-    require(unsupported.isEmpty,
-      s"$p is partition-managed (${unsupported.take(3).mkString(", ")}…): " +
+    // a merge-sink table reads every dir it names (none: an empty table
+    // of its declared schema), a maintained one its `dir.table`
+    val sink = graft.sinks.ParquetMergeSink.isSinkTable(m)
+    val dataDirs = (if (sink) m.dirs.values.toSeq.sorted else m.dirs.get("table").toSeq)
+      .map(rel => new Path(p, rel).toString)
+    require(sink || graft.sinks.TableMaintenance.isSingleTable(m),
+      s"$p is partition-managed (${m.dirs.keys.take(3).mkString(", ")}…): " +
         "read it via TableMaintenance.readPartitioned — the catalog serves " +
         "merge-sink and maintained single-table layouts")
-    val dataDirs = dataEntries.values.toSeq.sorted
-      .map(rel => new Path(p, rel).toString)
-    require(dataDirs.nonEmpty,
+    val declared = graft.sinks.ParquetMergeSink.declaredSchema(m)
+    require(dataDirs.nonEmpty || sink && declared.isDefined,
       s"version ${m.version} of $p references no data dirs")
     val dv = for {
       rel <- m.dirs.get("deletes")
@@ -159,7 +160,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog {
     // under uniqueness — that assertion is the table owner's to make,
     // which is why the key is DECLARED, never guessed from the schema.
     val deleteCfg =
-      if (version.isDefined || !dataEntries.keys.forall(_ == "table")) None
+      if (version.isDefined || sink) None
       else m.entries.get("delete.key")
         .orElse(Option(opts.get(s"deleteKey.${ident.name}")))
     val renames = graft.sinks.ParquetMergeSink.physMap(m)
@@ -169,7 +170,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog {
         "this state is unreachable through the sink APIs")
     new GraftTable(s"$catName.${ident.name}", spark, dataDirs, dv,
       p.toString, writeCfg, deleteCfg,
-      graft.sinks.ParquetMergeSink.declaredSchema(m), renames)
+      declared, renames)
   }
 
   private def readOnly: Nothing = throw new UnsupportedOperationException(
@@ -182,13 +183,14 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog {
 
   /** `CREATE TABLE graft.t (…) TBLPROPERTIES('merge.keys'='k1[,k2…]',
     * 'merge.version'='ver'[, 'buckets'='N'])` — the SQL onboarding path
-    * for a NEW merge-sink table ([[ParquetMergeSink.createEmpty]]: a
-    * zero-row schema-carrying seed generation + a manifest recording the
-    * write contract), after which every SQL write path (INSERT, MERGE,
-    * UPDATE) works immediately. The key/version properties are REQUIRED:
-    * a graft table IS a keyed upsert sink (the reference's ON CONFLICT
-    * tables, db.go), and its merge keys are the table owner's contract —
-    * never guessed from the schema. `CREATE TABLE … AS SELECT` composes
+    * for a NEW merge-sink table ([[ParquetMergeSink.createEmpty]]: ONE
+    * manifest recording the schema and the write contract, no data file
+    * and no Spark job), after which the table reads as 0 rows of its
+    * declared columns and every SQL write path (INSERT, MERGE, UPDATE)
+    * works immediately; the first INSERT appends. The key/version
+    * properties are REQUIRED: a graft table IS a keyed upsert sink (the
+    * reference's ON CONFLICT tables, db.go), and its merge keys are the
+    * table owner's contract — never guessed from the schema. `CREATE TABLE … AS SELECT` composes
     * for free: Spark calls this then appends through the V1Write seam,
     * i.e. CTAS = CREATE + one idempotent merge of the query result.
     */

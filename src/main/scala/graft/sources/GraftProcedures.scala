@@ -40,9 +40,9 @@ import graft.sinks.{ManifestCommit, ParquetMergeSink, TableMaintenance}
   *    single-table layout into target-sized files via
   *    [[TableMaintenance.compact]], MATERIALIZING any committed deletion
   *    vector (the post-`DELETE FROM` step that restores vectorized scans
-  *    and aggregate pushdown). Refuses merge-sink bucketed tables loudly:
-  *    their buckets are rewritten whole on every merge, so there is
-  *    nothing to compact that a merge has not already compacted.
+  *    and aggregate pushdown). Like `sort`, `zorder` and `stats_index`, it
+  *    refuses merge-sink tables loudly ([[TableMaintenance]]'s guard):
+  *    their merges place files by key hash and fold their own segments.
   *  - `export(dest, table)` / `restore(src, table, overwrite)` — the
   *    whole-catalog dump lifecycle (the reference's MODE=dump →
   *    s3-restore loop, process_s3.go:31-149, main.go:126, re-expressed
@@ -98,10 +98,6 @@ private[sources] object GraftProcedures {
   private def param(name: String, dt: DataType, default: String): ProcedureParameter =
     ProcedureParameter.in(name, dt).defaultValue(default).build()
 
-  /** True when `m` holds merge-sink data entries, of any format. */
-  private def isBucketLayout(m: ManifestCommit.Manifest): Boolean =
-    m.dirs.keys.exists(ParquetMergeSink.isSinkKey) || ParquetMergeSink.oldFormat(m).isDefined
-
   /** table-name argument → its managed root path (must exist). */
   private def tableRoot(root: Path, table: String): Path = {
     val p = new Path(root, table)
@@ -125,8 +121,8 @@ private[sources] object GraftProcedures {
             "layout" -> StringType, "entries" -> StringType)
           val rows = ManifestCommit.committed(fs, p).sortBy(-_.version).map { m =>
             val layout =
-              if (m.dirs.keys.forall(k => k == "table" || k == "deletes")) "maintained"
-              else if (isBucketLayout(m)) "merge-sink"
+              if (ParquetMergeSink.isSinkTable(m)) "merge-sink"
+              else if (TableMaintenance.isSingleTable(m)) "maintained"
               else "partitioned"
             val at = java.time.Instant.ofEpochMilli(
               fs.getFileStatus(ManifestCommit.commitPath(p, m.version))
@@ -175,14 +171,7 @@ private[sources] object GraftProcedures {
             param("target_mb", IntegerType, "128"),
             param("sort_by", StringType, "''"))) {
         override def invoke(input: InternalRow): JIterator[Scan] = {
-          val table = input.getString(0)
-          val p = tableRoot(root, table)
-          val m = ManifestCommit.latest(fs, p)
-          require(!m.exists(isBucketLayout),
-            s"compact: $table is a merge-sink bucketed table — its writes " +
-              "fold each bucket's appended segments themselves, and a " +
-              "file-level rewrite would break bucket routing (maintenance " +
-              "procedures serve maintained single-table layouts)")
+          val p = tableRoot(root, input.getString(0))
           val targetMb = input.getInt(1)
           require(targetMb >= 1, s"compact: target_mb must be >= 1, got $targetMb")
           val sortBy =
@@ -202,8 +191,7 @@ private[sources] object GraftProcedures {
           Array(param("table", StringType), param("keys", StringType),
             param("files", IntegerType, "32"))) {
         override def invoke(input: InternalRow): JIterator[Scan] = {
-          val table = input.getString(0)
-          val p = maintainedRoot(root, table, "sort")
+          val p = tableRoot(root, input.getString(0))
           val keys = splitKeys(input.getString(1), "sort")
           val files = input.getInt(2)
           require(files >= 1, s"sort: files must be >= 1, got $files")
@@ -217,8 +205,7 @@ private[sources] object GraftProcedures {
             param("files", IntegerType, "32"),
             param("bits_per_key", IntegerType, "8"))) {
         override def invoke(input: InternalRow): JIterator[Scan] = {
-          val table = input.getString(0)
-          val p = maintainedRoot(root, table, "zorder")
+          val p = tableRoot(root, input.getString(0))
           val keys = splitKeys(input.getString(1), "zorder")
           val files = input.getInt(2)
           require(files >= 1, s"zorder: files must be >= 1, got $files")
@@ -231,8 +218,7 @@ private[sources] object GraftProcedures {
       case "stats_index" => new GraftProcedure("stats_index",
           Array(param("table", StringType), param("keys", StringType))) {
         override def invoke(input: InternalRow): JIterator[Scan] = {
-          val table = input.getString(0)
-          val p = maintainedRoot(root, table, "stats_index")
+          val p = tableRoot(root, input.getString(0))
           val keys = splitKeys(input.getString(1), "stats_index")
           val n = TableMaintenance.statsIndexManaged(spark, p.toString, keys)
           result(columns("files_indexed" -> IntegerType, "keys" -> StringType),
@@ -403,22 +389,6 @@ private[sources] object GraftProcedures {
     val keys = raw.split(",").map(_.trim).filter(_.nonEmpty).toSeq
     require(keys.nonEmpty, s"$op: keys must name at least one column")
     keys
-  }
-
-  /** [[tableRoot]] plus the merge-sink refusal every layout rewrite
-    * shares: a bucket layout's files are placed by key hash — sorting or
-    * z-ordering them would destroy bucket routing.
-    */
-  private def maintainedRoot(root: Path, table: String, op: String): Path = {
-    val p = tableRoot(root, table)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!ManifestCommit.latest(fs, p).exists(isBucketLayout),
-      s"$op: $table is a merge-sink bucketed table — its physical layout " +
-        "IS the bucket routing (keys hash to dirs); a clustering rewrite " +
-        "would break key lookup. Compact into a fresh maintained table " +
-        "to re-cluster (maintenance procedures serve maintained " +
-        "single-table layouts)")
-    p
   }
 
   val All: Array[String] = Array(

@@ -138,6 +138,90 @@ class ManifestCommitSpec extends SparkSpec {
     }
   }
 
+  test("a publish built from a stale read throws, leaves the head byte-identical, " +
+      "and the next publish reclaims its orphan generation") {
+    val (r, fs) = root()
+    def publish(read: Long, n: Long): (Long, String) = {
+      var gen = ""
+      val v = ManifestCommit.publish(fs, r, read) { g =>
+        g.write(spark.range(n).toDF("x"))
+        gen = g.name
+        Map("dir.table" -> g.name)
+      }
+      (v, gen)
+    }
+    def bytes(p: Path) = {
+      val in = fs.open(p)
+      try in.readAllBytes().toSeq finally in.close()
+    }
+    val (v1, _) = publish(0L, 1L)
+    val (v2, g2) = publish(v1, 2L)
+    val head = bytes(ManifestCommit.commitPath(r, v2))
+    var orphan = ""
+    val e = intercept[java.io.IOException] {
+      ManifestCommit.publish(fs, r, v1) { g =>
+        g.write(spark.range(5).toDF("x"))
+        orphan = g.name
+        Map("dir.table" -> g.name)
+      }
+    }
+    assert(e.getMessage.contains(s"lost the race for version $v2"), e.getMessage)
+    assert(ManifestCommit.latest(fs, r).get.version === v2)
+    assert(bytes(ManifestCommit.commitPath(r, v2)) === head, "the head manifest changed")
+    assert(fs.exists(new Path(r, orphan)), "the stale write's generation is an orphan")
+    assert(spark.read.parquet(new Path(r, g2).toString).count() === 2L)
+
+    val (v3, g3) = publish(v2, 3L)
+    assert(v3 === v2 + 1)
+    assert(!fs.exists(new Path(r, orphan)), "the next publish must reclaim the orphan")
+    assert(fs.exists(new Path(r, g2)) && fs.exists(new Path(r, g3)))
+    assert(spark.read.parquet(new Path(r, g3).toString).count() === 3L)
+  }
+
+  test("no publish caller leaves a _SUCCESS marker in a generation") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft-publish").toString
+    // every `_SUCCESS` file under a `_g<n>-` generation dir of `dir`
+    def markers(dir: String): Seq[String] = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try walk.toArray.toSeq.map(_.toString)
+        .filter(p => p.endsWith("/_SUCCESS") && p.split("/").exists(ManifestCommit.isGeneration))
+      finally walk.close()
+    }
+    def fs(dir: String) = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def check(what: String, dir: String)(write: => Any): Unit = {
+      write
+      assert(fs(dir).exists(new Path(dir, ManifestCommit.CommitDir)), s"$what published nothing")
+      assert(markers(dir).isEmpty, s"$what: ${markers(dir)}")
+    }
+    val rows = (1L to 40L).map(k => (k, k % 4, s"v$k")).toDF("k", "h", "v")
+
+    val sink = s"$base/sink"
+    check("merge", sink)(ParquetMergeSink.merge(rows, sink, Seq("k"), "h", nBuckets = 4))
+    check("mergeActions", sink)(ParquetMergeSink.mergeActions(
+      rows.filter(col("k") < 5).withColumn("del", col("k") === 1L), sink, Seq("k"), "h",
+      col("del")))
+    val pre = s"$base/pre"
+    SinkFormats.preManifest(rows, pre, Seq("k"), 4)
+    check("upgrade", pre)(ParquetMergeSink.upgrade(spark, pre))
+
+    val maint = s"$base/maint"
+    check("writeSortedManaged", maint)(TableMaintenance.writeSortedManaged(rows, maint, 4, Seq("k")))
+    check("deleteWhere", maint)(TableMaintenance.deleteWhere(spark, maint, "k", col("k") > 30))
+    check("compact", maint)(TableMaintenance.compact(spark, maint, 1L << 20))
+    check("sortManaged", maint)(TableMaintenance.sortManaged(spark, maint, 2, Seq("v")))
+    check("zorderManaged", maint)(TableMaintenance.zorderManaged(spark, maint, 2, Seq("k", "h")))
+
+    val parts = s"$base/parts"
+    TableMaintenance.writePartitioned(rows.repartition(4), parts, Seq("h"))
+    check("compactPartitioned", parts)(TableMaintenance.compactPartitioned(spark, parts, 1L << 30))
+
+    val state = s"$base/state"
+    check("IncrementalAgg.advance", state)(graft.operators.IncrementalAgg.advance(
+      spark, state, rows.withColumn("value", col("k").cast("double")), Seq("h"), "value"))
+  }
+
   test("non-generation directories are never vacuum candidates") {
     val (r, fs) = root()
     fs.mkdirs(new Path(r, "day=2024-01-01")) // partitioned-table plain dir

@@ -811,7 +811,8 @@ class ParquetMergeSinkSpec extends SparkSpec {
     assert(choice().startsWith("merge ") && choice().contains("hwm=none"), choice())
     assert(!manifest("str").entries.contains(ParquetMergeSink.HwmKey))
 
-    // a table from before hwm existed merges once, taking hwm from its rows
+    // a table from before hwm existed merges and records none; upgrade
+    // stamps it from its rows once, and then its next batch appends
     val old = s"$base/old"
     ParquetMergeSink.merge(heightRows(7, 1L to 8L), old, Seq("h", "k"), "h")
     val oldPath = new org.apache.hadoop.fs.Path(old)
@@ -819,7 +820,11 @@ class ParquetMergeSinkSpec extends SparkSpec {
       manifest("old").entries - "txid" - ParquetMergeSink.HwmKey)
     ParquetMergeSink.merge(heightRows(8, 1L to 8L), old, Seq("h", "k"), "h")
     assert(choice().startsWith("merge ") && choice().contains("hwm=none"), choice())
+    assert(!manifest("old").entries.contains(ParquetMergeSink.HwmKey))
+    val unstamped = manifest("old").version
+    assert(ParquetMergeSink.upgrade(spark, old) === Some(unstamped + 1))
     assert(manifest("old").entries.get(ParquetMergeSink.HwmKey) === Some("8"))
+    assert(ParquetMergeSink.upgrade(spark, old) === None)
     ParquetMergeSink.merge(heightRows(9, 1L to 8L), old, Seq("h", "k"), "h")
     assert(choice().startsWith("append "), choice())
     assert(rows("old").size === 24)

@@ -50,14 +50,13 @@ object SinkFormats {
     (1 to 2).foreach(_ => ParquetMergeSink.merge(base, dir, keys, version, buckets))
     val table = new Path(dir)
     val m = ManifestCommit.latest(fs(rows.sparkSession), table).get
-    val gen = ManifestCommit.newGeneration(m.version + 1)
-    bucketed(rows, keys, buckets).write.partitionBy("__bucket")
-      .parquet(new Path(table, gen).toString)
-    val segs = fs(rows.sparkSession).listStatus(new Path(table, gen)).map(_.getPath.getName)
-      .collect { case n if n.startsWith("__bucket=") =>
-        s"dir.${n.stripPrefix("__bucket=")}+${m.version + 1}" -> s"$gen/$n" }
-    ManifestCommit.commit(fs(rows.sparkSession), table, m.version,
-      m.entries - "txid" ++ segs + (ParquetMergeSink.HwmKey -> hwm.toString))
+    ManifestCommit.publish(fs(rows.sparkSession), table, m.version) { gen =>
+      gen.write(bucketed(rows, keys, buckets), partitionBy = Seq("__bucket"))
+      val segs = fs(rows.sparkSession).listStatus(gen.path).map(_.getPath.getName)
+        .collect { case n if n.startsWith("__bucket=") =>
+          s"dir.${n.stripPrefix("__bucket=")}+${m.version + 1}" -> s"${gen.name}/$n" }
+      m.entries - "txid" ++ segs + (ParquetMergeSink.HwmKey -> hwm.toString)
+    }
   }
 
   /** A current table of `rows` whose head is then re-committed without

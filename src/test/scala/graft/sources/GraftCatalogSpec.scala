@@ -366,16 +366,31 @@ class GraftCatalogSpec extends SparkSpec {
 
   test("CREATE TABLE onboards an empty merge-sink table entirely in SQL") {
     val _ = root
-    spark.sql("""CREATE TABLE graft.ct (k BIGINT, v STRING, ver BIGINT)
-      TBLPROPERTIES('merge.keys'='k','merge.version'='ver','buckets'='4')""")
+    // one manifest, no generation and no Spark job
+    assert(jobsOf(spark.sql("""CREATE TABLE graft.ct (k BIGINT, v STRING, ver BIGINT)
+      TBLPROPERTIES('merge.keys'='k','merge.version'='ver','buckets'='4')""")) === 0)
     SinkFormats.assertCurrent(spark, s"$root/ct")
-    // empty but schema-resolving, through both SQL and the API reader
-    assert(spark.sql("SELECT * FROM graft.ct").columns.toSeq === Seq("k", "v", "ver"))
+    assert(!new java.io.File(s"$root/ct").list().exists(_.startsWith("_g")),
+      "CREATE TABLE must write no generation dir")
+    // empty but schema-resolving, through both SQL and the API reader, at
+    // the head and as of v1
+    Seq("SELECT * FROM graft.ct", "SELECT * FROM graft.ct VERSION AS OF 1").foreach { q =>
+      val df = spark.sql(q)
+      assert(df.columns.toSeq === Seq("k", "v", "ver"), q)
+      assert(df.count() === 0L, q)
+    }
     assert(spark.sql("SELECT count(*) FROM graft.ct").head.getLong(0) === 0L)
-    assert(ParquetMergeSink.read(spark, s"$root/ct").count() === 0L)
+    Seq(ParquetMergeSink.read(spark, s"$root/ct"),
+        ParquetMergeSink.readVersion(spark, s"$root/ct", 1L)).foreach { df =>
+      assert(df.columns.toSeq === Seq("k", "v", "ver"))
+      assert(df.count() === 0L)
+    }
 
-    // immediately writable through every SQL write path
+    // immediately writable through every SQL write path; the first INSERT
+    // appends (no committed row can share its keys)
     spark.sql("INSERT INTO graft.ct VALUES (1, 'a', 10), (2, 'b', 10)")
+    assert(graft.StrategyLog.lastChoice("merge_commit").exists(_.startsWith("append ")),
+      graft.StrategyLog.lastChoice("merge_commit"))
     spark.sql("UPDATE graft.ct SET v = 'a2' WHERE k = 1")
     assert(spark.sql("SELECT * FROM graft.ct").collect()
       .map(_.toSeq).toSet === Set(Seq(1L, "a2", 10L), Seq(2L, "b", 10L)),

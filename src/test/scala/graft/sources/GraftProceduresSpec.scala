@@ -18,6 +18,7 @@ class GraftProceduresSpec extends SparkSpec {
     spark.conf.set("spark.sql.catalog.graftp", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graftp.root", r)
     spark.conf.set("spark.sql.catalog.graftp.deleteKey.p", "k")
+    spark.conf.set("spark.sql.catalog.graftp.deleteKey.empty", "k")
     r
   }
 
@@ -379,11 +380,11 @@ class GraftProceduresSpec extends SparkSpec {
     Seq("up_pre" -> 12L, "up_seg" -> 24L, "up_uns" -> 12L).foreach { case (t, n) =>
       val dir = new Path(s"$root/$t")
       val old = ManifestCommit.latest(fs, dir)
-      // history lists an old table's versions, never as partitioned
+      // history lists every retained version of an old table as merge-sink
       if (old.isDefined) {
         val layouts = spark.sql(s"CALL graftp.system.history(table => '$t')")
           .collect().map(_.getString(2)).toSeq
-        assert(layouts.head === "merge-sink" && !layouts.contains("partitioned"), s"$t: $layouts")
+        assert(layouts.nonEmpty && layouts.forall(_ == "merge-sink"), s"$t: $layouts")
       }
       // a SELECT is refused before any job, and creates no file
       val before = SinkFormats.files(dir.toString)
@@ -412,5 +413,33 @@ class GraftProceduresSpec extends SparkSpec {
       val again = spark.sql(s"CALL graftp.system.upgrade(table => '$t')").head
       assert(!again.getBoolean(0) && again.getLong(1) === v, t)
     }
+    // a created table's v1 names no dir and is merge-sink all the same
+    spark.sql("""CREATE TABLE graftp.up_new (k BIGINT, ver BIGINT)
+      TBLPROPERTIES('merge.keys'='k','merge.version'='ver')""")
+    assert(spark.sql("CALL graftp.system.history(table => 'up_new')").collect()
+      .map(r => (r.getLong(0), r.getString(2))).toSeq === Seq((1L, "merge-sink")))
+  }
+
+  test("an empty created table refuses DELETE, compact, sort, zorder and " +
+      "deleteWhere, and changes no file") {
+    val dir = s"$root/empty"
+    spark.sql("""CREATE TABLE graftp.empty (k BIGINT, v STRING, ver BIGINT)
+      TBLPROPERTIES('merge.keys'='k','merge.version'='ver','buckets'='4')""")
+    val before = SinkFormats.files(dir)
+    // a declared deleteKey does not make a merge-sink table SQL-deletable
+    intercept[Exception](spark.sql("DELETE FROM graftp.empty WHERE k = 1").collect())
+    assert(SinkFormats.files(dir) === before, "DELETE FROM changed a file")
+    Seq("CALL graftp.system.compact(table => 'empty')",
+        "CALL graftp.system.sort(table => 'empty', keys => 'k')",
+        "CALL graftp.system.zorder(table => 'empty', keys => 'k,ver')").foreach { q =>
+      val e = intercept[Exception](spark.sql(q).collect())
+      assert(e.getMessage.contains("merge-sink"), s"$q: ${e.getMessage}")
+      assert(SinkFormats.files(dir) === before, q)
+    }
+    val e = intercept[IllegalArgumentException](TableMaintenance.deleteWhere(
+      spark, dir, "k", org.apache.spark.sql.functions.col("k") === 1L))
+    assert(e.getMessage.contains("merge-sink"), e.getMessage)
+    assert(SinkFormats.files(dir) === before, "deleteWhere changed a file")
+    assert(spark.sql("SELECT count(*) FROM graftp.empty").head.getLong(0) === 0L)
   }
 }

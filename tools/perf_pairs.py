@@ -17,7 +17,11 @@ for neither side), and two verdicts:
   gain   the change won at least 9 of every 10 pairs AND its median beats
          the parent's by more than the parent's own Q1-Q3 spread
   bound  the change's median is no worse than the parent's by more than the
-         metric's BENCHMARK.json bound (a relative bound)
+         metric's BENCHMARK.json bound (a relative bound): `holds` or
+         `BROKEN`; `unresolved` instead of `holds` when the parent's own
+         Q1-Q3 spread, relative to its median, is wider than the bound,
+         unless every change run beats every parent run (the runs spread too
+         widely to tell "unchanged" from a regression within the bound)
 
 It also reports whether every run was correct with no failed operations,
 and flags runs that shared the machine with another JVM. It only reads
@@ -155,11 +159,16 @@ def compare(workload, pairs, spec):
         worse = -gap / pmed if pmed else 0.0
         within = worse <= m["bound"]
         ok = ok and within
+        spread = (pq3 - pq1) / pmed if pmed else 0.0
+        beats_all = (max(chg) < min(par)) if lower else (min(chg) > max(par))
+        verdict = ("BROKEN" if not within else
+                   "unresolved" if spread > m["bound"] and not beats_all else
+                   "holds")
         delta = (cmed - pmed) / pmed if pmed else float("nan")
         print(f"{name:<20} {pq1:>9.4g} {pmed:>9.4g} {pq3:>9.4g} "
               f"{cq1:>9.4g} {cmed:>9.4g} {cq3:>9.4g} {delta:>+7.1%} "
               f"{wins:>2}/{len(both):<3}  {'yes' if gain else 'no':<4}  "
-              f"{'holds' if within else 'BROKEN'} (bound {m['bound']:.0%})")
+              f"{verdict} (bound {m['bound']:.0%})")
     return ok
 
 
