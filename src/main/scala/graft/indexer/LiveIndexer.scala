@@ -66,6 +66,24 @@ object LiveIndexer {
         Seq("topic_id", "is_worker"), "height_tx"))
   }
 
+  /** The bucket count `mergeAll` creates `last_commits` with. Its key,
+    * `(topic_id, is_worker)`, bounds it at 2 × topics rows, so one bucket
+    * holds the whole table: each merge reads one file and writes one. At
+    * 16 buckets a merge writes one file per touched bucket, and a catch-up
+    * trigger (or the first merge after an append) touches nearly all.
+    * Measured on the `index` benchmark at 16 buckets (4 vCPUs, `local[4]`,
+    * interpreted write): each extra file costs about 4.7 ms of task CPU
+    * and each rewritten row about 13 µs. A trigger touching 14 buckets
+    * pays ~61 ms for its 13 extra files, as much as rewriting ~4,700 rows;
+    * a one-height trigger touches one bucket, and one bucket rewrites
+    * 15/16 of the table more, under 1 ms at the benchmark's 31 rows. So
+    * the whole-table rewrite stays cheaper until the table holds thousands
+    * of rows, far more than 2 × topics. The count is committed in the
+    * table's manifest v1: a `last_commits` created at 16 buckets keeps 16,
+    * and only new lakes get one.
+    */
+  private val LastCommitsBuckets = 1
+
   /** Merge one micro-batch into every table under `tableRoot`. The batch
     * is parsed ([[Ingest.parseEnvelope]]) and barriered once: the five
     * lineages all start from the parsed rows, so no table reads the JSON
@@ -80,7 +98,8 @@ object LiveIndexer {
     * staged unresolved and resolved by that same shuffle. Each merge
     * releases its staged blocks after its commit, and the parsed batch's
     * blocks are released when the last table is merged — a trigger leaves
-    * no persisted RDD behind.
+    * no persisted RDD behind. A new lake's `last_commits` has one bucket
+    * ([[LastCommitsBuckets]]), every other table the sink's default.
     *
     * The whole trigger runs on Spark's interpreted evaluator
     * (`spark.sql.codegen.factoryMode=NO_CODEGEN`, which also turns off
@@ -109,7 +128,8 @@ object LiveIndexer {
       val b = graft.Tables.barrier(Ingest.parseEnvelope(batch))
       try
         parsedTables(b, decoderClass).foreach { case (name, df, keys, version) =>
-          ParquetMergeSink.merge(df, s"$tableRoot/$name", keys, version)
+          ParquetMergeSink.merge(df, s"$tableRoot/$name", keys, version,
+            if (name == "last_commits") LastCommitsBuckets else ParquetMergeSink.DefaultBuckets)
           afterTable(batchId, name)
         }
       finally graft.Tables.release(b)

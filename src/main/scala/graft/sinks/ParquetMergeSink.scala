@@ -84,14 +84,19 @@ import graft.indexer.Upsert
   * (a source-precedence tie-break, so version collisions like
   * version = key are still deterministic).
   *
-  * The bucket count is committed in manifest v1 BEFORE any data
-  * generation is written — a caller's `nBuckets` only applies to a NEW
-  * table, so two writers can never bucket the same key differently
-  * (which would silently duplicate keys across buckets). That `buckets`
-  * entry is also the one layout test ([[isSinkTable]]): every merge-sink
-  * manifest carries it from v1 on, dirs or none. A root with generation
-  * dirs but no commit log is unreadable (`_commits` lost) and fails loudly
-  * rather than guessing.
+  * The caller picks the bucket count from its key space
+  * ([[DefaultBuckets]] unless it passes one: an update-wins table whose
+  * keys bound it at a few thousand rows reads and writes one file a merge
+  * at one bucket, as `LiveIndexer`'s `last_commits` does), and manifest
+  * v1 commits it BEFORE any data generation is written — a caller's
+  * `nBuckets` only applies to a NEW table, so two writers can never
+  * bucket the same key differently (which would silently duplicate keys
+  * across buckets). That `buckets` entry is also the one layout test
+  * ([[isSinkTable]]): every merge-sink manifest carries it from v1 on,
+  * dirs or none, and a merge, `mergeActions` or ALTER refuses a manifest
+  * without it before any Spark job. A root with generation dirs but no
+  * commit log is unreadable (`_commits` lost) and fails loudly rather than
+  * guessing.
   */
 object ParquetMergeSink {
 
@@ -103,6 +108,9 @@ object ParquetMergeSink {
   private[graft] val RetiredKey = "schema.retired"
   private[graft] val HwmKey = "hwm"
   private[graft] val BucketsKey = "buckets"
+
+  /** The bucket count a new table gets unless its creator passes one. */
+  val DefaultBuckets = 16
 
   /** The version types `hwm` serves (it bounds versions as longs). */
   private val Integral: Set[DataType] = {
@@ -518,16 +526,7 @@ object ParquetMergeSink {
     val fs = fsFor(spark, table)
     def none = new IllegalStateException(
       s"$path has no committed merge-sink table to alter")
-    val m = head(fs, table).getOrElse(throw none)
-    // merge-sink tables only: maintained/partitioned tables read
-    // through TableMaintenance, which resolves schema from data — an
-    // ALTER there would record a declaration nothing honors (and a
-    // DV-carrying table's delete epoch must compact before its shape
-    // changes). Refuse loudly rather than half-evolve.
-    require(isSinkTable(m),
-      s"$path is not a merge-sink table (its manifest carries no " +
-        s"$BucketsKey) — $op serves merge-sink tables; rewrite maintained " +
-        "layouts through TableMaintenance")
+    val m = requireSinkTable(table, head(fs, table).getOrElse(throw none), op)
     change(m, declaredSchema(m).getOrElse(throw none)).foreach { a =>
       ManifestCommit.commit(fs, table, m.version,
         (m.entries - "txid" - PhysKey) ++ a.other ++
@@ -535,6 +534,21 @@ object ParquetMergeSink {
           (if (a.phys.nonEmpty) Map(PhysKey -> renderNameMap(a.phys)) else Map.empty))
       ManifestCommit.vacuum(fs, table, keep = 2)
     }
+  }
+
+  /** `m`, refused unless it is a merge-sink manifest. Maintained and
+    * partitioned tables read through [[TableMaintenance]], which resolves
+    * the schema from the data and places files by its own layout: an ALTER
+    * there would record a declaration nothing honors, and a merge has no
+    * bucket count to hash by. `op` names the refused call.
+    */
+  private def requireSinkTable(table: Path, m: ManifestCommit.Manifest,
+      op: String): ManifestCommit.Manifest = {
+    require(isSinkTable(m),
+      s"$table is not a merge-sink table (its manifest carries no " +
+        s"$BucketsKey: a TableMaintenance layout) — $op serves merge-sink " +
+        "tables; rewrite maintained layouts through TableMaintenance")
+    m
   }
 
   private def fsFor(spark: SparkSession, p: Path): FileSystem =
@@ -737,7 +751,7 @@ object ParquetMergeSink {
     * an existing table and key/version columns absent from the schema.
     */
   def createEmpty(spark: SparkSession, path: String, schema: StructType,
-      keys: Seq[String], version: String, nBuckets: Int = 16): Unit = {
+      keys: Seq[String], version: String, nBuckets: Int = DefaultBuckets): Unit = {
     val table = new Path(path)
     val fs = fsFor(spark, table)
     require(head(fs, table).isEmpty,
@@ -768,7 +782,8 @@ object ParquetMergeSink {
 
   /** The shared front of [[merge]] and [[mergeActions]]: ONE Spark job.
     *
-    * Reads the committed manifest ([[head]], refusing an old format)
+    * Reads the committed manifest ([[head]], refusing an old format, and
+    * refusing a manifest that is not a merge-sink one before any job runs)
     * WITHOUT creating anything, so the bucket count and declared schema
     * are known before the batch is touched; `shape` aligns the batch to
     * them. The bucket column is added, and a `Dataset.observe` of the
@@ -777,8 +792,8 @@ object ParquetMergeSink {
     * one pass over the batch's lineage.
     */
   private def stage(fs: FileSystem, table: Path, keys: Seq[String], version: String,
-      nBuckets: Int)(shape: Option[ManifestCommit.Manifest] => DataFrame): Staged = {
-    val committed = head(fs, table)
+      nBuckets: Int, op: String)(shape: Option[ManifestCommit.Manifest] => DataFrame): Staged = {
+    val committed = head(fs, table).map(requireSinkTable(table, _, op))
     val buckets = committed.fold(nBuckets)(_.entries(BucketsKey).toInt)
     val shaped = shape(committed)
     val integral = shaped.schema.find(f => lcName(f.name) == lcName(version))
@@ -920,7 +935,7 @@ object ParquetMergeSink {
     * not skipped.
     */
   def merge(batch: DataFrame, path: String, keys: Seq[String], version: String,
-      nBuckets: Int = 16): Long = {
+      nBuckets: Int = DefaultBuckets): Long = {
     val spark = batch.sparkSession
     val table = new Path(path)
     val fs = fsFor(spark, table)
@@ -928,7 +943,7 @@ object ParquetMergeSink {
     // write contract: the batch aligns onto it — null-fill for columns an
     // old writer doesn't know yet (post-ADD COLUMN), loud refusal for
     // columns the table doesn't have.
-    val staged = stage(fs, table, keys, version, nBuckets)(known =>
+    val staged = stage(fs, table, keys, version, nBuckets, "merge")(known =>
       known.flatMap(declaredSchema).fold(batch)(d =>
         alignToSchema(batch, d, s"merge batch into $path",
           required = keys :+ version, keepSourceOnly = false)))
@@ -1017,7 +1032,7 @@ object ParquetMergeSink {
     * fit the existing table's, and is a no-op otherwise.
     */
   def mergeActions(source: DataFrame, path: String, keys: Seq[String],
-      version: String, deleteWhen: Column, nBuckets: Int = 16,
+      version: String, deleteWhen: Column, nBuckets: Int = DefaultBuckets,
       targetCols: Seq[String] = Nil): Unit = {
     val spark = source.sparkSession
     val table = new Path(path)
@@ -1056,7 +1071,7 @@ object ParquetMergeSink {
     // duplicates, and overlapping columns take the DECLARED types before
     // anything hashes them (an un-cast narrower key would route to the
     // wrong bucket). Source-only columns (the CDC op flag) pass through.
-    val staged = stage(fs, table, keys, version, nBuckets) { known =>
+    val staged = stage(fs, table, keys, version, nBuckets, "mergeActions") { known =>
       tableSchema = known.flatMap(declaredSchema)
       alignToSchema(source, tableSchema.getOrElse(StructType(Nil)),
           s"mergeActions source for $path", keys :+ version, keepSourceOnly = true)

@@ -356,14 +356,17 @@ object TableMaintenance {
     * before the new write commits — a reader (or a crash) mid-write sees
     * a missing or partial table. This writes the sorted layout as a new
     * immutable generation and flips the manifest: readers observe the
-    * previous or the next table, never a mix, on any store.
+    * previous or the next table, never a mix, on any store. Like every
+    * whole-table rewrite it refuses a merge-sink or partition-managed table
+    * before it writes a file.
     */
   def writeSortedManaged(df: DataFrame, path: String, numFiles: Int,
       keys: Seq[String]): Unit = {
     val root = new Path(path)
     val fs = root.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    val prev = ManifestCommit.latest(fs, root).map(_.version).getOrElse(0L)
-    ManifestCommit.publish(fs, root, prev) { gen =>
+    val m = ManifestCommit.latest(fs, root)
+    requireSingleTable(path, m, "writeSortedManaged")
+    ManifestCommit.publish(fs, root, m.fold(0L)(_.version)) { gen =>
       gen.write(df.repartitionByRange(numFiles, keys.map(col): _*)
         .sortWithinPartitions(keys.map(col): _*))
       Map("dir.table" -> gen.name)

@@ -161,17 +161,16 @@ class LiveIndexerSpec extends SparkSpec {
     LiveIndexer.start(spark, landing, s"$base/clean", s"$base/ckpt-clean",
       maxHeightsPerTrigger = Some(2L)).awaitTermination()
     // layout: each of the clean run's three triggers appended ONE segment
-    // of one file to each append table; last_commits drained into buckets
+    // of one file to each append table; last_commits drained into its one
+    // bucket: one base dir holding one file
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
     tableNames.foreach { t =>
       val root = new org.apache.hadoop.fs.Path(s"$base/clean/$t")
       val dirs = graft.sinks.ManifestCommit.latest(fs, root).get.dirs
-      if (t == "last_commits") assert(!dirs.keys.exists(_.startsWith("+")), s"$t: $dirs")
-      else {
-        assert(dirs.size === 3 && dirs.keys.forall(_.startsWith("+")), s"$t: $dirs")
-        dirs.values.foreach(rel => assert(fs.listStatus(new org.apache.hadoop.fs.Path(root, rel))
-          .count(_.getPath.getName.endsWith(".parquet")) === 1, s"$t: $rel"))
-      }
+      if (t == "last_commits") assert(dirs.keySet === Set("0"), s"$t: $dirs")
+      else assert(dirs.size === 3 && dirs.keys.forall(_.startsWith("+")), s"$t: $dirs")
+      dirs.values.foreach(rel => assert(fs.listStatus(new org.apache.hadoop.fs.Path(root, rel))
+        .count(_.getPath.getName.endsWith(".parquet")) === 1, s"$t: $rel"))
     }
     import spark.implicits._
     val keysOf = LiveIndexer.tablesOf(
@@ -369,6 +368,82 @@ class LiveIndexerSpec extends SparkSpec {
     assert(parses.map(_._2).sum === 0, s"get_json_object in a trigger's plans: $parses")
     assert(parses.filter(_._3 > 0) === Seq(("localCheckpoint", 0, 1)),
       s"the landed JSON must be parsed once, by the barrier: $parses")
+  }
+
+  /** A landed height whose results set the last commit of 20 topics'
+    * workers and reputers: 40 `last_commits` keys, enough to touch every
+    * bucket of a 16-bucket table.
+    */
+  private def commitsEnvelope(h: Long): String = {
+    val events = for (t <- 1 to 20; actor <- Seq("Worker", "Reputer")) yield
+      s"""{"type":"emissions.v3.Event${actor}LastCommitSet","attributes":[""" +
+        s"""{"key":"topic_id","value":"\\"$t\\""},""" +
+        s"""{"key":"block_height","value":"\\"$h\\""},""" +
+        s"""{"key":"nonce","value":"{\\"block_height\\":\\"${h - 1}\\"}"}]}"""
+    s"""{"block":${blockJson(h)},"block_results":{"height":"$h",""" +
+      s""""finalize_block_events":[${events.mkString(",")}],"txs_results":[]}}"""
+  }
+
+  private def commitsBatch(heights: Range): DataFrame =
+    spark.createDataFrame(heights.map(h => (h.toLong, commitsEnvelope(h))))
+      .toDF("height", "block_json")
+
+  private def headOf(table: String): graft.sinks.ManifestCommit.Manifest = {
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    graft.sinks.ManifestCommit.latest(fs, new org.apache.hadoop.fs.Path(table)).get
+  }
+
+  /** How many parquet files lie in the dirs the head manifest of `table` names. */
+  private def dataFiles(table: String): Int = {
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    headOf(table).dirs.values.toSeq
+      .flatMap(rel => fs.listStatus(new org.apache.hadoop.fs.Path(table, rel)))
+      .count(_.getPath.getName.endsWith(".parquet"))
+  }
+
+  test("a new lake's last_commits has one bucket, and each of its commits " +
+      "leaves one data file") {
+    val root = java.nio.file.Files.createTempDirectory("graft-live-lc").toString
+    val lc = s"$root/last_commits"
+    LiveIndexer.mergeAll(commitsBatch(1 to 120), root, decoder)
+    assert(headOf(lc).entries("buckets") === "1")
+    assert(dataFiles(lc) === 1, "the first trigger appends one segment of one file")
+    // the first merge after the append drains the segment (at 16 buckets it
+    // wrote one file per touched bucket, 15 here), then one-height merges
+    Seq(121 to 240, 241 to 241, 242 to 242).foreach { heights =>
+      LiveIndexer.mergeAll(commitsBatch(heights), root, decoder)
+      val choice = graft.StrategyLog.lastChoice("merge_commit").getOrElse("")
+      assert(choice.startsWith("merge ") && choice.contains(" folded=1 "), s"$heights: $choice")
+      assert(headOf(lc).dirs.keySet === Set("0"), s"$heights")
+      assert(dataFiles(lc) === 1, s"$heights")
+    }
+    val rows = ParquetMergeSink.read(spark, lc)
+    assert(rows.count() === 40)
+    assert(rows.filter(col("height_tx") =!= 242L).isEmpty, "latest-wins keeps height 242")
+  }
+
+  test("a last_commits created at 16 buckets keeps merging at 16 and ends " +
+      "row-identical to a new lake") {
+    val base = java.nio.file.Files.createTempDirectory("graft-live-lc16").toString
+    // a lake whose last_commits predates the one-bucket layout
+    LiveIndexer.tablesOf(commitsBatch(1 to 1), decoder)
+      .filter(_._1 == "last_commits").foreach { case (name, df, keys, version) =>
+        ParquetMergeSink.merge(df, s"$base/old/$name", keys, version, nBuckets = 16)
+      }
+    Seq(1 to 60, 61 to 120, 121 to 121).foreach { heights =>
+      LiveIndexer.mergeAll(commitsBatch(heights), s"$base/old", decoder)
+      LiveIndexer.mergeAll(commitsBatch(heights), s"$base/new", decoder)
+    }
+    val old = headOf(s"$base/old/last_commits")
+    assert(old.entries("buckets") === "16")
+    assert(old.dirs.size > 1 && old.dirs.keys.forall(_.toIntOption.exists(b => b >= 0 && b < 16)),
+      s"the 16-bucket table keeps its base dirs: ${old.dirs}")
+    assert(headOf(s"$base/new/last_commits").entries("buckets") === "1")
+    // these landings hold no score events, so neither lake has `scores`
+    def rows(lake: String, t: String) =
+      ParquetMergeSink.readIfExists(spark, s"$base/$lake/$t").map(rowsOf)
+    tableNames.foreach(t => assert(rows("old", t) === rows("new", t), s"table $t"))
+    assert(rows("new", "last_commits").map(_.size) === Some(40))
   }
 
   test("HTTP client polls a loopback server end-to-end through the " +

@@ -200,6 +200,28 @@ class ParquetMergeSinkSpec extends SparkSpec {
     assert(SinkFormats.files(dir) === before, "a refusal changed the table's files")
   }
 
+  test("merge and mergeActions refuse a maintained table before any job") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val dir = java.nio.file.Files.createTempDirectory("graft-sink-maint").toString + "/t"
+    (1L to 5L).map(k => (k, s"v$k", 1L)).toDF("k", "v", "ver").write.parquet(dir)
+    TableMaintenance.compact(spark, dir, 1L << 20)
+    val before = SinkFormats.files(dir)
+    val batch = Seq((1L, "x", 2L)).toDF("k", "v", "ver")
+    Seq[(String, () => Any)](
+      "merge" -> (() => ParquetMergeSink.merge(batch, dir, Seq("k"), "ver")),
+      "mergeActions" -> (() => ParquetMergeSink.mergeActions(
+        batch.withColumn("del", lit(false)), dir, Seq("k"), "ver", col("del")))
+    ).foreach { case (what, call) =>
+      var e: Throwable = null
+      assert(jobsOf { e = intercept[IllegalArgumentException](call()) } === 0, what)
+      assert(e.getMessage.contains("is not a merge-sink table") &&
+        e.getMessage.contains("TableMaintenance layout") &&
+        e.getMessage.contains(s"$what serves"), s"$what: ${e.getMessage}")
+    }
+    assert(SinkFormats.files(dir) === before, "a refusal changed the table's files")
+    assert(TableMaintenance.read(spark, dir).count() === 5)
+  }
+
   /** The first word of the `merge_commit` choice `merge` records for
     * `batch`: the commit path, `append` or `merge`.
     */

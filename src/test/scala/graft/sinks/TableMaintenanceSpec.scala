@@ -450,6 +450,21 @@ class TableMaintenanceSpec extends SparkSpec {
     assert(!fs.exists(new Path(first)), "vacuum must reclaim fully superseded generations")
   }
 
+  test("writeSortedManaged refuses a merge-sink table and changes no file") {
+    import spark.implicits._
+    val out = tmpDir("managed-sink")
+    val rows = (1L to 20L).map(k => (k, s"v$k", 1L)).toDF("k", "v", "ver")
+    ParquetMergeSink.merge(rows, out, Seq("k"), "ver", nBuckets = 4)
+    ParquetMergeSink.merge(rows, out, Seq("k"), "ver", nBuckets = 4) // drains into buckets
+    val before = SinkFormats.files(out)
+    val e = intercept[IllegalArgumentException](
+      TableMaintenance.writeSortedManaged(rows, out, numFiles = 2, keys = Seq("k")))
+    assert(e.getMessage.contains("writeSortedManaged") &&
+      e.getMessage.contains("is a merge-sink table"), e.getMessage)
+    assert(SinkFormats.files(out) === before, "the refusal changed the table's files")
+    assert(ParquetMergeSink.read(spark, out).collect().toSet === rows.collect().toSet)
+  }
+
   test("deletion vectors: logical delete, cumulative union, rollback " +
       "resurrection, compaction materialization") {
     val out = tmpDir("delete")
