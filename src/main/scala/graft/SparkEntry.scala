@@ -16,9 +16,11 @@ object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    Relational.q05RegionRevenue(spark, "/root/testdata/sf0.001")
+    queries("q05_region_revenue")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2, each under the
+    * codegen policy ([[SessionConf.sized]]).
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Relational / analytics core
     "q01_pricing_summary" -> (Relational.q01PricingSummary _),
@@ -194,7 +196,7 @@ object SparkEntry {
     // real Routers lineage → per-topic / per-actor reports)
     "chain_topic_scores" -> (graft.indexer.ChainAnalytics.topicScores _),
     "chain_actor_rewards" -> (graft.indexer.ChainAnalytics.actorRewards _)
-  )
+  ).map { case (name, query) => name -> SessionConf.sized(query) }
 
   /** Session-conf pins Verify applies around a query's oracle dump (and
     * restores afterwards). Adaptive operators switch strategy on corpus

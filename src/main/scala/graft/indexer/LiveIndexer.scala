@@ -1,11 +1,9 @@
 package graft.indexer
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.CodegenObjectFactoryMode
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.SessionConf.withConf
+import graft.SessionConf.withCodegenPolicy
 import graft.sinks.ParquetMergeSink
 
 /** The reference's LIVE loop — poll tip, fetch heights, decode, route,
@@ -101,21 +99,14 @@ object LiveIndexer {
     * no persisted RDD behind. A new lake's `last_commits` has one bucket
     * ([[LastCommitsBuckets]]), every other table the sink's default.
     *
-    * The whole trigger runs on Spark's interpreted evaluator
-    * (`spark.sql.codegen.factoryMode=NO_CODEGEN`, which also turns off
-    * whole-stage codegen). A trigger is many small queries that generate
-    * 135–146 classes between them, more than the 100 entries of Spark's
-    * codegen cache (`spark.sql.codegen.cache.maxEntries`, a static conf),
-    * so with codegen every trigger compiled all of them again and the JIT
-    * then compiled the new classes too. Measured on the `index` benchmark
-    * (4 vCPUs, `local[4]`): with codegen, its timed window ran ~595
-    * Janino compiles and 32–34 s of JIT, about 60% of 53–55 s of process
-    * CPU; interpreted, 7 compiles, and the median process CPU per height
-    * fell from 205 to 141 ms over 11 paired runs. The per-row work here
-    * is JSON parsing and parquet I/O, which codegen barely speeds up. The
-    * mode is set on the batch's session for this call and then restored
-    * (or unset), also when a merge throws; other callers of
-    * [[ParquetMergeSink.merge]] keep codegen.
+    * The whole trigger (barrier, every table's staging job and write)
+    * runs under the codegen policy ([[graft.SessionConf.codegenConf]],
+    * site `trigger`) as small work: a micro-batch states no size before
+    * its parse, a deployment bounds its triggers with
+    * `maxHeightsPerTrigger`, and even a 6,000-height trigger (about 42 MB
+    * landed) is below the bound. The mode is restored (or unset)
+    * afterwards, also when a merge throws; other callers of
+    * [[ParquetMergeSink.merge]] keep the session's mode.
     *
     * `afterTable` is the crash-injection seam the restart spec uses — a
     * real deployment leaves it as the no-op.
@@ -123,8 +114,7 @@ object LiveIndexer {
   def mergeAll(batch: DataFrame, tableRoot: String, decoderClass: String,
       afterTable: (Long, String) => Unit = (_, _) => (),
       batchId: Long = -1L): Unit =
-    withConf(batch.sparkSession,
-        SQLConf.CODEGEN_FACTORY_MODE.key -> CodegenObjectFactoryMode.NO_CODEGEN.toString) {
+    withCodegenPolicy(batch.sparkSession, "trigger", 0L) {
       val b = graft.Tables.barrier(Ingest.parseEnvelope(batch))
       try
         parsedTables(b, decoderClass).foreach { case (name, df, keys, version) =>

@@ -50,10 +50,10 @@ import graft.indexer.Upsert
   * batch as one segment, a plain concatenation that reads no base bucket.
   * Any commit that reads segments DRAINS them instead — folds every bucket,
   * segment rows into their buckets — once they hold more rows than an
-  * average base bucket. Amortized over a table of N rows taking r rows a
-  * trigger at 16 buckets: concatenations rewrite about N/512 rows a
-  * trigger and a drain N + N/16 rows every N/(16r) triggers, about
-  * N/512 + 17r rows a trigger in all.
+  * average base bucket and at least one row per bucket. Amortized over a
+  * table of N rows taking r rows a trigger at 16 buckets: concatenations
+  * rewrite about N/512 rows a trigger and a drain N + N/16 rows every
+  * N/(16r) triggers, about N/512 + 17r rows a trigger in all.
   *
   * Job shape — a merge runs ONE staging job, then the write. The staging
   * job materializes the aligned, bucketed batch behind a barrier and
@@ -587,11 +587,21 @@ object ParquetMergeSink {
     else Option.when(data.nonEmpty && !m.entries.contains(SchemaKey))("no schema stamp")
   }
 
+  private val PreManifest = "pre-manifest bucket dirs"
+
+  /** The call that upgrades a table of an old format: a pre-manifest
+    * table records no write contract, so its call names one.
+    */
+  private def upgradeCall(what: String): String =
+    "CALL <catalog>.system.upgrade(table => '<table>'" +
+      (if (what == PreManifest) ", keys => '<merge keys>', version => '<version column>'"
+       else "") + ") (ParquetMergeSink.upgrade)"
+
   private def refuseOld(table: Path, what: String): Nothing =
     throw new IllegalStateException(
       s"$table is a merge-sink table of an old format ($what): run " +
-        s"CALL <catalog>.system.upgrade('<table>') (ParquetMergeSink.upgrade) " +
-        "once — reads and writes refuse it rather than misread it")
+        s"${upgradeCall(what)} once — reads and writes refuse it rather " +
+        "than misread it")
 
   /** `m`, refused unless it is in the current grammar. */
   private[graft] def requireCurrent(table: Path,
@@ -600,9 +610,9 @@ object ParquetMergeSink {
     m
   }
 
-  /** `CALL <catalog>.system.upgrade('<table>')`: commit the table at `path`
-    * as ONE manifest in the current grammar — the one place the old
-    * formats are read. Every entry but the data dirs carries as it is
+  /** `CALL <catalog>.system.upgrade(table, keys, version)`: commit the
+    * table at `path` as ONE manifest in the current grammar — the one
+    * place the old formats are read. Every entry but the data dirs carries as it is
     * (`buckets`, `merge.keys`, `merge.version`, `hwm`, the rename map, the
     * retired names). Rows are rewritten only where an old layout needs it:
     * every dir of a bucket that has a per-bucket segment or a dir outside a
@@ -611,10 +621,12 @@ object ParquetMergeSink {
     * dir in one new generation; an unstamped manifest is stamped with its
     * files' schema. A version-keyed table with rows and no `hwm` (written
     * before the sink recorded one; it merges correctly but never appends)
-    * is stamped with its largest version; a pre-manifest table records its
-    * keys on its first merge after the upgrade, and a second upgrade then
-    * stamps it. Returns the committed version, or None when the table
-    * already was current.
+    * is stamped with its largest version. A pre-manifest table records no
+    * write contract, so its upgrade requires `contract` (merge keys,
+    * version column), committed with the layout: the one run also stamps
+    * `hwm`. A contract that differs from a recorded one is refused.
+    * Returns the committed version, or None when the table already was
+    * current.
     *
     * Crash-safe by re-run: the old layout stays untouched until the
     * commit, so a crash before it leaves an orphan generation that the
@@ -622,7 +634,8 @@ object ParquetMergeSink {
     * deleted after the commit, marker last, so a re-run over a current
     * head finishes that reclaim and commits nothing.
     */
-  def upgrade(spark: SparkSession, path: String): Option[Long] = {
+  def upgrade(spark: SparkSession, path: String,
+      contract: Option[(Seq[String], String)] = None): Option[Long] = {
     val table = new Path(path)
     val fs = fsFor(spark, table)
     val marker = new Path(table, LegacyMarker)
@@ -633,25 +646,38 @@ object ParquetMergeSink {
     val m = ManifestCommit.latest(fs, table).getOrElse {
       if (!fs.exists(marker)) head(fs, table) // bucket dirs alone: unknowable
       require(fs.exists(marker), s"$path holds no merge-sink table to upgrade")
+      require(contract.isDefined, s"upgrade: $path is a table of $PreManifest, " +
+        s"which records no write contract: run ${upgradeCall(PreManifest)}")
       val in = fs.open(marker)
       val buckets = try new String(in.readAllBytes(), "UTF-8").trim.toInt finally in.close()
       ManifestCommit.Manifest(0L, bucketDirs(table, "") + (BucketsKey -> buckets.toString))
     }
+    val recorded = m.entries.get("merge.keys").map(ks =>
+      (ks.split(",").toSeq, m.entries.getOrElse("merge.version", "")))
+    contract.foreach(c => require(recorded.forall(_ == c),
+      s"upgrade: $path records the contract ${recorded.get}, not $c"))
+    val meta = if (recorded.isDefined) Map.empty[String, String]
+      else contract.fold(Map.empty[String, String]) { case (ks, v) => writeMeta(ks, v) }
+    val entries = m.entries ++ meta
     val data = sinkDirs(m)
     lazy val declared = declaredSchema(m).getOrElse(stampable(spark.read.parquet(
       data.values.map(d => new Path(table, d._1).toString).toSeq: _*).schema))
     def rows(rels: Iterable[String]) = spark.read.schema(physicalSchema(declared, physMap(m)))
       .parquet(rels.map(rel => new Path(table, rel).toString).toSeq: _*)
+    contract.filter(_ => data.nonEmpty).foreach { case (ks, v) =>
+      val missing = (ks :+ v).filterNot(c => declared.exists(f => lcName(f.name) == lcName(c)))
+      require(missing.isEmpty, s"upgrade: $path has no column ${missing.mkString(", ")}")
+    }
     // a version-keyed table with rows and no `hwm` predates it
-    val hwm = m.entries.get("merge.version").filter(v => data.nonEmpty &&
-      !m.entries.contains(HwmKey) &&
-      m.entries.get("merge.keys").exists(ks => versionKeyed(ks.split(",").toSeq, v)) &&
+    val hwm = entries.get("merge.version").filter(v => data.nonEmpty &&
+      !entries.contains(HwmKey) &&
+      entries.get("merge.keys").exists(ks => versionKeyed(ks.split(",").toSeq, v)) &&
       declared.exists(f => lcName(f.name) == lcName(v) && Integral(f.dataType))).map { v =>
       val top = rows(data.values.map(_._1))
         .agg(max(col(physOf(physMap(m), v)).cast("long"))).head()
       HwmKey -> (if (top.isNullAt(0)) Long.MinValue else top.getLong(0)).toString
     }
-    val committed = Option.when(oldFormat(m).isDefined || hwm.isDefined) {
+    val committed = Option.when(oldFormat(m).isDefined || hwm.isDefined || meta.nonEmpty) {
       val refold = data.collect { case (k, (rel, b)) if BucketSegmentKey.matches(k) ||
         outsideGeneration(rel) => b }.flatten.toSet
       val rewrite = data.filter(_._2._2.exists(refold))
@@ -659,7 +685,7 @@ object ParquetMergeSink {
         if (rewrite.nonEmpty) gen.write(rewrite.values.map { case (rel, b) =>
           rows(Seq(rel)).withColumn(BucketCol, lit(b.get))
         }.reduce(_ unionByName _), partitionBy = Seq(BucketCol))
-        m.entries - "txid" -- rewrite.keys.map("dir." + _) ++
+        entries - "txid" -- rewrite.keys.map("dir." + _) ++
           (if (rewrite.isEmpty) Map.empty else bucketDirs(gen.path, s"${gen.name}/")) ++
           hwm + (SchemaKey -> declared.json)
       }
@@ -684,7 +710,7 @@ object ParquetMergeSink {
       val names = fs.listStatus(table).filter(_.isDirectory).map(_.getPath.getName)
       val buckets = names.exists(_.startsWith(s"$BucketCol="))
       if (buckets && fs.exists(new Path(table, LegacyMarker)))
-        refuseOld(table, "pre-manifest bucket dirs")
+        refuseOld(table, PreManifest)
       if (buckets || names.exists(ManifestCommit.isGeneration))
         throw new IllegalStateException(
           s"$table has data dirs but no ${ManifestCommit.CommitDir} log (nor " +
@@ -845,7 +871,10 @@ object ParquetMergeSink {
     * every segment (a concatenation). Any other commit reads the base dirs
     * of every touched bucket and every segment. Either drains — reads every
     * dir and folds every bucket — when the segments hold more rows than
-    * an average base bucket. Rows read get the bucket column
+    * an average base bucket and at least one row per bucket: a drain
+    * writes one file per bucket its rows reach, so a table with no base
+    * dirs would otherwise fold every bucket for its first few rows. Rows
+    * read get the bucket column
     * from the keys; `resolve` gets them (None when nothing is read) and
     * returns every row to write. A row of a folded bucket goes to that
     * bucket's base dir, every other row to one new segment.
@@ -876,9 +905,11 @@ object ParquetMergeSink {
     val (segments, bases) = manifest.dirs.toSeq.partition(d => isSegment(d._1))
     val bound = math.max(TableDirs, staged.buckets + 1)
     val plain = append && manifest.dirs.size < bound
-    val drain = !plain && segments.nonEmpty &&
-      rowsOf(fs, table, segments.map(_._2)) * staged.buckets >
-        rowsOf(fs, table, bases.map(_._2))
+    val drain = !plain && segments.nonEmpty && {
+      val segmentRows = rowsOf(fs, table, segments.map(_._2))
+      segmentRows >= staged.buckets &&
+        segmentRows * staged.buckets > rowsOf(fs, table, bases.map(_._2))
+    }
     val fold =
       if (drain) (0 until staged.buckets).toSet
       else if (append) Set.empty[Int] else staged.touched.toSet

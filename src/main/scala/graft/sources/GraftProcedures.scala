@@ -32,10 +32,13 @@ import graft.sinks.{ManifestCommit, ParquetMergeSink, TableMaintenance}
   *  - `vacuum(table, keep)` — drop all but the newest `keep` manifest
   *    versions and every generation dir only they referenced
   *    ([[ManifestCommit.vacuum]]); the storage-reclaim half of rollback.
-  *  - `upgrade(table)` — commit a merge-sink table of an older on-disk
-  *    format once in the current one ([[ParquetMergeSink.upgrade]]);
-  *    every other read and write refuses such a table with an error that
-  *    names this procedure. A current table commits nothing.
+  *  - `upgrade(table, keys, version)` — commit a merge-sink table of an
+  *    older on-disk format once in the current one
+  *    ([[ParquetMergeSink.upgrade]]); every other read and write refuses
+  *    such a table with an error that names this procedure. A current
+  *    table commits nothing. A pre-manifest table needs `keys`
+  *    (comma-separated) and `version`, the write contract it never
+  *    recorded, and the one run also stamps its `hwm`.
   *  - `compact(table, target_mb, sort_by)` — rewrite a maintained
   *    single-table layout into target-sized files via
   *    [[TableMaintenance.compact]], MATERIALIZING any committed deletion
@@ -157,10 +160,16 @@ private[sources] object GraftProcedures {
         }
       }
       case "upgrade" => new GraftProcedure("upgrade",
-          Array(param("table", StringType))) {
+          Array(param("table", StringType), param("keys", StringType, "''"),
+            param("version", StringType, "''"))) {
         override def invoke(input: InternalRow): JIterator[Scan] = {
           val p = new Path(root, input.getString(0))
-          val v = ParquetMergeSink.upgrade(spark, p.toString)
+          val keys = input.getString(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+          val version = input.getString(2).trim
+          require(keys.isEmpty == version.isEmpty,
+            "upgrade: keys and version are given together or not at all")
+          val v = ParquetMergeSink.upgrade(spark, p.toString,
+            Option.when(keys.nonEmpty)((keys, version)))
           result(columns("committed" -> BooleanType, "version" -> LongType),
             Seq(new GenericInternalRow(Array[Any](v.isDefined,
               ManifestCommit.latest(fs, p).map(_.version).getOrElse(0L)))))

@@ -17,6 +17,17 @@ object GraftBridge {
   def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** `df`'s analyzed plan as a frame of a clone of its session, taken now:
+    * the clone copies the session's conf, registered strategies and
+    * listeners as they stand, and later changes to either session stay
+    * out of the other. An action on the returned frame runs under the
+    * clone's conf.
+    */
+  def onClone(df: DataFrame): DataFrame = {
+    val d = df.asInstanceOf[classic.Dataset[Row]]
+    classic.Dataset.ofRows(d.sparkSession.cloneSession(), d.logicalPlan)
+  }
+
   /** Estimated number of scan partitions for a file-sourced frame, from
     * the FileIndex metadata the scan already listed — per-file splitting by
     * `spark.sql.files.maxPartitionBytes`, the same arithmetic

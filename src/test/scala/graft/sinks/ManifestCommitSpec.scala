@@ -204,7 +204,7 @@ class ManifestCommitSpec extends SparkSpec {
       col("del")))
     val pre = s"$base/pre"
     SinkFormats.preManifest(rows, pre, Seq("k"), 4)
-    check("upgrade", pre)(ParquetMergeSink.upgrade(spark, pre))
+    check("upgrade", pre)(ParquetMergeSink.upgrade(spark, pre, Some(Seq("k") -> "h")))
 
     val maint = s"$base/maint"
     check("writeSortedManaged", maint)(TableMaintenance.writeSortedManaged(rows, maint, 4, Seq("k")))

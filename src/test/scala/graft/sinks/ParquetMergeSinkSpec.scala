@@ -245,8 +245,17 @@ class ParquetMergeSinkSpec extends SparkSpec {
     val orphan = new Path(dir, "_g1-0badcafe")
     fs.mkdirs(new Path(orphan, "__bucket=0"))
     assertRefused(dir)
+    // the refusal and an upgrade without the write contract name its arguments
+    val before = SinkFormats.files(dir)
+    Seq[() => Any](() => ParquetMergeSink.read(spark, dir),
+      () => ParquetMergeSink.upgrade(spark, dir)).foreach { call =>
+      val e = intercept[RuntimeException](call())
+      assert(e.getMessage.contains("keys => ") && e.getMessage.contains("version => "),
+        e.getMessage)
+    }
+    assert(SinkFormats.files(dir) === before, "a refused upgrade changed the table's files")
 
-    assert(ParquetMergeSink.upgrade(spark, dir) === Some(1L))
+    assert(ParquetMergeSink.upgrade(spark, dir, Some(Seq("k") -> "ver")) === Some(1L))
     SinkFormats.assertCurrent(spark, dir)
     assert(!fs.exists(orphan) && !fs.exists(new Path(dir, ".graft-buckets")) &&
       !fs.listStatus(table).exists(_.getPath.getName.startsWith("__bucket=")),
@@ -280,7 +289,7 @@ class ParquetMergeSinkSpec extends SparkSpec {
     SinkFormats.preManifest(legacy, dir3, Seq("k"), 4)
     val aside = s"$base/aside"
     org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(dir3), new java.io.File(aside))
-    assert(ParquetMergeSink.upgrade(spark, dir3) === Some(1L))
+    assert(ParquetMergeSink.upgrade(spark, dir3, Some(Seq("k") -> "ver")) === Some(1L))
     org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(aside), new java.io.File(dir3))
     assert(ParquetMergeSink.read(spark, dir3).count() === 20)
     assert(ParquetMergeSink.upgrade(spark, dir3) === None)

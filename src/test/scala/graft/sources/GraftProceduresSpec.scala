@@ -377,6 +377,8 @@ class GraftProceduresSpec extends SparkSpec {
     SinkFormats.perBucketSegments(batch(1), batch(2), s"$root/up_seg",
       Seq("h", "k"), "h", buckets = 4, hwm = 2)
     SinkFormats.unstamped(batch(1), s"$root/up_uns", Seq("h", "k"), "h", 4)
+    // a pre-manifest table records no write contract, so its call names one
+    val contract = Map("up_pre" -> ", keys => 'k', version => 'ver'").withDefaultValue("")
     Seq("up_pre" -> 12L, "up_seg" -> 24L, "up_uns" -> 12L).foreach { case (t, n) =>
       val dir = new Path(s"$root/$t")
       val old = ManifestCommit.latest(fs, dir)
@@ -393,7 +395,7 @@ class GraftProceduresSpec extends SparkSpec {
       assert(e.getMessage.contains("system.upgrade"), s"$t: ${e.getMessage}")
       assert(SinkFormats.files(dir.toString) === before, t)
 
-      val up = spark.sql(s"CALL graftp.system.upgrade(table => '$t')").head
+      val up = spark.sql(s"CALL graftp.system.upgrade(table => '$t'${contract(t)})").head
       assert(up.getBoolean(0), t)
       val v = up.getLong(1)
       assert(v === old.fold(1L)(_.version + 1), t)
@@ -418,6 +420,66 @@ class GraftProceduresSpec extends SparkSpec {
       TBLPROPERTIES('merge.keys'='k','merge.version'='ver')""")
     assert(spark.sql("CALL graftp.system.history(table => 'up_new')").collect()
       .map(r => (r.getLong(0), r.getString(2))).toSeq === Seq((1L, "merge-sink")))
+  }
+
+  test("a pre-manifest table's upgrade needs its contract and stamps hwm in " +
+      "one run; its next batch appends") {
+    def batch(h: Long) = (1L to 12L).map(k => (h, k, s"v$h-$k")).toDF("h", "k", "v")
+    val dir = s"$root/up_hwm"
+    SinkFormats.preManifest(batch(1).unionByName(batch(3)), dir, Seq("h", "k"), 4)
+    val bare = intercept[Exception](
+      spark.sql("CALL graftp.system.upgrade(table => 'up_hwm')").collect())
+    assert(bare.getMessage.contains("keys => ") && bare.getMessage.contains("version => "),
+      bare.getMessage)
+    val refused = intercept[Exception](spark.sql(
+      "CALL graftp.system.upgrade(table => 'up_hwm', keys => 'h,k')").collect())
+    assert(refused.getMessage.contains("together"), refused.getMessage)
+    val up = spark.sql(
+      "CALL graftp.system.upgrade(table => 'up_hwm', keys => 'h,k', version => 'h')").head
+    assert(up.getBoolean(0) && up.getLong(1) === 1L)
+    val m = ManifestCommit.latest(fs, new Path(dir)).get
+    assert(m.entries.get(ParquetMergeSink.HwmKey) === Some("3"), m.entries)
+    assert(m.entries.get("merge.keys") === Some("h,k") && m.entries.get("merge.version") === Some("h"))
+    SinkFormats.assertCurrent(spark, dir)
+    // converged: a re-run commits nothing, and a different contract is refused
+    assert(!spark.sql("CALL graftp.system.upgrade(table => 'up_hwm')").head.getBoolean(0))
+    val other = intercept[Exception](spark.sql(
+      "CALL graftp.system.upgrade(table => 'up_hwm', keys => 'k', version => 'h')").collect())
+    assert(other.getMessage.contains("contract"), other.getMessage)
+    ParquetMergeSink.merge(batch(4), dir, Seq("h", "k"), "h")
+    assert(graft.StrategyLog.lastChoice("merge_commit").exists(_.startsWith("append ")),
+      graft.StrategyLog.lastChoice("merge_commit"))
+    assert(spark.sql("SELECT count(*) FROM graftp.up_hwm").head.getLong(0) === 36L)
+  }
+
+  test("a MERGE after an INSERT into a created 16-bucket table folds only " +
+      "its touched bucket") {
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    val dir = s"$root/drain16"
+    spark.sql("""CREATE TABLE graftp.drain16 (k BIGINT, v STRING, ver BIGINT)
+      TBLPROPERTIES('merge.keys'='k','merge.version'='ver')""")
+    spark.sql("INSERT INTO graftp.drain16 VALUES " +
+      (1 to 10).map(k => s"($k, 'a$k', 1)").mkString(", "))
+    assert(graft.StrategyLog.lastChoice("merge_commit").exists(_.startsWith("append ")))
+    Seq((2L, "b2", 2L)).toDF("k", "v", "ver").createOrReplaceTempView("drain16src")
+    spark.sql("""MERGE INTO graftp.drain16 AS t USING drain16src AS s ON t.k = s.k
+      WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""")
+    val choice = graft.StrategyLog.lastChoice("merge_commit").getOrElse("")
+    assert(choice.startsWith("merge ") && choice.contains(" folded=1 ") &&
+      choice.contains(" drain=false "), choice)
+    // the commit writes two dirs, the touched bucket's base and one segment
+    // of the other rows: three files (the bucket's two rows leave two
+    // shuffle partitions), where a drain wrote a dir and a file for every
+    // bucket the ten keys hash to
+    val m = ManifestCommit.latest(fs, new Path(dir)).get
+    val files = m.dirs.values.toSeq.map(rel => fs.listStatus(new Path(dir, rel))
+      .count(_.getPath.getName.endsWith(".parquet")))
+    val reached = (1L to 10L).toDF("k").select(pmod(xxhash64(col("k")), lit(16)))
+      .distinct().count()
+    assert(reached > 2, s"the keys reach only $reached buckets")
+    assert(m.dirs.size === 2 && files.sum === 3, s"$files ${m.dirs}")
+    assert(spark.sql("SELECT v FROM graftp.drain16 WHERE k = 2").head.getString(0) === "b2")
+    assert(spark.sql("SELECT count(*) FROM graftp.drain16").head.getLong(0) === 10L)
   }
 
   test("an empty created table refuses DELETE, compact, sort, zorder and " +
